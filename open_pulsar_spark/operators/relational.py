@@ -36,6 +36,40 @@ def _money(col):  # stable 2-dp money sum
     return F.round(F.sum(col), 2)
 
 
+def _revenue_e4():
+    """Σ l_extendedprice·(1 − l_discount), exactly, in ten-thousandths of
+    a dollar: price and discount are both 2-dp money, so
+    price_cents × (100−d₁₀₀) is an integer, and a sum of integers is
+    order-independent in both engines. Round it with `_e4_to_cents`.
+
+    A double sum rounded to cents, round(sum(double), 2), lands on a
+    half-cent boundary often enough over many output groups that Spark
+    and DuckDB round it apart on some inputs. `_DUCK_REVENUE_CENTS` is
+    the oracle twin of `_e4_to_cents(_revenue_e4())`.
+    """
+    return F.sum(
+        F.round(F.col("l_extendedprice") * 100).cast("bigint")
+        * (100 - F.round(F.col("l_discount") * 100).cast("bigint"))
+    )
+
+
+def _e4_to_cents(col: str):
+    """Ten-thousandths of a dollar rounded half-up to cents (integer div)."""
+    return F.expr(f"(2 * {col} + 100) div 200") / 100.0
+
+
+# DuckDB twin of `_e4_to_cents(_revenue_e4())`: Spark's `div` truncates
+# toward zero while DuckDB's // floors, hence the sign split.
+_DUCK_E4 = (
+    "(2 * sum(round(l_extendedprice * 100)::BIGINT"
+    " * (100 - round(l_discount * 100)::BIGINT))::BIGINT + 100)"
+)
+_DUCK_REVENUE_CENTS = (
+    f"((CASE WHEN {_DUCK_E4} >= 0 THEN {_DUCK_E4} // 200"
+    f" ELSE -((-{_DUCK_E4}) // 200) END)) / 100.0"
+)
+
+
 # --------------------------------------------------------------------------
 # q1_pricing_summary — TPC-H Q1 shape: scan → filter → hash agg → sort.
 # --------------------------------------------------------------------------
@@ -141,8 +175,8 @@ def q3_top_revenue_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @query(
     "q5_region_revenue",
-    oracle="""
-    SELECT n_name, round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
+    oracle=f"""
+    SELECT n_name, {_DUCK_REVENUE_CENTS} AS revenue
     FROM customer, orders, lineitem, supplier, nation, region
     WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
       AND l_suppkey = s_suppkey AND c_nationkey = s_nationkey
@@ -161,7 +195,7 @@ def q5_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     hints; supplier and customer are SF-linear so their joins are left
     to AQE (broadcast while they fit, shuffle beyond 8 GB); the big
     shuffles are orders⋈customer (on custkey) and lineitem⋈orders
-    (on orderkey).
+    (on orderkey). Revenue is the exact integer sum of `_revenue_e4`.
     """
     region = load_table(spark, sf_dir, "region").where(F.col("r_name") == "ASIA")
     nation = load_table(spark, sf_dir, "nation")
@@ -187,7 +221,8 @@ def q5_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(cust, F.col("o_custkey") == F.col("c_custkey"))
         .where(F.col("c_nationkey") == F.col("s_nationkey"))
         .groupBy("n_name")
-        .agg(_money(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"))
+        .agg(_revenue_e4().alias("s"))
+        .select("n_name", _e4_to_cents("s").alias("revenue"))
         .orderBy(F.desc("revenue"), "n_name")
     )
 
@@ -571,18 +606,10 @@ def orders_above_customer_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @query(
     "q7_nation_volume",
-    oracle="""
+    oracle=f"""
     SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
            year(l.l_shipdate)::BIGINT AS l_year,
-           ((CASE WHEN (2 * sum(round(l.l_extendedprice * 100)::BIGINT
-                     * (100 - round(l.l_discount * 100)::BIGINT))::BIGINT
-             + 100) >= 0
-                  THEN (2 * sum(round(l.l_extendedprice * 100)::BIGINT
-                     * (100 - round(l.l_discount * 100)::BIGINT))::BIGINT
-             + 100) // 200
-                  ELSE -((-(2 * sum(round(l.l_extendedprice * 100)::BIGINT
-                     * (100 - round(l.l_discount * 100)::BIGINT))::BIGINT
-             + 100)) // 200) END)) / 100.0 AS revenue
+           {_DUCK_REVENUE_CENTS} AS revenue
     FROM lineitem l
     JOIN supplier s ON s.s_suppkey = l.l_suppkey
     JOIN orders o   ON o.o_orderkey = l.l_orderkey
@@ -607,12 +634,8 @@ def q7_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     n1 < n2 predicate halves the output and is applied after the
     broadcast joins, JVM-side.
 
-    Revenue is summed as exact integer ten-thousandths of a dollar
-    (price and discount are both 2-dp money; price_cents × (100−d₁₀₀)
-    is an integer) then rounded half-up to cents with integer div —
-    with 2k output groups a double sum lands on a half-cent rounding
-    boundary often enough that round(sum(double), 2) hash-mismatched
-    in practice; summing ints is order-independent in both engines.
+    Revenue is the exact integer sum of `_revenue_e4` (with 2k output
+    groups, round(sum(double), 2) hash-mismatched in practice).
     """
     li = load_table(spark, sf_dir, "lineitem")
     su = load_table(spark, sf_dir, "supplier")
@@ -633,17 +656,12 @@ def q7_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cust_nation",
             F.year("l_shipdate").cast("bigint").alias("l_year"),
         )
-        .agg(
-            F.sum(
-                F.round(F.col("l_extendedprice") * 100).cast("bigint")
-                * (100 - F.round(F.col("l_discount") * 100).cast("bigint"))
-            ).alias("s")
-        )
+        .agg(_revenue_e4().alias("s"))
         .select(
             "supp_nation",
             "cust_nation",
             "l_year",
-            (F.expr("(2 * s + 100) div 200") / 100.0).alias("revenue"),
+            _e4_to_cents("s").alias("revenue"),
         )
         .orderBy("supp_nation", "cust_nation", "l_year")
     )
@@ -654,9 +672,9 @@ def q7_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @query(
     "q10_returned_customers",
-    oracle="""
+    oracle=f"""
     SELECT c.c_custkey, c.c_name, n.n_name,
-           round(sum(l.l_extendedprice * (1 - l.l_discount)), 2) AS revenue,
+           {_DUCK_REVENUE_CENTS} AS revenue,
            round(c.c_acctbal, 2) AS acctbal
     FROM customer c
     JOIN orders o   ON o.o_custkey = c.c_custkey
@@ -674,7 +692,8 @@ def q10_returned_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts, the orderkey join dominates and co-locates under the
     bucketed layout, and the top-k is TakeOrderedAndProject (no global
     sort materialized). revenue DESC ties broken by c_custkey so the
-    LIMIT is deterministic cross-engine.
+    LIMIT is deterministic cross-engine. Revenue is the exact integer
+    sum of `_revenue_e4`.
     """
     cu = load_table(spark, sf_dir, "customer")
     od = load_table(spark, sf_dir, "orders")
@@ -685,12 +704,12 @@ def q10_returned_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(cu, od.o_custkey == cu.c_custkey)
         .join(F.broadcast(na), cu.c_nationkey == na.n_nationkey)
         .groupBy("c_custkey", "c_name", "n_name", "c_acctbal")
-        .agg(_money(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"))
+        .agg(_revenue_e4().alias("s"))
         .select(
             "c_custkey",
             "c_name",
             "n_name",
-            "revenue",
+            _e4_to_cents("s").alias("revenue"),
             F.round("c_acctbal", 2).alias("acctbal"),
         )
         .orderBy(F.desc("revenue"), "c_custkey")
@@ -703,17 +722,9 @@ def q10_returned_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @query(
     "q9_brand_profit",
-    oracle="""
+    oracle=f"""
     SELECT p.p_brand, year(o.o_orderdate)::BIGINT AS o_year,
-           ((CASE WHEN (2 * sum(round(l.l_extendedprice * 100)::BIGINT
-                     * (100 - round(l.l_discount * 100)::BIGINT))::BIGINT
-             + 100) >= 0
-                  THEN (2 * sum(round(l.l_extendedprice * 100)::BIGINT
-                     * (100 - round(l.l_discount * 100)::BIGINT))::BIGINT
-             + 100) // 200
-                  ELSE -((-(2 * sum(round(l.l_extendedprice * 100)::BIGINT
-                     * (100 - round(l.l_discount * 100)::BIGINT))::BIGINT
-             + 100)) // 200) END)) / 100.0 AS profit
+           {_DUCK_REVENUE_CENTS} AS profit
     FROM lineitem l
     JOIN part p   ON p.p_partkey = l.l_partkey
     JOIN orders o ON o.o_orderkey = l.l_orderkey
@@ -730,9 +741,8 @@ def q9_brand_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     SF-linear so the filtered dim carries no forced hint (AQE
     broadcasts it while it fits, shuffles beyond 8 GB);
     lineitem⋈orders on orderkey is the single big shuffle, co-located
-    under the bucketed layout. Profit uses the
-    same exact integer-cents sum as q7 — order-independent, so the
-    value hash can't be flipped by double summation order.
+    under the bucketed layout. Profit is the exact integer sum of
+    `_revenue_e4`, as in q7.
     """
     li = load_table(spark, sf_dir, "lineitem")
     pa = load_table(spark, sf_dir, "part").where(F.col("p_type") == "ECONOMY")
@@ -741,17 +751,8 @@ def q9_brand_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(pa.select("p_partkey", "p_brand"), li.l_partkey == F.col("p_partkey"))
         .join(od, li.l_orderkey == od.o_orderkey)
         .groupBy("p_brand", F.year("o_orderdate").cast("bigint").alias("o_year"))
-        .agg(
-            F.sum(
-                F.round(F.col("l_extendedprice") * 100).cast("bigint")
-                * (100 - F.round(F.col("l_discount") * 100).cast("bigint"))
-            ).alias("s")
-        )
-        .select(
-            "p_brand",
-            "o_year",
-            (F.expr("(2 * s + 100) div 200") / 100.0).alias("profit"),
-        )
+        .agg(_revenue_e4().alias("s"))
+        .select("p_brand", "o_year", _e4_to_cents("s").alias("profit"))
         .orderBy("p_brand", "o_year")
     )
 

@@ -79,3 +79,161 @@ def test_widen_for_kernel_raises_narrow_scans(spark):
     # already-wide frames pass through untouched (no extra exchange)
     wide = narrow.repartition(target)
     assert widen_for_kernel(wide) is wide
+
+
+def _write(path, cols: dict) -> None:
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(pa.table(cols), str(path))
+
+
+def _settled_job_ids(spark, group: str) -> list[int]:
+    """Job ids of `group`, read after a marker job in a later group shows
+    up: the status listener handles events in order, so every job
+    `group` started is visible by then."""
+    import time
+
+    sc = spark.sparkContext
+    marker = group + "-marker"
+    sc.setJobGroup(marker, marker)
+    spark.range(1).count()
+    deadline = time.monotonic() + 30
+    while not sc.statusTracker().getJobIdsForGroup(marker):
+        assert time.monotonic() < deadline, "status tracker never saw the marker job"
+        time.sleep(0.05)
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_footer_probe_fails_loudly(spark, tmp_path):
+    """A footer that cannot be read is an error, never "no ns columns",
+    and a failed probe is not cached: once the file is valid it loads."""
+    from open_pulsar_spark import tables
+
+    bad = tmp_path / "region.parquet"
+    bad.write_text("not a parquet file")
+    with pytest.raises(ValueError, match="parquet footer"):
+        tables._parquet_nanos_columns(str(bad))
+    with pytest.raises(ValueError, match="parquet footer"):
+        load_table(spark, str(tmp_path), "region")
+    assert str(bad) not in tables._FOOTERS
+    with pytest.raises(ValueError, match="parquet footer"):
+        tables._parquet_nanos_columns(str(tmp_path / "missing.parquet"))
+
+    _write(bad, {"r_regionkey": [0, 1]})
+    assert load_table(spark, str(tmp_path), "region").count() == 2
+
+
+def test_rewritten_file_is_reinferred_on_a_live_session(spark, tmp_path):
+    """Rewriting a table under a live session (new schema, new values,
+    later mtime) invalidates its cached schema: the next load sees the
+    new columns and rows."""
+    import os
+
+    path = tmp_path / "region.parquet"
+    _write(path, {"r_regionkey": [0, 1], "r_name": ["A", "B"]})
+    first = load_table(spark, str(tmp_path), "region")
+    assert first.columns == ["r_regionkey", "r_name"]
+    assert sorted(r.r_name for r in first.collect()) == ["A", "B"]
+
+    mtime = os.stat(path).st_mtime_ns
+    _write(path, {"r_regionkey": [7, 8, 9], "r_name": ["X", "Y", "Z"],
+                  "r_comment": ["x", "y", "z"]})
+    os.utime(path, ns=(mtime + 10**9, mtime + 10**9))
+    second = load_table(spark, str(tmp_path), "region")
+    assert second.columns == ["r_regionkey", "r_name", "r_comment"]
+    assert sorted(tuple(r) for r in second.collect()) == [
+        (7, "X", "x"), (8, "Y", "y"), (9, "Z", "z")
+    ]
+
+
+def test_inference_conf_is_part_of_the_key(spark, tmp_path):
+    """A conf that changes schema inference (binaryAsString) gets its own
+    inference instead of the schema cached under the old setting."""
+    conf = "spark.sql.parquet.binaryAsString"
+    _write(tmp_path / "region.parquet", {"r_name": [b"ASIA"]})
+    before = spark.conf.get(conf)
+    assert dict(load_table(spark, str(tmp_path), "region").dtypes)["r_name"] == "binary"
+    spark.conf.set(conf, "true")
+    try:
+        df = load_table(spark, str(tmp_path), "region")
+        assert dict(df.dtypes)["r_name"] == "string"
+        assert df.first().r_name == "ASIA"
+    finally:
+        spark.conf.set(conf, before)
+    assert dict(load_table(spark, str(tmp_path), "region").dtypes)["r_name"] == "binary"
+
+
+def test_self_join_of_two_loads_matches_duckdb(spark):
+    """Each load is a fresh relation, so two loads of one table join
+    without ambiguous attributes — through the timestamp projection too."""
+    import duckdb
+
+    a = load_table(spark, SF_SMALL, "orders")
+    b = load_table(spark, SF_SMALL, "orders")
+    got = (
+        a.join(b, a["o_custkey"] == b["o_custkey"])
+        .where(a["o_orderdate"] < b["o_orderdate"])
+        .select(a["o_orderkey"], b["o_orderkey"])
+        .count()
+    )
+    want = duckdb.sql(
+        f"SELECT count(*) FROM read_parquet('{SF_SMALL}/orders.parquet') a "
+        f"JOIN read_parquet('{SF_SMALL}/orders.parquet') b "
+        "ON a.o_custkey = b.o_custkey WHERE a.o_orderdate < b.o_orderdate"
+    ).fetchone()[0]
+    assert want > 0
+    assert got == want
+
+
+def test_repeat_load_starts_no_spark_job(spark, tmp_path):
+    """The first load of a table infers its schema (one Spark job); a
+    repeat load of the unchanged file reads with the cached schema and
+    starts none."""
+    import shutil
+
+    shutil.copy(f"{SF_SMALL}/lineitem.parquet", tmp_path / "lineitem.parquet")
+    sc = spark.sparkContext
+    try:
+        sc.setJobGroup("load-first", "load-first")
+        load_table(spark, str(tmp_path), "lineitem")
+        assert _settled_job_ids(spark, "load-first")  # the probe can see jobs
+        sc.setJobGroup("load-repeat", "load-repeat")
+        df = load_table(spark, str(tmp_path), "lineitem")
+        assert _settled_job_ids(spark, "load-repeat") == []
+    finally:
+        sc._jsc.clearJobGroup()
+    assert dict(df.dtypes)["l_shipdate"] == "timestamp"
+
+
+def test_concurrent_first_loads_agree(spark, tmp_path):
+    """More threads than cores racing on the first load of a table all
+    get the same schema and rows, and leave one whole cache entry."""
+    import os
+    import shutil
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    from open_pulsar_spark import tables
+
+    path = tmp_path / "orders.parquet"
+    shutil.copy(f"{SF_SMALL}/orders.parquet", path)
+
+    def load(_):
+        df = load_table(spark, str(tmp_path), "orders")
+        return df.schema, df.count()
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(max_workers=2 * os.cpu_count()) as pool:
+            results = list(pool.map(load, range(16), timeout=300))
+    finally:
+        sys.setswitchinterval(old)
+    assert len(results) == 16 and len(set(results)) == 1
+    schema, n = results[0]
+    assert dict((f.name, f.dataType.simpleString()) for f in schema)["o_orderdate"] == "timestamp"
+    assert n > 0
+    key, (cached, nanos) = tables._FOOTERS[str(path)]
+    assert key[0] == tables._file_stamp(str(path))
+    assert cached == spark.read.parquet(str(path)).schema and nanos == frozenset()
