@@ -10,9 +10,14 @@ itself is under test (rank vs dense_rank).
 
 from __future__ import annotations
 
+import threading
+from contextlib import ExitStack
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from open_pulsar_spark.materialize import pin
+from open_pulsar_spark.operators.prefix import exclusive_prefix_max, global_prefix
 from open_pulsar_spark.registry import query
 from open_pulsar_spark.tables import load_table
 
@@ -581,16 +586,16 @@ def events_rollup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     error differently from the oracle's identical cascade.
     """
     ev = load_table(spark, sf_dir, "events")
-    # The cache keeps the raw scan single (static exchange reuse does
+    # The pin keeps the raw scan single (static exchange reuse does
     # NOT fire across the three union branches — verified by the plan
     # test when the cache is removed). The pinned partials are bounded
-    # at O(#hours) rows (~9k/year), so session-lifetime residency is a
-    # few KB, not a leak of event-scale data; spark.catalog.clearCache()
-    # remains the bulk eviction hook between benchmark samples.
-    hourly = (
-        ev.groupBy(F.date_trunc("hour", "ts").alias("b"))
-        .agg(F.count("*").alias("n"), F.sum("value").alias("sv"))
-        .cache()
+    # at O(#hours) rows (~9k/year), one generation per session.
+    hourly = pin(
+        "rollup_hourly",
+        ev.groupBy(F.date_trunc("hour", "ts").alias("b")).agg(
+            F.count("*").alias("n"), F.sum("value").alias("sv")
+        ),
+        fill=False,
     )
     daily = (
         hourly.groupBy(F.date_trunc("day", "b").alias("b"))
@@ -951,7 +956,7 @@ def _segment_monthly_xy(spark: SparkSession, sf_dir: str, pin_name: str) -> Data
 
     The monthly rollup is PINNED: it feeds both its own min-month
     aggregate and the join back, and exchange reuse does not fire
-    across two consumers of one lineage (dedup._pin's contract) — the
+    across two consumers of one lineage (materialize.pin's contract) — the
     orders↔customer join + rollup, the only fact-table pass, must
     execute once. Callers pass a query-unique pin name (the cache
     registry is app-scoped)."""
@@ -990,9 +995,8 @@ def xy_from_monthly(
     The monthly frame is PINNED (it feeds its own min-month aggregate
     AND the join back; exchange reuse does not fire across two
     consumers of one lineage)."""
-    from open_pulsar_spark.operators.dedup import _pin
 
-    monthly = _pin(pin_name, monthly)
+    monthly = pin(pin_name, monthly, fill=False)
     m0 = monthly.groupBy("segment").agg(F.min("month").alias("m0"))
     return monthly.join(F.broadcast(m0), "segment").select(
         "segment",
@@ -1143,10 +1147,9 @@ def theilsen_from_xy(xy: DataFrame, pin_name: str) -> DataFrame:
     streaming/trend_stream's robust readout off its monthly ledger.
     The O(months²) pair join runs on the config-sized series whoever
     feeds it."""
-    from open_pulsar_spark.operators.dedup import _pin
 
     # pin xy too: the pairwise self-join consumes it twice
-    xy = _pin(pin_name, xy)
+    xy = pin(pin_name, xy, fill=False)
     a = xy.select("segment", F.col("x").alias("xa"), F.col("y").alias("ya"))
     b = xy.select("segment", F.col("x").alias("xb"), F.col("y").alias("yb"))
     slopes = (
@@ -1399,10 +1402,8 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     (no single-partition Window anywhere); the scored output is a pure
     map over the customer frame against 12 broadcast literals.
     """
-    from open_pulsar_spark.operators.dedup import _pin
-    from open_pulsar_spark.operators.prefix import global_prefix
 
-    per = _pin(
+    per = pin(
         "rfm_per",
         load_table(spark, sf_dir, "orders")
         .groupBy("o_custkey")
@@ -1414,6 +1415,7 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("cents"),
         ),
+        fill=False,
     )
 
     specs = [  # (score name, exact ranking metric: DESC, custkey ASC)
@@ -1434,20 +1436,17 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         cuts.append(acc)
 
     def boundaries(metric: str) -> dict:
-        aug, _totals, release = global_prefix(
+        with global_prefix(
             spark,
             per.select("o_custkey", metric),
             [F.desc(metric), F.col("o_custkey")],
-        )
-        try:
+        ) as (aug, _totals):
             return {
                 row["rk"]: (row[metric], row["o_custkey"])
                 for row in aug.where(F.col("rk").isin(sorted(set(cuts))))
                 .select("rk", metric, "o_custkey")
                 .collect()
             }
-        finally:
-            release()
 
     # The three dimensions are independent prefix-scaffold passes over
     # the same pinned frame: submit them concurrently so one pass's
@@ -1663,30 +1662,27 @@ def revenue_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     (The pattern lives in operators/prefix.py::global_prefix, shared
     with events_peak_concurrency and quality_llm_calibration.)
     """
-    from open_pulsar_spark.operators.prefix import global_prefix
 
     orders = load_table(spark, sf_dir, "orders")
     cents = F.expr("cast(floor(o_totalprice * 100 + 0.5d) as bigint)")
     pc = orders.groupBy("o_custkey").agg(F.sum(cents).alias("cents"))
 
-    aug, totals, release = global_prefix(
+    with global_prefix(
         spark, pc, [F.desc("cents"), F.col("o_custkey")], cum_cols=("cents",)
-    )
-    out = (
-        aug.withColumn("decile", F.expr(f"((rk - 1) * 10) div {totals['n']} + 1"))
-        .groupBy("decile")
-        .agg(
-            F.count("*").alias("n_customers"),
-            (F.sum("cents") / 100.0).alias("revenue"),
-            F.round(F.max("cum_cents") * 1.0 / F.lit(totals["cents"]), 6).alias(
-                "cum_revenue_share"
-            ),
+    ) as (aug, totals):
+        out = (
+            aug.withColumn("decile", F.expr(f"((rk - 1) * 10) div {totals['n']} + 1"))
+            .groupBy("decile")
+            .agg(
+                F.count("*").alias("n_customers"),
+                (F.sum("cents") / 100.0).alias("revenue"),
+                F.round(F.max("cum_cents") * 1.0 / F.lit(totals["cents"]), 6).alias(
+                    "cum_revenue_share"
+                ),
+            )
+            .orderBy("decile")
         )
-        .orderBy("decile")
-    )
-    result = spark.createDataFrame(out.collect(), out.schema)
-    release()
-    return result
+        return spark.createDataFrame(out.collect(), out.schema)
 
 
 # --------------------------------------------------------------------------
@@ -1749,13 +1745,12 @@ def part_affinity_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract) rather than a 1-row cross join, keeping the plan guard's
     no-nested-loop invariant.
     """
-    from open_pulsar_spark.operators.dedup import _pin
     from open_pulsar_spark.operators.graph import (
         _copurchase_baskets,
         _undirected_pairs,
     )
 
-    baskets = _pin("affinity_baskets", _copurchase_baskets(spark, sf_dir))
+    baskets = pin("affinity_baskets", _copurchase_baskets(spark, sf_dir), fill=False)
     n_baskets = baskets.count()
     items = (
         baskets.select(F.explode("ps").alias("pk"))
@@ -1861,9 +1856,8 @@ def events_dow_forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("cents")
     )
-    from open_pulsar_spark.operators.dedup import _pin
 
-    lab = _pin(
+    lab = pin(
         "dow_backtest_lab",
         daily.withColumn(
             "md", F.max("day").over(Window.partitionBy())
@@ -1883,6 +1877,7 @@ def events_dow_forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.datediff(F.col("md").cast("date"), F.col("day").cast("date"))
             < BACKTEST_DAYS,
         ),
+        fill=False,
     )
     tr = (
         lab.where(~F.col("is_test"))
@@ -2020,10 +2015,9 @@ def conformal_from_daily(
     (cusum_stream.conformal_readout serves it from the same folded
     store as CUSUM/ACF/EWMA/bootstrap), so the live interval and a
     batch recompute cannot rank or cover differently."""
-    from open_pulsar_spark.operators.dedup import _pin
 
     a, b = daily.alias("a"), daily.alias("b")
-    scores = _pin(
+    scores = pin(
         f"{pin_ns}_scores",
         a.join(b, F.col("b.ed") == F.col("a.ed") - 7)
         .select(
@@ -2036,6 +2030,7 @@ def conformal_from_daily(
             "rn",
             F.row_number().over(Window.partitionBy().orderBy(F.desc("ed"))),
         ),
+        fill=False,
     )
     test = scores.where(F.col("rn") <= CONF_TEST_DAYS).select("err")
     cal = (
@@ -2151,11 +2146,11 @@ def events_key_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     so no tiebreaker is needed. Spark `percentile` ≙ DuckDB
     `quantile_cont` (verified equal, quantity_quantiles)."""
     ev = load_table(spark, sf_dir, "events")
-    from open_pulsar_spark.operators.dedup import _pin
 
-    counts = _pin(
+    counts = pin(
         "skew_counts",
         ev.groupBy("user_id").agg(F.count("*").cast("bigint").alias("cnt")),
+        fill=False,
     )
     top10 = (
         counts.orderBy(F.desc("cnt"))
@@ -2225,7 +2220,6 @@ def part_price_size_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     (typically O(log n) of the input under independent dims) is
     materialized before the partitioning cache releases.
     """
-    from open_pulsar_spark.operators.prefix import exclusive_prefix_max
 
     parts_t = load_table(spark, sf_dir, "part").select(
         "p_partkey",
@@ -2233,22 +2227,20 @@ def part_price_size_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("p_size").alias("size"),
     )
     rollup = parts_t.groupBy("price").agg(F.max("size").alias("peer_max"))
-    aug, release = exclusive_prefix_max(spark, rollup, ["price"], "peer_max")
-    lvl = aug.select(
-        "price", "peer_max", F.col("prev_max").alias("cheaper_max")
-    )
-    sky = (
-        parts_t.join(lvl, "price")
-        .where(
-            (F.col("cheaper_max").isNull() | (F.col("cheaper_max") < F.col("size")))
-            & (F.col("peer_max") <= F.col("size"))
+    with exclusive_prefix_max(spark, rollup, ["price"], "peer_max") as aug:
+        lvl = aug.select(
+            "price", "peer_max", F.col("prev_max").alias("cheaper_max")
         )
-        .select("p_partkey", "price", "size")
-        .orderBy("price", "p_partkey")
-    )
-    result = spark.createDataFrame(sky.collect(), sky.schema)
-    release()
-    return result
+        sky = (
+            parts_t.join(lvl, "price")
+            .where(
+                (F.col("cheaper_max").isNull() | (F.col("cheaper_max") < F.col("size")))
+                & (F.col("peer_max") <= F.col("size"))
+            )
+            .select("p_partkey", "price", "size")
+            .orderBy("price", "p_partkey")
+        )
+        return spark.createDataFrame(sky.collect(), sky.schema)
 
 
 # --------------------------------------------------------------------------
@@ -2297,14 +2289,14 @@ def events_type_hour_chisq(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows. The χ² float sum spans those few cells only; all counts are
     exact integers.
     """
-    from open_pulsar_spark.operators.dedup import _pin
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_type", F.expr("hour(ts) div 6").alias("band")
     )
-    cells = _pin(
+    cells = pin(
         "chisq_cells",
         ev.groupBy("event_type", "band").agg(F.count("*").alias("o")),
+        fill=False,
     )
     rt = cells.groupBy("event_type").agg(F.sum("o").alias("r"))
     ct = cells.groupBy("band").agg(F.sum("o").alias("c"))
@@ -2526,7 +2518,6 @@ def ab_test_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows.
     """
     from open_pulsar_spark.operators.curation import _hash_raw_spark
-    from open_pulsar_spark.operators.dedup import _pin
 
     ev = load_table(spark, sf_dir, "events")
     is_purch = F.col("event_type") == "purchase"
@@ -2537,12 +2528,13 @@ def ab_test_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
     post = F.when(
         is_purch & (F.dayofmonth("ts") > CUPED_SPLIT_DAY), cents
     ).otherwise(0)
-    u = _pin(
+    u = pin(
         "cuped_users",
         ev.groupBy("user_id").agg(
             F.sum(pre).cast("bigint").alias("x"),
             F.sum(post).cast("bigint").alias("y"),
         ),
+        fill=False,
     )
     xd = F.col("x").cast("decimal(38,0)")
     yd = F.col("y").cast("decimal(38,0)")
@@ -2789,20 +2781,20 @@ def itemset_supports_from(items: DataFrame, pin_ns: str) -> DataFrame:
     stream readout bit-matches the batch query over the union of all
     delivered rows by construction. `pin_ns` namespaces the generation
     caches so batch and stream invocations don't evict each other."""
-    from open_pulsar_spark.operators.dedup import _pin
 
     # b feeds three consumers (basket count, item supports, the
     # filtered basket frame), b1 five (both pair sides + the three
     # triple sides), i2 five (candidate generation x3 + prune + the
     # output union) — pin the multiply-consumed lineages or the
     # distinct projection and the pair shuffle re-execute per consumer
-    b = _pin(f"{pin_ns}_b", items.select("user_id", "d", "t").distinct())
+    b = pin(f"{pin_ns}_b", items.select("user_id", "d", "t").distinct(), fill=False)
     nb = b.select("user_id", "d").distinct().count()
     ms = (ITEMSET_MINSUP_PCT * nb) // 100
     i1 = b.groupBy("t").agg(F.count("*").alias("sup")).where(F.col("sup") >= ms)
-    b1 = _pin(
+    b1 = pin(
         f"{pin_ns}_b1",
         b.join(F.broadcast(i1.select("t")), "t").select("user_id", "d", "t"),
+        fill=False,
     )
     a, c = b1.alias("a"), b1.alias("c")
     i2 = (
@@ -2816,7 +2808,7 @@ def itemset_supports_from(items: DataFrame, pin_ns: str) -> DataFrame:
         .agg(F.count("*").alias("sup"))
         .where(F.col("sup") >= ms)
     )
-    i2 = _pin(f"{pin_ns}_i2", i2)
+    i2 = pin(f"{pin_ns}_i2", i2, fill=False)
     p = i2.select(F.col("t1"), F.col("t2"))
     q = i2.select(F.col("t1"), F.col("t2").alias("t3"))
     r = i2.select(F.col("t1").alias("t2"), F.col("t2").alias("t3"))
@@ -3162,14 +3154,13 @@ def purchase_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     documented — the remainder stays unattributed), so every engine
     and partitioning reports identical cents.
     """
-    from open_pulsar_spark.operators.dedup import _pin
 
     ev = load_table(spark, sf_dir, "events")
     # p feeds the bucket explode AND the untouched anti-join; cand
     # feeds the per-type rollup AND that anti-join's probe side — pin
     # both, or the events scan and the exploded band join execute
     # twice (the itemsets rule, applied here)
-    p = _pin(
+    p = pin(
         "attr_p",
         ev.where(F.col("event_type") == "purchase").select(
             F.col("event_id").alias("pid"),
@@ -3177,6 +3168,7 @@ def purchase_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.unix_timestamp("ts").alias("es"),
             F.round(F.col("value") * 100).cast("bigint").alias("cents"),
         ),
+        fill=False,
     )
     t = ev.where(F.col("event_type") != "purchase").select(
         "user_id",
@@ -3198,7 +3190,7 @@ def purchase_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("pid", "cents", "event_type")
     )
-    cand = _pin("attr_cand", cand)
+    cand = pin("attr_cand", cand, fill=False)
     n_w = Window.partitionBy("pid")
     per_type = (
         cand.groupBy("pid", "cents", "event_type")
@@ -3340,7 +3332,6 @@ def revenue_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     values contribute the same Σ i·x_i under any permutation of their
     ranks.
     """
-    from open_pulsar_spark.operators.prefix import global_prefix
 
     orders = load_table(spark, sf_dir, "orders")
     pc = orders.groupBy("o_custkey").agg(
@@ -3348,29 +3339,27 @@ def revenue_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("cents")
     )
-    aug, totals, release = global_prefix(
+    with global_prefix(
         spark, pc, [F.col("cents"), F.col("o_custkey")]
-    )
-    dec = "decimal(38,0)"
-    moments = aug.agg(
-        F.count("*").cast("bigint").alias("n_customers"),
-        F.sum("cents").cast("bigint").alias("total_cents"),
-        F.sum(F.col("rk").cast(dec) * F.col("cents").cast(dec)).alias("s1"),
-    )
-    # integer div on exact decimals == the oracle's HUGEINT //
-    out = moments.select(
-        "n_customers",
-        "total_cents",
-        F.expr(
-            "((2 * s1 - (cast(n_customers as decimal(38,0)) + 1)"
-            "       * cast(total_cents as decimal(38,0))) * 1000000)"
-            " div (cast(n_customers as decimal(38,0))"
-            "      * cast(total_cents as decimal(38,0)))"
-        ).cast("bigint").alias("gini_ppm"),
-    )
-    result = spark.createDataFrame(out.collect(), out.schema)
-    release()
-    return result
+    ) as (aug, totals):
+        dec = "decimal(38,0)"
+        moments = aug.agg(
+            F.count("*").cast("bigint").alias("n_customers"),
+            F.sum("cents").cast("bigint").alias("total_cents"),
+            F.sum(F.col("rk").cast(dec) * F.col("cents").cast(dec)).alias("s1"),
+        )
+        # integer div on exact decimals == the oracle's HUGEINT //
+        out = moments.select(
+            "n_customers",
+            "total_cents",
+            F.expr(
+                "((2 * s1 - (cast(n_customers as decimal(38,0)) + 1)"
+                "       * cast(total_cents as decimal(38,0))) * 1000000)"
+                " div (cast(n_customers as decimal(38,0))"
+                "      * cast(total_cents as decimal(38,0)))"
+            ).cast("bigint").alias("gini_ppm"),
+        )
+        return spark.createDataFrame(out.collect(), out.schema)
 
 
 # --------------------------------------------------------------------------
@@ -3452,26 +3441,23 @@ def lag_quantiles_from_firsts(spark: SparkSession, firsts: DataFrame) -> DataFra
         & F.col("first_purchase").isNotNull()
         & (F.col("first_purchase") >= F.col("first_view"))
     ).select((F.col("first_purchase") - F.col("first_view")).alias("lag_s"))
-    from open_pulsar_spark.operators.prefix import global_prefix
 
     schema = "quantile STRING, lag_seconds BIGINT, n_converters BIGINT"
-    aug, totals, release = global_prefix(spark, lags, [F.col("lag_s")])
-    n = totals["n"]
-    if n == 0:  # no converters: both engines emit all-NULL stat rows
-        release()
-        return spark.createDataFrame(
-            [("max", None, None), ("p50", None, None), ("p90", None, None)],
-            schema,
-        )
-    lo, hi = (n + 1) // 2, (n + 2) // 2
-    r90 = (9 * n + 9) // 10
-    vals = {
-        row["rk"]: row["lag_s"]
-        for row in aug.where(F.col("rk").isin(sorted({lo, hi, r90, n})))
-        .select("rk", "lag_s")
-        .collect()
-    }
-    release()
+    with global_prefix(spark, lags, [F.col("lag_s")]) as (aug, totals):
+        n = totals["n"]
+        if n == 0:  # no converters: both engines emit all-NULL stat rows
+            return spark.createDataFrame(
+                [("max", None, None), ("p50", None, None), ("p90", None, None)],
+                schema,
+            )
+        lo, hi = (n + 1) // 2, (n + 2) // 2
+        r90 = (9 * n + 9) // 10
+        vals = {
+            row["rk"]: row["lag_s"]
+            for row in aug.where(F.col("rk").isin(sorted({lo, hi, r90, n})))
+            .select("rk", "lag_s")
+            .collect()
+        }
     # floor(sum/count) in exact Python ints, NOT avg-then-cast: Spark
     # CAST(double) truncates while DuckDB's ::BIGINT rounds — x.5
     # medians would diverge by 1 between the engines. lag_s ≥ 0 by the
@@ -3560,7 +3546,6 @@ def layout_skipping_effectiveness(spark: SparkSession, sf_dir: str) -> DataFrame
     deterministic, engine-identical.
     """
     from open_pulsar_spark.operators.curation import _hash_raw_spark
-    from open_pulsar_spark.operators.prefix import global_prefix
 
     ev = load_table(spark, sf_dir, "events")
     base = ev.select(
@@ -3572,23 +3557,21 @@ def layout_skipping_effectiveness(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
     def zone_maps(order_cols, layout: str) -> DataFrame:
-        aug, totals, release = global_prefix(spark, base, order_cols)
-        n = totals["n"]
-        files = (
-            aug.groupBy(
-                F.expr(f"(rk - 1) * {SKIP_NFILES} div {n}").alias("f")
+        with global_prefix(spark, base, order_cols) as (aug, totals):
+            n = totals["n"]
+            files = (
+                aug.groupBy(
+                    F.expr(f"(rk - 1) * {SKIP_NFILES} div {n}").alias("f")
+                )
+                .agg(
+                    F.min("user_id").alias("umin"),
+                    F.max("user_id").alias("umax"),
+                    F.min("m").alias("mmin"),
+                    F.max("m").alias("mmax"),
+                )
+                .withColumn("layout", F.lit(layout))
             )
-            .agg(
-                F.min("user_id").alias("umin"),
-                F.max("user_id").alias("umax"),
-                F.min("m").alias("mmin"),
-                F.max("m").alias("mmax"),
-            )
-            .withColumn("layout", F.lit(layout))
-        )
-        out = spark.createDataFrame(files.collect(), files.schema)
-        release()
-        return out
+            return spark.createDataFrame(files.collect(), files.schema)
 
     # Both layouts are independent scaffold passes over the same
     # projection — submit them concurrently (guide §2.6); each layout's
@@ -4159,9 +4142,8 @@ def acf_from_daily(
     streaming revenue ledger's readout (streaming/cusum_stream.py
     serves CUSUM and ACF from the same folded day store), so the two
     cannot center or divide differently."""
-    from open_pulsar_spark.operators.dedup import _pin
 
-    c = _pin(
+    c = pin(
         f"{pin_ns}_c",
         daily.select(
             "day",
@@ -4170,6 +4152,7 @@ def acf_from_daily(
                 " - cast(sum(cents) over () as decimal(38, 0))"
             ).alias("nx"),
         ),
+        fill=False,
     )
     den = c.agg(F.sum(F.expr("nx * nx")).cast("decimal(38, 0)").alias("d")).first()[
         0
@@ -5272,9 +5255,8 @@ def user_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = seq.groupBy("user_id", "s", "t").agg(
         F.count("*").cast("bigint").alias("c_st")
     )
-    from open_pulsar_spark.operators.dedup import _pin
 
-    c = _pin("entropy_cells", c)
+    c = pin("entropy_cells", c, fill=False)
     cs = c.groupBy("user_id", "s").agg(
         F.sum("c_st").cast("bigint").alias("c_s")
     )
@@ -5757,9 +5739,8 @@ def events_dau_wau_mau(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    from open_pulsar_spark.operators.dedup import _pin
 
-    return dau_wau_mau_from_user_days(spark, _pin("dau_user_days", ud))
+    return dau_wau_mau_from_user_days(spark, pin("dau_user_days", ud, fill=False))
 
 
 def dau_wau_mau_from_user_days(spark: SparkSession, ud: DataFrame) -> DataFrame:
@@ -6089,11 +6070,11 @@ def event_type_audience_overlap(
 
     Determinism: counts and trunc-div ppm only."""
     ev = load_table(spark, sf_dir, "events")
-    from open_pulsar_spark.operators.dedup import _pin
 
-    ut = _pin(
+    ut = pin(
         "audience_ut",
         ev.select("user_id", "event_type").distinct(),
+        fill=False,
     )
     sz = ut.groupBy("event_type").agg(
         F.count("*").cast("bigint").alias("n_users")
@@ -6416,9 +6397,8 @@ def ltv_forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("s4"),
         )
     )
-    from open_pulsar_spark.operators.dedup import _pin
 
-    u = _pin("ltv_bt_u", u)
+    u = pin("ltv_bt_u", u, fill=False)
     tr = u.where("is_train").agg(
         F.sum("s4").cast("bigint").alias("num"),
         F.sum("s1").cast("bigint").alias("den"),
@@ -6754,11 +6734,11 @@ def orders_asof_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_custkey") < 50
     )
     h = scd2_intervals(orders)
-    from open_pulsar_spark.operators.dedup import _pin
 
-    h = _pin(
+    h = pin(
         "asof_h",
         h.where(F.col("valid_from") <= F.lit(ASOF_TS).cast("timestamp")),
+        fill=False,
     )
     live = h.where(
         F.col("valid_to").isNull()
@@ -6918,9 +6898,8 @@ def brand_seasonal_demand_index(
         )
         .agg(F.sum("l_quantity").cast("bigint").alias("qty"))
     )
-    from open_pulsar_spark.operators.dedup import _pin
 
-    idx = _pin(
+    idx = pin(
         "brand_season_idx",
         d.join(
             d.groupBy("brand").agg(
@@ -6935,6 +6914,7 @@ def brand_seasonal_demand_index(
                 "cast(qty * 12 * 1000000 div t as bigint)"
             ).alias("seasonal_index_ppm"),
         ),
+        fill=False,
     )
     peak = idx.groupBy("brand").agg(
         F.max("seasonal_index_ppm").cast("bigint").alias("peak_index_ppm")
@@ -7453,9 +7433,8 @@ def brand_market_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.sum("cents").cast("bigint").alias("cents"))
     )
-    from open_pulsar_spark.operators.dedup import _pin
 
-    cells = _pin("brand_coverage_cells", cells)
+    cells = pin("brand_coverage_cells", cells, fill=False)
     per_region_max = (
         cells.groupBy("brand", "region")
         .agg(F.sum("cents").cast("bigint").alias("rcents"))
@@ -7692,9 +7671,8 @@ def mann_kendall_from_weekly(
     lazy consumers sharing one name would unpersist each other's
     generation mid-plan (ADVICE r11). The pair self-join stays on
     the schema-bounded weekly grid regardless of who feeds it."""
-    from open_pulsar_spark.operators.dedup import _pin
 
-    weekly = _pin(pin_name, weekly)
+    weekly = pin(pin_name, weekly, fill=False)
     a = weekly.select(
         "segment", F.col("week").alias("wa"), F.col("cents").alias("ca")
     )
@@ -7864,9 +7842,8 @@ def growth_accounting_from_user_days(
         F.lag("day").over(w_u).alias("prev"),
         F.lead("day").over(w_u).alias("nxt"),
     )
-    from open_pulsar_spark.operators.dedup import _pin
 
-    seq = _pin(pin_name, seq)
+    seq = pin(pin_name, seq, fill=False)
     cls = seq.groupBy("day").agg(
         F.sum(F.when(F.col("prev").isNull(), 1).otherwise(0))
         .cast("bigint")
@@ -7994,7 +7971,6 @@ def user_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     exclusive offsets), NOT a single-partition global window, so
     quintile cutting survives an SF-linear customer table; the close
     is a ≤125-row aggregate."""
-    from open_pulsar_spark.operators.prefix import global_prefix
 
     orders = load_table(spark, sf_dir, "orders")
     mx = orders.agg(F.max("o_orderdate").alias("mxd"))
@@ -8011,40 +7987,40 @@ def user_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("cents"),
         )
     )
-    scores = {}
-    releases = []
     specs = [
         ("r_score", [F.desc("recency_days"), F.col("o_custkey")]),
         ("f_score", [F.col("n_orders"), F.col("o_custkey")]),
         ("m_score", [F.col("cents"), F.col("o_custkey")]),
     ]
     base = cust
+    push_lock = threading.Lock()
 
     def rank_pass(spec):
         name, order_cols = spec
-        aug, totals, release = global_prefix(spark, base, order_cols)
+        # entered in the pool thread (its scaffold collect runs there);
+        # its exit joins the shared stack under a lock
+        scaffold = global_prefix(spark, base, order_cols)
+        aug, totals = scaffold.__enter__()
+        with push_lock:
+            scaffolds.push(scaffold)
         n = totals["n"]
         scored = aug.select(
             "o_custkey",
             F.expr(f"cast(1 + 5 * (rk - 1) div {n} as int)").alias(name),
         )
-        return name, scored, release
+        return name, scored
 
     # The three rank passes are independent scaffold builds (each runs
     # its own range-sampling + per-partition-offsets collect): submit
     # them concurrently (guide §2.6). Ranks over a total order are
     # partition-invariant, so the scores are identical to the
-    # sequential build's.
+    # sequential build's. All three scaffold caches live until the
+    # final collect below and are dropped on exit, exception included.
     from concurrent.futures import ThreadPoolExecutor
 
-    with ThreadPoolExecutor(max_workers=len(specs)) as pool:
-        for name, scored, release in pool.map(rank_pass, specs):
-            scores[name] = scored
-            releases.append(release)
-    # try/finally so an exception during the joins/collect can't leak
-    # the three persisted scaffold frames for the session lifetime
-    # (mirrors the release discipline inside global_prefix itself).
-    try:
+    with ExitStack() as scaffolds:
+        with ThreadPoolExecutor(max_workers=len(specs)) as pool:
+            scores = dict(pool.map(rank_pass, specs))
         joined = (
             cust.join(scores["r_score"], "o_custkey")
             .join(scores["f_score"], "o_custkey")
@@ -8071,9 +8047,6 @@ def user_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("r_score", "f_score", "m_score")
         )
         return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        for release in releases:
-            release()
 
 
 # --------------------------------------------------------------------------
@@ -8264,7 +8237,6 @@ def part_abc_xyz_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
     cumulative revenue rank uses the RANGE-PARTITIONED prefix
     scaffold, not a single-partition window, so the ABC cut survives
     an SF-linear part table; the close is a ≤9-row aggregate."""
-    from open_pulsar_spark.operators.prefix import global_prefix
 
     line = load_table(spark, sf_dir, "lineitem").select(
         "l_partkey",
@@ -8287,48 +8259,46 @@ def part_abc_xyz_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("cents").cast("bigint").alias("cents")
     )
     per_part = moments.join(rev, "l_partkey")
-    aug, totals, release = global_prefix(
+    with global_prefix(
         spark,
         per_part,
         [F.desc("cents"), F.col("l_partkey")],
         cum_cols=["cents"],
-    )
-    tot = totals["cents"]
-    classed = aug.crossJoin(F.broadcast(wk)).select(
-        F.expr(
-            # decimal(38,0) operands: cum·20 (and the interpolated total
-            # itself) must not rely on bigint headroom — corpus revenue
-            # cents can approach 2⁶³/20 long before 100 TB
-            f"CASE WHEN cast(cum_cents as decimal(38,0)) * 5"
-            f"          <= cast({tot} as decimal(38,0)) * 4 THEN 'A'"
-            f" WHEN cast(cum_cents as decimal(38,0)) * 20"
-            f"      <= cast({tot} as decimal(38,0)) * 19 THEN 'B'"
-            f" ELSE 'C' END"
-        ).alias("abc"),
-        F.expr(
-            "CASE WHEN 4 * (cast(w as decimal(38,0)) * s2"
-            "              - cast(s as decimal(38,0)) * s)"
-            "          <= cast(s as decimal(38,0)) * s THEN 'X'"
-            " WHEN (cast(w as decimal(38,0)) * s2"
-            "       - cast(s as decimal(38,0)) * s)"
-            "      <= cast(s as decimal(38,0)) * s THEN 'Y'"
-            " ELSE 'Z' END"
-        ).alias("xyz"),
-        "cents",
-        "s",
-    )
-    out = (
-        classed.groupBy("abc", "xyz")
-        .agg(
-            F.count("*").cast("bigint").alias("n_parts"),
-            F.sum("cents").cast("bigint").alias("revenue_cents"),
-            F.sum("s").cast("bigint").alias("total_qty"),
+    ) as (aug, totals):
+        tot = totals["cents"]
+        classed = aug.crossJoin(F.broadcast(wk)).select(
+            F.expr(
+                # decimal(38,0) operands: cum·20 (and the interpolated total
+                # itself) must not rely on bigint headroom — corpus revenue
+                # cents can approach 2⁶³/20 long before 100 TB
+                f"CASE WHEN cast(cum_cents as decimal(38,0)) * 5"
+                f"          <= cast({tot} as decimal(38,0)) * 4 THEN 'A'"
+                f" WHEN cast(cum_cents as decimal(38,0)) * 20"
+                f"      <= cast({tot} as decimal(38,0)) * 19 THEN 'B'"
+                f" ELSE 'C' END"
+            ).alias("abc"),
+            F.expr(
+                "CASE WHEN 4 * (cast(w as decimal(38,0)) * s2"
+                "              - cast(s as decimal(38,0)) * s)"
+                "          <= cast(s as decimal(38,0)) * s THEN 'X'"
+                " WHEN (cast(w as decimal(38,0)) * s2"
+                "       - cast(s as decimal(38,0)) * s)"
+                "      <= cast(s as decimal(38,0)) * s THEN 'Y'"
+                " ELSE 'Z' END"
+            ).alias("xyz"),
+            "cents",
+            "s",
         )
-        .orderBy("abc", "xyz")
-    )
-    result = spark.createDataFrame(out.collect(), out.schema)
-    release()
-    return result
+        out = (
+            classed.groupBy("abc", "xyz")
+            .agg(
+                F.count("*").cast("bigint").alias("n_parts"),
+                F.sum("cents").cast("bigint").alias("revenue_cents"),
+                F.sum("s").cast("bigint").alias("total_qty"),
+            )
+            .orderBy("abc", "xyz")
+        )
+        return spark.createDataFrame(out.collect(), out.schema)
 
 
 # --------------------------------------------------------------------------
@@ -8431,9 +8401,8 @@ def purchase_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("event").cast("bigint").alias("n_events"),
         F.sum(1 - F.col("event")).cast("bigint").alias("n_censored"),
     )
-    from open_pulsar_spark.operators.dedup import _pin
 
-    spine = _pin("km_spine", spine)
+    spine = pin("km_spine", spine, fill=False)
     w_desc = Window.orderBy(F.desc("t_days")).rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
@@ -8651,9 +8620,8 @@ def markov_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("h_cond_nano"),
     )
-    from open_pulsar_spark.operators.dedup import _pin
 
-    h = _pin("markov_h", h)
+    h = pin("markov_h", h, fill=False)
     rate = h.agg(
         F.expr(
             "cast(sum(cast(n_out as decimal(38,0)) * h_cond_nano)"
@@ -8718,32 +8686,30 @@ def user_event_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     RANGE-PARTITIONED prefix scaffold (not a single-partition
     window); the close folds per-partition partial sums — O(users)
     work, O(parts) driver state."""
-    from open_pulsar_spark.operators.prefix import global_prefix
 
     ev = load_table(spark, sf_dir, "events")
     u = ev.groupBy("user_id").agg(F.count("*").cast("bigint").alias("x"))
-    aug, totals, release = global_prefix(
+    with global_prefix(
         spark, u, [F.col("x"), F.col("user_id")]
-    )
-    n = totals["n"]
-    sums = aug.select(
-        F.sum(F.expr("cast(rk as decimal(38,0)) * x")).alias("six"),
-        F.sum("x").cast("bigint").alias("t"),
-        F.sum(
-            F.when(F.col("rk") * 10 > F.lit(n) * 9, F.col("x")).otherwise(0)
-        )
-        .cast("bigint")
-        .alias("top10"),
-        F.sum(
-            F.when(F.col("rk") * 100 > F.lit(n) * 99, F.col("x")).otherwise(
-                0
+    ) as (aug, totals):
+        n = totals["n"]
+        sums = aug.select(
+            F.sum(F.expr("cast(rk as decimal(38,0)) * x")).alias("six"),
+            F.sum("x").cast("bigint").alias("t"),
+            F.sum(
+                F.when(F.col("rk") * 10 > F.lit(n) * 9, F.col("x")).otherwise(0)
             )
+            .cast("bigint")
+            .alias("top10"),
+            F.sum(
+                F.when(F.col("rk") * 100 > F.lit(n) * 99, F.col("x")).otherwise(
+                    0
+                )
+            )
+            .cast("bigint")
+            .alias("top1"),
         )
-        .cast("bigint")
-        .alias("top1"),
-    )
-    row = sums.collect()[0]
-    release()
+        row = sums.collect()[0]
     six, t, top10, top1 = int(row.six), int(row.t), int(row.top10), int(
         row.top1
     )
@@ -8816,9 +8782,8 @@ def orders_backlog_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side, and the running sum executes on the SCHEMA-bounded day
     spine — the orders_monthly_trend single-partition exemption."""
     span = order_spans(spark, sf_dir)
-    from open_pulsar_spark.operators.dedup import _pin
 
-    span = _pin("backlog_span", span)
+    span = pin("backlog_span", span, fill=False)
     delta = span.select(
         F.col("open_day").alias("day"), F.lit(1).alias("d")
     ).unionAll(
@@ -9231,9 +9196,8 @@ def weekday_mix_from_daily(
     active day); the observed-calendar day counts come from the
     frame's own distinct days. ``pin_name``: lineage-distinct callers
     (the streaming readout) pass their own name (ADVICE r11)."""
-    from open_pulsar_spark.operators.dedup import _pin
 
-    daily = _pin(pin_name, daily)
+    daily = pin(pin_name, daily, fill=False)
     dcnt = (
         daily.select("day")
         .distinct()
@@ -9337,9 +9301,8 @@ def fano_from_hourly(
     global hour span (zero hours included in the denominator) comes
     from the ledger's own min/max hour. ``pin_name``: lineage-distinct
     callers (the streaming readout) pass their own name (ADVICE r11)."""
-    from open_pulsar_spark.operators.dedup import _pin
 
-    hr = _pin(pin_name, hr)
+    hr = pin(pin_name, hr, fill=False)
     span = hr.agg(
         F.expr(
             "cast((unix_seconds(max(h)) - unix_seconds(min(h)))"
@@ -9413,9 +9376,8 @@ def order_linecount_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("cents"),
         )
     )
-    from open_pulsar_spark.operators.dedup import _pin
 
-    per = _pin("linecount_per", per)
+    per = pin("linecount_per", per, fill=False)
     tot = per.agg(F.sum("cents").cast("bigint").alias("t"))
     return (
         per.groupBy("n_lines")
@@ -9473,29 +9435,26 @@ def tail_risk_from_cents_hist(spark: SparkSession, hist: DataFrame) -> DataFrame
     (never a single-partition window), the boundary bucket is an
     ascending top-1 (TakeOrderedAndProject) over the ≥ k filter, and
     the close reads ONE row plus the scaffold totals."""
-    from open_pulsar_spark.operators.prefix import global_prefix
 
     hist = hist.select(
         "cents",
         F.col("w").cast("bigint").alias("w"),
         (F.col("cents") * F.col("w")).cast("bigint").alias("wsum"),
     )
-    aug, totals, release = global_prefix(
+    with global_prefix(
         spark, hist, [F.col("cents")], cum_cols=["w", "wsum"]
-    )
-    n, total = totals["w"], totals["wsum"]
-    if n == 0:
-        release()
-        return spark.createDataFrame([(0, 0, None, 0, None)], _TAIL_RISK_SCHEMA)
-    k = (95 * n + 99) // 100
-    row = (
-        aug.where(F.col("cum_w") >= k)
-        .orderBy("cents")
-        .limit(1)
-        .select("cents", "cum_w", "cum_wsum")
-        .collect()
-    )[0]
-    release()
+    ) as (aug, totals):
+        n, total = totals["w"], totals["wsum"]
+        if n == 0:
+            return spark.createDataFrame([(0, 0, None, 0, None)], _TAIL_RISK_SCHEMA)
+        k = (95 * n + 99) // 100
+        row = (
+            aug.where(F.col("cum_w") >= k)
+            .orderBy("cents")
+            .limit(1)
+            .select("cents", "cum_w", "cum_wsum")
+            .collect()
+        )[0]
     v, cum_n, cum_s = int(row["cents"]), int(row["cum_w"]), int(row["cum_wsum"])
     tail_n = n - k + 1
     tail_sum = total - cum_s + v * (cum_n - k + 1)

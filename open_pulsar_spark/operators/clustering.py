@@ -42,6 +42,7 @@ import threading
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from open_pulsar_spark.materialize import held, pin
 from open_pulsar_spark.registry import query
 from open_pulsar_spark.tables import load_table
 
@@ -120,7 +121,7 @@ _FIT_LOCK = threading.Lock()
 
 def _evict_other_apps(cache: dict, app_id: str) -> None:
     """Drop entries from stopped applications (one-generation cap,
-    the _pin idiom): a restarted session may see regenerated data at
+    the materialize.pin idiom): a restarted session may see regenerated data at
     the same path, and dead-app plan objects would otherwise leak."""
     for k in [k for k in cache if k[0] != app_id]:
         del cache[k]
@@ -401,19 +402,19 @@ def embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     the flag rule is unchanged.
     """
     qdf, cents = _fit(spark, sf_dir)
-    from open_pulsar_spark.operators.dedup import _pin
 
     # The assigned frame feeds THREE plan branches (the med aggregate,
     # dev inside the mad subtree, dev in the final projection) and its
     # K×DIM distance expression is the expensive map — pin it so the
     # quantize + argmin pass runs once, not three times (guide §1.2).
-    assigned = _pin(
+    assigned = pin(
         "outliers_assigned",
         qdf.withColumn("asg", _assign_col(cents)).select(
             "vec_id",
             F.col("asg.cid").alias("cid"),
             F.col("asg.dist").alias("sq_dist"),
         ),
+        fill=False,
     )
 
     def lower_median(df: DataFrame, col: str, out: str) -> DataFrame:
@@ -519,9 +520,8 @@ def embedding_hbos_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("label").cast("bigint").alias("label"),
         F.expr(_Q_EXPR).alias("q"),
     )
-    from open_pulsar_spark.operators.dedup import _pin
 
-    ex = _pin(
+    ex = pin(
         "hbos_ex",
         qdf.select("vec_id", F.posexplode("q").alias("pos", "qv")).select(
             "vec_id",
@@ -530,6 +530,7 @@ def embedding_hbos_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("bin"),
         ),
+        fill=False,
     )
     n = qdf.count()
     cells = ex.groupBy("pos", "bin").agg(
@@ -960,12 +961,9 @@ def _pq_build(spark: SparkSession, sf_dir: str):
         [(code, rvec[m * PQ_SUBDIM : (m + 1) * PQ_SUBDIM]) for code, rvec in cb_rows]
         for m in range(PQ_M)
     ]
-    res = res.persist()
-    try:
+    with held(res, fill=False) as res:
         for _ in range(PQ_TRAIN_ROUNDS):
             cb = _pq_train_round(res, cb)
-    finally:
-        res.unpersist()
 
     encoded = _pq_encode(res, cb).select(
         "vec_id", "cid", *[f"code_{m}" for m in range(PQ_M)]
@@ -1943,9 +1941,8 @@ def embedding_dim_ablation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("rk") <= TOP_K)
         .select("d", "query_id", "neighbor_id")
     )
-    from open_pulsar_spark.operators.dedup import _pin
 
-    topk = _pin("ablation_topk", topk)
+    topk = pin("ablation_topk", topk, fill=False)
     truth = topk.where(F.col("d") == DIM).select("query_id", "neighbor_id")
     hits = (
         topk.join(truth, ["query_id", "neighbor_id"], "left_semi")
@@ -2060,7 +2057,6 @@ def ann_sq8_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     query) top-k window. At 100 TB the int8 codes are what the index
     STORES — this harness measures what that storage costs in
     recall before you commit to it."""
-    from open_pulsar_spark.operators.dedup import _pin
     from open_pulsar_spark.operators.similarity import N_QUERIES, TOP_K
 
     qdf = _quantized(spark, sf_dir)
@@ -2111,7 +2107,7 @@ def ann_sq8_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("rk") <= TOP_K)
         .select("variant", "query_id", "neighbor_id")
     )
-    topk = _pin("sq8_topk", topk)
+    topk = pin("sq8_topk", topk, fill=False)
     truth = topk.where(F.col("variant") == "full").select(
         "query_id", "neighbor_id"
     )

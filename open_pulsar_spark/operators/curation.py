@@ -33,7 +33,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from open_pulsar_spark.operators.dedup import _MINHASH_PAIRS_CTE, _pin
+from open_pulsar_spark.materialize import pin
+from open_pulsar_spark.operators.dedup import _MINHASH_PAIRS_CTE
+from open_pulsar_spark.operators.prefix import global_prefix
 from open_pulsar_spark.registry import query
 from open_pulsar_spark.tables import load_table
 
@@ -428,9 +430,10 @@ def doc_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load_table(spark, sf_dir, "documents")
     pairs = _token_pairs(docs)
-    cb = _pin(
+    cb = pin(
         "bigram_pair_counts",
         pairs.groupBy("prev", "cur").agg(F.count("*").alias("c2")),
+        fill=False,
     )
     cx = cb.groupBy("prev").agg(F.sum("c2").alias("c1"))
     return (
@@ -482,7 +485,7 @@ def token_pmi_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the grand total are re-aggregations of the pair-count table cb
     (c1l = Σc2 by prev, c1r = Σc2 by cur, N = Σc2 — the contingency-
     table identity), so the three extra aggregates run over the
-    vocab²-bounded cb, PINNED once (the _pin generation cache —
+    vocab²-bounded cb, PINNED once (the pin generation cache —
     verified: without it Spark plans four independent corpus explodes;
     exchange reuse does NOT fire across the differently-keyed
     consumers). The 1-row total broadcasts onto the floored pair table;
@@ -493,9 +496,10 @@ def token_pmi_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load_table(spark, sf_dir, "documents")
     pairs = _token_pairs(docs)
-    cb = _pin(
+    cb = pin(
         "pmi_pair_counts",
         pairs.groupBy("prev", "cur").agg(F.count("*").alias("c2")),
+        fill=False,
     )
     cl = cb.groupBy("prev").agg(F.sum("c2").alias("c1l"))
     cr = cb.groupBy("cur").agg(F.sum("c2").alias("c1r"))
@@ -974,36 +978,33 @@ def corpus_sample_pps(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly K), so the materialize-then-release idiom of
     revenue_pareto applies.
     """
-    from open_pulsar_spark.operators.prefix import global_prefix
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         "lang",
         F.size(F.split("text", " ")).cast("long").alias("n_tokens"),
     )
-    aug, totals, release = global_prefix(
+    with global_prefix(
         spark, docs, [F.col("doc_id")], cum_cols=("n_tokens",)
-    )
-    total = totals["n_tokens"]
-    out = (
-        aug.withColumn(
-            "cum_before", (F.col("cum_n_tokens") - F.col("n_tokens"))
+    ) as (aug, totals):
+        total = totals["n_tokens"]
+        out = (
+            aug.withColumn(
+                "cum_before", (F.col("cum_n_tokens") - F.col("n_tokens"))
+            )
+            .withColumn(
+                "n_hits",
+                F.expr(
+                    f"((cum_before + n_tokens) * {PPS_K} + {total} - 1)"
+                    f" div {total}"
+                    f" - (cum_before * {PPS_K} + {total} - 1) div {total}"
+                ),
+            )
+            .where(F.col("n_hits") >= 1)
+            .select("doc_id", "lang", "n_tokens", "cum_before", "n_hits")
+            .orderBy("doc_id")
         )
-        .withColumn(
-            "n_hits",
-            F.expr(
-                f"((cum_before + n_tokens) * {PPS_K} + {total} - 1)"
-                f" div {total}"
-                f" - (cum_before * {PPS_K} + {total} - 1) div {total}"
-            ),
-        )
-        .where(F.col("n_hits") >= 1)
-        .select("doc_id", "lang", "n_tokens", "cum_before", "n_hits")
-        .orderBy("doc_id")
-    )
-    result = spark.createDataFrame(out.collect(), out.schema)
-    release()
-    return result
+        return spark.createDataFrame(out.collect(), out.schema)
 
 
 # --------------------------------------------------------------------------
@@ -1439,20 +1440,17 @@ def split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     it rather than re-scanning anything (the 1-row-agg/N-branches
     anti-pattern this module's review history flags).
     """
-    from open_pulsar_spark.operators.dedup import (
-        _minhash_pairs,
-        _pin,
-        closure_labels,
-    )
+    from open_pulsar_spark.operators.dedup import _minhash_pairs, closure_labels
 
     # ONE minhash pass: pin the verified pair list and materialize it,
     # then feed BOTH consumers (the closure and the audit join) from
     # the cache — calling dedup_clusters here would re-run the whole
     # signature scan + band join a second time.
-    pairs = _pin(
-        "leakage_pairs", _minhash_pairs(spark, sf_dir).select("a_id", "b_id")
+    pairs = pin(
+        "leakage_pairs",
+        _minhash_pairs(spark, sf_dir).select("a_id", "b_id"),
+        fill=True,
     )
-    pairs.count()
     reps = closure_labels(spark, pairs).select(
         F.col("u").alias("doc_id"), F.col("label").alias("cluster_rep")
     )
@@ -1639,17 +1637,18 @@ def token_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     measured path (union-find under SMALL_GRAPH_PAIRS, distributed
     min-label above); everything downstream is component-sized.
     """
-    from open_pulsar_spark.operators.dedup import _pin, closure_labels
+    from open_pulsar_spark.operators.dedup import closure_labels
 
     docs = load_table(spark, sf_dir, "documents")
-    cb = _pin(
+    cb = pin(
         "community_pair_counts",
         _token_pairs(docs).groupBy("prev", "cur").agg(F.count("*").alias("c2")),
+        fill=False,
     )
     cl = cb.groupBy("prev").agg(F.sum("c2").alias("c1l"))
     cr = cb.groupBy("cur").agg(F.sum("c2").alias("c1r"))
     tot = cb.agg(F.sum("c2").alias("np"))
-    e = _pin(
+    e = pin(
         "community_edges",
         cb.where(F.col("c2") >= PMI_MIN_COUNT)
         .join(cl, "prev")
@@ -1657,6 +1656,7 @@ def token_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(tot))
         .where(F.col("c2") * F.col("np") > F.col("c1l") * F.col("c1r"))
         .select("prev", "cur"),
+        fill=False,
     )
     idp = e.select(
         _hash_raw_spark(F.col("prev"), 15).alias("a_id"),
@@ -2217,12 +2217,11 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "lang", F.split("text", " ").alias("toks"))
         .select("doc_id", "lang", _bigram_col())
     )
-    from open_pulsar_spark.operators.dedup import _pin
 
     # The feature stream feeds THREE consumers (bucket counts, the
     # global norm scalar, the per-doc close) — pin it so the parquet
     # scan + bigram explode + md5 run once, not three times.
-    f = _pin(
+    f = pin(
         "dsir_feats",
         docs.select(
             "doc_id",
@@ -2234,6 +2233,7 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
                 % DSIR_BUCKETS
             ).alias("b"),
         ),
+        fill=False,
     )
     cb = f.groupBy("b").agg(
         F.count("*").cast("bigint").alias("c_r"),

@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from open_pulsar_spark.materialize import held, pin, pin_keyed
 from open_pulsar_spark.registry import query
 from open_pulsar_spark.tables import load_table, widen_for_kernel
 
@@ -98,83 +99,6 @@ _SIGS_SCHEMA = (
     + ", ".join(f"m{k} long" for k in range(MINHASH_K))
     + ", hs array<long>"
 )
-
-
-_LIVE_CACHES: dict[str, DataFrame] = {}
-_PIN_LOCK = __import__("threading").Lock()
-
-
-def _pin(name: str, df: DataFrame) -> DataFrame:
-    """Generation cache: persist `df` under `name`, releasing the
-    PREVIOUS invocation's cache of the same name first.
-
-    These operators return lazy frames whose execution reads a pinned
-    intermediate (signatures/tokens), so the cache must outlive the
-    function — but without a release point, every invocation leaks one
-    cached frame for the session lifetime (bench loops, long-lived
-    sessions). One live generation per name caps that: repeat calls
-    reclaim their predecessor, and an unusual interleave (consuming an
-    older call's frame after a newer call) only loses the cache, not
-    correctness — the lineage recomputes. The swap itself is guarded
-    by a driver-side lock so concurrent operators (e.g. two registry
-    queries driven from different threads under the FAIR scheduler)
-    can't race the pop/persist and corrupt the dict."""
-    with _PIN_LOCK:
-        old = _LIVE_CACHES.pop(name, None)
-        if old is not None:
-            old.unpersist()
-        df = df.persist()
-        _LIVE_CACHES[name] = df
-        return df
-
-
-_PIN_KEYS: dict[str, object] = {}
-
-
-def _pin_keyed(name: str, key: object, build) -> DataFrame:
-    """Cross-query generation cache: like _pin, but REUSES the live
-    generation when `key` (e.g. the sf_dir) matches instead of
-    rebuilding — for intermediates several registry queries share
-    (the co-purchase weighted edge frame). A stale key rebuilds.
-    `build` is a thunk so a cache hit never constructs the plan.
-
-    An external clearCache() (bench.py's cold-per-sample contract)
-    drops the storage level behind our back; a hit must RE-PERSIST
-    then, or the consumer's materializing count() runs uncached and
-    the multi-reference join recomputes the kernel once per reference
-    — the exact regression _pin never had (it re-persisted every
-    call; measured on dedup_minhash_lsh: ~2.0 s cold vs ~1.2 s with
-    the re-persist, sf0.1)."""
-    with _PIN_LOCK:
-        live = _LIVE_CACHES.get(name)
-        if live is not None and _PIN_KEYS.get(name) == key:
-            lvl = live.storageLevel
-            if not (lvl.useMemory or lvl.useDisk):
-                live = live.persist()
-                _LIVE_CACHES[name] = live
-            return live
-    df = build().persist()
-    with _PIN_LOCK:
-        old = _LIVE_CACHES.pop(name, None)
-        if old is not None and old is not df:
-            old.unpersist()
-        _LIVE_CACHES[name] = df
-        _PIN_KEYS[name] = key
-        return df
-
-
-def _release(name: str) -> None:
-    """Explicitly end a pin's generation: pop the registry entry AND
-    unpersist in one place — for operators whose consumption of the
-    pinned frame is fully EAGER (collected inside the function), where
-    holding the cache for the session adds nothing. Keeps the _pin
-    invariant (the registry only ever lists live generations) instead
-    of unpersisting behind its back."""
-    with _PIN_LOCK:
-        _PIN_KEYS.pop(name, None)
-        df = _LIVE_CACHES.pop(name, None)
-        if df is not None:
-            df.unpersist()
 
 
 def _py_shingles(text: str | None) -> set[str] | None:
@@ -280,9 +204,10 @@ def _pinned_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
     S-curve, the skew profile) — the first in a session builds and
     caches, the rest reuse (the _weighted_edges contract applied to
     the Arrow kernel output; bench's cold-per-sample clearCache still
-    measures each query cold)."""
-    return _pin_keyed(
-        "minhash_sigs", sf_dir, lambda: _scan_sigs(spark, sf_dir)
+    measures each query cold). Filled at once: every reader self-joins
+    it."""
+    return pin_keyed(
+        "minhash_sigs", sf_dir, lambda: _scan_sigs(spark, sf_dir), fill=True
     )
 
 
@@ -459,11 +384,6 @@ def _minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     modulo md5 collisions the oracle shares by construction).
     """
     sigs = _pinned_sigs(spark, sf_dir)
-    # Materialize the cache BEFORE the self-join references it 4×: AQE
-    # runs the join's map stages concurrently, and racing tasks compute
-    # an unmaterialized cached partition redundantly (measured 2-10×
-    # kernel recompute); one cheap count() job pins it exactly once.
-    sigs.count()
     return _verify_jaccard(sigs, _band_candidates(sigs))
 
 
@@ -576,9 +496,13 @@ def closure_labels(spark: SparkSession, pairs: DataFrame) -> DataFrame:
     driver-side union-find beats N shuffle rounds; above it the
     distributed min-label loop keeps everything off the driver.
     """
-    pairs = pairs.select("a_id", "b_id").persist()
-    n_pairs = pairs.count()
-    if n_pairs <= SMALL_GRAPH_PAIRS:
+    # both branches materialize what they need from the pair cache
+    # (the collect, or the checkpointed label fixpoint) inside the block
+    with held(pairs.select("a_id", "b_id"), fill=False) as pairs:
+        if pairs.count() > SMALL_GRAPH_PAIRS:
+            # 100 TB path: pairs stay distributed, min-label loop over
+            # the cached edge set — never through driver memory.
+            return _propagate_labels_distributed(pairs)
         # the collect reads the cache, bounded by construction
         parent: dict[int, int] = {}
 
@@ -594,53 +518,46 @@ def closure_labels(spark: SparkSession, pairs: DataFrame) -> DataFrame:
             ra, rb = find(r.a_id), find(r.b_id)
             if ra != rb:  # union by min so the representative is min id
                 parent[max(ra, rb)] = min(ra, rb)
-        labels = spark.createDataFrame(
-            [(n, find(n)) for n in parent], "u LONG, label LONG"
-        )
-    else:
-        # 100 TB path: pairs stay distributed, min-label loop over the
-        # cached edge set — never through driver memory.
-        labels = _propagate_labels_distributed(pairs)
-    # both branches have materialized what they need from the pair
-    # cache (collect above, or the persisted label fixpoint) — release
-    # it so library callers don't leak executor memory per invocation
-    pairs.unpersist()
-    return labels
+    return spark.createDataFrame(
+        [(n, find(n)) for n in parent], "u LONG, label LONG"
+    )
 
 
 def _propagate_labels_distributed(pairs: DataFrame) -> DataFrame:
     """Iterative min-label propagation (large-scale connected
     components): one shuffle on the node id per round; rounds bounded
     by cluster diameter. Used when the pair graph exceeds
-    SMALL_GRAPH_PAIRS."""
-    edges = (
-        pairs.select(F.col("a_id").alias("u"), F.col("b_id").alias("v"))
-        .unionAll(pairs.select(F.col("b_id").alias("u"), F.col("a_id").alias("v")))
-        .persist()
-    )
-    labels = edges.select("u").distinct().withColumn("label", F.col("u")).persist()
-    while True:
-        neighbor_min = (
-            edges.join(labels.withColumnRenamed("u", "v"), "v")
-            .groupBy("u")
-            .agg(F.min("label").alias("nmin"))
-        )
-        new_labels = (
-            labels.join(neighbor_min, "u", "left")
-            .select("u", F.least("label", F.coalesce("nmin", "label")).alias("label"))
-            .persist()
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "u")
-            .where(F.col("n.label") != F.col("o.label"))
-            .count()
-        )
-        labels.unpersist()
-        labels = new_labels
-        if changed == 0:
-            break
-    edges.unpersist()
+    SMALL_GRAPH_PAIRS. The per-round label cache is swapped by hand
+    (each round's frame is persisted before the previous one is
+    dropped), the one lifecycle `held` cannot express."""
+    with held(
+        pairs.select(F.col("a_id").alias("u"), F.col("b_id").alias("v")).unionAll(
+            pairs.select(F.col("b_id").alias("u"), F.col("a_id").alias("v"))
+        ),
+        fill=False,
+    ) as edges:
+        labels = edges.select("u").distinct().withColumn("label", F.col("u")).persist()
+        while True:
+            neighbor_min = (
+                edges.join(labels.withColumnRenamed("u", "v"), "v")
+                .groupBy("u")
+                .agg(F.min("label").alias("nmin"))
+            )
+            new_labels = (
+                labels.join(neighbor_min, "u", "left")
+                .select("u", F.least("label", F.coalesce("nmin", "label")).alias("label"))
+                .persist()
+            )
+            changed = (
+                new_labels.alias("n")
+                .join(labels.alias("o"), "u")
+                .where(F.col("n.label") != F.col("o.label"))
+                .count()
+            )
+            labels.unpersist()
+            labels = new_labels
+            if changed == 0:
+                break
     # hand back a lineage-truncated snapshot and release the loop's
     # cache: the caller gets materialized data without this function
     # pinning a node-cardinality cache for the session lifetime (the
@@ -797,10 +714,7 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from an equi-join on (block_idx, block_value), never a cross join."""
     # persist: both sides of the block self-join reference the simhash
     # kernel — cache the UNordered frame (no sort exchange), compute once.
-    # count() materializes it before the join's concurrent map stages
-    # race on the cache (see _minhash_pairs).
-    sig = _pin("simhash_sigs", _simhash_sigs(spark, sf_dir))
-    sig.count()
+    sig = pin("simhash_sigs", _simhash_sigs(spark, sf_dir), fill=True)
     blocks = sig.select(
         "doc_id",
         "simhash",
@@ -958,7 +872,7 @@ def _prefix_jaccard_pairs(
     (n_inter, n_union) so consumers that bucket by Jaccard can do it
     in integer arithmetic (lsh_s_curve) instead of flooring a rounded
     double near a decile boundary."""
-    sh = _pin(pin_name, _shingled(spark, sf_dir))
+    sh = pin(pin_name, _shingled(spark, sf_dir), fill=False)
     sized = sh.select("doc_id", F.size("sh").alias("n"), "sh")
     tok = sized.select(
         "doc_id",
@@ -971,13 +885,14 @@ def _prefix_jaccard_pairs(
     # (df, h) alone is total iff h is injective on the observed
     # vocabulary. The witness proves it per run instead of assuming it
     # (VERDICT r12 item 4).
-    dfreq = _pin(
+    dfreq = pin(
         pin_name + "_dfreq",
         tok.groupBy("h").agg(
             F.count("*").alias("df"),
             F.min("t").alias("_t0"),
             F.max("t").alias("_t1"),
         ),
+        fill=False,
     )
     # eager scalar — ALSO materializes the sh and dfreq pins serially,
     # so the main job's many cache readers (prefix build, both verify
@@ -1016,10 +931,9 @@ def _prefix_jaccard_pairs(
     # ReuseExchange (the dedup_containment lesson): without this pin
     # the whole tok→window prefix pipeline compiles — and runs — once
     # per side (both Window subtrees visible in plans/r12/
-    # lsh_s_curve_after.txt). Eager count serializes the cache fill
-    # before the join's two concurrent readers.
-    pref = _pin(pin_name + "_pref", pref)
-    pref.count()
+    # lsh_s_curve_after.txt). Filled at once for the join's two
+    # concurrent readers.
+    pref = pin(pin_name + "_pref", pref, fill=True)
     a = pref.select(
         F.col("doc_id").alias("a_id"), F.col("n").alias("na"), "h"
     )
@@ -1102,40 +1016,40 @@ def dedup_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     not assumed: band/row counts (4×3) were chosen so P(miss) is
     negligible at the 0.5 threshold, and this query proves it on data.
     """
-    sh = _shingled(spark, sf_dir).where(F.col("doc_id") < RECALL_SLICE).persist()
-    sh.count()  # pin before the self-join (see _minhash_pairs)
-    a = sh.select(F.col("doc_id").alias("a_id"), F.col("sh").alias("sh_a"))
-    b = sh.select(F.col("doc_id").alias("b_id"), F.col("sh").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    jacc = inter * F.lit(1.0) / (F.size("sh_a") + F.size("sh_b") - inter)
-    truth = (
-        a.join(b, F.col("a_id") < F.col("b_id"))
-        .where(jacc >= JACCARD_THRESHOLD)
-        .select("a_id", "b_id")
-    )
-    lsh = (
-        _minhash_pairs(spark, sf_dir)
-        .where((F.col("a_id") < RECALL_SLICE) & (F.col("b_id") < RECALL_SLICE))
-        .select("a_id", "b_id")
-    )
-    # ONE job for all three counts: a full-outer join of truth and lsh
-    # classifies every pair as hit / miss / false-positive in a single
-    # pass — separate count() actions would re-execute the O(slice²)
-    # truth self-join and the band-join plan twice each (the recall
-    # harness's dominant cost; same pattern as ann_lsh_recall).
-    row = (
-        truth.withColumn("_t", F.lit(1))
-        .join(lsh.withColumn("_l", F.lit(1)), ["a_id", "b_id"], "full_outer")
-        .agg(
-            F.count("_t").alias("n_true"),
-            F.count("_l").alias("n_lsh"),
-            F.count(F.when(F.col("_t").isNotNull() & F.col("_l").isNotNull(), 1)).alias(
-                "n_hit"
-            ),
+    with held(
+        _shingled(spark, sf_dir).where(F.col("doc_id") < RECALL_SLICE), fill=True
+    ) as sh:
+        a = sh.select(F.col("doc_id").alias("a_id"), F.col("sh").alias("sh_a"))
+        b = sh.select(F.col("doc_id").alias("b_id"), F.col("sh").alias("sh_b"))
+        inter = F.size(F.array_intersect("sh_a", "sh_b"))
+        jacc = inter * F.lit(1.0) / (F.size("sh_a") + F.size("sh_b") - inter)
+        truth = (
+            a.join(b, F.col("a_id") < F.col("b_id"))
+            .where(jacc >= JACCARD_THRESHOLD)
+            .select("a_id", "b_id")
         )
-        .collect()[0]
-    )
-    sh.unpersist()
+        lsh = (
+            _minhash_pairs(spark, sf_dir)
+            .where((F.col("a_id") < RECALL_SLICE) & (F.col("b_id") < RECALL_SLICE))
+            .select("a_id", "b_id")
+        )
+        # ONE job for all three counts: a full-outer join of truth and lsh
+        # classifies every pair as hit / miss / false-positive in a single
+        # pass — separate count() actions would re-execute the O(slice²)
+        # truth self-join and the band-join plan twice each (the recall
+        # harness's dominant cost; same pattern as ann_lsh_recall).
+        row = (
+            truth.withColumn("_t", F.lit(1))
+            .join(lsh.withColumn("_l", F.lit(1)), ["a_id", "b_id"], "full_outer")
+            .agg(
+                F.count("_t").alias("n_true"),
+                F.count("_l").alias("n_lsh"),
+                F.count(F.when(F.col("_t").isNotNull() & F.col("_l").isNotNull(), 1)).alias(
+                    "n_hit"
+                ),
+            )
+            .collect()[0]
+        )
     return _recall_row(spark, row)
 
 
@@ -1398,8 +1312,7 @@ def doc_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     inherited. Candidates whose high-containment side is the SHORT doc
     are exactly the ones a symmetric threshold filters out.
     """
-    sigs = _pin("containment_sigs", _scan_sigs(spark, sf_dir))
-    sigs.count()
+    sigs = pin("containment_sigs", _scan_sigs(spark, sf_dir), fill=True)
     cand = _band_candidates(sigs)
     x = sigs.select(F.col("doc_id").alias("a_id"), F.col("hs").alias("hs_a"))
     y = sigs.select(F.col("doc_id").alias("b_id"), F.col("hs").alias("hs_b"))
@@ -1616,6 +1529,22 @@ def _para_sigs(docs: DataFrame) -> DataFrame:
     return docs.select("doc_id", "text").mapInPandas(fn, _PARA_SIGS_SCHEMA)
 
 
+def _pinned_para_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The paragraph signature frame under a KEYED pin, shared by the
+    paragraph pairs and the skew profile (the _pinned_sigs contract);
+    filled at once: the pairs query self-joins it."""
+    return pin_keyed(
+        "para_sigs",
+        sf_dir,
+        lambda: _para_sigs(
+            widen_for_kernel(
+                load_table(spark, sf_dir, "documents").select("doc_id", "text")
+            )
+        ),
+        fill=True,
+    )
+
+
 def _para_band_frame(sigs: DataFrame) -> DataFrame:
     """(doc_id, par_id, m0..mk) → exploded (doc_id, par_id, bk) — the
     paragraph-granularity twin of _band_frame (same xxhash64 band-key
@@ -1651,18 +1580,7 @@ def _para_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     once. Within-doc matches are excluded (a_id < b_id): internal
     repetition is doc_repeated_spans' job; this query is the
     cross-document boilerplate detector."""
-    sigs = _pin_keyed(
-        "para_sigs",
-        sf_dir,
-        lambda: _para_sigs(
-            widen_for_kernel(
-                load_table(spark, sf_dir, "documents").select(
-                    "doc_id", "text"
-                )
-            )
-        ),
-    )
-    sigs.count()  # materialize before the self-join reads it 4x (see _minhash_pairs)
+    sigs = _pinned_para_sigs(spark, sf_dir)
     bands = _para_band_frame(sigs)
     a, b = bands.alias("a"), bands.alias("b")
     cand = (
@@ -1880,7 +1798,7 @@ def _bucket_profile(counts: DataFrame, family: str) -> DataFrame:
     returned profile frame RECOMPUTED the whole band groupBy pipeline
     a second time at collect (r13; the part_copurchase_triangles
     build-then-recompute class)."""
-    counts = _pin(f"bucket_profile_{family}", counts)
+    counts = pin(f"bucket_profile_{family}", counts, fill=False)
     pair_mass = F.sum(F.expr("(cnt * (cnt - 1)) div 2")).cast("decimal(38,0)")
     top10 = (
         counts.orderBy(F.desc("cnt"))
@@ -1948,22 +1866,10 @@ def lsh_bucket_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     from open_pulsar_spark.operators.similarity import _tagged_corpus
 
     sigs = _pinned_sigs(spark, sf_dir)
-    sigs.count()
     mh = _band_frame(sigs).groupBy("bk").agg(
         F.count("*").cast("bigint").alias("cnt")
     )
-    psigs = _pin_keyed(
-        "para_sigs",
-        sf_dir,
-        lambda: _para_sigs(
-            widen_for_kernel(
-                load_table(spark, sf_dir, "documents").select(
-                    "doc_id", "text"
-                )
-            )
-        ),
-    )
-    psigs.count()
+    psigs = _pinned_para_sigs(spark, sf_dir)
     pb = _para_band_frame(psigs).groupBy("bk").agg(
         F.count("*").cast("bigint").alias("cnt")
     )
@@ -2037,7 +1943,6 @@ def dedup_lsh_capped_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounds the self-join fan-out at cap² per key — the plan that
     survives a degenerate boilerplate bucket the exact path cannot."""
     sigs = _pinned_sigs(spark, sf_dir)
-    sigs.count()
     exact = _verify_jaccard(sigs, _band_candidates(sigs))
     capped = _verify_jaccard(sigs, _band_candidates_capped(sigs, BAND_CAP))
     c = capped.agg(F.count("*").cast("bigint").alias("n_capped_pairs"))
@@ -2139,7 +2044,6 @@ def lsh_s_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         with_counts=True,
     )
     sigs = _pinned_sigs(spark, sf_dir)
-    sigs.count()
     cand = _band_candidates(sigs).withColumn("caught", F.lit(1))
     agg = (
         truth.join(cand, ["a_id", "b_id"], "left")
@@ -2195,15 +2099,14 @@ def _winnow_fps(spark: SparkSession, sf_dir: str) -> DataFrame:
     profile, the overlap pairs, the capped recall) — first build per
     (session, sf_dir), the rest reuse. The streaming ledger calls the
     docs-frame form directly on micro-batches."""
-    fps = _pin_keyed(
+    return pin_keyed(
         "winnow_fps",
         sf_dir,
         lambda: _winnow_fps_of(
             load_table(spark, sf_dir, "documents").select("doc_id", "text")
         ),
+        fill=True,
     )
-    fps.count()
-    return fps
 
 
 def _winnow_fps_of(docs: DataFrame) -> DataFrame:
@@ -2251,8 +2154,7 @@ def _winnow_fps_of(docs: DataFrame) -> DataFrame:
             .alias("h"),
         )
     )
-    grams = _pin("winnow_grams", grams)
-    grams.count()
+    grams = pin("winnow_grams", grams, fill=True)
     from pyspark.sql.window import Window
 
     w = Window.partitionBy("doc_id").orderBy("pos").rowsBetween(
@@ -2452,8 +2354,7 @@ def winnowing_capped_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     boilerplate tail), excluded via an AQE-broadcast anti-join; both
     pair joins are the bounded hash equi-joins of the base query."""
     fps = _winnow_fps(spark, sf_dir).select("doc_id", "h").distinct()
-    fps = _pin("winnow_fp_capped", fps)
-    fps.count()
+    fps = pin("winnow_fp_capped", fps, fill=True)
     hot = (
         fps.groupBy("h")
         .agg(F.count("*").alias("df"))
@@ -2834,7 +2735,7 @@ def doc_boilerplate_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("h"),
         )
     )
-    b = _pin("boiler_blocks", b)
+    b = pin("boiler_blocks", b, fill=False)
     df = b.groupBy("h").agg(
         F.countDistinct("doc_id").cast("bigint").alias("d")
     )
@@ -3033,12 +2934,13 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     ex = shingled.select("doc_id", F.explode("hs").alias("h"))
-    grouped = _pin(
+    grouped = pin(
         "containment_adj",
         ex.groupBy("h")
         .agg(F.sort_array(F.collect_list("doc_id")).alias("ds"))
         .where(F.size("ds") <= CONT_DF_CAP)
         .select("ds"),
+        fill=False,
     )
     # Pinned: the per-doc size frame feeds BOTH denominator joins
     # below as separate broadcast builds (aliased a_id/b_id output, so
@@ -3046,11 +2948,12 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pin the explode+aggregate over the capped adjacency ran twice
     # (visible as two identical HashAggregate+Exchange subtrees in
     # plans/r12/dedup_containment_before.txt).
-    sz = _pin(
+    sz = pin(
         "containment_sz",
         grouped.select(F.explode("ds").alias("doc_id"))
         .groupBy("doc_id")
         .agg(F.count("*").cast("bigint").alias("n")),
+        fill=False,
     )
     inter = (
         grouped.select(

@@ -28,9 +28,12 @@ extends SURVEY.md §2.10's analytics family.
 
 from __future__ import annotations
 
+from contextlib import ExitStack
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from open_pulsar_spark.materialize import held, pin, pin_keyed
 from open_pulsar_spark.registry import query
 from open_pulsar_spark.tables import load_table
 
@@ -118,14 +121,14 @@ def _weighted_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB this frame is the natural MATERIALIZED artifact (a
     table bucketed on u) — the keyed pin is the session-scoped form
     of that decision."""
-    from open_pulsar_spark.operators.dedup import _pin_keyed
 
-    we = _pin_keyed(
+    we = pin_keyed(
         "copurchase_wedges",
         sf_dir,
         lambda: _copurchase_pair_rows(spark, sf_dir)
         .groupBy("u", "v")
         .agg(F.count("*").alias("w")),
+        fill=False,
     )
     return we
 
@@ -199,9 +202,11 @@ def part_copurchase_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # for the iteration and RELEASED before returning — the final
     # top-PR_TOP rows are bounded, so they are materialized eagerly
     # below and nothing cached leaks past this call.
-    ed = edges.join(deg, "src").select("src", "dst", "w", "deg_w").persist()
-    nodes = ed.select(F.col("src").alias("pk")).distinct().persist()
-    try:
+    with held(
+        edges.join(deg, "src").select("src", "dst", "w", "deg_w"), fill=False
+    ) as ed, held(
+        ed.select(F.col("src").alias("pk")).distinct(), fill=False
+    ) as nodes:
         n_nodes = nodes.count()  # scalar: also pins both caches
         if n_nodes == 0:
             # no part ever co-occurs with another: the oracle returns
@@ -251,9 +256,6 @@ def part_copurchase_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         # materialize the PR_TOP-row result while the caches are live,
         # then hand back a local frame with the identical schema
         return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        ed.unpersist()
-        nodes.unpersist()
 
 
 # --------------------------------------------------------------------------
@@ -340,14 +342,14 @@ def copurchase_rec_hitrate(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate is rec-list/basket sized.
     """
     from open_pulsar_spark.operators.curation import _hash_raw_spark
-    from open_pulsar_spark.operators.dedup import _pin
 
-    tagged_b = _pin(
+    tagged_b = pin(
         "rec_baskets",
         _copurchase_baskets(spark, sf_dir).withColumn(
             "is_train",
             _hash_raw_spark(F.col("ok")) % 10 < REC_TRAIN_BUCKETS,
         ),
+        fill=False,
     )
     directed = (
         _directed_pairs(tagged_b.where("is_train"))
@@ -496,13 +498,10 @@ def part_copurchase_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(lower, F.col("v")).otherwise(F.col("u")).alias("t"),
         )
     )
-    adj = oe.groupBy("s").agg(F.collect_list("t").alias("nbrs")).persist()
-    try:
-        # materialization barrier: the triangle join below reads adj
-        # from BOTH sides of one job — two concurrent shuffle-map
-        # stages racing an unmaterialized cache recompute it (the
-        # bundle_modularity lesson, OPTIMIZATION_r12)
-        adj.count()
+    # filled: the triangle join below reads adj from BOTH sides of one job
+    with held(
+        oe.groupBy("s").agg(F.collect_list("t").alias("nbrs")), fill=True
+    ) as adj:
         # (a, b, cs): one row per oriented edge, cs = the common
         # out-neighbors = the triangles closed over (a, b). Computed
         # ONCE — the r12 shape exploded cs and re-keyed with a
@@ -554,8 +553,6 @@ def part_copurchase_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # bounded result: materialize while the caches are live
         return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        adj.unpersist()
 
 
 # --------------------------------------------------------------------------
@@ -786,15 +783,15 @@ def part_bundle_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the SHRINKING keep-set (AQE broadcasts it when small);
     the edge frame persists across rounds. TakeOrdered top-k, integer
     ordering."""
-    edges = (
-        _weighted_edges(spark, sf_dir)
-        .where(F.col("w") >= BUNDLE_MIN_W)
-        .select("u", "v")
-        .persist()
-    )
-    try:
-        cur = edges
-        kept_caches = []
+    with ExitStack() as caches:
+        cur = caches.enter_context(
+            held(
+                _weighted_edges(spark, sf_dir)
+                .where(F.col("w") >= BUNDLE_MIN_W)
+                .select("u", "v"),
+                fill=False,
+            )
+        )
         for _ in range(KCORE_ROUNDS):
             deg = (
                 cur.select(F.col("u").alias("n"))
@@ -803,20 +800,20 @@ def part_bundle_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .agg(F.count("*").alias("d"))
             )
             keep = deg.where(F.col("d") >= KCORE_K).select("n")
-            nxt = (
-                cur.join(keep.withColumnRenamed("n", "u"), "u", "left_semi")
-                .join(keep.withColumnRenamed("n", "v"), "v", "left_semi")
-                .select("u", "v")
-                .persist()
-            )
-            # NO eager count(): every parent cache stays live until the
-            # finally below, so the single final action materializes
-            # each round's frame lazily (each cached partition computes
+            # NOT filled: every parent cache stays live until the block
+            # exits, so the single final action materializes each
+            # round's frame lazily (each cached partition computes
             # once, the round's three consumers read the cache) — the
             # old per-round count() was KCORE_ROUNDS extra full jobs
             # whose output was discarded.
-            kept_caches.append(nxt)
-            cur = nxt
+            cur = caches.enter_context(
+                held(
+                    cur.join(keep.withColumnRenamed("n", "u"), "u", "left_semi")
+                    .join(keep.withColumnRenamed("n", "v"), "v", "left_semi")
+                    .select("u", "v"),
+                    fill=False,
+                )
+            )
         dfin = (
             cur.select(F.col("u").alias("p_partkey"))
             .unionAll(cur.select(F.col("v").alias("p_partkey")))
@@ -828,10 +825,6 @@ def part_bundle_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             .limit(KCORE_TOP)
             .localCheckpoint(eager=True)
         )
-    finally:
-        edges.unpersist()
-        for c in kept_caches:
-            c.unpersist()
 
 
 # --------------------------------------------------------------------------
@@ -919,7 +912,7 @@ def bundle_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     thresholded subset (bounded pair graph); the full edge set joins
     the label frame twice (keyed equi-joins), and everything after is
     label-cardinality sized. TakeOrdered top-{MODULARITY_TOP}."""
-    from open_pulsar_spark.operators.dedup import _pin, closure_labels
+    from open_pulsar_spark.operators.dedup import closure_labels
 
     wpairs = _weighted_edges(spark, sf_dir)
     labels = closure_labels(
@@ -930,7 +923,7 @@ def bundle_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).withColumnRenamed("u", "n")
     la = labels.select(F.col("n").alias("u"), F.col("label").alias("la"))
     lb = labels.select(F.col("n").alias("v"), F.col("label").alias("lb"))
-    le = _pin(
+    le = pin(
         "modularity_le",
         wpairs.join(la, "u", "left")
         .join(lb, "v", "left")
@@ -938,6 +931,7 @@ def bundle_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce("la", F.col("u")).alias("lab_a"),
             F.coalesce("lb", F.col("v")).alias("lab_b"),
         ),
+        fill=False,
     )
     m = le.count()
     if m == 0:
@@ -1278,19 +1272,19 @@ def copurchase_negative_samples(
     Determinism: degree ties in the pool cut break on part id; the
     per-anchor ranking is (md5 hex, candidate id) — total orders
     everywhere."""
-    from open_pulsar_spark.operators.dedup import _pin
 
     edges = _weighted_edges(spark, sf_dir)
     # deg feeds the eager pool cut AND the anchor explode of the main
     # job: pin it so the pool collect (its single first consumer)
     # fills the cache and the main job reads it instead of re-running
     # the union+aggregate over the edge frame (guide §1.2)
-    deg = _pin(
+    deg = pin(
         "negsamp_deg",
         edges.select(F.col("u").alias("pk"), "w")
         .unionAll(edges.select(F.col("v").alias("pk"), "w"))
         .groupBy("pk")
         .agg(F.sum("w").cast("bigint").alias("deg_w")),
+        fill=False,
     )
     pool = [
         (int(r.pk), int(r.deg_w))
@@ -1492,9 +1486,8 @@ def part_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     joins against the |parts|-row item counts, a 1-row broadcast N.
     No self-join of the posting list."""
     baskets = _copurchase_baskets(spark, sf_dir)
-    from open_pulsar_spark.operators.dedup import _pin
 
-    baskets = _pin("rules_baskets", baskets)
+    baskets = pin("rules_baskets", baskets, fill=False)
     n = baskets.agg(F.count("*").cast("bigint").alias("n_baskets"))
     ix = baskets.select(F.explode("ps").alias("pk")).groupBy("pk").agg(
         F.count("*").cast("bigint").alias("nx")

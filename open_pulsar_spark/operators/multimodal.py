@@ -27,6 +27,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from open_pulsar_spark.materialize import pin
 from open_pulsar_spark.registry import query
 from open_pulsar_spark.tables import load_table
 
@@ -699,9 +700,8 @@ def multimodal_magic_type_audit(
         .alias("printable_n"),
     )
     det = sniff.select("kind", F.expr(_sniff_sql("hx")).alias("detected"))
-    from open_pulsar_spark.operators.dedup import _pin
 
-    det = _pin("magic_det", det)
+    det = pin("magic_det", det, fill=False)
     kt = det.groupBy("kind").agg(
         F.count("*").cast("bigint").alias("kind_total")
     )

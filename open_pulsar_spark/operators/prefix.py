@@ -24,12 +24,17 @@ the summed columns are integral.
 
 from __future__ import annotations
 
-from typing import Any, Callable, Sequence
+from collections.abc import Callable, Iterator, Sequence
+from contextlib import contextmanager
+from typing import Any
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from open_pulsar_spark.materialize import held
 
+
+@contextmanager
 def _ranged_offsets(
     spark: SparkSession,
     df: DataFrame,
@@ -38,9 +43,9 @@ def _ranged_offsets(
     fold: Callable[[list], tuple[list[tuple], Any]],
     offsets_schema: str,
     parts: int,
-) -> tuple[DataFrame, Window, Any, Callable[[], None]]:
+) -> Iterator[tuple[DataFrame, Window, Any]]:
     """The shared scaffold behind both prefix helpers: range-partition
-    `df` on `cols`, tag the physical partition id, persist (the
+    `df` on `cols`, tag the physical partition id, hold it cached (the
     boundaries are sampled — the offsets are only valid against the
     partitioning they were measured on), aggregate per partition with
     `part_aggs`, collect the ≤ `parts` rows to the driver sorted by
@@ -48,45 +53,45 @@ def _ranged_offsets(
     offset tuples plus any extra payload), and broadcast-join the
     offsets back onto the ranged frame.
 
-    Returns ``(aug, window, extra, release)`` where `aug` carries the
-    offset columns, `window` is the within-partition total-order
-    window the caller combines against, and `release` unpersists the
-    internal cache (call AFTER materializing results).
+    Yields ``(aug, window, extra)`` where `aug` carries the offset
+    columns and `window` is the within-partition total-order window
+    the caller combines against; the cache is dropped when the block
+    exits, so materialize results inside it.
     """
-    ranged = (
-        df.repartitionByRange(parts, *cols)
-        .withColumn("pid", F.spark_partition_id())
-        .persist()
-    )
-    part_rows = sorted(
-        ((r["pid"], r) for r in ranged.groupBy("pid").agg(*part_aggs).collect()),
-        key=lambda t: t[0],
-    )
-    offset_rows, extra = fold(part_rows)
-    offsets = spark.createDataFrame(offset_rows, offsets_schema)
-    aug = ranged.join(F.broadcast(offsets), "pid")
-    w = Window.partitionBy("pid").orderBy(*cols)
-    return aug, w, extra, ranged.unpersist
+    with held(
+        df.repartitionByRange(parts, *cols).withColumn("pid", F.spark_partition_id()),
+        fill=False,
+    ) as ranged:
+        part_rows = sorted(
+            ((r["pid"], r) for r in ranged.groupBy("pid").agg(*part_aggs).collect()),
+            key=lambda t: t[0],
+        )
+        offset_rows, extra = fold(part_rows)
+        offsets = spark.createDataFrame(offset_rows, offsets_schema)
+        aug = ranged.join(F.broadcast(offsets), "pid")
+        yield aug, Window.partitionBy("pid").orderBy(*cols), extra
 
 
+@contextmanager
 def global_prefix(
     spark: SparkSession,
     df: DataFrame,
     order_cols: Sequence[Column | str],
     cum_cols: Sequence[str] = (),
     parts: int = 32,
-) -> tuple[DataFrame, dict[str, int], Callable[[], None]]:
-    """Returns ``(aug, totals, release)``:
+) -> Iterator[tuple[DataFrame, dict[str, int]]]:
+    """``with global_prefix(...) as (aug, totals):`` yields
 
     - ``aug`` — ``df`` plus a global ``rk`` (row_number over
       `order_cols`) and, per name ``c`` in `cum_cols`, a global
       running sum ``cum_<c>`` (ROWS UNBOUNDED PRECEDING, inclusive);
     - ``totals`` — ``{"n": row count}`` plus the full sum per cum col
       (a cum col may not itself be named ``"n"`` — rejected up front
-      rather than silently colliding with the row-count key);
-    - ``release`` — zero-arg callable releasing the internal cache;
-      call AFTER materializing everything derived from ``aug`` (the
-      revenue_pareto idiom: collect the small result, then release).
+      rather than silently colliding with the row-count key).
+
+    The internal cache is dropped when the block exits (exception
+    included): materialize everything derived from ``aug`` inside it
+    (the revenue_pareto idiom: collect the small result in the block).
     """
     if "n" in cum_cols:
         raise ValueError(
@@ -113,30 +118,32 @@ def global_prefix(
     schema = "pid INT, _rows_before LONG" + "".join(
         f", _before_{c} LONG" for c in cum_cols
     )
-    aug, w, totals, release = _ranged_offsets(
-        spark, df, cols, aggs, fold, schema, parts
-    )
-    run = w.rowsBetween(Window.unboundedPreceding, 0)
-    aug = aug.withColumn(
-        "rk", F.row_number().over(w) + F.col("_rows_before")
-    )
-    for c in cum_cols:
+    with _ranged_offsets(spark, df, cols, aggs, fold, schema, parts) as scaffold:
+        aug, w, totals = scaffold
+        run = w.rowsBetween(Window.unboundedPreceding, 0)
         aug = aug.withColumn(
-            f"cum_{c}", F.sum(c).over(run) + F.col(f"_before_{c}")
+            "rk", F.row_number().over(w) + F.col("_rows_before")
         )
-    return aug, totals, release
+        for c in cum_cols:
+            aug = aug.withColumn(
+                f"cum_{c}", F.sum(c).over(run) + F.col(f"_before_{c}")
+            )
+        yield aug, totals
 
 
+@contextmanager
 def exclusive_prefix_max(
     spark: SparkSession,
     df: DataFrame,
     order_cols: Sequence[Column | str],
     val_col: str,
     parts: int = 32,
-) -> tuple[DataFrame, Callable[[], None]]:
-    """``df`` plus ``prev_max`` — the max of integral ``val_col`` over
-    all STRICTLY-preceding rows in the total order (NULL for the first
-    row), without a single-partition global window.
+) -> Iterator[DataFrame]:
+    """``with exclusive_prefix_max(...) as aug:`` yields ``df`` plus
+    ``prev_max`` — the max of integral ``val_col`` over all
+    STRICTLY-preceding rows in the total order (NULL for the first
+    row), without a single-partition global window; materialize it
+    inside the block.
 
     Same three-step shape as global_prefix (max is associative, so the
     per-partition offset trick carries over verbatim), sharing its
@@ -156,7 +163,7 @@ def exclusive_prefix_max(
                 acc = m
         return offs, None
 
-    aug, w, _, release = _ranged_offsets(
+    with _ranged_offsets(
         spark,
         df,
         cols,
@@ -164,11 +171,10 @@ def exclusive_prefix_max(
         fold,
         "pid INT, _max_before LONG",
         parts,
-    )
-    local_prev = F.max(val_col).over(
-        w.rowsBetween(Window.unboundedPreceding, -1)
-    )
-    aug = aug.withColumn(
-        "prev_max", F.greatest(local_prev, F.col("_max_before"))
-    )
-    return aug, release
+    ) as (aug, w, _):
+        local_prev = F.max(val_col).over(
+            w.rowsBetween(Window.unboundedPreceding, -1)
+        )
+        yield aug.withColumn(
+            "prev_max", F.greatest(local_prev, F.col("_max_before"))
+        )

@@ -25,6 +25,8 @@ import threading
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from open_pulsar_spark.materialize import pin, release
+from open_pulsar_spark.operators.prefix import global_prefix
 from open_pulsar_spark.registry import query
 from open_pulsar_spark.tables import load_table
 
@@ -135,7 +137,7 @@ def lineitem_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     # compute all pair correlations on the ONE result row, then unpivot
     # with stack — re-referencing `s` once per pair would compile one
     # lineitem scan per pair (exchange reuse across union branches does
-    # not fire; dedup._pin documents the contract)
+    # not fire; materialize.pin documents the contract)
     wide = s.select(
         "n",
         *[
@@ -515,7 +517,7 @@ def dq_violation_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
       before the one shuffle).
     Each table's rules then STACK from its single result row — one
     subtree per table, never re-referenced (exchange reuse across
-    union branches does not fire; see dedup._pin's contract), so the
+    union branches does not fire; see materialize.pin's contract), so the
     whole suite is exactly three scans + two key joins.
     """
     li = load_table(spark, sf_dir, "lineitem")
@@ -661,9 +663,8 @@ def flag_status_mutual_info(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells = li.groupBy(
         F.col("l_returnflag").alias("rf"), F.col("l_linestatus").alias("ls")
     ).agg(F.count("*").cast("bigint").alias("nxy"))
-    from open_pulsar_spark.operators.dedup import _pin
 
-    cells = _pin("mi_cells", cells)
+    cells = pin("mi_cells", cells, fill=False)
     mx = cells.groupBy("rf").agg(F.sum("nxy").cast("bigint").alias("nx"))
     my = cells.groupBy("ls").agg(F.sum("nxy").cast("bigint").alias("ny"))
     # the total comes from an unpartitioned window over the JOINED
@@ -720,18 +721,18 @@ def _scatter_sums(spark: SparkSession, sf_dir: str):
     insert. ~2 KB per live entry. The lock is held across the compute
     so concurrent FAIR-pool consumers serialize into one pass."""
     from open_pulsar_spark.operators.clustering import _Q_EXPR
-    from open_pulsar_spark.operators.dedup import _pin
 
     key = (spark.sparkContext.applicationId, sf_dir)
     with _SCATTER_LOCK:
         hit = _SCATTER_CACHE.get(key)
         if hit is not None:
             return hit
-        emb = _pin(
+        emb = pin(
             "cov_q",
             load_table(spark, sf_dir, "embeddings").select(
                 F.expr(_Q_EXPR).alias("q")
             ),
+            fill=False,
         )
         n = emb.count()
         up = (
@@ -766,10 +767,8 @@ def _scatter_sums(spark: SparkSession, sf_dir: str):
         # consumption is fully eager (count + two collects) and cache
         # hits return the driver tuples — release the executor memory
         # instead of pinning the quantized corpus for the app lifetime
-        # (_release keeps the _pin registry consistent with reality)
-        from open_pulsar_spark.operators.dedup import _release
-
-        _release("cov_q")
+        # (release keeps the pin registry consistent with reality)
+        release("cov_q")
         from open_pulsar_spark.operators.clustering import _evict_other_apps
 
         _evict_other_apps(_SCATTER_CACHE, key[0])
@@ -930,32 +929,29 @@ def lineitem_price_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     releases. This query IS the engine's answer to "compute ANALYZE
     stats at 100 TB".
     """
-    from open_pulsar_spark.operators.prefix import global_prefix
 
     li = load_table(spark, sf_dir, "lineitem").select(
         F.col("l_extendedprice").alias("price"), "l_orderkey", "l_linenumber"
     )
-    aug, totals, release = global_prefix(
+    with global_prefix(
         spark, li, ["price", "l_orderkey", "l_linenumber"]
-    )
-    out = (
-        aug.withColumn(
-            "bin",
-            F.expr(f"((rk - 1) * {HIST_BINS}) div {totals['n']} + 1").cast(
-                "bigint"
-            ),
+    ) as (aug, totals):
+        out = (
+            aug.withColumn(
+                "bin",
+                F.expr(f"((rk - 1) * {HIST_BINS}) div {totals['n']} + 1").cast(
+                    "bigint"
+                ),
+            )
+            .groupBy("bin")
+            .agg(
+                F.count("*").alias("n_rows"),
+                F.min("price").alias("lo"),
+                F.max("price").alias("hi"),
+            )
+            .orderBy("bin")
         )
-        .groupBy("bin")
-        .agg(
-            F.count("*").alias("n_rows"),
-            F.min("price").alias("lo"),
-            F.max("price").alias("hi"),
-        )
-        .orderBy("bin")
-    )
-    result = spark.createDataFrame(out.collect(), out.schema)
-    release()
-    return result
+        return spark.createDataFrame(out.collect(), out.schema)
 
 
 # --------------------------------------------------------------------------
@@ -1172,11 +1168,11 @@ def join_size_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     production optimizer cannot afford to do per query and this
     harness does once per statistics refresh."""
     ev = load_table(spark, sf_dir, "events").select("user_id")
-    from open_pulsar_spark.operators.dedup import _pin
 
-    counts = _pin(
+    counts = pin(
         "jse_counts",
         ev.groupBy("user_id").agg(F.count("*").cast("bigint").alias("n")),
+        fill=False,
     )
     return join_size_report(spark, counts)
 
@@ -1448,9 +1444,8 @@ def customer_kanonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = cust.groupBy(*KANON_QUASI).agg(
         F.count("*").cast("bigint").alias("sz")
     )
-    from open_pulsar_spark.operators.dedup import _pin
 
-    return kanonymity_report(spark, _pin("kanon_groups", g))
+    return kanonymity_report(spark, pin("kanon_groups", g, fill=False))
 
 
 def kanonymity_report(spark: SparkSession, groups: DataFrame) -> DataFrame:
@@ -1575,9 +1570,8 @@ def customer_ldiversity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("band"),
     ).agg(F.count("*").cast("bigint").alias("cnt"))
-    from open_pulsar_spark.operators.dedup import _pin
 
-    return ldiversity_report(spark, _pin("ldiv_cells", cells))
+    return ldiversity_report(spark, pin("ldiv_cells", cells, fill=False))
 
 
 def ldiversity_report(spark: SparkSession, cells: DataFrame) -> DataFrame:
@@ -2084,9 +2078,8 @@ def ks_matrix_from_counts(
     streaming readout) must pass their own name — app-scoped pins are
     keyed by name, so two interleaved lazy consumers sharing one name
     would unpersist each other's generation mid-plan (ADVICE r11)."""
-    from open_pulsar_spark.operators.dedup import _pin
 
-    cnt = _pin(pin_name, cnt)
+    cnt = pin(pin_name, cnt, fill=False)
     from pyspark.sql.window import Window
 
     vals = cnt.select("v").distinct()
@@ -2281,9 +2274,8 @@ def segment_value_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("c2"),
     )
-    from open_pulsar_spark.operators.dedup import _pin
 
-    cb = _pin("psi_cb", cb)
+    cb = pin("psi_cb", cb, fill=False)
     t = cb.groupBy("segment").agg(
         F.sum("c1").cast("bigint").alias("t1"),
         F.sum("c2").cast("bigint").alias("t2"),
@@ -2431,9 +2423,8 @@ def orders_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("chi2_term_micro"),
         )
     )
-    from open_pulsar_spark.operators.dedup import _pin
 
-    cells = _pin("benford_cells", cells)
+    cells = pin("benford_cells", cells, fill=False)
     tot = cells.agg(
         F.sum("chi2_term_micro").cast("bigint").alias("chi2_total_micro")
     )

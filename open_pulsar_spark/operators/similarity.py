@@ -52,6 +52,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from open_pulsar_spark.materialize import pin
 from open_pulsar_spark.registry import query
 from open_pulsar_spark.tables import load_table
 
@@ -2162,9 +2163,8 @@ def ivf_nprobe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     truth = ann_topk_bruteforce(spark, sf_dir).select(
         "query_id", "neighbor_id"
     )
-    from open_pulsar_spark.operators.dedup import _pin
 
-    truth = _pin("ivf_curve_truth", truth)
+    truth = pin("ivf_curve_truth", truth, fill=False)
     n_truth = truth.count()
     hits = ret.join(truth, ["query_id", "neighbor_id"], "left_semi").groupBy(
         "nprobe"
@@ -2577,9 +2577,8 @@ def embedding_dim_truncation_recall(
     truth = ann_topk_bruteforce(spark, sf_dir).select(
         "query_id", "neighbor_id"
     )
-    from open_pulsar_spark.operators.dedup import _pin
 
-    truth = _pin("trunc_truth", truth)
+    truth = pin("trunc_truth", truth, fill=False)
     n_truth = truth.count()
     ids_all, raw, _ = _corpus_numpy(
         spark, sf_dir, F.col("vec_id") < N_QUERIES

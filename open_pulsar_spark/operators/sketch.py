@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from open_pulsar_spark.materialize import pin
 from open_pulsar_spark.operators.dedup import _SHINGLE_SQL
 from open_pulsar_spark.registry import query
 from open_pulsar_spark.tables import load_table
@@ -524,15 +525,14 @@ def shingle_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # dedup._minhash_sigs), and this query needs the stream TWICE
     # (counter build + exact counts), so it is computed once into a
     # cached string column.
-    from open_pulsar_spark.operators.dedup import _pin
 
-    tok = _pin(
+    tok = pin(
         "cms_tok",
         widen_for_kernel(
             load_table(spark, sf_dir, "documents").select("text")
         ).mapInPandas(shingle_stream_kernel, "t string"),
+        fill=True,
     )
-    tok.count()  # pin before the two consumers below
 
     depth_col = F.explode(F.array(*[F.lit(d) for d in range(CMS_DEPTH)])).alias("d")
     slots = (
@@ -979,13 +979,12 @@ def source_bloom_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     structure for join pruning and RTBF pre-checks; the probe harness
     is a vocab-sized equi-join on the word id. At 100 TB the harness
     samples its probe universe; the filter build is unchanged."""
-    from open_pulsar_spark.operators.dedup import _pin
 
     from open_pulsar_spark.tables import widen_for_kernel
 
     docs = widen_for_kernel(load_table(spark, sf_dir, "documents"))
-    sh = _pin("bloom_sh", source_shingles(docs))
-    bloom = _pin("bloom_rows", bloom_rows(sh))
+    sh = pin("bloom_sh", source_shingles(docs), fill=False)
+    bloom = pin("bloom_rows", bloom_rows(sh), fill=False)
     # ONE eager action: the universe count is the only scalar the plan
     # needs, and computing it materializes the pinned `sh` en route;
     # `bloom`'s cache fills lazily inside the final job (its first
@@ -1229,28 +1228,28 @@ def bloom_join_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle), probes map-side against the filter words, and the truth
     column is the exact left-semi the filter would normally replace —
     kept here as the harness. All counts integer."""
-    from open_pulsar_spark.operators.dedup import _pin
 
     orders = load_table(spark, sf_dir, "orders")
-    build = _pin(
+    build = pin(
         "bjp_build",
         orders.where(F.col("o_totalprice") > BJP_PRICE_MIN)
         .select(F.col("o_orderkey").cast("string").alias("t"))
         .distinct(),
+        fill=False,
     )
     n_build = build.count()
     bloom = bloom_rows(build.select(F.lit("build").alias("source"), "t")).select(
         "word", "bits"
     )
     li = load_table(spark, sf_dir, "lineitem")
-    lk = _pin(
+    lk = pin(
         "bjp_lk",
         li.groupBy(
             F.col("l_orderkey"),
             F.col("l_orderkey").cast("string").alias("t"),
         ).agg(F.count("*").cast("bigint").alias("n")),
+        fill=True,
     )
-    lk.count()
     ks = F.explode(F.array(*[F.lit(k) for k in range(BLOOM_K)])).alias("k")
     probe = lk.select("l_orderkey", "t", ks).select(
         "l_orderkey", F.expr(_BLOOM_SLOT_SPARK).alias("slot")
@@ -1386,9 +1385,8 @@ def sketch_accuracy_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed = ev.select(
         F.col("event_type").alias("g"), _hll_user_day_key().alias("key")
     )
-    from open_pulsar_spark.operators.dedup import _pin
 
-    keyed = _pin("sketch_matrix_keyed", keyed)
+    keyed = pin("sketch_matrix_keyed", keyed, fill=False)
     hashed = keyed.select(
         "g", F.expr(_U_SPARK_T.format(col="key")).alias("u")
     )

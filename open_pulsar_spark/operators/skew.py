@@ -93,6 +93,7 @@ def salt_expr(key: Column, buckets: int) -> Column:
 # --------------------------------------------------------------------------
 from pyspark.sql import SparkSession  # noqa: E402
 
+from open_pulsar_spark.operators.prefix import exclusive_prefix_max, global_prefix  # noqa: E402
 from open_pulsar_spark.registry import query  # noqa: E402
 from open_pulsar_spark.tables import load_table  # noqa: E402
 
@@ -211,13 +212,11 @@ def partition_plan_from_counts(
     statistics ledger's readout (streaming/stats_stream.py maintains
     exactly this count frame for join-size estimation; the same folded
     ledger now also answers 'what should the range boundaries be')."""
-    from open_pulsar_spark.operators.prefix import global_prefix
 
     c = counts.select("user_id", F.col("cnt").cast("bigint").alias("cnt"))
-    aug, totals, release = global_prefix(
+    with global_prefix(
         spark, c, [F.asc("user_id")], cum_cols=["cnt"]
-    )
-    try:
+    ) as (aug, totals):
         total = int(totals.get("cnt", 0) or 0)
         if total == 0:
             return spark.createDataFrame(
@@ -258,8 +257,6 @@ def partition_plan_from_counts(
         )
         # bounded result: materialize before releasing the rank caches
         return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        release()
 
 # --------------------------------------------------------------------------
 # events_lateness_profile — the withWatermark() design readout: how late
@@ -340,7 +337,6 @@ def events_lateness_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     window over the fact table; the candidate grid is a map-side
     explode of 4 literals; the result is |models|×|grid| rows,
     materialized before the prefix caches release."""
-    from open_pulsar_spark.operators.prefix import exclusive_prefix_max
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id",
@@ -363,8 +359,7 @@ def events_lateness_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         # global n/max — the old separate totals pass was a second full
         # scan of the prefix frame for numbers the grid aggregate
         # already had (guide §1.2: don't compute things twice).
-        aug, release = exclusive_prefix_max(spark, ev, orders[model], "es")
-        try:
+        with exclusive_prefix_max(spark, ev, orders[model], "es") as aug:
             late = aug.select(
                 F.greatest(
                     F.coalesce(F.col("prev_max") - F.col("es"), F.lit(0)),
@@ -401,8 +396,6 @@ def events_lateness_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
                 for r in rows
             ]
-        finally:
-            release()
 
     # The two ingest models are independent job chains over the same
     # input: submit them concurrently so the second model's range

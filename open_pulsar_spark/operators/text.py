@@ -18,6 +18,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from open_pulsar_spark.materialize import pin
+from open_pulsar_spark.operators.prefix import global_prefix
 from open_pulsar_spark.registry import query
 from open_pulsar_spark.tables import load_table
 
@@ -929,7 +931,6 @@ def quality_llm_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     the rank formula ((rk-1)·10) div n + 1 in BOTH engines, so bucket
     sizes match exactly; the aggregate is 10 groups.
     """
-    from open_pulsar_spark.operators.prefix import global_prefix
 
     docs = load_table(spark, sf_dir, "documents")
     mbyte = F.conv(F.substring(F.md5("text"), 1, 2), 16, 10).cast("bigint")
@@ -940,35 +941,32 @@ def quality_llm_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", _tokens(F.col("text")).alias("toks"), mbyte.alias("mbyte")
     ).select("doc_id", F.expr(_Q_INT_TOKS_EXPR).alias("q_int"), "mbyte")
 
-    aug, totals, release = global_prefix(spark, m, ["q_int", "doc_id"])
-    out = (
-        aug.withColumn(
-            "decile", F.expr(f"((rk - 1) * 10) div {totals['n']} + 1")
+    with global_prefix(spark, m, ["q_int", "doc_id"]) as (aug, totals):
+        out = (
+            aug.withColumn(
+                "decile", F.expr(f"((rk - 1) * 10) div {totals['n']} + 1")
+            )
+            .groupBy(F.col("decile").cast("bigint").alias("decile"))
+            .agg(
+                F.count("*").alias("n_docs"),
+                F.round(
+                    F.sum("q_int") * 1.0 / (F.count("*") * 1000000), 6
+                ).alias("avg_quality"),
+                F.round(F.sum("mbyte") * 1.0 / (F.count("*") * 255), 6).alias(
+                    "avg_model_score"
+                ),
+                F.round(
+                    F.sum(F.when(F.col("mbyte") >= 128, 1).otherwise(0))
+                    * 1.0
+                    / F.count("*"),
+                    6,
+                ).alias("model_keep_rate"),
+            )
+            .orderBy("decile")
         )
-        .groupBy(F.col("decile").cast("bigint").alias("decile"))
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.round(
-                F.sum("q_int") * 1.0 / (F.count("*") * 1000000), 6
-            ).alias("avg_quality"),
-            F.round(F.sum("mbyte") * 1.0 / (F.count("*") * 255), 6).alias(
-                "avg_model_score"
-            ),
-            F.round(
-                F.sum(F.when(F.col("mbyte") >= 128, 1).otherwise(0))
-                * 1.0
-                / F.count("*"),
-                6,
-            ).alias("model_keep_rate"),
-        )
-        .orderBy("decile")
-    )
-    # 10-row result: materialize, then release the prefix cache (the
-    # revenue_pareto idiom — a returned lazy frame over a pinned cache
-    # would leak it)
-    result = spark.createDataFrame(out.collect(), out.schema)
-    release()
-    return result
+        # 10-row result: materialize inside the block (the
+        # revenue_pareto idiom)
+        return spark.createDataFrame(out.collect(), out.schema)
 
 
 # --------------------------------------------------------------------------
@@ -1131,11 +1129,12 @@ def term_posting_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the head is consumed twice (semi-join filter AND final join);
     # ReusedExchange never fires across two consumers of one lineage,
     # so without the pin the corpus explode + tf aggregate compiles
-    # twice — _pin caps it at one computation, ≤ POSTING_TOP rows live
-    from open_pulsar_spark.operators.dedup import _pin
+    # twice — pin caps it at one computation, ≤ POSTING_TOP rows live
 
-    head = _pin(
-        "posting_head", stats.orderBy(F.desc("df"), "term").limit(POSTING_TOP)
+    head = pin(
+        "posting_head",
+        stats.orderBy(F.desc("df"), "term").limit(POSTING_TOP),
+        fill=False,
     )
     partial = tok.select("term", "doc_id").mapInPandas(
         _posting_kernel(), "term STRING, doc_id LONG"
@@ -1253,11 +1252,10 @@ def source_token_keyness(spark: SparkSession, sf_dir: str) -> DataFrame:
     (vocab-sized both sides), source totals + corpus total broadcast
     (|sources| + 1 rows). Output is |sources| × qualifying vocab.
     """
-    from open_pulsar_spark.operators.dedup import _pin
 
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select("source", F.explode(_tokens(F.col("text"))).alias("t"))
-    c = _pin("keyness_counts", tok.groupBy("source", "t").agg(F.count("*").alias("y")))
+    c = pin("keyness_counts", tok.groupBy("source", "t").agg(F.count("*").alias("y")), fill=False)
     v = c.groupBy("t").agg(F.sum("y").alias("yw"))
     s = c.groupBy("source").agg(F.sum("y").alias("ni"))
     n = s.agg(F.sum("ni").alias("n"))
@@ -1327,12 +1325,13 @@ def source_crossentropy_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     config-sized cross join (|sources| rows a side) so domain pairs
     with zero shared vocabulary still report their ceiling entropy.
     """
-    from open_pulsar_spark.operators.dedup import _pin
 
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select("source", F.explode(_tokens(F.col("text"))).alias("t"))
-    c = _pin(
-        "xent_counts", tok.groupBy("source", "t").agg(F.count("*").alias("y"))
+    c = pin(
+        "xent_counts",
+        tok.groupBy("source", "t").agg(F.count("*").alias("y")),
+        fill=False,
     )
     tot = c.groupBy("source").agg(F.sum("y").alias("n"))
     v = c.agg(F.countDistinct("t").alias("vsz"))
@@ -1552,13 +1551,11 @@ def zipf_fit_from_vocab(spark: SparkSession, vocab: DataFrame) -> DataFrame:
     computation, shared by the batch query and the streaming
     vocabulary ledger's readout (streaming/vocab_stream.py), so the
     two cannot rank, round or divide differently."""
-    from open_pulsar_spark.operators.prefix import global_prefix
 
     vocab = vocab.where(F.col("freq") >= ZIPF_MIN_FREQ)
-    aug, totals, release = global_prefix(
+    with global_prefix(
         spark, vocab, [F.desc("freq"), F.asc("t")]
-    )
-    try:
+    ) as (aug, _totals):
         pts = aug.select(
             F.round(F.log(F.col("rk")) * 1000000000, 0)
             .cast("decimal(38,0)")
@@ -1606,8 +1603,6 @@ def zipf_fit_from_vocab(spark: SparkSession, vocab: DataFrame) -> DataFrame:
         )
         # 1-row result: materialize before releasing the rank caches
         return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        release()
 
 
 # --------------------------------------------------------------------------
@@ -1700,9 +1695,8 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     tf = toks.groupBy("doc_id", "t").agg(
         F.count("*").cast("bigint").alias("tf")
     )
-    from open_pulsar_spark.operators.dedup import _pin
 
-    return bm25_from_tf(spark, _pin("bm25_tf", tf))
+    return bm25_from_tf(spark, pin("bm25_tf", tf, fill=False))
 
 
 def bm25_from_tf(spark: SparkSession, tf: DataFrame) -> DataFrame:
@@ -2028,10 +2022,11 @@ def doc_rake_keyphrases(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "pos", "tok", "st",
         F.sum("st").over(wd).alias("phrase_id"),
     )
-    from open_pulsar_spark.operators.dedup import _pin
 
-    words = _pin(
-        "rake_words", ph.where(F.col("st") == 0).drop("st")
+    words = pin(
+        "rake_words",
+        ph.where(F.col("st") == 0).drop("st"),
+        fill=False,
     )
     plen = words.groupBy("doc_id", "phrase_id").agg(
         F.count("*").cast("bigint").alias("len")
@@ -2137,7 +2132,6 @@ def quality_token_lorenz(spark: SparkSession, sf_dir: str) -> DataFrame:
     distributed prefix scaffold (global_prefix with a cum column —
     the revenue_pareto pattern), never a single-partition window;
     the rollup is 10 groups."""
-    from open_pulsar_spark.operators.prefix import global_prefix
 
     docs = load_table(spark, sf_dir, "documents")
     # toks then q_int each hoisted into their own projection: the
@@ -2153,29 +2147,27 @@ def quality_token_lorenz(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("doc_id", "q_int", (-F.col("q_int")).alias("q_neg"), "n_toks")
     )
-    aug, totals, release = global_prefix(
+    with global_prefix(
         spark, m, ["q_neg", "doc_id"], cum_cols=["n_toks"]
-    )
-    n, tt = totals["n"], totals["n_toks"]
-    out = (
-        aug.withColumn(
-            "decile", F.expr(f"((rk - 1) * 10) div {n} + 1")
+    ) as (aug, totals):
+        n, tt = totals["n"], totals["n_toks"]
+        out = (
+            aug.withColumn(
+                "decile", F.expr(f"((rk - 1) * 10) div {n} + 1")
+            )
+            .groupBy(F.col("decile").cast("bigint").alias("decile"))
+            .agg(
+                F.count("*").cast("bigint").alias("n_docs"),
+                F.sum("n_toks").cast("bigint").alias("tokens"),
+                F.max("cum_n_toks").cast("bigint").alias("cum_tokens"),
+                F.expr(
+                    f"cast(max(cum_n_toks) * 1000000 div {tt} as bigint)"
+                ).alias("cum_token_share_ppm"),
+                F.min("q_int").cast("bigint").alias("min_quality_micro"),
+            )
+            .orderBy("decile")
         )
-        .groupBy(F.col("decile").cast("bigint").alias("decile"))
-        .agg(
-            F.count("*").cast("bigint").alias("n_docs"),
-            F.sum("n_toks").cast("bigint").alias("tokens"),
-            F.max("cum_n_toks").cast("bigint").alias("cum_tokens"),
-            F.expr(
-                f"cast(max(cum_n_toks) * 1000000 div {tt} as bigint)"
-            ).alias("cum_token_share_ppm"),
-            F.min("q_int").cast("bigint").alias("min_quality_micro"),
-        )
-        .orderBy("decile")
-    )
-    result = spark.createDataFrame(out.collect(), out.schema)
-    release()
-    return result
+        return spark.createDataFrame(out.collect(), out.schema)
 
 
 # --------------------------------------------------------------------------

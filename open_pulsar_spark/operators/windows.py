@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from open_pulsar_spark.materialize import pin
+from open_pulsar_spark.operators.prefix import global_prefix
 from open_pulsar_spark.registry import query
 from open_pulsar_spark.tables import load_table
 
@@ -770,7 +772,6 @@ def events_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exact global running count in parallel. All integer deltas —
     output is bit-identical to the oracle's single-window statement.
     """
-    from open_pulsar_spark.operators.prefix import global_prefix
 
     ev = load_table(spark, sf_dir, "events")
     sess = (
@@ -782,20 +783,18 @@ def events_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
         sess.select(F.col("e").alias("t"), F.lit(-1).alias("d"))
     )
 
-    aug, _totals, release = global_prefix(
+    with global_prefix(
         spark, pts, [F.asc("t"), F.desc("d")], cum_cols=("d",)
-    )
-    out = (
-        aug.groupBy(F.date_trunc("day", F.col("t")).alias("day"))
-        .agg(
-            F.max("cum_d").cast("bigint").alias("peak_concurrency"),
-            F.count("*").alias("n_boundaries"),
+    ) as (aug, _totals):
+        out = (
+            aug.groupBy(F.date_trunc("day", F.col("t")).alias("day"))
+            .agg(
+                F.max("cum_d").cast("bigint").alias("peak_concurrency"),
+                F.count("*").alias("n_boundaries"),
+            )
+            .orderBy("day")
         )
-        .orderBy("day")
-    )
-    result = spark.createDataFrame(out.collect(), out.schema)
-    release()
-    return result
+        return spark.createDataFrame(out.collect(), out.schema)
 
 
 # --------------------------------------------------------------------------
@@ -863,9 +862,8 @@ def session_gap_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.unix_micros("ts") - F.unix_micros(F.lag("ts").over(w))
         ).alias("delta_us"),
     )
-    from open_pulsar_spark.operators.dedup import _pin
 
-    d = _pin("gap_deltas", d)
+    d = pin("gap_deltas", d, fill=False)
     tot = d.agg(
         F.count_distinct("user_id").cast("bigint").alias("n_users"),
         F.sum(F.when(F.col("delta_us").isNotNull(), 1).otherwise(0))
@@ -1254,9 +1252,8 @@ def session_conversion_attribution(
             ).alias("pre_type"),
         )
     )
-    from open_pulsar_spark.operators.dedup import _pin
 
-    sess = _pin("attribution_sess", sess)
+    sess = pin("attribution_sess", sess, fill=False)
     first_t = sess.groupBy(
         F.col("entry_type").alias("event_type")
     ).agg(

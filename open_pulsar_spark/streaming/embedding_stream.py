@@ -33,6 +33,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from open_pulsar_spark.materialize import held
 from open_pulsar_spark.streaming.segments import (
     append_tombstones,
     auto_compact,
@@ -118,61 +119,57 @@ def filter_embeddings_against_index(
     if done is not None:
         return done
 
-    tagged = _tag_batch(batch.dropDuplicates(["vec_id"])).persist()
-    tagged.count()  # pin before multi-consumer reads
-
-    cos_hist = F.expr(_DOT.format(a="emb", b="idx_emb"))
-    index = read_embedding_index(spark, index_path)
-    if index is not None:
-        cand = tagged.join(
-            index.select(
+    with held(_tag_batch(batch.dropDuplicates(["vec_id"])), fill=True) as tagged:
+        cos_hist = F.expr(_DOT.format(a="emb", b="idx_emb"))
+        index = read_embedding_index(spark, index_path)
+        if index is not None:
+            cand = tagged.join(
+                index.select(
+                    "bucket",
+                    F.col("vec_id").alias("idx_vec_id"),
+                    F.col("emb").alias("idx_emb"),
+                    F.col("epoch").alias("idx_epoch"),
+                ),
                 "bucket",
-                F.col("vec_id").alias("idx_vec_id"),
-                F.col("emb").alias("idx_emb"),
-                F.col("epoch").alias("idx_epoch"),
-            ),
-            "bucket",
-        )
-        if epoch_id is not None:
-            # replay-after-compaction can still see this epoch's own
-            # rows — see segments.replay_exclusion
-            cand = cand.where(
-                replay_exclusion("vec_id", "idx_vec_id", "idx_epoch", epoch_id)
             )
-        dup_vs_history = (
-            cand.where(cos_hist >= threshold).select("vec_id").distinct()
+            if epoch_id is not None:
+                # replay-after-compaction can still see this epoch's own
+                # rows — see segments.replay_exclusion
+                cand = cand.where(
+                    replay_exclusion("vec_id", "idx_vec_id", "idx_epoch", epoch_id)
+                )
+            dup_vs_history = (
+                cand.where(cos_hist >= threshold).select("vec_id").distinct()
+            )
+        else:
+            dup_vs_history = spark.createDataFrame([], "vec_id LONG")
+
+        a, b = tagged.alias("a"), tagged.alias("b")
+        cos_batch = F.expr(_DOT.format(a="a.emb", b="b.emb"))
+        dup_in_batch = (
+            a.join(b, F.col("a.bucket") == F.col("b.bucket"))
+            .where(F.col("a.vec_id") > F.col("b.vec_id"))
+            .where(cos_batch >= threshold)
+            .select(F.col("a.vec_id").alias("vec_id"))
+            .distinct()
         )
-    else:
-        dup_vs_history = spark.createDataFrame([], "vec_id LONG")
 
-    a, b = tagged.alias("a"), tagged.alias("b")
-    cos_batch = F.expr(_DOT.format(a="a.emb", b="b.emb"))
-    dup_in_batch = (
-        a.join(b, F.col("a.bucket") == F.col("b.bucket"))
-        .where(F.col("a.vec_id") > F.col("b.vec_id"))
-        .where(cos_batch >= threshold)
-        .select(F.col("a.vec_id").alias("vec_id"))
-        .distinct()
-    )
+        dups = dup_vs_history.unionAll(dup_in_batch).distinct()
+        survivors = tagged.select("vec_id").join(dups, "vec_id", "left_anti")
 
-    dups = dup_vs_history.unionAll(dup_in_batch).distinct()
-    survivors = tagged.select("vec_id").join(dups, "vec_id", "left_anti")
-
-    out = commit_survivors(
-        spark,
-        tagged.join(survivors, "vec_id")
-        .select("vec_id", "bucket", "emb")
-        .withColumn(
-            "epoch",
-            F.lit(_BACKFILL_EPOCH if epoch_id is None else epoch_id).cast("long"),
-        ),
-        index_path,
-        epoch_id,
-        _EMB_INDEX_SCHEMA,
-        "vec_id",
-    )
-    tagged.unpersist()
-    return out
+        return commit_survivors(
+            spark,
+            tagged.join(survivors, "vec_id")
+            .select("vec_id", "bucket", "emb")
+            .withColumn(
+                "epoch",
+                F.lit(_BACKFILL_EPOCH if epoch_id is None else epoch_id).cast("long"),
+            ),
+            index_path,
+            epoch_id,
+            _EMB_INDEX_SCHEMA,
+            "vec_id",
+        )
 
 
 def start_embedding_dedup_stream(

@@ -43,6 +43,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from open_pulsar_spark.materialize import held
 from open_pulsar_spark.operators.dedup import (
     JACCARD_THRESHOLD,
     LSH_BANDS,
@@ -142,98 +143,95 @@ def filter_batch_against_index(
         return done
 
     batch_docs = collapse_same_id(batch_docs)
-    sigs = _minhash_sigs(batch_docs).persist()
-    sigs.count()  # pin before the multi-consumer reads below
-    bands = _bands_of(sigs)
+    with held(_minhash_sigs(batch_docs), fill=True) as sigs:
+        bands = _bands_of(sigs)
 
-    index = read_index(spark, index_path)
-    if index is not None and max_band_collisions is not None:
-        # The cap must count what a CLEAN index would hold, or the
-        # candidate set becomes replay-nondeterministic: (a) a replay
-        # after compaction sees this epoch's own rows — excluded from
-        # the count as they are from the join; (b) a crash between
-        # compact-write and source-delete doubles every row — deduped
-        # on (doc_id, band) before counting.
-        count_basis = index.dropDuplicates(["doc_id", "band"])
-        if epoch_id is not None:
-            count_basis = count_basis.where(F.col("epoch") != epoch_id)
-        hot = (
-            count_basis.groupBy("band", "sig")
-            .count()
-            .where(F.col("count") > max_band_collisions)
-            .select("band", "sig")
-        )
-        index = index.join(hot, ["band", "sig"], "left_anti")
-    if index is not None:
-        cand = bands.join(
-            index.select(
-                "band",
-                "sig",
-                F.col("doc_id").alias("idx_doc_id"),
-                F.col("hs").alias("idx_hs"),
-                F.col("epoch").alias("idx_epoch"),
-            ),
-            ["band", "sig"],
-        )
-        if epoch_id is not None:
-            # replay-after-compaction can still see this epoch's own
-            # rows — see segments.replay_exclusion
-            cand = cand.where(
-                replay_exclusion("doc_id", "idx_doc_id", "idx_epoch", epoch_id)
+        index = read_index(spark, index_path)
+        if index is not None and max_band_collisions is not None:
+            # The cap must count what a CLEAN index would hold, or the
+            # candidate set becomes replay-nondeterministic: (a) a replay
+            # after compaction sees this epoch's own rows — excluded from
+            # the count as they are from the join; (b) a crash between
+            # compact-write and source-delete doubles every row — deduped
+            # on (doc_id, band) before counting.
+            count_basis = index.dropDuplicates(["doc_id", "band"])
+            if epoch_id is not None:
+                count_basis = count_basis.where(F.col("epoch") != epoch_id)
+            hot = (
+                count_basis.groupBy("band", "sig")
+                .count()
+                .where(F.col("count") > max_band_collisions)
+                .select("band", "sig")
             )
-        hist_cand = cand.select("doc_id", "hs", "idx_doc_id", "idx_hs").distinct()
-        dup_vs_history = _near_dup_of(hist_cand).select("doc_id").distinct()
-    else:
-        dup_vs_history = spark.createDataFrame([], "doc_id LONG")
+            index = index.join(hot, ["band", "sig"], "left_anti")
+        if index is not None:
+            cand = bands.join(
+                index.select(
+                    "band",
+                    "sig",
+                    F.col("doc_id").alias("idx_doc_id"),
+                    F.col("hs").alias("idx_hs"),
+                    F.col("epoch").alias("idx_epoch"),
+                ),
+                ["band", "sig"],
+            )
+            if epoch_id is not None:
+                # replay-after-compaction can still see this epoch's own
+                # rows — see segments.replay_exclusion
+                cand = cand.where(
+                    replay_exclusion("doc_id", "idx_doc_id", "idx_epoch", epoch_id)
+                )
+            hist_cand = cand.select("doc_id", "hs", "idx_doc_id", "idx_hs").distinct()
+            dup_vs_history = _near_dup_of(hist_cand).select("doc_id").distinct()
+        else:
+            dup_vs_history = spark.createDataFrame([], "doc_id LONG")
 
-    # within-batch near-dups: keep the lowest doc_id of each pair
-    a, b = bands.alias("a"), bands.alias("b")
-    in_batch_cand = (
-        a.join(b, (F.col("a.band") == F.col("b.band")) & (F.col("a.sig") == F.col("b.sig")))
-        .where(F.col("a.doc_id") > F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_id"),
-            F.col("a.hs").alias("hs"),
-            F.col("b.doc_id").alias("idx_doc_id"),
-            F.col("b.hs").alias("idx_hs"),
+        # within-batch near-dups: keep the lowest doc_id of each pair
+        a, b = bands.alias("a"), bands.alias("b")
+        in_batch_cand = (
+            a.join(b, (F.col("a.band") == F.col("b.band")) & (F.col("a.sig") == F.col("b.sig")))
+            .where(F.col("a.doc_id") > F.col("b.doc_id"))
+            .select(
+                F.col("a.doc_id").alias("doc_id"),
+                F.col("a.hs").alias("hs"),
+                F.col("b.doc_id").alias("idx_doc_id"),
+                F.col("b.hs").alias("idx_hs"),
+            )
+            .distinct()
         )
-        .distinct()
-    )
-    dup_in_batch = _near_dup_of(in_batch_cand).select("doc_id").distinct()
+        dup_in_batch = _near_dup_of(in_batch_cand).select("doc_id").distinct()
 
-    dups = dup_vs_history.unionAll(dup_in_batch).distinct()
-    survivors = sigs.select("doc_id").join(dups, "doc_id", "left_anti")
+        dups = dup_vs_history.unionAll(dup_in_batch).distinct()
+        survivors = sigs.select("doc_id").join(dups, "doc_id", "left_anti")
 
-    # Docs too short to shingle (<3 tokens / null text) have no
-    # signature and can never be near-dups under this definition, so
-    # they PASS THROUGH as survivors rather than silently vanishing.
-    # Their index row is a sentinel (band=-1, sig NULL): inert in every
-    # candidate equi-join (NULL never equals), but read back with the
-    # other survivor ids.
-    short = batch_docs.select("doc_id").join(
-        sigs.select("doc_id"), "doc_id", "left_anti"
-    )
-    survivor_rows = (
-        bands.join(survivors, "doc_id")
-        .select("doc_id", "band", "sig", "hs")
-        .unionByName(
-            short.select(
-                "doc_id",
-                F.lit(-1).cast("int").alias("band"),
-                F.lit(None).cast("string").alias("sig"),
-                F.array().cast("array<long>").alias("hs"),
+        # Docs too short to shingle (<3 tokens / null text) have no
+        # signature and can never be near-dups under this definition, so
+        # they PASS THROUGH as survivors rather than silently vanishing.
+        # Their index row is a sentinel (band=-1, sig NULL): inert in every
+        # candidate equi-join (NULL never equals), but read back with the
+        # other survivor ids.
+        short = batch_docs.select("doc_id").join(
+            sigs.select("doc_id"), "doc_id", "left_anti"
+        )
+        survivor_rows = (
+            bands.join(survivors, "doc_id")
+            .select("doc_id", "band", "sig", "hs")
+            .unionByName(
+                short.select(
+                    "doc_id",
+                    F.lit(-1).cast("int").alias("band"),
+                    F.lit(None).cast("string").alias("sig"),
+                    F.array().cast("array<long>").alias("hs"),
+                )
+            )
+            .withColumn(
+                "epoch",
+                F.lit(_BACKFILL_EPOCH if epoch_id is None else epoch_id).cast("long"),
             )
         )
-        .withColumn(
-            "epoch",
-            F.lit(_BACKFILL_EPOCH if epoch_id is None else epoch_id).cast("long"),
+        return commit_survivors(
+            spark, survivor_rows, index_path, epoch_id, _INDEX_SCHEMA, "doc_id"
         )
-    )
-    out = commit_survivors(
-        spark, survivor_rows, index_path, epoch_id, _INDEX_SCHEMA, "doc_id"
-    )
-    sigs.unpersist()
-    return out
 
 
 def backfill_index(spark: SparkSession, docs: DataFrame, index_path: str) -> int:

@@ -42,6 +42,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from open_pulsar_spark.materialize import held
 from open_pulsar_spark.streaming.segments import (
     auto_compact,
     collapse_same_id,
@@ -75,68 +76,64 @@ def novelty_batch_step(
     from open_pulsar_spark.operators.dedup import _shingled_of
 
     batch_docs = collapse_same_id(batch_docs)
-    sh = (
+    # three consumers below — shingle once
+    with held(
         _shingled_of(batch_docs)
         .select("doc_id", F.explode("sh").alias("t"))
-        .select("doc_id", F.xxhash64("t").alias("h"))
-        .persist()  # three consumers below — shingle once
-    )
+        .select("doc_id", F.xxhash64("t").alias("h")),
+        fill=False,
+    ) as sh:
+        idx = read_segments(spark, index_path, _INDEX_SCHEMA)
+        if idx is not None and epoch_id is not None:
+            # replay after compaction: this epoch's own rows may live inside
+            # a compact segment — ignoring them reproduces the original run
+            idx = idx.where(F.col("epoch") != F.lit(epoch_id))
+        if idx is not None:
+            # ONE shuffle of the index: anti join on h (anti never
+            # multiplies rows, so mid-compaction duplicate h rows are
+            # harmless and no distinct() pre-aggregate is needed)
+            unseen = sh.join(idx, "h", "left_anti")
+        else:
+            unseen = sh
 
-    idx = read_segments(spark, index_path, _INDEX_SCHEMA)
-    if idx is not None and epoch_id is not None:
-        # replay after compaction: this epoch's own rows may live inside
-        # a compact segment — ignoring them reproduces the original run
-        idx = idx.where(F.col("epoch") != F.lit(epoch_id))
-    if idx is not None:
-        # ONE shuffle of the index: anti join on h (anti never
-        # multiplies rows, so mid-compaction duplicate h rows are
-        # harmless and no distinct() pre-aggregate is needed)
-        unseen = sh.join(idx, "h", "left_anti")
-    else:
-        unseen = sh
-
-    batch_first = F.min("doc_id").over(Window.partitionBy("h"))
-    # persist AFTER the index anti-join + window: both sink writes below
-    # consume `novel`, and without this pin the dominant per-batch cost
-    # (the full-index anti-join) would execute twice
-    novel = unseen.withColumn(
-        "_novel", F.col("doc_id") == batch_first
-    ).persist()
-
-    try:
-        novel_counts = (
-            novel.groupBy("doc_id")
-            .agg(F.sum(F.when(F.col("_novel"), 1).otherwise(0)).alias("n_novel"))
-        )
-        out_rows = (
-            sh.groupBy("doc_id")
-            .agg(F.count("*").alias("n_shingles"))
-            .join(novel_counts, "doc_id", "left")
-            .select(
-                "doc_id",
-                "n_shingles",
-                F.coalesce("n_novel", F.lit(0)).cast("bigint").alias("n_novel"),
-                F.round(
-                    F.coalesce("n_novel", F.lit(0)) * 1.0 / F.col("n_shingles"),
-                    6,
-                ).alias("novelty"),
+        batch_first = F.min("doc_id").over(Window.partitionBy("h"))
+        # persist AFTER the index anti-join + window: both sink writes below
+        # consume `novel`, and without this pin the dominant per-batch cost
+        # (the full-index anti-join) would execute twice
+        with held(
+            unseen.withColumn("_novel", F.col("doc_id") == batch_first),
+            fill=False,
+        ) as novel:
+            novel_counts = (
+                novel.groupBy("doc_id")
+                .agg(F.sum(F.when(F.col("_novel"), 1).otherwise(0)).alias("n_novel"))
             )
-        )
-        new_index = (
-            novel.groupBy("h")
-            .agg(F.min("doc_id").alias("first_doc"))
-            .withColumn(
-                "epoch",
-                F.lit(
-                    _BACKFILL_EPOCH if epoch_id is None else epoch_id
-                ).cast("long"),
+            out_rows = (
+                sh.groupBy("doc_id")
+                .agg(F.count("*").alias("n_shingles"))
+                .join(novel_counts, "doc_id", "left")
+                .select(
+                    "doc_id",
+                    "n_shingles",
+                    F.coalesce("n_novel", F.lit(0)).cast("bigint").alias("n_novel"),
+                    F.round(
+                        F.coalesce("n_novel", F.lit(0)) * 1.0 / F.col("n_shingles"),
+                        6,
+                    ).alias("novelty"),
+                )
             )
-        )
-        seg = write_segment(out_rows, out_path, epoch_id)
-        write_segment(new_index, index_path, epoch_id)
-    finally:
-        novel.unpersist()
-        sh.unpersist()
+            new_index = (
+                novel.groupBy("h")
+                .agg(F.min("doc_id").alias("first_doc"))
+                .withColumn(
+                    "epoch",
+                    F.lit(
+                        _BACKFILL_EPOCH if epoch_id is None else epoch_id
+                    ).cast("long"),
+                )
+            )
+            seg = write_segment(out_rows, out_path, epoch_id)
+            write_segment(new_index, index_path, epoch_id)
     return spark.read.schema(_OUT_SCHEMA).parquet(seg)
 
 

@@ -40,11 +40,10 @@ def _expected(rows: list[tuple[int, int, int]]):
 def test_global_prefix_matches_single_window(spark, kd_rows, parts):
     rows = [(k, rid, d) for rid, (k, d) in enumerate(kd_rows)]
     df = spark.createDataFrame(rows, "k LONG, rid LONG, d LONG")
-    aug, totals, release = global_prefix(
+    with global_prefix(
         spark, df, ["k", "rid"], cum_cols=("d",), parts=parts
-    )
-    got = {r.rid: (r.rk, r.cum_d) for r in aug.collect()}
-    release()
+    ) as (aug, totals):
+        got = {r.rid: (r.rk, r.cum_d) for r in aug.collect()}
     assert totals["n"] == len(rows)
     assert totals["d"] == sum(d for _, _, d in rows)
     assert got == _expected(rows)
@@ -55,7 +54,8 @@ def test_global_prefix_rejects_n_cum_col(spark):
 
     df = spark.createDataFrame([(1, 2)], "k LONG, n LONG")
     with pytest.raises(ValueError):
-        global_prefix(spark, df, ["k"], cum_cols=("n",))
+        with global_prefix(spark, df, ["k"], cum_cols=("n",)):
+            pass
 
 
 def _expected_prev_max(rows: list[tuple[int, int, int]]):
@@ -86,9 +86,8 @@ def test_exclusive_prefix_max_matches_single_window(spark, kd_rows, parts):
 
     rows = [(k, rid, d) for rid, (k, d) in enumerate(kd_rows)]
     df = spark.createDataFrame(rows, "k LONG, rid LONG, d LONG")
-    aug, release = exclusive_prefix_max(spark, df, ["k", "rid"], "d", parts=parts)
-    got = {r.rid: r.prev_max for r in aug.collect()}
-    release()
+    with exclusive_prefix_max(spark, df, ["k", "rid"], "d", parts=parts) as aug:
+        got = {r.rid: r.prev_max for r in aug.collect()}
     assert got == _expected_prev_max(rows)
 
 

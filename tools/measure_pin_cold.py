@@ -1,5 +1,5 @@
 """Cold-sample measurement for the keyed-pin question (round-7 task #4):
-does dedup_minhash_lsh pay for the _pin_keyed refactor in bench's
+does dedup_minhash_lsh pay for its materialize.pin_keyed cache in bench's
 cold-per-sample regime (clearCache between samples)?
 
 Usage: python tools/measure_pin_cold.py [sf_dir] [runs] [query ...]

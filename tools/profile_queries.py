@@ -1,13 +1,13 @@
-"""Round-12 optimization profiler.
+"""Per-query plan capture and cold-sample timing.
 
 For each named query: capture .explain("formatted") to
-plans/r12/<name>_<tag>.txt, then time N cold samples (clearCache before
+plans/r13/<name>_<tag>.txt, then time N cold samples (clearCache before
 each, same methodology as bench.py) of BOTH the bench action
 (.collect()) and the noop sink, printing a compact per-query line.
 
 Usage:
-    python tools/profile_r12.py [--sf DIR] [--runs N] [--tag before|after]
-                                [--no-plans] query [query ...]
+    python tools/profile_queries.py [--sf DIR] [--runs N] [--tag before|after]
+                                    [--no-plans] query [query ...]
 """
 
 from __future__ import annotations
@@ -35,7 +35,7 @@ def main() -> None:
 
     from open_pulsar_spark import get_spark, registry
 
-    spark = get_spark("open-pulsar-profile-r12")
+    spark = get_spark("open-pulsar-profile")
     spark.sparkContext.setLogLevel("ERROR")
     qs = registry.all_queries()
 
@@ -46,7 +46,7 @@ def main() -> None:
     plans_dir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "plans",
-        "r12",
+        "r13",
     )
     os.makedirs(plans_dir, exist_ok=True)
 

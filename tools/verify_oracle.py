@@ -164,8 +164,10 @@ def main() -> None:
             res = {"name": name, "status": "ERROR", "error": str(e)[:500]}
         ok = res["status"] in ("OK", "rows_only")
         failures += 0 if ok else 1
-        print(f"{'PASS' if ok else 'FAIL'} {res}")
-    print(f"\n{'ALL GREEN' if failures == 0 else f'{failures} FAILURES'}")
+        # flushed per line: a redirected run killed mid-way keeps
+        # every result it has printed
+        print(f"{'PASS' if ok else 'FAIL'} {res}", flush=True)
+    print(f"\n{'ALL GREEN' if failures == 0 else f'{failures} FAILURES'}", flush=True)
     spark.stop()
     sys.exit(1 if failures else 0)
 
