@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 
 from open_pulsar_spark.materialize import pin
 from open_pulsar_spark.operators.prefix import exclusive_prefix_max, global_prefix
-from open_pulsar_spark.registry import query
+from open_pulsar_spark.registry import query, query_sql
 from open_pulsar_spark.tables import load_table
 
 
@@ -64,9 +64,13 @@ def order_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # customer_balance_ranks — rank / dense_rank / ntile / lag / lead.
 # --------------------------------------------------------------------------
-@query(
+# rank/dense_rank over a coarsened balance (so ties exist and the two
+# differ), ntile + lag/lead over a unique ordering (tie order must be
+# deterministic for those). One shuffle on c_nationkey serves all five
+# windows.
+customer_balance_ranks = query_sql(
     "customer_balance_ranks",
-    oracle="""
+    """
     SELECT c_custkey, c_nationkey,
            round(c_acctbal, 2) AS acctbal,
            rank()       OVER (PARTITION BY c_nationkey ORDER BY round(c_acctbal, -2) DESC) AS rnk,
@@ -74,36 +78,11 @@ def order_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
            ntile(4)     OVER (PARTITION BY c_nationkey ORDER BY c_acctbal DESC, c_custkey) AS quartile,
            lag(c_custkey)  OVER (PARTITION BY c_nationkey ORDER BY c_acctbal DESC, c_custkey) AS prev_custkey,
            lead(c_custkey) OVER (PARTITION BY c_nationkey ORDER BY c_acctbal DESC, c_custkey) AS next_custkey
-    FROM customer
+    FROM {customer}
     WHERE c_custkey < 200
     ORDER BY c_nationkey, quartile, c_custkey
     """,
 )
-def customer_balance_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The ranking-function family per nation: rank/dense_rank over a
-    coarsened balance (so ties exist and the two differ), ntile +
-    lag/lead over a unique ordering (tie order must be deterministic
-    for those). One shuffle on c_nationkey serves all five windows."""
-    cust = load_table(spark, sf_dir, "customer").where(F.col("c_custkey") < 200)
-    by_bucket = Window.partitionBy("c_nationkey").orderBy(
-        F.desc(F.round("c_acctbal", -2))
-    )
-    by_exact = Window.partitionBy("c_nationkey").orderBy(
-        F.desc("c_acctbal"), F.col("c_custkey")
-    )
-    return (
-        cust.select(
-            "c_custkey",
-            "c_nationkey",
-            F.round("c_acctbal", 2).alias("acctbal"),
-            F.rank().over(by_bucket).alias("rnk"),
-            F.dense_rank().over(by_bucket).alias("drnk"),
-            F.ntile(4).over(by_exact).alias("quartile"),
-            F.lag("c_custkey").over(by_exact).alias("prev_custkey"),
-            F.lead("c_custkey").over(by_exact).alias("next_custkey"),
-        )
-        .orderBy("c_nationkey", "quartile", "c_custkey")
-    )
 
 
 # --------------------------------------------------------------------------
@@ -143,9 +122,13 @@ def quantity_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # order_history_scd2 — SCD2-style validity ranges via lead().
 # --------------------------------------------------------------------------
-@query(
+# Each record's validity window closes when the next version opens
+# (lead()), the open-ended row flagged current — one shuffle on the
+# business key. The streaming CDC twin (streaming/scd2_stream.py)
+# assembles the same intervals with `scd2_intervals` below.
+order_history_scd2 = query_sql(
     "order_history_scd2",
-    oracle="""
+    """
     SELECT o_custkey, o_orderkey,
            o_orderdate AS valid_from,
            lead(o_orderdate) OVER (PARTITION BY o_custkey
@@ -153,27 +136,19 @@ def quantity_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
            CASE WHEN lead(o_orderdate) OVER (PARTITION BY o_custkey
                                              ORDER BY o_orderdate, o_orderkey) IS NULL
                 THEN 1 ELSE 0 END AS is_current
-    FROM orders
+    FROM {orders}
     WHERE o_custkey < 50
     ORDER BY o_custkey, valid_from, o_orderkey
     """,
 )
-def order_history_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Slowly-changing-dimension (type 2) construction: each record's
-    validity window closes when the next version opens (`lead()`), the
-    open-ended row flagged current. The standard pattern for building
-    point-in-time joinable history without Delta MERGE — one shuffle
-    on the business key."""
-    orders = load_table(spark, sf_dir, "orders").where(F.col("o_custkey") < 50)
-    return scd2_intervals(orders)
 
 
 def scd2_intervals(orders: DataFrame) -> DataFrame:
     """(o_custkey, o_orderkey, o_orderdate) change rows → SCD2 validity
-    intervals — THE one interval-assembly the batch query and the
-    streaming CDC twin (streaming/scd2_stream.py) share, so a folded
-    change log and a batch scan cannot assemble different histories.
-    An interval is a function of the WHOLE per-key change set (a late
+    intervals — the streaming CDC twin's (streaming/scd2_stream.py)
+    DataFrame form of order_history_scd2's SQL text; the twin tests
+    (test_scd2_stream_folds_to_batch_history, tools/verify_twins.py)
+    pin the two to the same history. An interval is a function of the WHOLE per-key change set (a late
     change re-opens and re-closes neighbors), which is exactly why the
     streaming store keeps change rows and derives intervals at read."""
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
@@ -421,14 +396,18 @@ def events_top_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # orders_monthly_trend — calendar rollup with MoM/YoY window arithmetic.
 # --------------------------------------------------------------------------
-@query(
+# Scale: one shuffle to O(#months) rows; the window then runs on a frame
+# small enough for a single partition at ANY raw data scale, which is
+# why a global ORDER BY window here is safe despite being the usual red
+# flag.
+orders_monthly_trend = query_sql(
     "orders_monthly_trend",
-    oracle="""
+    """
     WITH monthly AS (
         SELECT date_trunc('month', o_orderdate)::TIMESTAMP AS month,
                count(*)                         AS n_orders,
                round(sum(o_totalprice), 2)      AS revenue
-        FROM orders GROUP BY 1
+        FROM {orders} GROUP BY 1
     )
     SELECT month, n_orders, revenue,
            round(revenue - lag(revenue) OVER (ORDER BY month), 2)   AS mom_delta,
@@ -437,28 +416,6 @@ def events_top_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY month
     """,
 )
-def orders_monthly_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Monthly revenue with month-over-month delta and year-over-year
-    ratio (lag 12 on the calendar spine) — the reporting-rollup shape.
-    One shuffle to O(#months) rows; the window then runs on a frame
-    small enough for a single partition at ANY raw data scale, which
-    is why a global ORDER BY window here is safe despite being the
-    usual red flag."""
-    orders = load_table(spark, sf_dir, "orders")
-    monthly = orders.groupBy(
-        F.date_trunc("month", "o_orderdate").alias("month")
-    ).agg(
-        F.count("*").alias("n_orders"),
-        F.round(F.sum("o_totalprice"), 2).alias("revenue"),
-    )
-    w = Window.orderBy("month")
-    return monthly.select(
-        "month",
-        "n_orders",
-        "revenue",
-        F.round(F.col("revenue") - F.lag("revenue").over(w), 2).alias("mom_delta"),
-        F.round(F.col("revenue") / F.lag("revenue", 12).over(w), 6).alias("yoy_ratio"),
-    ).orderBy("month")
 
 
 # --------------------------------------------------------------------------
@@ -631,16 +588,21 @@ def events_rollup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # events_funnel_24h — ordered multi-step conversion funnel.
 # --------------------------------------------------------------------------
-@query(
+# Each step within 24 h of the previous step's FIRST qualifying event.
+# Scale: each step is one groupBy(user_id) over a type-filtered scan
+# joined to the (strictly shrinking) previous step's per-user timestamps —
+# every shuffle is keyed by user_id, no sequence explosion, no window over
+# the whole event stream.
+events_funnel_24h = query_sql(
     "events_funnel_24h",
-    oracle="""
-    WITH s1 AS (SELECT user_id, min(ts) AS t1 FROM events
+    """
+    WITH s1 AS (SELECT user_id, min(ts) AS t1 FROM {events}
                 WHERE event_type = 'view' GROUP BY 1),
-    s2 AS (SELECT e.user_id, min(e.ts) AS t2 FROM events e JOIN s1 USING (user_id)
+    s2 AS (SELECT e.user_id, min(e.ts) AS t2 FROM {events} e JOIN s1 USING (user_id)
            WHERE e.event_type = 'click'
              AND e.ts >= s1.t1 AND e.ts <= s1.t1 + INTERVAL '24 hours'
            GROUP BY 1),
-    s3 AS (SELECT e.user_id, min(e.ts) AS t3 FROM events e JOIN s2 USING (user_id)
+    s3 AS (SELECT e.user_id, min(e.ts) AS t3 FROM {events} e JOIN s2 USING (user_id)
            WHERE e.event_type = 'purchase'
              AND e.ts >= s2.t2 AND e.ts <= s2.t2 + INTERVAL '24 hours'
            GROUP BY 1)
@@ -650,67 +612,23 @@ def events_rollup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY step
     """,
 )
-def events_funnel_24h(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ordered conversion funnel view → click → purchase, each step
-    within 24 h of the previous step's FIRST qualifying event — the
-    standard product-analytics funnel semantics (ordered, windowed,
-    first-touch).
-
-    Scale: each step is one groupBy(user_id) over a type-filtered scan
-    joined to the (strictly shrinking) previous step's per-user
-    timestamps — every shuffle is keyed by user_id, no sequence
-    explosion, no window over the whole event stream. At 100 TB the
-    event_type filter prunes at the scan and the step frames are
-    user-cardinality rows.
-    """
-    ev = load_table(spark, sf_dir, "events")
-    h24 = F.expr("INTERVAL 24 HOURS")
-    s1 = (
-        ev.where(F.col("event_type") == "view")
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t1"))
-    )
-    s2 = (
-        ev.where(F.col("event_type") == "click")
-        .join(s1, "user_id")
-        .where((F.col("ts") >= F.col("t1")) & (F.col("ts") <= F.col("t1") + h24))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t2"))
-    )
-    s3 = (
-        ev.where(F.col("event_type") == "purchase")
-        .join(s2, "user_id")
-        .where((F.col("ts") >= F.col("t2")) & (F.col("ts") <= F.col("t2") + h24))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t3"))
-    )
-
-    def level(step: int, name: str, df: DataFrame) -> DataFrame:
-        return df.agg(F.count("*").alias("n_users")).select(
-            F.lit(step).alias("step"),
-            F.lit(name).alias("step_name"),
-            "n_users",
-        )
-
-    return (
-        level(1, "view", s1)
-        .unionAll(level(2, "click", s2))
-        .unionAll(level(3, "purchase", s3))
-        .orderBy("step")
-    )
 
 
 # --------------------------------------------------------------------------
 # events_transition_matrix — per-user event-type bigrams (Markov counts).
 # --------------------------------------------------------------------------
-@query(
+# Scale: one shuffle on user_id for the lead() window (event_id breaks
+# timestamp ties deterministically in both engines), then a tiny
+# (types × types) aggregate. Bucketing events by user_id makes the window
+# exchange-free.
+events_transition_matrix = query_sql(
     "events_transition_matrix",
-    oracle="""
+    """
     WITH seq AS (
         SELECT event_type,
                lead(event_type) OVER (PARTITION BY user_id
                                       ORDER BY ts, event_id) AS next_type
-        FROM events
+        FROM {events}
     )
     SELECT event_type, next_type, count(*) AS transitions
     FROM seq WHERE next_type IS NOT NULL
@@ -718,38 +636,22 @@ def events_funnel_24h(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY event_type, next_type
     """,
 )
-def events_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Event-type transition counts (the Markov chain a session
-    simulator or anomaly detector is fit on): for each user's
-    time-ordered stream, count consecutive (event_type → next) pairs.
-
-    Scale: one shuffle on user_id for the lead() window (event_id
-    breaks timestamp ties deterministically in both engines), then a
-    tiny (types × types) aggregate. At 100 TB the window is the classic
-    sessionization shuffle — bucketing events by user_id makes it
-    exchange-free.
-    """
-    ev = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = ev.select(
-        "event_type", F.lead("event_type").over(w).alias("next_type")
-    ).where(F.col("next_type").isNotNull())
-    return (
-        seq.groupBy("event_type", "next_type")
-        .agg(F.count("*").alias("transitions"))
-        .orderBy("event_type", "next_type")
-    )
 
 
 # --------------------------------------------------------------------------
 # events_cumulative_users — running distinct-user count via first-seen.
 # --------------------------------------------------------------------------
-@query(
+# Scale: the first-seen rewrite of count(DISTINCT user_id) over an
+# expanding window: one user_id aggregate (each user contributes one
+# first_hour row), a tiny per-hour count, and a running sum over an
+# hours-cardinality frame — O(users) shuffle total, not
+# O(users × buckets).
+events_cumulative_users = query_sql(
     "events_cumulative_users",
-    oracle="""
+    """
     WITH firsts AS (
         SELECT user_id, min(date_trunc('hour', ts))::TIMESTAMP AS first_hour
-        FROM events GROUP BY user_id
+        FROM {events} GROUP BY user_id
     ),
     hourly AS (SELECT first_hour AS hour, count(*) AS new_users
                FROM firsts GROUP BY first_hour)
@@ -758,30 +660,6 @@ def events_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM hourly ORDER BY hour
     """,
 )
-def events_cumulative_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hourly new-user and cumulative distinct-user counts.
-
-    The naive formulation — count(DISTINCT user_id) over an expanding
-    time window — rescans the whole history per bucket and shuffles
-    the full user set into every frame. The first-seen rewrite is the
-    scale form: one user_id aggregate (each user contributes exactly
-    one first_hour row), a tiny per-hour count, and a running sum over
-    an hours-cardinality frame. Distinct-over-expanding-window becomes
-    sum-over-buckets — O(users) shuffle total, not O(users × buckets).
-    """
-    ev = load_table(spark, sf_dir, "events")
-    firsts = ev.groupBy("user_id").agg(
-        F.min(F.date_trunc("hour", F.col("ts"))).alias("first_hour")
-    )
-    hourly = firsts.groupBy(F.col("first_hour").alias("hour")).agg(
-        F.count("*").alias("new_users")
-    )
-    w = Window.orderBy("hour").rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    return hourly.select(
-        "hour",
-        "new_users",
-        F.sum("new_users").over(w).cast("bigint").alias("cumulative_users"),
-    ).orderBy("hour")
 
 
 # --------------------------------------------------------------------------
@@ -1487,49 +1365,24 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 _EVENT_TYPES = ("click", "error", "purchase", "signup", "view")
 
 
-@query(
+# The pivot values are DECLARED, never discovered from data: discovery
+# runs an extra distinct scan AND makes the output schema data-dependent.
+# Scale: ONE scan, one shuffle on day — per-type conditional sums beside
+# the total in a single aggregate (`.pivot().agg(count)` cannot also
+# carry the unconditional count(*)).
+events_type_pivot = query_sql(
     "events_type_pivot",
-    oracle=f"""
+    f"""
     SELECT date_trunc('day', ts)::TIMESTAMP AS day,
            {", ".join(
                f"sum(CASE WHEN event_type = '{t}' THEN 1 ELSE 0 END)::BIGINT"
                f" AS n_{t}" for t in _EVENT_TYPES)},
            count(*) AS n_total
-    FROM events
+    FROM {{events}}
     GROUP BY 1
     ORDER BY day
     """,
 )
-def events_type_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Daily event counts PIVOTED into one column per event type — the
-    wide activity table BI layers read (and the inverse shape of
-    part_size_unpivot). The pivot values are DECLARED (a fixed column
-    list), never discovered from data: value discovery runs an extra
-    distinct scan AND makes the output schema data-dependent — at
-    100 TB both are bugs, not conveniences (new garbage event type in
-    the stream → silently different schema downstream).
-
-    Scale: ONE scan, one shuffle on day — the pivot is written directly
-    as its desugared form (per-type conditional sums alongside the
-    total in a single groupBy), because ``.pivot().agg(count)`` cannot
-    also carry an unconditional ``count(*)``: expressing n_total as a
-    second aggregate + join would scan events twice and add a second
-    shuffle for the same result the oracle computes in one.
-    """
-    ev = load_table(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.date_trunc("day", F.col("ts")).alias("day"))
-        .agg(
-            *[
-                F.sum(
-                    F.when(F.col("event_type") == t, 1).otherwise(0)
-                ).alias(f"n_{t}")
-                for t in _EVENT_TYPES
-            ],
-            F.count("*").alias("n_total"),
-        )
-        .orderBy("day")
-    )
 
 
 # --------------------------------------------------------------------------

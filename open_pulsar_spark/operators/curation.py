@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 from open_pulsar_spark.materialize import pin
 from open_pulsar_spark.operators.dedup import _MINHASH_PAIRS_CTE
 from open_pulsar_spark.operators.prefix import global_prefix
-from open_pulsar_spark.registry import query
+from open_pulsar_spark.registry import query, query_sql
 from open_pulsar_spark.tables import load_table
 
 # Per-language keep rates (percent) for the stratified sampler: the
@@ -1010,11 +1010,15 @@ def corpus_sample_pps(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # corpus_source_drift — per-source language-mix drift vs the corpus.
 # --------------------------------------------------------------------------
-@query(
+# Scale: one (source × lang) count aggregate over the corpus; the window
+# arithmetic runs on the tiny counts frame (|sources|·|langs| rows), so
+# the global-share windows are negligible even though one is
+# unpartitioned.
+corpus_source_drift = query_sql(
     "corpus_source_drift",
-    oracle="""
+    """
     WITH per AS (SELECT source, lang, count(*)::DOUBLE AS n
-                 FROM documents GROUP BY 1, 2),
+                 FROM {documents} GROUP BY 1, 2),
     shares AS (
         SELECT source, lang, n,
                n / sum(n) OVER (PARTITION BY source)                  AS ps,
@@ -1027,55 +1031,29 @@ def corpus_sample_pps(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM shares GROUP BY source ORDER BY source
     """,
 )
-def corpus_source_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dataset-monitoring signal: per-source language-share KL
-    divergence against the corpus-wide language mix, plus the largest
-    absolute share delta — the drift alarm a curation pipeline watches
-    when a source's crawl composition shifts.
-
-    Scale: one (source × lang) count aggregate over the corpus; the
-    window arithmetic runs on the tiny counts frame (|sources|·|langs|
-    rows), so the global-share windows are negligible even though one
-    is unpartitioned.
-    """
-    docs = load_table(spark, sf_dir, "documents")
-    per = docs.groupBy("source", "lang").agg(
-        F.count("*").cast("double").alias("n")
-    )
-    ps = F.col("n") / F.sum("n").over(Window.partitionBy("source"))
-    pg = F.sum("n").over(Window.partitionBy("lang")) / F.sum("n").over(
-        Window.partitionBy()
-    )
-    return (
-        per.select("source", ps.alias("ps"), pg.alias("pg"))
-        .groupBy("source")
-        .agg(
-            F.round(F.sum(F.col("ps") * F.log(F.col("ps") / F.col("pg"))), 6).alias(
-                "kl_vs_corpus"
-            ),
-            F.round(F.max(F.abs(F.col("ps") - F.col("pg"))), 6).alias(
-                "max_share_delta"
-            ),
-        )
-        .orderBy("source")
-    )
 
 
 # --------------------------------------------------------------------------
 # corpus_snapshot_diff — what changed between two corpus versions.
 # --------------------------------------------------------------------------
-@query(
+# Snapshot slices are deterministic id-arithmetic stand-ins for two
+# corpus versions (as in snapshot_incremental_dedup).
+# Scale: both sides project (doc_id, source, fp) — the fingerprint
+# collapses full text to 32 bytes BEFORE the join, so the full-outer join
+# on doc_id (the natural bucket key) never moves text; the rollup is a
+# tiny aggregate.
+corpus_snapshot_diff = query_sql(
     "corpus_snapshot_diff",
-    oracle="""
+    """
     WITH old AS (
-        SELECT doc_id, source, md5(text) AS fp FROM documents
+        SELECT doc_id, source, md5(text) AS fp FROM {documents}
         WHERE doc_id % 3 <> 0
     ),
     new AS (
         -- docs with doc_id % 7 = 0 are "edited" in the new snapshot
         SELECT doc_id, source,
                md5(CASE WHEN doc_id % 7 = 0 THEN upper(text) ELSE text END) AS fp
-        FROM documents WHERE doc_id % 2 <> 0
+        FROM {documents} WHERE doc_id % 2 <> 0
     ),
     joined AS (
         SELECT coalesce(n.source, o.source) AS source,
@@ -1091,55 +1069,6 @@ def corpus_source_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY source, change
     """,
 )
-def corpus_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Version-over-version corpus diff: per (source, change-kind) doc
-    counts between two snapshots — the audit every corpus release
-    publishes (what did this crawl/filter change?). Identity is
-    doc_id; content identity is a full-text fingerprint, so the four
-    states are added / removed / modified / unchanged (docs with
-    doc_id % 7 = 0 are deterministically 'edited' in the new snapshot
-    so the modified branch is exercised, not vacuous). Snapshot slices
-    are deterministic id-arithmetic stand-ins for two real corpus
-    versions (the same convention as snapshot_incremental_dedup).
-
-    Scale: both sides project (doc_id, source, fp) — the fingerprint
-    collapses full text to 32 bytes BEFORE the join, so the full-outer
-    join on doc_id (the natural bucket key: co-located, zero-shuffle
-    under a bucketed layout) never moves text; the classification is
-    a CASE over the join result and the rollup is a tiny aggregate.
-    Full-outer is required — added and removed rows each exist on one
-    side only (same pattern as user_day_activity_fulljoin).
-    """
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "source", F.md5("text").alias("fp")
-    )
-    old = docs.where(F.col("doc_id") % 3 != 0).select(
-        F.col("doc_id"), F.col("source").alias("o_source"), F.col("fp").alias("o_fp")
-    )
-    edited = load_table(spark, sf_dir, "documents").select(
-        "doc_id",
-        "source",
-        F.md5(
-            F.when(F.col("doc_id") % 7 == 0, F.upper("text")).otherwise(F.col("text"))
-        ).alias("fp"),
-    )
-    new = edited.where(F.col("doc_id") % 2 != 0).select(
-        F.col("doc_id"), F.col("source").alias("n_source"), F.col("fp").alias("n_fp")
-    )
-    return (
-        new.join(old, "doc_id", "full_outer")
-        .select(
-            F.coalesce("n_source", "o_source").alias("source"),
-            F.when(F.col("o_fp").isNull(), "added")
-            .when(F.col("n_fp").isNull(), "removed")
-            .when(F.col("n_fp") == F.col("o_fp"), "unchanged")
-            .otherwise("modified")
-            .alias("change"),
-        )
-        .groupBy("source", "change")
-        .agg(F.count("*").alias("n_docs"))
-        .orderBy("source", "change")
-    )
 
 
 # The ONE split-assignment rule (engine + SQL forms): md5 of the key,

@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from open_pulsar_spark.materialize import held, pin, pin_keyed
-from open_pulsar_spark.registry import query
+from open_pulsar_spark.registry import query, query_sql
 from open_pulsar_spark.tables import load_table, widen_for_kernel
 
 MINHASH_K = 12
@@ -323,28 +323,20 @@ _MINHASH_CTES = f"""shingled AS ({_SHINGLE_SQL}),
 # --------------------------------------------------------------------------
 # dedup_exact — hash-groupBy exact duplicate detection.
 # --------------------------------------------------------------------------
-@query(
+# Scale: one shuffle on the 128-bit hash — at 100 TB this is the
+# canonical first dedup pass, and the hash key is uniformly distributed
+# so there is no skew.
+dedup_exact = query_sql(
     "dedup_exact",
-    oracle="""
+    """
     SELECT md5(text)    AS fingerprint,
            count(*)     AS n_copies,
            min(doc_id)  AS keep_doc_id
-    FROM documents
+    FROM {documents}
     GROUP BY md5(text)
     ORDER BY fingerprint
     """,
 )
-def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact dedup: group by content fingerprint, keep the lowest
-    doc_id. One shuffle on the 128-bit hash — at 100 TB this is the
-    canonical first dedup pass, and the hash key is uniformly
-    distributed so there is no skew."""
-    docs = load_table(spark, sf_dir, "documents")
-    return (
-        docs.groupBy(F.md5("text").alias("fingerprint"))
-        .agg(F.count("*").alias("n_copies"), F.min("doc_id").alias("keep_doc_id"))
-        .orderBy("fingerprint")
-    )
 
 
 # --------------------------------------------------------------------------
@@ -529,7 +521,8 @@ def _propagate_labels_distributed(pairs: DataFrame) -> DataFrame:
     by cluster diameter. Used when the pair graph exceeds
     SMALL_GRAPH_PAIRS. The per-round label cache is swapped by hand
     (each round's frame is persisted before the previous one is
-    dropped), the one lifecycle `held` cannot express."""
+    dropped), the one lifecycle `held` cannot express; every live
+    generation is released on every exit path, exceptions included."""
     with held(
         pairs.select(F.col("a_id").alias("u"), F.col("b_id").alias("v")).unionAll(
             pairs.select(F.col("b_id").alias("u"), F.col("a_id").alias("v"))
@@ -537,35 +530,38 @@ def _propagate_labels_distributed(pairs: DataFrame) -> DataFrame:
         fill=False,
     ) as edges:
         labels = edges.select("u").distinct().withColumn("label", F.col("u")).persist()
-        while True:
-            neighbor_min = (
-                edges.join(labels.withColumnRenamed("u", "v"), "v")
-                .groupBy("u")
-                .agg(F.min("label").alias("nmin"))
-            )
-            new_labels = (
-                labels.join(neighbor_min, "u", "left")
-                .select("u", F.least("label", F.coalesce("nmin", "label")).alias("label"))
-                .persist()
-            )
-            changed = (
-                new_labels.alias("n")
-                .join(labels.alias("o"), "u")
-                .where(F.col("n.label") != F.col("o.label"))
-                .count()
-            )
+        try:
+            while True:
+                neighbor_min = (
+                    edges.join(labels.withColumnRenamed("u", "v"), "v")
+                    .groupBy("u")
+                    .agg(F.min("label").alias("nmin"))
+                )
+                old = labels
+                labels = (
+                    old.join(neighbor_min, "u", "left")
+                    .select("u", F.least("label", F.coalesce("nmin", "label")).alias("label"))
+                    .persist()
+                )
+                try:
+                    changed = (
+                        labels.alias("n")
+                        .join(old.alias("o"), "u")
+                        .where(F.col("n.label") != F.col("o.label"))
+                        .count()
+                    )
+                finally:
+                    old.unpersist()
+                if changed == 0:
+                    break
+            # hand back a lineage-truncated snapshot and release the
+            # loop's cache: the caller gets materialized data without
+            # this function pinning a node-cardinality cache for the
+            # session lifetime (the snapshot's blocks are reclaimed by
+            # the ContextCleaner when the caller drops the frame)
+            return labels.localCheckpoint(eager=True)
+        finally:
             labels.unpersist()
-            labels = new_labels
-            if changed == 0:
-                break
-    # hand back a lineage-truncated snapshot and release the loop's
-    # cache: the caller gets materialized data without this function
-    # pinning a node-cardinality cache for the session lifetime (the
-    # snapshot's blocks are reclaimed by the ContextCleaner when the
-    # caller drops the frame)
-    snap = labels.localCheckpoint(eager=True)
-    labels.unpersist()
-    return snap
 
 
 # --------------------------------------------------------------------------

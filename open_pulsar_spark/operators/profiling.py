@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from open_pulsar_spark.materialize import pin, release
 from open_pulsar_spark.operators.prefix import global_prefix
-from open_pulsar_spark.registry import query
+from open_pulsar_spark.registry import query, query_sql
 from open_pulsar_spark.tables import load_table
 
 # --------------------------------------------------------------------------
@@ -1784,20 +1784,26 @@ def table_broadcast_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
 # order_total_reconciliation — cross-fact integrity: does the order
 # header's total agree with its recomputed line-level total?
 # --------------------------------------------------------------------------
-@query(
+# Per-row rounding to integer cents BEFORE the per-order sum (the
+# engine-wide money rule); integer threshold compares (gap·100 ≤ |total|
+# is the float-free form of gap ≤ 1%).
+# Scale: one map-combinable per-order aggregate over lineitem, one
+# equi-join on the natural key, a 5-bucket rollup. Bucketing both tables
+# on orderkey makes it exchange-free.
+order_total_reconciliation = query_sql(
     "order_total_reconciliation",
-    oracle="""
+    """
     WITH line AS (
         SELECT l_orderkey AS k,
                sum(round(l_extendedprice * (1 - l_discount)
                          * (1 + l_tax) * 100)::BIGINT)::BIGINT
                    AS line_cents,
                count(*)::BIGINT AS n_lines
-        FROM lineitem GROUP BY l_orderkey),
+        FROM {lineitem} GROUP BY l_orderkey),
     hdr AS (
         SELECT o_orderkey AS k,
                round(o_totalprice * 100)::BIGINT AS hdr_cents
-        FROM orders),
+        FROM {orders}),
     j AS (
         SELECT h.k, h.hdr_cents, l.line_cents, l.n_lines,
                CASE WHEN l.k IS NULL THEN 'no_lines'
@@ -1819,73 +1825,6 @@ def table_broadcast_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY bucket
     """,
 )
-def order_total_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-fact RECONCILIATION: each order header's stored total vs
-    the total recomputed from its line items (Σ extendedprice ·
-    (1−discount) · (1+tax), per-row integer cents), bucketed exact /
-    within-1% / within-5% / divergent / no-lines with gap mass and
-    the worst gap per bucket — the financial-integrity audit
-    dq_violation_counts' row-level rules cannot express (every row
-    can pass its own checks while the FACTS disagree with each
-    other). On synthetic data the drift is expected and measured, not
-    asserted away; in production this is the closing-the-books query.
-
-    Determinism: per-row rounding to integer cents BEFORE the
-    per-order sum (the engine-wide money rule), integer threshold
-    compares (gap·100 ≤ |total| is the float-free form of gap ≤ 1%).
-
-    Scale: one map-combinable per-order aggregate over lineitem, one
-    equi-join on the natural key (the canonical fact-fact join both
-    sides already shuffle on), a 5-bucket rollup. Bucketing the join
-    tables on orderkey makes it exchange-free."""
-    li = load_table(spark, sf_dir, "lineitem")
-    line = li.groupBy(F.col("l_orderkey").alias("k")).agg(
-        F.sum(
-            F.round(
-                F.col("l_extendedprice")
-                * (1 - F.col("l_discount"))
-                * (1 + F.col("l_tax"))
-                * 100
-            ).cast("bigint")
-        )
-        .cast("bigint")
-        .alias("line_cents"),
-        F.count("*").cast("bigint").alias("n_lines"),
-    )
-    hdr = load_table(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("k"),
-        F.round(F.col("o_totalprice") * 100).cast("bigint").alias("hdr_cents"),
-    )
-    gap = F.abs(F.col("hdr_cents") - F.col("line_cents"))
-    j = hdr.join(line, "k", "left").select(
-        "hdr_cents",
-        "line_cents",
-        F.when(F.col("line_cents").isNull(), "no_lines")
-        .when(F.col("hdr_cents") == F.col("line_cents"), "exact")
-        .when(gap * 100 <= F.abs(F.col("hdr_cents")), "within_1pct")
-        .when(gap * 20 <= F.abs(F.col("hdr_cents")), "within_5pct")
-        .otherwise("divergent")
-        .alias("bucket"),
-    )
-    return (
-        j.groupBy("bucket")
-        .agg(
-            F.count("*").cast("bigint").alias("n_orders"),
-            F.coalesce(
-                F.sum(F.abs(F.col("hdr_cents") - F.col("line_cents"))),
-                F.lit(0),
-            )
-            .cast("bigint")
-            .alias("abs_gap_cents"),
-            F.coalesce(
-                F.max(F.abs(F.col("hdr_cents") - F.col("line_cents"))),
-                F.lit(0),
-            )
-            .cast("bigint")
-            .alias("max_gap_cents"),
-        )
-        .orderBy("bucket")
-    )
 
 
 # --------------------------------------------------------------------------

@@ -1,12 +1,13 @@
 """L1 relational core — declared queries over the TPC-H-ish tables.
 
-Everything here is Catalyst-native DataFrame code: filters and column
+Everything here is Catalyst-native — DataFrame code, or one SQL text
+(`query_sql`) that is also the DuckDB oracle: filters and column
 pruning push down to the parquet scan, joins pick broadcast vs
 sort-merge via AQE, aggregations do map-side partial aggregation. No
 Python UDFs in this module.
 
-Scale notes (100 TB posture) per query are in each docstring. The
-general rules:
+Scale notes (100 TB posture) per query are in each docstring, or in
+the comment above a SQL text. The general rules:
   - dimension joins avoid shuffling the fact table: region/nation
     (schema-bounded) carry explicit broadcast hints; customer /
     supplier / part are SF-LINEAR, so their joins are unhinted — AQE
@@ -28,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from open_pulsar_spark.registry import query
+from open_pulsar_spark.registry import query, query_sql
 from open_pulsar_spark.tables import load_table
 
 
@@ -73,9 +74,12 @@ _DUCK_REVENUE_CENTS = (
 # --------------------------------------------------------------------------
 # q1_pricing_summary — TPC-H Q1 shape: scan → filter → hash agg → sort.
 # --------------------------------------------------------------------------
-@query(
+# Scale: single scan + partial agg; the groupBy key has ~6 distinct
+# values so the shuffle is a few rows per partition. Filter and the
+# 9-column projection push to parquet.
+q1_pricing_summary = query_sql(
     "q1_pricing_summary",
-    oracle="""
+    """
     SELECT l_returnflag, l_linestatus,
            round(sum(l_quantity), 2)                                        AS sum_qty,
            round(sum(l_extendedprice), 2)                                   AS sum_base_price,
@@ -85,36 +89,12 @@ _DUCK_REVENUE_CENTS = (
            round(avg(l_extendedprice), 6)                                   AS avg_price,
            round(avg(l_discount), 6)                                        AS avg_disc,
            count(*)                                                         AS count_order
-    FROM lineitem
+    FROM {lineitem}
     WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
     GROUP BY l_returnflag, l_linestatus
     ORDER BY l_returnflag, l_linestatus
     """,
 )
-def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pricing summary report.
-
-    Scale: single scan + partial agg; the groupBy key has ~6 distinct
-    values so the shuffle is a few rows per partition. Filter and the
-    9-column projection push to parquet.
-    """
-    li = load_table(spark, sf_dir, "lineitem")
-    disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return (
-        li.where(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
-            F.round(F.sum(disc_price), 2).alias("sum_disc_price"),
-            F.round(F.sum(disc_price * (1 + F.col("l_tax"))), 2).alias("sum_charge"),
-            F.round(F.avg("l_quantity"), 6).alias("avg_qty"),
-            F.round(F.avg("l_extendedprice"), 6).alias("avg_price"),
-            F.round(F.avg("l_discount"), 6).alias("avg_disc"),
-            F.count("*").alias("count_order"),
-        )
-        .orderBy("l_returnflag", "l_linestatus")
-    )
 
 
 # --------------------------------------------------------------------------
@@ -230,37 +210,22 @@ def q5_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # mktsegment_order_stats — join + multi-agg with distinct count.
 # --------------------------------------------------------------------------
-@query(
+# Scale: the customer join is unhinted (AQE broadcasts it while customer
+# fits); the distinct count aggregates map-side.
+mktsegment_order_stats = query_sql(
     "mktsegment_order_stats",
-    oracle="""
+    """
     SELECT c_mktsegment,
            count(*)                         AS n_orders,
            count(DISTINCT o_custkey)        AS n_customers,
            round(sum(o_totalprice), 2)      AS total_revenue,
            round(avg(o_totalprice), 6)      AS avg_order_value,
            round(max(o_totalprice), 2)      AS max_order_value
-    FROM orders JOIN customer ON o_custkey = c_custkey
+    FROM {orders} JOIN {customer} ON o_custkey = c_custkey
     GROUP BY c_mktsegment
     ORDER BY c_mktsegment
     """,
 )
-def mktsegment_order_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Order stats per market segment (unhinted dim join — AQE picks
-    broadcast while customer fits — + distinct agg)."""
-    orders = load_table(spark, sf_dir, "orders")
-    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    return (
-        orders.join(cust, orders.o_custkey == cust.c_custkey)
-        .groupBy("c_mktsegment")
-        .agg(
-            F.count("*").alias("n_orders"),
-            F.countDistinct("o_custkey").alias("n_customers"),
-            _money(F.col("o_totalprice")).alias("total_revenue"),
-            F.round(F.avg("o_totalprice"), 6).alias("avg_order_value"),
-            F.round(F.max("o_totalprice"), 2).alias("max_order_value"),
-        )
-        .orderBy("c_mktsegment")
-    )
 
 
 # --------------------------------------------------------------------------
@@ -375,65 +340,36 @@ def top3_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # order_priority_rollup — ROLLUP grouping sets (SURVEY §2.4 gap).
 # --------------------------------------------------------------------------
-@query(
+order_priority_rollup = query_sql(
     "order_priority_rollup",
-    oracle="""
+    """
     SELECT coalesce(o_orderstatus, 'ALL')   AS orderstatus,
            coalesce(o_orderpriority, 'ALL') AS orderpriority,
            count(*)                         AS n,
            round(sum(o_totalprice), 2)      AS total
-    FROM orders
+    FROM {orders}
     GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
     ORDER BY orderstatus, orderpriority
     """,
 )
-def order_priority_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Status × priority rollup with subtotals and a grand total."""
-    orders = load_table(spark, sf_dir, "orders")
-    return (
-        orders.rollup("o_orderstatus", "o_orderpriority")
-        .agg(F.count("*").alias("n"), _money(F.col("o_totalprice")).alias("total"))
-        .select(
-            F.coalesce("o_orderstatus", F.lit("ALL")).alias("orderstatus"),
-            F.coalesce("o_orderpriority", F.lit("ALL")).alias("orderpriority"),
-            "n",
-            "total",
-        )
-        .orderBy("orderstatus", "orderpriority")
-    )
 
 
 # --------------------------------------------------------------------------
 # brand_size_pivot — conditional aggregation / pivot shape.
 # --------------------------------------------------------------------------
-@query(
+brand_size_pivot = query_sql(
     "brand_size_pivot",
-    oracle="""
+    """
     SELECT p_type,
            count(*) FILTER (WHERE p_size < 10)                  AS small_n,
            count(*) FILTER (WHERE p_size >= 10 AND p_size < 30) AS medium_n,
            count(*) FILTER (WHERE p_size >= 30)                 AS large_n,
            round(avg(p_retailprice), 6)                         AS avg_price
-    FROM part
+    FROM {part}
     GROUP BY p_type
     ORDER BY p_type
     """,
 )
-def brand_size_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Size-bucket pivot per part type — map-side conditional aggregation."""
-    part = load_table(spark, sf_dir, "part")
-    return (
-        part.groupBy("p_type")
-        .agg(
-            F.sum(F.when(F.col("p_size") < 10, 1).otherwise(0)).alias("small_n"),
-            F.sum(
-                F.when((F.col("p_size") >= 10) & (F.col("p_size") < 30), 1).otherwise(0)
-            ).alias("medium_n"),
-            F.sum(F.when(F.col("p_size") >= 30, 1).otherwise(0)).alias("large_n"),
-            F.round(F.avg("p_retailprice"), 6).alias("avg_price"),
-        )
-        .orderBy("p_type")
-    )
 
 
 # --------------------------------------------------------------------------
@@ -467,38 +403,22 @@ def purchase_error_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # user_running_revenue — running-sum analytic window (SURVEY §2.4 A4).
 # --------------------------------------------------------------------------
-@query(
+# Per-user running purchase total — the reference's running session
+# token accumulator (agent-loop.sh:706, SURVEY §2.4 A4) as a window agg.
+user_running_revenue = query_sql(
     "user_running_revenue",
-    oracle="""
+    """
     SELECT event_id, user_id,
            round(sum(value) OVER (PARTITION BY user_id
                                   ORDER BY ts, event_id
                                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 2)
              AS running_value,
            row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS seq
-    FROM events
+    FROM {events}
     WHERE user_id < 5 AND event_type = 'purchase'
     ORDER BY user_id, seq
     """,
 )
-def user_running_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user running purchase total — the reference's running session
-    token accumulator (agent-loop.sh:706, SURVEY §2.4 A4) as a window agg."""
-    ev = load_table(spark, sf_dir, "events").where(
-        (F.col("user_id") < 5) & (F.col("event_type") == "purchase")
-    )
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    return (
-        ev.select(
-            "event_id",
-            "user_id",
-            F.round(
-                F.sum("value").over(w.rowsBetween(Window.unboundedPreceding, 0)), 2
-            ).alias("running_value"),
-            F.row_number().over(w).alias("seq"),
-        )
-        .orderBy("user_id", "seq")
-    )
 
 
 # --------------------------------------------------------------------------
@@ -761,19 +681,30 @@ def q9_brand_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # orders_cdc_merge — MERGE INTO semantics (insert/update/delete/carry)
 # over a deterministic synthetic change batch.
 # --------------------------------------------------------------------------
-@query(
+# A deterministic synthetic CDC batch (keys ≡0 mod 4 are inserts —
+# excluded from the base snapshot; ≡0 mod 17 deletes; ≡0 mod 10 updates
+# at +1 cent) applied with the full WHEN MATCHED / NOT MATCHED decision
+# table, summarized per action with row counts, a cents total and an
+# order-independent modular key checksum — the reconciliation artifact
+# a lakehouse MERGE job emits. The decision table is the batch twin of
+# streaming/lww_stream.py.
+# Scale: ONE full-outer equi-join on the key (both sides shuffle once —
+# the plan a Delta/Iceberg MERGE compiles to before file pruning) and a
+# 5-group rollup. At 100 TB the base side prunes to files touched by the
+# change-key ranges first (bloom_join_pruning measures that step).
+orders_cdc_merge = query_sql(
     "orders_cdc_merge",
-    oracle="""
+    """
     WITH base AS (
         SELECT o_orderkey AS k,
                round(o_totalprice * 100)::BIGINT AS cents
-        FROM orders WHERE o_orderkey % 4 <> 0),
+        FROM {orders} WHERE o_orderkey % 4 <> 0),
     cdc AS (
         SELECT o_orderkey AS k,
                CASE WHEN o_orderkey % 17 = 0 THEN 'D'
                     WHEN o_orderkey % 4 = 0 THEN 'I' ELSE 'U' END AS op,
                round(o_totalprice * 100)::BIGINT + 1 AS cents
-        FROM orders
+        FROM {orders}
         WHERE o_orderkey % 4 = 0 OR o_orderkey % 17 = 0
               OR o_orderkey % 10 = 0),
     merged AS (
@@ -797,74 +728,3 @@ def q9_brand_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY action
     """,
 )
-def orders_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MERGE INTO semantics, audited: a deterministic synthetic CDC
-    batch (keys ≡0 mod 4 are inserts — they are excluded from the
-    base snapshot; ≡0 mod 17 deletes; ≡0 mod 10 updates at +1 cent)
-    is applied to the base snapshot with the full WHEN MATCHED /
-    NOT MATCHED decision table, and the result is summarized per
-    action with row counts, a cents total, and a modular key checksum
-    — the reconciliation artifact a lakehouse MERGE job emits so the
-    writer and an independent auditor can agree the merge did what
-    the change log said (the batch counterpart of the streaming
-    state-upsert path, K4).
-
-    Decision table: carry (no change row), update (matched, op≠D),
-    delete (matched, op=D → row leaves, counted with NULL cents),
-    insert (unmatched change, op≠D), noop_delete (delete for an
-    absent key — the CDC replay artifact MERGE must tolerate).
-
-    Determinism: pure integer key arithmetic everywhere (the checksum
-    is Σ (k mod p)² mod q — order-independent); cents are the integer-
-    cents rule.
-
-    Scale: ONE full-outer equi-join on the key (both sides shuffle
-    once — the exact plan a Delta/Iceberg MERGE compiles to before
-    file pruning) and a 5-group rollup. At 100 TB the base side prunes
-    to files touched by the change-key ranges first (bloom_join_
-    pruning is the measured form of that step here)."""
-    o = load_table(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("k"),
-        F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
-    )
-    base = o.where(F.col("k") % 4 != 0)
-    cdc = o.where(
-        (F.col("k") % 4 == 0) | (F.col("k") % 17 == 0) | (F.col("k") % 10 == 0)
-    ).select(
-        "k",
-        F.when(F.col("k") % 17 == 0, "D")
-        .when(F.col("k") % 4 == 0, "I")
-        .otherwise("U")
-        .alias("op"),
-        (F.col("cents") + 1).alias("cents"),
-    )
-    b = base.alias("b")
-    c = cdc.alias("c")
-    merged = b.join(c, F.col("b.k") == F.col("c.k"), "full").select(
-        F.coalesce(F.col("b.k"), F.col("c.k")).alias("k"),
-        F.when(F.col("c.k").isNull(), "carry")
-        .when((F.col("c.op") == "D") & F.col("b.k").isNotNull(), "delete")
-        .when(F.col("b.k").isNull() & (F.col("c.op") != "D"), "insert")
-        .when(F.col("c.op") == "D", "noop_delete")
-        .otherwise("update")
-        .alias("action"),
-        F.when(F.col("c.k").isNull(), F.col("b.cents"))
-        .when(F.col("c.op") == "D", F.lit(None).cast("bigint"))
-        .otherwise(F.col("c.cents"))
-        .alias("cents"),
-    )
-    return (
-        merged.groupBy("action")
-        .agg(
-            F.count("*").cast("bigint").alias("n_rows"),
-            F.coalesce(F.sum("cents"), F.lit(0))
-            .cast("bigint")
-            .alias("sum_cents"),
-            F.sum(
-                F.expr("((k % 1000003) * (k % 1000003)) % 999983")
-            )
-            .cast("bigint")
-            .alias("key_checksum"),
-        )
-        .orderBy("action")
-    )

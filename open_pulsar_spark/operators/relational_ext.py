@@ -10,11 +10,11 @@ delay axis; adaptations noted per query). Together with relational.py
 (Q1/Q3/Q5/Q7/Q9/Q10) every one of the 22 TPC-H query shapes is now
 implemented and oracle-checked.
 
-Same ground rules as relational.py: Catalyst-native DataFrame code
-only, no Python UDFs; money sums rounded identically on both sides;
-schema-bounded dims broadcast by hint while SF-linear dims are left
-to AQE (the plan_hints rule); fact-fact joins shuffle on their
-natural bucket keys.
+Same ground rules as relational.py: Catalyst-native DataFrame code or
+one `query_sql` text, no Python UDFs; money sums rounded identically
+on both sides; schema-bounded dims broadcast by hint while SF-linear
+dims are left to AQE (the plan_hints rule); fact-fact joins shuffle on
+their natural bucket keys.
 
 Reference parity: the reference has no relational surface at all
 (SURVEY.md §2.3 documents the gap); these queries exist for the
@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from open_pulsar_spark.registry import query
+from open_pulsar_spark.registry import query, query_sql
 from open_pulsar_spark.tables import load_table
 
 
@@ -85,30 +85,20 @@ def q4_priority_late_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # q6_forecast_revenue — TPC-H Q6: pure scan-filter-agg, the pushdown probe.
 # --------------------------------------------------------------------------
-@query(
+# Scale: one scan, every predicate pushed to parquet
+# (shipdate/discount/quantity are all scan-level filters), 4-column
+# ReadSchema, single partial-agg row per partition.
+q6_forecast_revenue = query_sql(
     "q6_forecast_revenue",
-    oracle="""
+    """
     SELECT round(sum(l_extendedprice * l_discount), 2) AS revenue
-    FROM lineitem
+    FROM {lineitem}
     WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
       AND l_shipdate <  TIMESTAMP '1997-01-01 00:00:00'
       AND l_discount >= 0.05 AND l_discount <= 0.07
       AND l_quantity < 24
     """,
 )
-def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Forecasting revenue change: one scan, every predicate pushed to
-    parquet (shipdate/discount/quantity are all scan-level filters),
-    4-column ReadSchema, single partial-agg row per partition.
-    """
-    li = load_table(spark, sf_dir, "lineitem")
-    return li.where(
-        (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))
-        & (F.col("l_discount") >= 0.05)
-        & (F.col("l_discount") <= 0.07)
-        & (F.col("l_quantity") < 24)
-    ).agg(_money(F.col("l_extendedprice") * F.col("l_discount")).alias("revenue"))
 
 
 # --------------------------------------------------------------------------
@@ -247,45 +237,23 @@ def q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # q14_promo_revenue — TPC-H Q14: join + conditional-share, one month.
 # --------------------------------------------------------------------------
-@query(
+# Scale: part is an SF-linear dimension — no forced hint; AQE
+# broadcasts it into the month-pruned lineitem scan while it fits;
+# single conditional-sum agg, no shuffle of lineitem beyond the final
+# single-row reduce.
+q14_promo_revenue = query_sql(
     "q14_promo_revenue",
-    oracle="""
+    """
     SELECT round(
              100.0 * sum(CASE WHEN p_type = 'PROMO'
                               THEN l_extendedprice * (1 - l_discount)
                               ELSE 0 END)
              / sum(l_extendedprice * (1 - l_discount)), 6) AS promo_revenue
-    FROM lineitem JOIN part ON l_partkey = p_partkey
+    FROM {lineitem} JOIN {part} ON l_partkey = p_partkey
     WHERE l_shipdate >= TIMESTAMP '1996-09-01 00:00:00'
       AND l_shipdate <  TIMESTAMP '1996-10-01 00:00:00'
     """,
 )
-def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Promotion effect: PROMO parts' percentage of one month's
-    revenue.
-
-    Scale: part is an SF-linear dimension — no forced hint; AQE
-    broadcasts it into the month-pruned lineitem scan while it fits;
-    single conditional-sum agg, no shuffle of lineitem beyond the
-    final single-row reduce.
-    """
-    li = load_table(spark, sf_dir, "lineitem").where(
-        (F.col("l_shipdate") >= F.lit("1996-09-01").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1996-10-01").cast("timestamp"))
-    )
-    part = load_table(spark, sf_dir, "part").select("p_partkey", "p_type")
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return (
-        li.join(part, li.l_partkey == F.col("p_partkey"))
-        .agg(
-            F.round(
-                F.lit(100.0)
-                * F.sum(F.when(F.col("p_type") == "PROMO", rev).otherwise(F.lit(0.0)))
-                / F.sum(rev),
-                6,
-            ).alias("promo_revenue")
-        )
-    )
 
 
 # --------------------------------------------------------------------------
@@ -392,64 +360,42 @@ def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # q18_large_volume_customers — TPC-H Q18: HAVING-filtered agg → join → topk.
 # --------------------------------------------------------------------------
-@query(
+# Scale: the quantity agg shuffles lineitem on orderkey; the HAVING
+# cuts it to a sliver before the orders join (orderkey again — co-
+# partitioned, no extra exchange under bucketing); the customer join is a
+# broadcast of the sliver side. Top-k is TakeOrderedAndProject.
+q18_large_volume_customers = query_sql(
     "q18_large_volume_customers",
-    oracle="""
+    """
     WITH big AS (
         SELECT l_orderkey, sum(l_quantity) AS sum_qty
-        FROM lineitem GROUP BY l_orderkey
+        FROM {lineitem} GROUP BY l_orderkey
         HAVING sum(l_quantity) > 180
     )
     SELECT c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice,
            round(sum_qty, 2) AS sum_qty
     FROM big
-    JOIN orders   ON o_orderkey = l_orderkey
-    JOIN customer ON c_custkey = o_custkey
+    JOIN {orders}   ON o_orderkey = l_orderkey
+    JOIN {customer} ON c_custkey = o_custkey
     ORDER BY o_totalprice DESC, o_orderkey
     LIMIT 100
     """,
 )
-def q18_large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Large-volume orders (total quantity > 180) with their customers,
-    top-100 by order value.
-
-    Scale: the quantity agg shuffles lineitem on orderkey; the HAVING
-    cuts it to a sliver before the orders join (orderkey again — co
-    -partitioned, no extra exchange under bucketing); customer join is
-    a broadcast of the sliver side. Top-k is TakeOrderedAndProject.
-    """
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
-    orders = load_table(spark, sf_dir, "orders")
-    customer = load_table(spark, sf_dir, "customer").select("c_custkey", "c_name")
-    big = (
-        li.groupBy("l_orderkey")
-        .agg(F.sum("l_quantity").alias("raw_qty"))
-        .where(F.col("raw_qty") > 180)
-    )
-    return (
-        big.join(orders, big.l_orderkey == orders.o_orderkey)
-        .join(customer, orders.o_custkey == customer.c_custkey)
-        .select(
-            "c_name",
-            "c_custkey",
-            "o_orderkey",
-            "o_orderdate",
-            "o_totalprice",
-            F.round("raw_qty", 2).alias("sum_qty"),
-        )
-        .orderBy(F.desc("o_totalprice"), "o_orderkey")
-        .limit(100)
-    )
 
 
 # --------------------------------------------------------------------------
 # q19_disjunctive_revenue — TPC-H Q19: OR-of-ANDs predicate join.
 # --------------------------------------------------------------------------
-@query(
+# Scale: part prunes to the three brands via a derived top-level
+# disjunct (Catalyst extracts `p_brand IN (...)` as a common factor and
+# pushes it to the part scan); part is SF-linear so the join is left to
+# AQE (broadcast while it fits); the residual disjunction evaluates
+# post-join, one pass.
+q19_disjunctive_revenue = query_sql(
     "q19_disjunctive_revenue",
-    oracle="""
+    """
     SELECT round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-    FROM lineitem JOIN part ON p_partkey = l_partkey
+    FROM {lineitem} JOIN {part} ON p_partkey = l_partkey
     WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 15
            AND l_quantity >= 1 AND l_quantity <= 11)
        OR (p_brand = 'Brand#2' AND p_size BETWEEN 1 AND 25
@@ -458,30 +404,6 @@ def q18_large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
            AND l_quantity >= 20 AND l_quantity <= 30)
     """,
 )
-def q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Discounted revenue for three brand/size/quantity baskets — the
-    classic OR-of-ANDs predicate that tests disjunction handling.
-
-    Scale: part prunes to the three brands via a derived top-level
-    disjunct (Catalyst extracts `p_brand IN (...)` as a common factor
-    and pushes it to the part scan); part is SF-linear so the join is
-    left to AQE (broadcast while it fits); the residual disjunction
-    evaluates post-join, one pass.
-    """
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_partkey", "l_quantity", "l_extendedprice", "l_discount"
-    )
-    part = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_size")
-    joined = li.join(part, li.l_partkey == F.col("p_partkey"))
-    q = F.col("l_quantity")
-    cond = (
-        ((F.col("p_brand") == "Brand#1") & F.col("p_size").between(1, 15) & (q >= 1) & (q <= 11))
-        | ((F.col("p_brand") == "Brand#2") & F.col("p_size").between(1, 25) & (q >= 10) & (q <= 20))
-        | ((F.col("p_brand") == "Brand#3") & F.col("p_size").between(1, 35) & (q >= 20) & (q <= 30))
-    )
-    return joined.where(cond).agg(
-        _money(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue")
-    )
 
 
 # --------------------------------------------------------------------------
@@ -552,18 +474,22 @@ def q22_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 # rest of the suite didn't exercise), with genuinely unmatched keys on
 # both sides.
 # --------------------------------------------------------------------------
-@query(
+# Scale: both aggregates and the join share the (user_id, day) shuffle
+# key, so AQE reuses one exchange per side; the full-outer join is a
+# plain shuffled join — no broadcast (neither side is a dimension) and
+# no fallback to nested-loop.
+user_day_activity_fulljoin = query_sql(
     "user_day_activity_fulljoin",
-    oracle="""
+    """
     WITH p AS (
         SELECT user_id, date_trunc('day', ts)::TIMESTAMP AS day,
                count(*) AS n_purchases
-        FROM events WHERE event_type = 'purchase' GROUP BY 1, 2
+        FROM {events} WHERE event_type = 'purchase' GROUP BY 1, 2
     ),
     e AS (
         SELECT user_id, date_trunc('day', ts)::TIMESTAMP AS day,
                count(*) AS n_errors
-        FROM events WHERE event_type = 'error' GROUP BY 1, 2
+        FROM {events} WHERE event_type = 'error' GROUP BY 1, 2
     )
     SELECT user_id, day,
            CASE WHEN n_purchases IS NULL THEN 'error_only'
@@ -575,41 +501,6 @@ def q22_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY user_id, day
     """,
 )
-def user_day_activity_fulljoin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-(user, day) purchase vs error activity, FULL OUTER joined:
-    days with only errors, only purchases, or both all survive, each
-    row classified by which side was present.
-
-    Scale: both aggregates and the join share the (user_id, day)
-    shuffle key, so AQE reuses one exchange per side; the full-outer
-    join is a plain shuffled hash join — no broadcast (neither side is
-    a dimension) and no fallback to nested-loop.
-    """
-    ev = load_table(spark, sf_dir, "events")
-    day = F.date_trunc("day", F.col("ts"))
-
-    def side(event_type: str, out: str) -> DataFrame:
-        return (
-            ev.where(F.col("event_type") == event_type)
-            .groupBy("user_id", day.alias("day"))
-            .agg(F.count("*").alias(out))
-        )
-
-    p, e = side("purchase", "n_purchases"), side("error", "n_errors")
-    return (
-        p.join(e, ["user_id", "day"], "full_outer")
-        .select(
-            "user_id",
-            "day",
-            F.when(F.col("n_purchases").isNull(), "error_only")
-            .when(F.col("n_errors").isNull(), "purchase_only")
-            .otherwise("both")
-            .alias("presence"),
-            F.coalesce("n_purchases", F.lit(0)).alias("n_purchases"),
-            F.coalesce("n_errors", F.lit(0)).alias("n_errors"),
-        )
-        .orderBy("user_id", "day")
-    )
 
 
 # --------------------------------------------------------------------------
@@ -751,164 +642,82 @@ def q11_important_part_value(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q12 shape: delay-bucket CASE aggregation (the schema has no shipmode /
 # receiptdate; the bucket is ship latency vs order date, the counted
 # split is high- vs low-priority — the exact Q12 output shape).
-@query(
+# Scale: fact-fact join on l_orderkey/o_orderkey — the natural bucket
+# key both tables should be bucketed on, so a bucketed layout makes this
+# shuffle-free; the year filter is pushed to the lineitem scan. Two
+# CASE-sums over a 2-row group space — partial map-side combine
+# collapses it before the single exchange.
+q12_priority_ship_delay = query_sql(
     "q12_priority_ship_delay",
-    oracle="""
+    """
     SELECT CASE WHEN l_shipdate >= o_orderdate + INTERVAL 60 DAY
                 THEN 'slow' ELSE 'fast' END AS delay_bucket,
            sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
                     THEN 1 ELSE 0 END)::BIGINT AS high_line_count,
            sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
                     THEN 0 ELSE 1 END)::BIGINT AS low_line_count
-    FROM lineitem JOIN orders ON o_orderkey = l_orderkey
+    FROM {lineitem} JOIN {orders} ON o_orderkey = l_orderkey
     WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
       AND l_shipdate <  TIMESTAMP '1998-01-01 00:00:00'
     GROUP BY 1 ORDER BY 1
     """,
 )
-def q12_priority_ship_delay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shipping-latency buckets × order-priority line counts for one
-    year (TPC-H Q12 shape).
-
-    Scale: fact-fact join on l_orderkey/o_orderkey — the natural bucket
-    key both tables should be bucketed on, so a bucketed layout makes
-    this shuffle-free; the year filter is pushed to the lineitem scan.
-    Aggregation is two CASE-sums over a 2-row group space — partial
-    map-side combine collapses it before the single exchange.
-    """
-    li = load_table(spark, sf_dir, "lineitem").where(
-        (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
-    ).select("l_orderkey", "l_shipdate")
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderdate", "o_orderpriority"
-    )
-    high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .select(
-            F.when(
-                F.col("l_shipdate")
-                >= F.col("o_orderdate") + F.expr("INTERVAL 60 DAYS"),
-                "slow",
-            )
-            .otherwise("fast")
-            .alias("delay_bucket"),
-            F.when(high, 1).otherwise(0).alias("is_high"),
-        )
-        .groupBy("delay_bucket")
-        .agg(
-            F.sum("is_high").alias("high_line_count"),
-            F.sum(1 - F.col("is_high")).alias("low_line_count"),
-        )
-        .orderBy("delay_bucket")
-    )
 
 
 # q16 shape: distinct-supplier counts per part attribute group, with a
 # NOT-IN supplier exclusion (negative account balance stands in for the
 # "complaints" comment filter the schema lacks; lineitem is the bridge).
-@query(
+# Scale: the part attribute filter is an inner join that also carries
+# the group-by columns; the supplier exclusion (NOT IN) is an anti join;
+# both sides are SF-linear slices so strategy is left to AQE (broadcast
+# while they fit). The distinct count shuffles once on the group key with
+# partial distinct aggregation map-side.
+q16_supplier_variety = query_sql(
     "q16_supplier_variety",
-    oracle="""
+    """
     SELECT p_brand, p_type, p_size,
            count(DISTINCT l_suppkey) AS supplier_cnt
-    FROM lineitem
-    JOIN part ON p_partkey = l_partkey
+    FROM {lineitem}
+    JOIN {part} ON p_partkey = l_partkey
     WHERE p_brand <> 'Brand#1'
       AND p_size IN (1, 4, 9, 14, 19, 24, 29, 34, 39, 49)
-      AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
+      AND l_suppkey NOT IN (SELECT s_suppkey FROM {supplier} WHERE s_acctbal < 0)
     GROUP BY p_brand, p_type, p_size
     ORDER BY supplier_cnt DESC, p_brand, p_type, p_size
     """,
 )
-def q16_supplier_variety(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """How many distinct (non-excluded) suppliers ship each part
-    brand/type/size combination (TPC-H Q16 shape).
-
-    Scale: the part attribute filter is an inner join that also
-    carries the group-by columns; the supplier exclusion is a LEFT
-    ANTI; both sides are SF-linear slices so strategy is left to AQE
-    (broadcast while they fit).  countDistinct shuffles once on the
-    group key with partial distinct aggregation map-side.
-    """
-    pr = load_table(spark, sf_dir, "part").where(
-        (F.col("p_brand") != "Brand#1")
-        & F.col("p_size").isin(1, 4, 9, 14, 19, 24, 29, 34, 39, 49)
-    ).select("p_partkey", "p_brand", "p_type", "p_size")
-    bad = load_table(spark, sf_dir, "supplier").where(
-        F.col("s_acctbal") < 0
-    ).select("s_suppkey")
-    li = load_table(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
-    return (
-        li.join(pr, li.l_partkey == pr.p_partkey)
-        .join(bad, li.l_suppkey == F.col("s_suppkey"), "left_anti")
-        .groupBy("p_brand", "p_type", "p_size")
-        .agg(F.countDistinct("l_suppkey").alias("supplier_cnt"))
-        .orderBy(F.desc("supplier_cnt"), "p_brand", "p_type", "p_size")
-    )
 
 
 # q20 shape: dominance semi-join chain (no partsupp/availqty, so
 # "holds excess stock" becomes "shipped >30% of the part's year
 # volume" — the same nested-aggregate + semi-join chain).
-@query(
+# Scale: 'red' parts prune lineitem via a semi-join at the scan
+# (AQE-chosen strategy — the red slice is SF-linear); per-(part,
+# supplier) and per-part aggregates share the partkey shuffle (AQE reuses
+# the exchange); the dominance test is exact integer quantity math; the
+# supplier join is unhinted and the final DISTINCT collapses a
+# supplier-cardinality set.
+q20_dominant_part_suppliers = query_sql(
     "q20_dominant_part_suppliers",
-    oracle="""
+    """
     WITH shipped AS (
         SELECT l_partkey, l_suppkey, sum(l_quantity)::BIGINT AS qty
-        FROM lineitem
+        FROM {lineitem}
         WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
           AND l_shipdate <  TIMESTAMP '1998-01-01 00:00:00'
-          AND l_partkey IN (SELECT p_partkey FROM part WHERE p_name LIKE 'red%')
+          AND l_partkey IN (SELECT p_partkey FROM {part} WHERE p_name LIKE 'red%')
         GROUP BY l_partkey, l_suppkey),
     tot AS (SELECT l_partkey, sum(qty)::BIGINT AS part_qty
             FROM shipped GROUP BY l_partkey)
     SELECT DISTINCT s_suppkey, s_name
     FROM shipped
     JOIN tot USING (l_partkey)
-    JOIN supplier ON s_suppkey = l_suppkey
+    JOIN {supplier} ON s_suppkey = l_suppkey
     WHERE qty * 10 > part_qty * 3
       AND s_nationkey < 10
     ORDER BY s_suppkey
     """,
 )
-def q20_dominant_part_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Suppliers in a region who dominated (>30% of) the yearly shipped
-    volume of some 'red' part (TPC-H Q20 shape: filtered part list →
-    nested aggregate → dominance predicate → supplier semi-join).
-
-    Scale: 'red' parts prune lineitem via a semi-join at the scan
-    (AQE-chosen strategy — the red slice is SF-linear); per-(part,
-    supplier) and per-part aggregates share the partkey shuffle (AQE
-    reuses the exchange); the dominance test is integer quantity math
-    (exact); the supplier join is unhinted and the final DISTINCT
-    collapses a supplier-cardinality set.
-    """
-    red = load_table(spark, sf_dir, "part").where(
-        F.col("p_name").like("red%")
-    ).select("p_partkey")
-    li = load_table(spark, sf_dir, "lineitem").where(
-        (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
-    ).select("l_partkey", "l_suppkey", "l_quantity")
-    sup = load_table(spark, sf_dir, "supplier").where(
-        F.col("s_nationkey") < 10
-    ).select("s_suppkey", "s_name")
-    shipped = (
-        li.join(red, li.l_partkey == F.col("p_partkey"), "left_semi")
-        .groupBy("l_partkey", "l_suppkey")
-        .agg(F.sum(F.col("l_quantity").cast("bigint")).alias("qty"))
-    )
-    tot = shipped.groupBy("l_partkey").agg(F.sum("qty").alias("part_qty"))
-    return (
-        shipped.join(tot, "l_partkey")
-        .where(F.col("qty") * 10 > F.col("part_qty") * 3)
-        .join(sup, shipped.l_suppkey == F.col("s_suppkey"))
-        .select("s_suppkey", "s_name")
-        .distinct()
-        .orderBy("s_suppkey")
-    )
 
 
 # q21 shape: EXISTS + NOT-EXISTS on the same fact — suppliers whose

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from open_pulsar_spark.registry import query
+from open_pulsar_spark.registry import query, query_sql
 from open_pulsar_spark.tables import load_table
 
 # ---------------------------------------------------------------------------
@@ -382,30 +382,20 @@ def slugify_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # doc_chunk_plan — sink chunk budgeting (telegram-agent.py:200-246).
 # ---------------------------------------------------------------------------
-@query(
+# Chunk budgeting for a bounded sink (SURVEY §2.8 X2 envelope;
+# reference telegram-agent.py:200-209: limit 4096 → here 500, header
+# budget 8 → usable 492). The full boundary-preferring splitter is
+# functions.chunking.chunk_text (a UDF, exercised in tests/).
+doc_chunk_plan = query_sql(
     "doc_chunk_plan",
-    oracle="""
+    """
     SELECT doc_id, length(text) AS n_chars,
            greatest(1, cast(ceil(length(text) / 492.0) AS BIGINT)) AS n_chunks,
            CASE WHEN length(text) > 500 THEN 1 ELSE 0 END AS needs_labels
-    FROM documents
+    FROM {documents}
     ORDER BY doc_id
     """,
 )
-def doc_chunk_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Chunk budgeting for a bounded sink (SURVEY §2.8 X2 envelope;
-    reference telegram-agent.py:200-209: limit 4096 → here 500, header
-    budget 8 → usable 492). The full boundary-preferring splitter is
-    functions.chunking.chunk_text (a UDF, exercised in tests/)."""
-    docs = load_table(spark, sf_dir, "documents")
-    return docs.select(
-        "doc_id",
-        F.length("text").alias("n_chars"),
-        F.greatest(
-            F.lit(1), F.ceil(F.length("text") / F.lit(492.0)).cast("bigint")
-        ).alias("n_chunks"),
-        F.when(F.length("text") > 500, 1).otherwise(0).alias("needs_labels"),
-    ).orderBy("doc_id")
 
 
 # ---------------------------------------------------------------------------

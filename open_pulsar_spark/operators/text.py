@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 
 from open_pulsar_spark.materialize import pin
 from open_pulsar_spark.operators.prefix import global_prefix
-from open_pulsar_spark.registry import query
+from open_pulsar_spark.registry import query, query_sql
 from open_pulsar_spark.tables import load_table
 
 STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "it")
@@ -550,29 +550,18 @@ def doc_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # doc_fingerprint — md5 content fingerprint + per-source rollup.
 # --------------------------------------------------------------------------
-@query(
+# The reference's SHA-256 input-integrity fingerprint idea
+# (agent-loop.sh:250-251, SURVEY §2.8 X3) as a per-document column, plus
+# the 8-hex shard key a 100 TB layout would bucket on. Map-only.
+doc_fingerprint = query_sql(
     "doc_fingerprint",
-    oracle="""
+    """
     SELECT doc_id, md5(text) AS fingerprint,
            substr(md5(text), 1, 8) AS shard_key
-    FROM documents
+    FROM {documents}
     ORDER BY doc_id
     """,
 )
-def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic content fingerprint (md5 hex) — the reference's
-    SHA-256 input-integrity fingerprint idea (agent-loop.sh:250-251,
-    SURVEY §2.8 X3) as a per-document column, plus the 8-hex shard key
-    a 100 TB layout would bucket on."""
-    docs = load_table(spark, sf_dir, "documents")
-    return (
-        docs.select(
-            "doc_id",
-            F.md5("text").alias("fingerprint"),
-            F.substring(F.md5("text"), 1, 8).alias("shard_key"),
-        )
-        .orderBy("doc_id")
-    )
 
 
 # --------------------------------------------------------------------------

@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 
 from open_pulsar_spark.materialize import pin
 from open_pulsar_spark.operators.prefix import global_prefix
-from open_pulsar_spark.registry import query
+from open_pulsar_spark.registry import query, query_sql
 from open_pulsar_spark.tables import load_table
 
 SESSION_GAP_US = 30 * 60 * 1_000_000  # 30 min
@@ -419,47 +419,21 @@ def events_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 # user_rolling_7d_purchases — RANGE-frame rolling aggregate (time-based
 # window frame, not row-based).
 # --------------------------------------------------------------------------
-@query(
+# A RANGE window frame (time interval), not a ROWS frame: the frame
+# holds however many events fall in the last 7 days — the running-LTV /
+# velocity-limit shape. One shuffle on user_id; the frame is computed in
+# a single pass per partition, no self-join.
+user_rolling_7d_purchases = query_sql(
     "user_rolling_7d_purchases",
-    oracle="""
+    """
     SELECT user_id, event_id,
            round(sum(value) OVER (PARTITION BY user_id ORDER BY ts
                  RANGE BETWEEN INTERVAL '7 days' PRECEDING AND CURRENT ROW),
                  4) AS rolling_7d_value
-    FROM events WHERE event_type = 'purchase'
+    FROM {events} WHERE event_type = 'purchase'
     ORDER BY user_id, event_id
     """,
 )
-def user_rolling_7d_purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user trailing-7-day purchase value at every purchase — a
-    RANGE window frame (time interval), not a ROWS frame: the frame
-    holds however many events fall in the last 7 days, which is the
-    running-LTV / velocity-limit shape fraud and billing systems use.
-
-    Spark's rangeBetween needs a numeric order key, so the frame runs
-    over unix MICROSECONDS (the module-wide convention — full timestamp
-    precision; unix_timestamp would truncate to seconds and let two
-    same-second purchases become frame peers the oracle separates)
-    with a ±7-days-in-µs bound — identical inclusive boundary
-    semantics to the oracle's INTERVAL frame. One shuffle on user_id;
-    the frame is computed in a single pass per partition (Catalyst's
-    sliding-frame aggregation), no self-join.
-    """
-    ev = load_table(spark, sf_dir, "events")
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy(F.unix_micros("ts"))
-        .rangeBetween(-7 * 86400 * 1_000_000, 0)
-    )
-    return (
-        ev.where(F.col("event_type") == "purchase")
-        .select(
-            "user_id",
-            "event_id",
-            F.round(F.sum("value").over(w), 4).alias("rolling_7d_value"),
-        )
-        .orderBy("user_id", "event_id")
-    )
 
 
 # --------------------------------------------------------------------------

@@ -21,7 +21,6 @@ def get_spark(
     app_name: str = "open-pulsar-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
-    extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
@@ -77,8 +76,9 @@ def get_spark(
         # per-chat quota — SURVEY D4/T4) heap state OOMs the executor;
         # RocksDB spills to local disk and changelog checkpointing
         # uploads per-batch deltas instead of full snapshots.
-        # Override via extra_conf (applied after defaults) if a
-        # deployment needs the heap provider back.
+        # The provider is a runtime SQL conf: a deployment that needs
+        # the heap provider back sets it with spark.conf.set before it
+        # starts its first stateful query.
         .config(
             "spark.sql.streaming.stateStore.providerClass",
             "org.apache.spark.sql.execution.streaming.state."
@@ -111,6 +111,4 @@ def get_spark(
         )
         .config("spark.sql.files.openCostInBytes", "65536")
     )
-    for k, v in (extra_conf or {}).items():
-        builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -18,8 +18,8 @@ batching-invariant sufficient statistic is the deduped change log
 
   read: distinct across segments (replays, backfills and
     mid-compaction double-reads collapse — a change row is its own
-    identity) → the SAME scd2_intervals assembly as the batch query,
-    so the readout bit-matches order_history_scd2 over the union of
+    identity) → scd2_intervals, the DataFrame form of the batch
+    query's interval assembly, so the readout bit-matches order_history_scd2 over the union of
     all delivered rows, whatever the batching — INCLUDING histories
     whose versions arrived across different epochs (tested).
 
@@ -87,7 +87,7 @@ def read_changes(spark: SparkSession, store_path: str) -> DataFrame:
 
 def scd2_readout(spark: SparkSession, store_path: str) -> DataFrame:
     """The current SCD2 history — the batch query's interval assembly
-    (shared scd2_intervals) over the folded change log; bit-matches
+    (scd2_intervals) over the folded change log; bit-matches
     order_history_scd2 over the union of all delivered rows."""
     from open_pulsar_spark.operators.analytics import scd2_intervals
 

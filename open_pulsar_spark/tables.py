@@ -210,12 +210,6 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {n: load_table(spark, sf_dir, n) for n in TABLE_NAMES}
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view so spark.sql can see them."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
-
-
 def write_bucketed(
     df: DataFrame,
     table: str,

@@ -156,6 +156,25 @@ def test_held_block_that_raises_releases_its_cache(spark):
     assert _cached_entries(spark) == before
 
 
+def test_label_swap_that_raises_releases_both_generations(spark):
+    """A round whose count() fails must not leave the current or the
+    next label generation cached."""
+    from pyspark.sql import functions as F
+
+    from open_pulsar_spark.operators.dedup import _propagate_labels_distributed
+
+    pairs = spark.range(6).select(
+        F.col("id").alias("a_id"),
+        F.when(F.col("id") == 3, F.raise_error(F.lit("boom")))
+        .otherwise(F.col("id") + 1)
+        .alias("b_id"),
+    )
+    before = _cached_entries(spark)
+    with pytest.raises(Exception, match="boom"):
+        _propagate_labels_distributed(pairs)
+    assert _cached_entries(spark) == before
+
+
 def test_global_prefix_block_that_raises_releases_its_cache(spark):
     from open_pulsar_spark.operators.prefix import global_prefix
 
@@ -179,11 +198,15 @@ def test_pins_from_eight_threads_match_serial_runs(spark, tmp_path):
     qs = registry.all_queries()
     # dedup_minhash_lsh: a pin_keyed user, keyed by sf dir, so the two
     # dirs are two keys fighting over one name; events_dau_wau_mau: a
-    # lazy pin whose frame is returned unfilled
+    # lazy pin whose frame is returned unfilled; q1_pricing_summary and
+    # orders_cdc_merge: SQL-text queries, each binding its tables
+    # through per-call temp views
     jobs = [
         ("dedup_minhash_lsh", SF_SMALL),
         ("dedup_minhash_lsh", copy),
         ("events_dau_wau_mau", SF_SMALL),
+        ("q1_pricing_summary", SF_SMALL),
+        ("orders_cdc_merge", copy),
     ]
 
     def run(job):
@@ -210,3 +233,5 @@ def test_pins_from_eight_threads_match_serial_runs(spark, tmp_path):
         lvl = live[name].storageLevel
         assert lvl.useMemory or lvl.useDisk, f"live generation of {name} is not cached"
     assert _cached_entries(spark) <= _live_pins(), "a replaced generation is still cached"
+    views = [t.name for t in spark.catalog.listTables() if t.name.startswith("_pyspark_")]
+    assert not views, f"SQL-text bindings left temp views behind: {views}"

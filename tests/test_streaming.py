@@ -2460,7 +2460,7 @@ def test_bloom_stream_runs_as_real_streaming_query(spark, workdir):
 def test_scd2_stream_folds_to_batch_history(spark, workdir):
     """Streaming SCD2: versions of the same customer's history arrive
     across different epochs, and the folded change log re-assembles
-    the SAME intervals as order_history_scd2 (shared scd2_intervals) —
+    the SAME intervals as order_history_scd2 (via scd2_intervals) —
     including windows that a later epoch's version re-closed. Replays
     and epoch-less backfills are absorbed by the read-side distinct."""
     from pyspark.sql import functions as F
