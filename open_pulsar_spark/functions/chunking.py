@@ -28,7 +28,6 @@ from __future__ import annotations
 
 import pandas as pd
 
-from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StringType
 

@@ -19,7 +19,7 @@ the unsalted plan.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -80,12 +80,6 @@ def top_frequency_keys(df: DataFrame, key: str, n: int = 10) -> DataFrame:
         .orderBy(F.desc("count"), key)
         .limit(n)
     )
-
-
-def salt_expr(key: Column, buckets: int) -> Column:
-    """Deterministic content-derived salt (hash-based) for cases where
-    reproducibility across retries matters more than uniformity."""
-    return F.pmod(F.hash(key), F.lit(buckets))
 
 
 # --------------------------------------------------------------------------

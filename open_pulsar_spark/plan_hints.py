@@ -1,6 +1,6 @@
-"""Broadcast-hint audit: walk a query's *analyzed* logical plan and report
-every explicit ``F.broadcast`` hint together with the parquet tables its
-subtree reads.
+"""Broadcast-hint audit: profile the *analyzed* logical plan of every frame
+passed to ``F.broadcast`` — the parquet tables it reads and whether a
+bounding operator sits above each scan.
 
 Why this exists (SCALE.md "Global posture"): an explicit broadcast hint is
 *not* demoted by AQE, so a hint over a table that grows with scale factor
@@ -76,9 +76,6 @@ _BOUNDING_NODES = (
     "CollectLimit",
 )
 
-# leaf nodes that are driver-local literal frames
-_LOCAL_LEAVES = ("LocalRelation", "LogicalRDD", "OneRowRelation", "Range")
-
 import re as _re
 
 # table name from a FileScan's Location path (cached plans under
@@ -88,7 +85,8 @@ _PARQUET_PATH = _re.compile(r"/([A-Za-z0-9_]+)\.parquet")
 
 @dataclass(frozen=True)
 class BroadcastHint:
-    """One ``ResolvedHint (strategy=broadcast)`` node in an analyzed plan."""
+    """The scan profile of a broadcast-hinted frame (or of the input of a
+    global window)."""
 
     tables: frozenset[str]  # parquet base tables read inside the hint
     has_bounding_op: bool  # Aggregate/Limit/Deduplicate between hint and scan
@@ -157,28 +155,6 @@ def _scan_profile(
                 bounded = False
         stack.append((depth, text.startswith(bounding_nodes)))
     return tables, bounded, local
-
-
-def broadcast_hints(df: DataFrame) -> list[BroadcastHint]:
-    """Scan ``df``'s analyzed logical plan for explicit broadcast hints."""
-    tree = df._jdf.queryExecution().analyzed().toString()
-    parsed = [_depth_and_text(ln) for ln in tree.splitlines() if ln.strip()]
-    hints: list[BroadcastHint] = []
-    for idx, (depth, text) in enumerate(parsed):
-        if not text.startswith("ResolvedHint") or "broadcast" not in text:
-            continue
-        subtree = []
-        for d2, t2 in parsed[idx + 1 :]:
-            if d2 <= depth:
-                break
-            subtree.append((d2, t2))
-        tables, bounded, local = _scan_profile(subtree)
-        hints.append(
-            BroadcastHint(
-                tables=frozenset(tables), has_bounding_op=bounded, local_only=local
-            )
-        )
-    return hints
 
 
 def frame_profile(df: DataFrame) -> BroadcastHint:
@@ -330,22 +306,3 @@ def global_window_profiles(df: DataFrame) -> list[BroadcastHint]:
         )
     return profiles
 
-
-def violating_hints(
-    df: DataFrame, allowed_bounded: frozenset[frozenset[str]] = frozenset()
-) -> list[BroadcastHint]:
-    """Hints that break the scale rule.
-
-    A hint passes when its subtree reads only schema-bounded tables and/or
-    literal frames, or when it reads SF-linear tables but (a) a bounding
-    operator sits between the hint and every scan and (b) the reviewed
-    allowlist carries its exact table set for this query.
-    """
-    bad = []
-    for h in broadcast_hints(df):
-        if not h.sf_linear_tables:
-            continue
-        if h.has_bounding_op and h.tables in allowed_bounded:
-            continue
-        bad.append(h)
-    return bad

@@ -32,15 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from open_pulsar_spark.streaming.segments import (
-    read_segments,
-    start_partial_stream,
-    update_partial_store,
-)
-
-_PARTIAL_SCHEMA = "user_id LONG, d LONG, epoch LONG"
-_DEDUP_KEYS = ["user_id", "d"]
-_CLUSTER_COLS = ["d"]
+from open_pulsar_spark.streaming.twins import Readout, twin
 
 
 def _active_partial(events: DataFrame) -> DataFrame:
@@ -53,27 +45,6 @@ def _active_partial(events: DataFrame) -> DataFrame:
     ).distinct()
 
 
-def update_active(
-    spark: SparkSession,
-    events: DataFrame,
-    store_path: str,
-    epoch_id: int | None,
-) -> None:
-    """Fold one batch of events into the membership ledger. Idempotent
-    store: epoch-less backfills are SAFE (duplicates vanish in the
-    read-side distinct), so unlike the additive stores a None epoch is
-    accepted and written as a batch segment."""
-    update_partial_store(events, store_path, epoch_id, _active_partial)
-
-
-def read_user_days(spark: SparkSession, store_path: str) -> DataFrame:
-    """The current deduped (user_id, d) membership grid."""
-    raw = read_segments(spark, store_path, _PARTIAL_SCHEMA)
-    if raw is None:
-        return spark.createDataFrame([], "user_id LONG, d LONG")
-    return raw.select("user_id", "d").distinct()
-
-
 def dau_readout(spark: SparkSession, store_path: str) -> DataFrame:
     """DAU/WAU/MAU + stickiness from the stream-maintained membership
     grid — the SAME dau_wau_mau_from_user_days closing as the batch
@@ -82,28 +53,7 @@ def dau_readout(spark: SparkSession, store_path: str) -> DataFrame:
         dau_wau_mau_from_user_days,
     )
 
-    return dau_wau_mau_from_user_days(spark, read_user_days(spark, store_path))
-
-
-def start_active_stream(
-    spark: SparkSession,
-    events_stream: DataFrame,
-    store_path: str,
-    checkpoint: str,
-    compact_max_segments: int | None = 64,
-):
-    """events stream → continuously-maintained membership ledger, on
-    the shared partial-stream scaffold."""
-    return start_partial_stream(
-        events_stream,
-        store_path,
-        checkpoint,
-        partial_of=_active_partial,
-        schema=_PARTIAL_SCHEMA,
-        dedup_keys=_DEDUP_KEYS,
-        cluster_cols=_CLUSTER_COLS,
-        compact_max_segments=compact_max_segments,
-    )
+    return dau_wau_mau_from_user_days(spark, ACTIVE.read(spark, store_path))
 
 
 def growth_readout(spark: SparkSession, store_path: str) -> DataFrame:
@@ -118,10 +68,26 @@ def growth_readout(spark: SparkSession, store_path: str) -> DataFrame:
         growth_accounting_from_user_days,
     )
 
-    grid = read_user_days(spark, store_path).select(
+    grid = ACTIVE.read(spark, store_path).select(
         "user_id",
         F.timestamp_seconds(F.col("d") * 86400).alias("day"),
     )
     return growth_accounting_from_user_days(
         spark, grid, "active_stream_growth_seq"
     )
+
+
+ACTIVE = twin(
+    "active",
+    partial=_active_partial,
+    schema="user_id LONG, d LONG",
+    keys=["user_id", "d"],
+    fold=[],
+    additive=False,
+    source="events",
+    readouts=[
+        Readout(dau_readout, "events_dau_wau_mau"),
+        Readout(growth_readout, "user_growth_accounting"),
+    ],
+    cluster=["d"],
+)

@@ -12,10 +12,10 @@ day — and the weekday grouping + exact-integer moment close run at
 read time on that grid:
 
   micro-batch of orders
-    → (epoch-day, cents) per-batch sums (map-side combine)
+    → (day, cents) per-batch sums (map-side combine)
     → one epoch segment
 
-  read: dedup (epoch, d) → sum per day → the SAME
+  read: dedup (epoch, day) → sum per day → the SAME
     dow_anova_from_daily close as the batch query (per-dow counts,
     totals, floored means, η²_ppm via the scaled exact-moment form),
     so the live weekday screen bit-matches a batch scan over the
@@ -23,7 +23,7 @@ read time on that grid:
 
 Replay contract: additive partials (cms/fano/risk/mk's class, applied
 verbatim) — epoch is REQUIRED, a replayed epoch is skipped by the
-overwrite contract, and the fold dedups (epoch, d) before summing so
+overwrite contract, and the fold dedups (epoch, day) before summing so
 a mid-compaction double-read cannot double-add. Epoch-less backfills
 are refused (no safe sentinel for additive folds).
 
@@ -40,67 +40,9 @@ into the streaming layer.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from open_pulsar_spark.streaming.segments import (
-    read_segments,
-    start_partial_stream,
-    update_partial_store,
-)
-
-_PARTIAL_SCHEMA = "d INT, cents LONG, epoch LONG"
-_DEDUP_KEYS = ["epoch", "d"]
-_CLUSTER_COLS = ["d"]
-
-
-def _anova_partial(orders: DataFrame) -> DataFrame:
-    """orders → per-batch (epoch-day, cents) sums — the SAME
-    daily_revenue_cents reduction as the batch query (shared rounding),
-    the day keyed as days-since-epoch for a compact ledger."""
-    from open_pulsar_spark.operators.analytics import daily_revenue_cents
-
-    return daily_revenue_cents(orders).select(
-        F.datediff(F.col("day"), F.lit("1970-01-01").cast("date"))
-        .cast("int")
-        .alias("d"),
-        "cents",
-    )
-
-
-def update_anova(
-    spark: SparkSession,
-    orders: DataFrame,
-    store_path: str,
-    epoch_id: int | None,
-) -> None:
-    """Fold one batch of orders into the daily ledger. ADDITIVE store:
-    the epoch is mandatory — replaying a committed epoch is a no-op by
-    overwrite, but an epoch-less duplicate would double-add."""
-    if epoch_id is None:
-        raise ValueError(
-            "anova_stream is additive: epoch-less backfills would "
-            "double-count on redelivery; pass a unique epoch id"
-        )
-    update_partial_store(orders, store_path, epoch_id, _anova_partial)
-
-
-def read_daily(spark: SparkSession, store_path: str) -> DataFrame:
-    """The current folded (day, cents) daily-revenue series. Dedup on
-    (epoch, d) FIRST — see module docstring — then day-sum."""
-    raw = read_segments(spark, store_path, _PARTIAL_SCHEMA)
-    if raw is None:
-        return spark.createDataFrame([], "day DATE, cents LONG")
-    return (
-        raw.dropDuplicates(["epoch", "d"])
-        .groupBy("d")
-        .agg(F.sum("cents").cast("bigint").alias("cents"))
-        .select(
-            F.date_add(F.lit("1970-01-01").cast("date"), F.col("d")).alias(
-                "day"
-            ),
-            "cents",
-        )
-    )
+from open_pulsar_spark.operators.analytics import daily_revenue_cents
+from open_pulsar_spark.streaming.twins import Readout, total, twin
 
 
 def anova_readout(spark: SparkSession, store_path: str) -> DataFrame:
@@ -110,25 +52,16 @@ def anova_readout(spark: SparkSession, store_path: str) -> DataFrame:
     orders."""
     from open_pulsar_spark.operators.analytics import dow_anova_from_daily
 
-    return dow_anova_from_daily(spark, read_daily(spark, store_path))
+    return dow_anova_from_daily(spark, ANOVA.read(spark, store_path))
 
 
-def start_anova_stream(
-    spark: SparkSession,
-    orders_stream: DataFrame,
-    store_path: str,
-    checkpoint: str,
-    compact_max_segments: int | None = 64,
-):
-    """order stream → continuously-maintained daily-revenue ledger, on
-    the shared partial-stream scaffold."""
-    return start_partial_stream(
-        orders_stream,
-        store_path,
-        checkpoint,
-        partial_of=_anova_partial,
-        schema=_PARTIAL_SCHEMA,
-        dedup_keys=_DEDUP_KEYS,
-        cluster_cols=_CLUSTER_COLS,
-        compact_max_segments=compact_max_segments,
-    )
+ANOVA = twin(
+    "anova",
+    partial=daily_revenue_cents,
+    schema="day DATE, cents LONG",
+    keys=["day"],
+    fold=[total("cents")],
+    additive=True,
+    source="orders",
+    readouts=[Readout(anova_readout, "revenue_dow_anova")],
+)

@@ -37,15 +37,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from open_pulsar_spark.streaming.segments import (
-    read_segments,
-    start_partial_stream,
-    update_partial_store,
-)
-
-_PARTIAL_SCHEMA = "d LONG, o LONG, c LONG, epoch LONG"
-_DEDUP_KEYS = ["epoch", "d"]
-_CLUSTER_COLS = ["d"]
+from open_pulsar_spark.operators.analytics import order_spans
+from open_pulsar_spark.streaming.twins import Readout, total, twin
 
 _EPOCH_DAY = "datediff(to_date({col}), date'1970-01-01')"
 
@@ -56,51 +49,16 @@ def _backlog_partial(spans: DataFrame) -> DataFrame:
     day, all map-side combinable."""
     opened = spans.groupBy(
         F.expr(_EPOCH_DAY.format(col="open_day")).cast("bigint").alias("d")
-    ).agg(F.count("*").cast("bigint").alias("o"))
+    ).agg(F.count("*").cast("bigint").alias("n_opened"))
     closed = spans.groupBy(
         F.expr(_EPOCH_DAY.format(col="close_day")).cast("bigint").alias("d")
-    ).agg(F.count("*").cast("bigint").alias("c"))
+    ).agg(F.count("*").cast("bigint").alias("n_closed"))
     return (
         opened.join(closed, "d", "full")
         .select(
             "d",
-            F.coalesce("o", F.lit(0)).cast("bigint").alias("o"),
-            F.coalesce("c", F.lit(0)).cast("bigint").alias("c"),
-        )
-    )
-
-
-def update_backlog(
-    spark: SparkSession,
-    spans: DataFrame,
-    store_path: str,
-    epoch_id: int | None,
-) -> None:
-    """Fold one batch of resolved spans into the day ledger. ADDITIVE
-    store: the epoch is mandatory — replaying a committed epoch is a
-    no-op by overwrite, but an epoch-less duplicate would double-add."""
-    if epoch_id is None:
-        raise ValueError(
-            "backlog_stream is additive: epoch-less backfills would "
-            "double-count on redelivery; pass a unique epoch id"
-        )
-    update_partial_store(spans, store_path, epoch_id, _backlog_partial)
-
-
-def read_daily(spark: SparkSession, store_path: str) -> DataFrame:
-    """The current folded (d, n_opened, n_closed) day ledger. Dedup on
-    (epoch, d) FIRST — see module docstring — then day-sum."""
-    raw = read_segments(spark, store_path, _PARTIAL_SCHEMA)
-    if raw is None:
-        return spark.createDataFrame(
-            [], "d LONG, n_opened LONG, n_closed LONG"
-        )
-    return (
-        raw.dropDuplicates(["epoch", "d"])
-        .groupBy("d")
-        .agg(
-            F.sum("o").cast("bigint").alias("n_opened"),
-            F.sum("c").cast("bigint").alias("n_closed"),
+            F.coalesce("n_opened", F.lit(0)).cast("bigint").alias("n_opened"),
+            F.coalesce("n_closed", F.lit(0)).cast("bigint").alias("n_closed"),
         )
     )
 
@@ -111,7 +69,7 @@ def backlog_readout(spark: SparkSession, store_path: str) -> DataFrame:
     bit-matched over the union of all delivered spans."""
     from open_pulsar_spark.operators.analytics import backlog_from_daily
 
-    daily = read_daily(spark, store_path).select(
+    daily = BACKLOG.read(spark, store_path).select(
         F.timestamp_seconds(F.col("d") * 86400).alias("day"),
         "n_opened",
         "n_closed",
@@ -119,22 +77,13 @@ def backlog_readout(spark: SparkSession, store_path: str) -> DataFrame:
     return backlog_from_daily(spark, daily)
 
 
-def start_backlog_stream(
-    spark: SparkSession,
-    spans_stream: DataFrame,
-    store_path: str,
-    checkpoint: str,
-    compact_max_segments: int | None = 64,
-):
-    """resolved-span stream → continuously-maintained backlog ledger,
-    on the shared partial-stream scaffold."""
-    return start_partial_stream(
-        spans_stream,
-        store_path,
-        checkpoint,
-        partial_of=_backlog_partial,
-        schema=_PARTIAL_SCHEMA,
-        dedup_keys=_DEDUP_KEYS,
-        cluster_cols=_CLUSTER_COLS,
-        compact_max_segments=compact_max_segments,
-    )
+BACKLOG = twin(
+    "backlog",
+    partial=_backlog_partial,
+    schema="d LONG, n_opened LONG, n_closed LONG",
+    keys=["d"],
+    fold=[total("n_opened"), total("n_closed")],
+    additive=True,
+    source=order_spans,
+    readouts=[Readout(backlog_readout, "orders_backlog_depth")],
+)

@@ -23,59 +23,12 @@ the order volume.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from open_pulsar_spark.operators.analytics import (
     benford_digit_counts,
     benford_report,
 )
-from open_pulsar_spark.streaming.segments import (
-    read_segments,
-    start_partial_stream,
-    update_partial_store,
-)
-
-_PARTIAL_SCHEMA = "digit INT, n_obs LONG, epoch LONG"
-_DEDUP_KEYS = ["epoch", "digit"]
-_CLUSTER_COLS = ["digit"]
-
-
-def _benford_stream_partial(orders: DataFrame) -> DataFrame:
-    """orders → per-batch (digit, n_obs) partial counts (the SAME
-    reduction as the batch query, so the fold bit-matches it)."""
-    return benford_digit_counts(orders)
-
-
-def update_benford(
-    spark: SparkSession,
-    orders: DataFrame,
-    store_path: str,
-    epoch_id: int | None,
-) -> None:
-    """Fold one batch of orders into the digit-partial store. Additive
-    contract: epoch is REQUIRED (replays overwrite-skip; there is no
-    duplicate-tolerant fold to hide behind)."""
-    if epoch_id is None:
-        raise ValueError(
-            "benford_stream partials are additive: epoch-less backfills "
-            "would double-add on rerun; supply an epoch id"
-        )
-    update_partial_store(
-        orders, store_path, epoch_id, _benford_stream_partial
-    )
-
-
-def read_digit_counts(spark: SparkSession, store_path: str) -> DataFrame:
-    """The folded (digit, n_obs) counts: dedup (epoch, digit) — replay
-    and mid-compaction safety — then sum partials per digit."""
-    raw = read_segments(spark, store_path, _PARTIAL_SCHEMA)
-    if raw is None:
-        return spark.createDataFrame([], "digit INT, n_obs LONG")
-    return (
-        raw.dropDuplicates(["epoch", "digit"])
-        .groupBy("digit")
-        .agg(F.sum("n_obs").cast("bigint").alias("n_obs"))
-    )
+from open_pulsar_spark.streaming.twins import Readout, total, twin
 
 
 def benford_readout(spark: SparkSession, store_path: str) -> DataFrame:
@@ -84,25 +37,18 @@ def benford_readout(spark: SparkSession, store_path: str) -> DataFrame:
     readout (including the order-independent micro-unit χ² total)
     agrees bit-for-bit with a batch run over the union of all
     delivered rows."""
-    return benford_report(spark, read_digit_counts(spark, store_path))
+    return benford_report(spark, BENFORD.read(spark, store_path))
 
 
-def start_benford_stream(
-    spark: SparkSession,
-    orders_stream: DataFrame,
-    store_path: str,
-    checkpoint: str,
-    compact_max_segments: int | None = 64,
-):
-    """orders stream → continuously-maintained digit-partial store, on
-    the shared partial-stream scaffold."""
-    return start_partial_stream(
-        orders_stream,
-        store_path,
-        checkpoint,
-        partial_of=_benford_stream_partial,
-        schema=_PARTIAL_SCHEMA,
-        dedup_keys=_DEDUP_KEYS,
-        cluster_cols=_CLUSTER_COLS,
-        compact_max_segments=compact_max_segments,
-    )
+# orders → per-batch (digit, n_obs) counts: the SAME reduction as the
+# batch query, so the fold bit-matches it
+BENFORD = twin(
+    "benford",
+    partial=benford_digit_counts,
+    schema="digit INT, n_obs LONG",
+    keys=["digit"],
+    fold=[total("n_obs")],
+    additive=True,
+    source="orders",
+    readouts=[Readout(benford_readout, "orders_benford_test")],
+)

@@ -38,48 +38,13 @@ from open_pulsar_spark.operators.sketch import (
     bloom_rows,
     source_shingles,
 )
-from open_pulsar_spark.streaming.segments import (
-    read_segments,
-    start_partial_stream,
-    update_partial_store,
-)
-
-_PARTIAL_SCHEMA = "source STRING, word INT, bits LONG, epoch LONG"
-# bits is a VALUE: two backfill segments can hold different partial
-# bit patterns for the same (source, word) and BOTH must survive
-# compaction for the OR re-fold to see them (the hll-register rule)
-_DEDUP_KEYS = ["epoch", "source", "word", "bits"]
-_CLUSTER_COLS = ["source"]
+from open_pulsar_spark.streaming.twins import twin
 
 
 def _bloom_partial(docs: DataFrame) -> DataFrame:
     """docs → per-batch (source, word, bits) OR-partials via the SAME
     shingle and filter producers as the batch query."""
     return bloom_rows(source_shingles(docs))
-
-
-def update_bloom(
-    spark: SparkSession,
-    docs: DataFrame,
-    store_path: str,
-    epoch_id: int | None,
-) -> None:
-    """Fold one batch of documents into the filter store. Idempotent
-    per epoch via the shared overwrite contract — and idempotent in
-    VALUE regardless (OR-merge), so epoch-less backfills are always
-    safe."""
-    update_partial_store(docs, store_path, epoch_id, _bloom_partial)
-
-
-def read_bloom(spark: SparkSession, store_path: str) -> DataFrame:
-    """The current merged filters (source, word, bits)."""
-    raw = read_segments(spark, store_path, _PARTIAL_SCHEMA)
-    if raw is None:
-        return spark.createDataFrame([], "source STRING, word INT, bits LONG")
-    return (
-        raw.groupBy("source", "word")
-        .agg(F.expr("bit_or(bits)").cast("bigint").alias("bits"))
-    )
 
 
 def bloom_membership(
@@ -90,7 +55,7 @@ def bloom_membership(
     bloom answers 'definitely not' or 'maybe': may_contain=false is
     authoritative, true carries the measured-FPR caveat the batch
     harness quantifies."""
-    bloom = read_bloom(spark, store_path)
+    bloom = BLOOM.read(spark, store_path)
     probe = (
         spark.createDataFrame([(t,) for t in items], "t STRING")
         .select(
@@ -128,22 +93,16 @@ def bloom_membership(
     )
 
 
-def start_bloom_stream(
-    spark: SparkSession,
-    docs_stream: DataFrame,
-    store_path: str,
-    checkpoint: str,
-    compact_max_segments: int | None = 64,
-):
-    """docs stream → continuously-maintained filter store, on the
-    shared partial-stream scaffold."""
-    return start_partial_stream(
-        docs_stream,
-        store_path,
-        checkpoint,
-        partial_of=_bloom_partial,
-        schema=_PARTIAL_SCHEMA,
-        dedup_keys=_DEDUP_KEYS,
-        cluster_cols=_CLUSTER_COLS,
-        compact_max_segments=compact_max_segments,
-    )
+# bits is a VALUE: compaction keeps every distinct row, so two backfill
+# segments' different bit patterns for one (source, word) both survive
+# for the OR re-fold (the hll-register rule)
+BLOOM = twin(
+    "bloom",
+    partial=_bloom_partial,
+    schema="source STRING, word INT, bits LONG",
+    keys=["source", "word"],
+    fold=["CAST(bit_or(bits) AS BIGINT) AS bits"],
+    additive=False,
+    source="documents",
+    cluster=["source"],
+)

@@ -36,15 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from open_pulsar_spark.streaming.segments import (
-    read_segments,
-    start_partial_stream,
-    update_partial_store,
-)
-
-_PARTIAL_SCHEMA = "doc_id LONG, t STRING, tf LONG, epoch LONG"
-_DEDUP_KEYS = ["epoch", "doc_id", "t"]
-_CLUSTER_COLS = ["t"]
+from open_pulsar_spark.streaming.twins import Readout, total, twin
 
 
 def _tf_partial(docs: DataFrame) -> DataFrame:
@@ -56,62 +48,23 @@ def _tf_partial(docs: DataFrame) -> DataFrame:
     )
 
 
-def update_bm25(
-    spark: SparkSession,
-    docs: DataFrame,
-    store_path: str,
-    epoch_id: int | None,
-) -> None:
-    """Fold one batch of (doc_id, text) rows into the tf ledger.
-    ADDITIVE store: the epoch is mandatory (no -1 sentinel) — replaying
-    a committed epoch is a no-op by overwrite, but an epoch-less
-    duplicate would double-add."""
-    if epoch_id is None:
-        raise ValueError(
-            "bm25_stream is additive: epoch-less backfills would "
-            "double-count on redelivery; pass a unique epoch id"
-        )
-    update_partial_store(docs, store_path, epoch_id, _tf_partial)
-
-
-def read_tf(spark: SparkSession, store_path: str) -> DataFrame:
-    """The current folded (doc_id, t, tf) index rows. Dedup on
-    (epoch, doc_id, t) FIRST — see module docstring — then key-sum."""
-    raw = read_segments(spark, store_path, _PARTIAL_SCHEMA)
-    if raw is None:
-        return spark.createDataFrame([], "doc_id LONG, t STRING, tf LONG")
-    return (
-        raw.dropDuplicates(["epoch", "doc_id", "t"])
-        .groupBy("doc_id", "t")
-        .agg(F.sum("tf").cast("bigint").alias("tf"))
-    )
-
-
 def bm25_readout(spark: SparkSession, store_path: str) -> DataFrame:
     """BM25 top-k retrieval from the stream-maintained index — the
     SAME text.bm25_from_tf as the batch query, bit-matched over the
     union of all delivered text."""
     from open_pulsar_spark.operators.text import bm25_from_tf
 
-    return bm25_from_tf(spark, read_tf(spark, store_path))
+    return bm25_from_tf(spark, BM25.read(spark, store_path))
 
 
-def start_bm25_stream(
-    spark: SparkSession,
-    docs_stream: DataFrame,
-    store_path: str,
-    checkpoint: str,
-    compact_max_segments: int | None = 64,
-):
-    """(doc_id, text) stream → continuously-maintained tf ledger, on
-    the shared partial-stream scaffold."""
-    return start_partial_stream(
-        docs_stream,
-        store_path,
-        checkpoint,
-        partial_of=_tf_partial,
-        schema=_PARTIAL_SCHEMA,
-        dedup_keys=_DEDUP_KEYS,
-        cluster_cols=_CLUSTER_COLS,
-        compact_max_segments=compact_max_segments,
-    )
+BM25 = twin(
+    "bm25",
+    partial=_tf_partial,
+    schema="doc_id LONG, t STRING, tf LONG",
+    keys=["doc_id", "t"],
+    fold=[total("tf")],
+    additive=True,
+    source="documents",
+    readouts=[Readout(bm25_readout, "bm25_topk")],
+    cluster=["t"],
+)

@@ -34,54 +34,9 @@ epoch so the epoch-overwrite replay contract stays well-defined.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from open_pulsar_spark.operators.multimodal import chunk_counts, chunk_stats
-from open_pulsar_spark.streaming.segments import (
-    auto_compact,
-    read_segments,
-    update_partial_store,
-)
-
-_CHUNK_SCHEMA = "kind STRING, h LONG, cnt LONG, blen INT, epoch LONG"
-_DEDUP_KEYS = ["epoch", "kind", "h"]
-_CLUSTER_COLS = ["kind"]
-
-
-def update_chunks(
-    spark: SparkSession,
-    docs: DataFrame,
-    store_path: str,
-    epoch_id: int,
-) -> None:
-    """Fold one batch's chunk counts into the store. Idempotent per
-    epoch (overwrite; no-op once committed). The epoch is REQUIRED:
-    the fold is additive, so an epoch-less rerun would double-count
-    (dq_stream contract)."""
-    if epoch_id is None:
-        raise ValueError(
-            "chunk store is additive: every write needs its own epoch id"
-        )
-    update_partial_store(docs, store_path, epoch_id, chunk_counts)
-
-
-def read_chunk_counts(spark: SparkSession, store_path: str) -> DataFrame:
-    """The current merged (kind, h, cnt, blen) ledger: dedup on
-    (epoch, kind, h) FIRST — the mid-compaction duplicate window —
-    then the additive fold."""
-    raw = read_segments(spark, store_path, _CHUNK_SCHEMA)
-    if raw is None:
-        return spark.createDataFrame(
-            [], "kind STRING, h LONG, cnt LONG, blen INT"
-        )
-    return (
-        raw.dropDuplicates(_DEDUP_KEYS)
-        .groupBy("kind", "h")
-        .agg(
-            F.sum("cnt").cast("bigint").alias("cnt"),
-            F.max("blen").alias("blen"),
-        )
-    )
+from open_pulsar_spark.streaming.twins import Readout, total, twin
 
 
 def chunk_dedup_stats(spark: SparkSession, store_path: str) -> DataFrame:
@@ -89,36 +44,19 @@ def chunk_dedup_stats(spark: SparkSession, store_path: str) -> DataFrame:
     the same chunk_stats expression as the batch query, so the numbers
     agree bit-for-bit with multimodal_chunk_dedup over the union of
     all delivered rows."""
-    return chunk_stats(read_chunk_counts(spark, store_path)).orderBy("kind")
+    return chunk_stats(CHUNK.read(spark, store_path)).orderBy("kind")
 
 
-def start_chunk_stream(
-    spark: SparkSession,
-    docs_stream: DataFrame,
-    store_path: str,
-    checkpoint: str,
-    compact_max_segments: int | None = 64,
-):
-    """docs(doc_id, text, …) stream → continuously-maintained chunk
-    store. Not on start_partial_stream: the additive fold must never
-    see a -1 backfill sentinel, so the step calls update_chunks (which
-    enforces the epoch) rather than the shared epoch-optional writer
-    (same posture as start_dq_stream)."""
-
-    def step(batch_df: DataFrame, epoch_id: int) -> None:
-        update_chunks(spark, batch_df, store_path, epoch_id)
-        auto_compact(
-            spark,
-            store_path,
-            _CHUNK_SCHEMA,
-            dedup_keys=_DEDUP_KEYS,
-            cluster_cols=_CLUSTER_COLS,
-            max_segments=compact_max_segments,
-        )
-
-    return (
-        docs_stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(step)
-        .start()
-    )
+# docs → per-(kind, chunk hash) counts: the SAME chunk_counts producer
+# as the batch query
+CHUNK = twin(
+    "chunk",
+    partial=chunk_counts,
+    schema="kind STRING, h LONG, cnt LONG, blen INT",
+    keys=["kind", "h"],
+    fold=[total("cnt"), "max(blen) AS blen"],
+    additive=True,
+    source="documents",
+    readouts=[Readout(chunk_dedup_stats, "multimodal_chunk_dedup")],
+    cluster=["kind"],
+)

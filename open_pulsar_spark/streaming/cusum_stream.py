@@ -32,51 +32,7 @@ from open_pulsar_spark.operators.analytics import (
     cusum_series,
     daily_revenue_cents,
 )
-from open_pulsar_spark.streaming.segments import (
-    read_segments,
-    start_partial_stream,
-    update_partial_store,
-)
-
-_PARTIAL_SCHEMA = "day DATE, cents LONG, epoch LONG"
-_DEDUP_KEYS = ["epoch", "day"]
-_CLUSTER_COLS = ["day"]
-
-
-def _cusum_stream_partial(orders: DataFrame) -> DataFrame:
-    """orders → per-batch (day, cents) partial sums (the SAME
-    reduction as the batch query, so the fold bit-matches it)."""
-    return daily_revenue_cents(orders)
-
-
-def update_cusum(
-    spark: SparkSession,
-    orders: DataFrame,
-    store_path: str,
-    epoch_id: int | None,
-) -> None:
-    """Fold one batch of orders into the day-partial store. Additive
-    contract: epoch is REQUIRED (replays overwrite-skip; there is no
-    duplicate-tolerant fold to hide behind)."""
-    if epoch_id is None:
-        raise ValueError(
-            "cusum_stream partials are additive: epoch-less backfills "
-            "would double-add on rerun; supply an epoch id"
-        )
-    update_partial_store(orders, store_path, epoch_id, _cusum_stream_partial)
-
-
-def read_daily(spark: SparkSession, store_path: str) -> DataFrame:
-    """The folded (day, cents) series: dedup (epoch, day) — replay and
-    mid-compaction safety — then sum partials per day."""
-    raw = read_segments(spark, store_path, _PARTIAL_SCHEMA)
-    if raw is None:
-        return spark.createDataFrame([], "day DATE, cents LONG")
-    return (
-        raw.dropDuplicates(["epoch", "day"])
-        .groupBy("day")
-        .agg(F.sum("cents").cast("bigint").alias("cents"))
-    )
+from open_pulsar_spark.streaming.twins import Readout, total, twin
 
 
 def cusum_readout(spark: SparkSession, store_path: str) -> DataFrame:
@@ -84,28 +40,7 @@ def cusum_readout(spark: SparkSession, store_path: str) -> DataFrame:
     stream-maintained series — the same cusum_series as the batch
     query, so the readout agrees bit-for-bit with a batch run over
     the union of all delivered rows."""
-    return cusum_series(read_daily(spark, store_path))
-
-
-def start_cusum_stream(
-    spark: SparkSession,
-    orders_stream: DataFrame,
-    store_path: str,
-    checkpoint: str,
-    compact_max_segments: int | None = 64,
-):
-    """orders stream → continuously-maintained day-partial store, on
-    the shared partial-stream scaffold."""
-    return start_partial_stream(
-        orders_stream,
-        store_path,
-        checkpoint,
-        partial_of=_cusum_stream_partial,
-        schema=_PARTIAL_SCHEMA,
-        dedup_keys=_DEDUP_KEYS,
-        cluster_cols=_CLUSTER_COLS,
-        compact_max_segments=compact_max_segments,
-    )
+    return cusum_series(CUSUM.read(spark, store_path))
 
 
 def acf_readout(spark: SparkSession, store_path: str) -> DataFrame:
@@ -118,7 +53,7 @@ def acf_readout(spark: SparkSession, store_path: str) -> DataFrame:
     from open_pulsar_spark.operators.analytics import acf_from_daily
 
     return acf_from_daily(
-        spark, read_daily(spark, store_path), pin_ns="acf_stream"
+        spark, CUSUM.read(spark, store_path), pin_ns="acf_stream"
     )
 
 
@@ -130,7 +65,7 @@ def ewma_readout(spark: SparkSession, store_path: str) -> DataFrame:
     union of all delivered rows."""
     from open_pulsar_spark.operators.analytics import ewma_from_daily
 
-    return ewma_from_daily(spark, read_daily(spark, store_path))
+    return ewma_from_daily(spark, CUSUM.read(spark, store_path))
 
 
 def bootstrap_readout(spark: SparkSession, store_path: str) -> DataFrame:
@@ -143,7 +78,7 @@ def bootstrap_readout(spark: SparkSession, store_path: str) -> DataFrame:
     (ACF), trend (EWMA), and now uncertainty."""
     from open_pulsar_spark.operators.analytics import bootstrap_ci_from_daily
 
-    return bootstrap_ci_from_daily(spark, read_daily(spark, store_path))
+    return bootstrap_ci_from_daily(spark, CUSUM.read(spark, store_path))
 
 
 def holt_readout(spark: SparkSession, store_path: str) -> DataFrame:
@@ -153,7 +88,7 @@ def holt_readout(spark: SparkSession, store_path: str) -> DataFrame:
     trend-aware companion to ewma_readout on the same store."""
     from open_pulsar_spark.operators.analytics import holt_from_daily
 
-    return holt_from_daily(spark, read_daily(spark, store_path))
+    return holt_from_daily(spark, CUSUM.read(spark, store_path))
 
 
 def conformal_readout(spark: SparkSession, store_path: str) -> DataFrame:
@@ -167,10 +102,31 @@ def conformal_readout(spark: SparkSession, store_path: str) -> DataFrame:
     of the FORECAST — the live interval an ops dashboard quotes."""
     from open_pulsar_spark.operators.analytics import conformal_from_daily
 
-    daily = read_daily(spark, store_path).select(
+    daily = CUSUM.read(spark, store_path).select(
         F.expr("datediff(day, date '1970-01-01')").cast("bigint").alias(
             "ed"
         ),
         "cents",
     )
     return conformal_from_daily(spark, daily, pin_ns="conformal_stream")
+
+
+# orders → per-batch (day, cents) sums: the SAME daily_revenue_cents
+# reduction as the batch queries, so the fold bit-matches them
+CUSUM = twin(
+    "cusum",
+    partial=daily_revenue_cents,
+    schema="day DATE, cents LONG",
+    keys=["day"],
+    fold=[total("cents")],
+    additive=True,
+    source="orders",
+    readouts=[
+        Readout(cusum_readout, "revenue_cusum_changepoint"),
+        Readout(acf_readout, "revenue_acf"),
+        Readout(ewma_readout, "revenue_ewma"),
+        Readout(bootstrap_readout, "revenue_bootstrap_ci"),
+        Readout(holt_readout, "revenue_holt_forecast"),
+        Readout(conformal_readout, None),
+    ],
+)

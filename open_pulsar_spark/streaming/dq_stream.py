@@ -18,7 +18,7 @@ ledger — so exactly-once rests on the epoch-overwrite segment
 protocol (a replayed epoch overwrites its own partial, never
 double-adds), and reads dedup on (epoch, rule) first so the
 mid-compaction duplicate window cannot double-count either. Backfills
-must carry their own reserved epoch ids (update_dq requires an epoch;
+must carry their own reserved epoch ids (DQ.update requires an epoch;
 there is no -1 sentinel here, unlike the duplicate-tolerant bottom-k
 stores).
 
@@ -35,15 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from open_pulsar_spark.streaming.segments import (
-    auto_compact,
-    read_segments,
-    update_partial_store,
-)
-
-_LEDGER_SCHEMA = "rule STRING, n_violations LONG, n_checked LONG, epoch LONG"
-_DEDUP_KEYS = ["epoch", "rule"]
-_CLUSTER_COLS = ["rule"]
+from open_pulsar_spark.streaming.twins import Readout, total, twin
 
 # (rule name, violation predicate SQL) — additive row-level rules on
 # the documents stream, names shared with the batch suite where the
@@ -77,71 +69,20 @@ def _dq_partial(docs: DataFrame) -> DataFrame:
     )
 
 
-def update_dq(
-    spark: SparkSession,
-    docs: DataFrame,
-    store_path: str,
-    epoch_id: int,
-) -> None:
-    """Fold one batch's rule counts into the ledger. Idempotent per
-    epoch (overwrite; no-op once committed). The epoch is REQUIRED:
-    the fold is additive, so an epoch-less rerun would double-count —
-    backfills must reserve their own epoch ids (cms_stream contract)."""
-    if epoch_id is None:
-        raise ValueError(
-            "dq ledger is additive: every write needs its own epoch id"
-        )
-    update_partial_store(docs, store_path, epoch_id, _dq_partial)
-
-
 def read_dq(spark: SparkSession, store_path: str) -> DataFrame:
-    """The current ledger (rule, n_violations, n_checked): dedup on
-    (epoch, rule) FIRST — the mid-compaction duplicate window — then
-    sum. Equals the batch aggregate over the union of all delivered
+    """The current ledger (rule, n_violations, n_checked), ordered by
+    rule. Equals the batch aggregate over the union of all delivered
     rows, whatever the batching (tested)."""
-    raw = read_segments(spark, store_path, _LEDGER_SCHEMA)
-    if raw is None:
-        return spark.createDataFrame(
-            [], "rule STRING, n_violations LONG, n_checked LONG"
-        )
-    return (
-        raw.dropDuplicates(_DEDUP_KEYS)
-        .groupBy("rule")
-        .agg(
-            F.sum("n_violations").cast("bigint").alias("n_violations"),
-            F.sum("n_checked").cast("bigint").alias("n_checked"),
-        )
-        .orderBy("rule")
-    )
+    return DQ.read(spark, store_path).orderBy("rule")
 
 
-def start_dq_stream(
-    spark: SparkSession,
-    docs_stream: DataFrame,
-    store_path: str,
-    checkpoint: str,
-    compact_max_segments: int | None = 64,
-):
-    """docs(doc_id, ..., text, n_chars) stream → continuously-
-    maintained DQ ledger. Not on start_partial_stream: the additive
-    fold must never see a -1 backfill sentinel, so the step calls
-    update_dq (which enforces the epoch) rather than the shared
-    epoch-optional writer."""
-
-    def step(batch_df: DataFrame, epoch_id: int) -> None:
-        update_dq(spark, batch_df, store_path, epoch_id)
-        auto_compact(
-            spark,
-            store_path,
-            _LEDGER_SCHEMA,
-            dedup_keys=_DEDUP_KEYS,
-            cluster_cols=_CLUSTER_COLS,
-            max_segments=compact_max_segments,
-        )
-
-    return (
-        docs_stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(step)
-        .start()
-    )
+DQ = twin(
+    "dq",
+    partial=_dq_partial,
+    schema="rule STRING, n_violations LONG, n_checked LONG",
+    keys=["rule"],
+    fold=[total("n_violations"), total("n_checked")],
+    additive=True,
+    source="documents",
+    readouts=[Readout(read_dq, None)],
+)

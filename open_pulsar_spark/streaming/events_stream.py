@@ -87,23 +87,6 @@ def sliding_value(
     )
 
 
-def session_counts(
-    events: DataFrame, gap: str = "30 minutes", watermark: str = "2 hours"
-) -> DataFrame:
-    """Per-user session windows (gap-based) — the streaming form of the
-    batch user_sessionize operator."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("user_id", F.session_window("ts", gap).alias("sw"))
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            "user_id",
-            F.col("sw.start").alias("session_start"),
-            "n_events",
-        )
-    )
-
-
 def dedup_within_watermark(
     events: DataFrame, watermark: str = "1 hour"
 ) -> DataFrame:
@@ -112,17 +95,6 @@ def dedup_within_watermark(
     state is evicted as event-time advances instead of growing forever."""
     return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
         ["event_id"]
-    )
-
-
-def start_to_memory(df: DataFrame, name: str, checkpoint: str) -> "StreamingQuery":  # noqa: F821
-    """Run a (complete-mode-capable) aggregate stream into a memory sink."""
-    return (
-        df.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", checkpoint)
-        .start()
     )
 
 

@@ -5,14 +5,14 @@ folded per micro-batch, serving the Fano overdispersion readout live
 Per-(type, hour) counts are ADDITIVE, so this store runs the
 cms/stats/pchart contract: epoch segments are REQUIRED (an epoch-less
 additive write has no safe sentinel — a replayed backfill would
-double-add); reads dedup (epoch, event_type, hr) BEFORE summing so the
+double-add); reads dedup (epoch, event_type, h) BEFORE summing so the
 mid-compaction double-read window cannot double-count:
 
   micro-batch of events
-    → (epoch-hour, type, n) per-batch counts (map-side combine)
+    → (type, hour, count) per-batch counts (map-side combine)
     → one epoch segment
 
-  read: dedup (epoch, type, hr) → sum per (type, hour) → the SAME
+  read: dedup (epoch, type, h) → sum per (type, hour) → the SAME
     fano_from_hourly close as the batch query (moments + span from the
     ledger itself), so the live dispersion readout bit-matches a batch
     scan over the union of all delivered events, whatever the batching
@@ -32,62 +32,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from open_pulsar_spark.streaming.segments import (
-    read_segments,
-    start_partial_stream,
-    update_partial_store,
-)
-
-_PARTIAL_SCHEMA = "event_type STRING, hr LONG, n LONG, epoch LONG"
-_DEDUP_KEYS = ["epoch", "event_type", "hr"]
-_CLUSTER_COLS = ["event_type", "hr"]
+from open_pulsar_spark.streaming.twins import Readout, total, twin
 
 
 def _fano_partial(events: DataFrame) -> DataFrame:
-    """events → per-batch (type, epoch-hour, count)."""
+    """events → per-batch (type, hour, count), the hour truncated on
+    the epoch-seconds grid."""
     return events.groupBy(
         "event_type",
-        F.expr("unix_seconds(date_trunc('hour', ts)) div 3600")
-        .cast("bigint")
-        .alias("hr"),
-    ).agg(F.count("*").cast("bigint").alias("n"))
-
-
-def update_fano(
-    spark: SparkSession,
-    events: DataFrame,
-    store_path: str,
-    epoch_id: int | None,
-) -> None:
-    """Fold one batch of events into the hourly ledger. ADDITIVE
-    store: the epoch is mandatory — replaying a committed epoch is a
-    no-op by overwrite, but an epoch-less duplicate would double-add."""
-    if epoch_id is None:
-        raise ValueError(
-            "fano_stream is additive: epoch-less backfills would "
-            "double-count on redelivery; pass a unique epoch id"
-        )
-    update_partial_store(events, store_path, epoch_id, _fano_partial)
-
-
-def read_hourly(spark: SparkSession, store_path: str) -> DataFrame:
-    """The current folded (event_type, h, c) hourly ledger. Dedup on
-    (epoch, type, hr) FIRST — see module docstring — then hour-sum."""
-    raw = read_segments(spark, store_path, _PARTIAL_SCHEMA)
-    if raw is None:
-        return spark.createDataFrame(
-            [], "event_type STRING, h TIMESTAMP, c LONG"
-        )
-    return (
-        raw.dropDuplicates(["epoch", "event_type", "hr"])
-        .groupBy("event_type", "hr")
-        .agg(F.sum("n").cast("bigint").alias("c"))
-        .select(
-            "event_type",
-            F.timestamp_seconds(F.col("hr") * 3600).alias("h"),
-            "c",
-        )
-    )
+        F.timestamp_seconds(
+            F.expr("unix_seconds(date_trunc('hour', ts)) div 3600") * 3600
+        ).alias("h"),
+    ).agg(F.count("*").cast("bigint").alias("c"))
 
 
 def fano_readout(spark: SparkSession, store_path: str) -> DataFrame:
@@ -97,28 +53,7 @@ def fano_readout(spark: SparkSession, store_path: str) -> DataFrame:
     from open_pulsar_spark.operators.analytics import fano_from_hourly
 
     return fano_from_hourly(
-        spark, read_hourly(spark, store_path), "fano_stream_hourly"
-    )
-
-
-def start_fano_stream(
-    spark: SparkSession,
-    events_stream: DataFrame,
-    store_path: str,
-    checkpoint: str,
-    compact_max_segments: int | None = 64,
-):
-    """events stream → continuously-maintained hourly-count ledger, on
-    the shared partial-stream scaffold."""
-    return start_partial_stream(
-        events_stream,
-        store_path,
-        checkpoint,
-        partial_of=_fano_partial,
-        schema=_PARTIAL_SCHEMA,
-        dedup_keys=_DEDUP_KEYS,
-        cluster_cols=_CLUSTER_COLS,
-        compact_max_segments=compact_max_segments,
+        spark, FANO.read(spark, store_path), "fano_stream_hourly"
     )
 
 
@@ -133,8 +68,23 @@ def mix_readout(spark: SparkSession, store_path: str) -> DataFrame:
     from open_pulsar_spark.operators.analytics import weekday_mix_from_daily
 
     daily = (
-        read_hourly(spark, store_path)
+        FANO.read(spark, store_path)
         .groupBy("event_type", F.date_trunc("day", "h").alias("day"))
         .agg(F.sum("c").cast("bigint").alias("n"))
     )
     return weekday_mix_from_daily(spark, daily, "fano_stream_mix_daily")
+
+
+FANO = twin(
+    "fano",
+    partial=_fano_partial,
+    schema="event_type STRING, h TIMESTAMP, c LONG",
+    keys=["event_type", "h"],
+    fold=[total("c")],
+    additive=True,
+    source="events",
+    readouts=[
+        Readout(fano_readout, "events_hourly_fano"),
+        Readout(mix_readout, "weekday_weekend_mix"),
+    ],
+)

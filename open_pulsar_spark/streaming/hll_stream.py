@@ -32,30 +32,14 @@ via the shared scaffold.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from open_pulsar_spark.operators.sketch import (
     _hll_user_day_key,
     hll_estimate_col,
     hll_fold,
-    hll_merge,
     hll_partial,
 )
-from open_pulsar_spark.streaming.segments import (
-    read_segments,
-    start_partial_stream,
-    update_partial_store,
-)
-
-_PARTIAL_SCHEMA = "event_type STRING, j LONG, r INT, epoch LONG"
-# "r" MUST be part of the compaction dedup key: epoch-less backfills
-# share the -1 sentinel epoch, so two backfills can legitimately hold
-# DIFFERENT maxima for the same (epoch, type, j) — dropDuplicates on a
-# value-less key would keep an arbitrary one and could delete the true
-# register max with the compacted segments (kmv/posting include their
-# value columns for the same reason)
-_DEDUP_KEYS = ["epoch", "event_type", "j", "r"]
-_CLUSTER_COLS = ["event_type"]
+from open_pulsar_spark.streaming.twins import Readout, twin
 
 
 def _hll_stream_partial(events: DataFrame) -> DataFrame:
@@ -66,55 +50,36 @@ def _hll_stream_partial(events: DataFrame) -> DataFrame:
     )
 
 
-def update_hll(
-    spark: SparkSession,
-    events: DataFrame,
-    store_path: str,
-    epoch_id: int | None,
-) -> None:
-    """Fold one batch of events into the register store. Idempotent
-    per epoch via the shared overwrite contract — and idempotent in
-    VALUE regardless (max-merge), so epoch-less backfills are always
-    safe."""
-    update_partial_store(events, store_path, epoch_id, _hll_stream_partial)
-
-
-def read_hll(spark: SparkSession, store_path: str) -> DataFrame:
-    """The current merged registers (event_type, j, r)."""
-    raw = read_segments(spark, store_path, _PARTIAL_SCHEMA)
-    if raw is None:
-        return spark.createDataFrame([], "event_type STRING, j LONG, r INT")
-    return hll_merge(raw.select("event_type", "j", "r"))
-
-
 def hll_estimates(spark: SparkSession, store_path: str) -> DataFrame:
     """(event_type, hll_keys): distinct user-day estimates from the
     stream-maintained store — the same integer estimator as
     events_hll_distinct, so the numbers agree bit-for-bit with the
     batch sketch over the union of all delivered rows."""
     return (
-        hll_fold(read_hll(spark, store_path))
+        hll_fold(HLL.read(spark, store_path))
         .select("event_type", hll_estimate_col().alias("hll_keys"))
         .orderBy("event_type")
     )
 
 
-def start_hll_stream(
-    spark: SparkSession,
-    events_stream: DataFrame,
-    store_path: str,
-    checkpoint: str,
-    compact_max_segments: int | None = 64,
-):
-    """events stream → continuously-maintained HLL register store, on
-    the shared partial-stream scaffold."""
-    return start_partial_stream(
-        events_stream,
-        store_path,
-        checkpoint,
-        partial_of=_hll_stream_partial,
-        schema=_PARTIAL_SCHEMA,
-        dedup_keys=_DEDUP_KEYS,
-        cluster_cols=_CLUSTER_COLS,
-        compact_max_segments=compact_max_segments,
-    )
+# the fold is the batch sketch's hll_merge: max r per (event_type, j).
+# Compaction keeps every distinct (event_type, j, r): epoch-less
+# backfills share the -1 sentinel epoch, so two of them can hold
+# DIFFERENT maxima for one register, and both must survive
+HLL = twin(
+    "hll",
+    partial=_hll_stream_partial,
+    schema="event_type STRING, j LONG, r INT",
+    keys=["event_type", "j"],
+    fold=["max(r) AS r"],
+    additive=False,
+    source="events",
+    readouts=[
+        Readout(
+            hll_estimates,
+            "events_hll_distinct",
+            lambda df: df.select("event_type", "hll_keys").orderBy("event_type"),
+        )
+    ],
+    cluster=["event_type"],
+)

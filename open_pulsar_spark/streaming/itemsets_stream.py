@@ -41,18 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from open_pulsar_spark.streaming.segments import (
-    read_segments,
-    start_partial_stream,
-    update_partial_store,
-)
-
-_PARTIAL_SCHEMA = "user_id LONG, d DATE, t STRING, epoch LONG"
-# the row IS its own identity — no value column to preserve, so the
-# compaction dedup key is simply every column (a duplicated
-# (epoch, user, d, t) row is exactly redundant)
-_DEDUP_KEYS = ["epoch", "user_id", "d", "t"]
-_CLUSTER_COLS = ["d", "t"]
+from open_pulsar_spark.streaming.twins import Readout, twin
 
 
 def _items_partial(events: DataFrame) -> DataFrame:
@@ -64,31 +53,6 @@ def _items_partial(events: DataFrame) -> DataFrame:
     ).distinct()
 
 
-def update_itemsets(
-    spark: SparkSession,
-    events: DataFrame,
-    store_path: str,
-    epoch_id: int | None,
-) -> None:
-    """Fold one batch of events into the item store. Idempotent per
-    epoch via the shared overwrite contract, and duplicate-tolerant in
-    VALUE regardless (reads dedup), so epoch-less backfills are safe —
-    a redelivered row is just a duplicate the read-side distinct
-    collapses."""
-    update_partial_store(events, store_path, epoch_id, _items_partial)
-
-
-def read_items(spark: SparkSession, store_path: str) -> DataFrame:
-    """The current folded basket-item relation (user_id, d, t):
-    distinct across segments FIRST, so replayed epochs, epoch-less
-    backfills, and the mid-compaction double-read window all collapse
-    before any counting."""
-    raw = read_segments(spark, store_path, _PARTIAL_SCHEMA)
-    if raw is None:
-        return spark.createDataFrame([], "user_id LONG, d DATE, t STRING")
-    return raw.select("user_id", "d", "t").distinct()
-
-
 def itemset_readout(spark: SparkSession, store_path: str) -> DataFrame:
     """(itemset, k, support, support_ppm) from the stream-maintained
     store — the SAME apriori computation as the batch query
@@ -97,26 +61,18 @@ def itemset_readout(spark: SparkSession, store_path: str) -> DataFrame:
     from open_pulsar_spark.operators.analytics import itemset_supports_from
 
     return itemset_supports_from(
-        read_items(spark, store_path), pin_ns="itemsets_stream"
+        ITEMSETS.read(spark, store_path), pin_ns="itemsets_stream"
     )
 
 
-def start_itemsets_stream(
-    spark: SparkSession,
-    events_stream: DataFrame,
-    store_path: str,
-    checkpoint: str,
-    compact_max_segments: int | None = 64,
-):
-    """events stream → continuously-maintained basket-item store, on
-    the shared partial-stream scaffold."""
-    return start_partial_stream(
-        events_stream,
-        store_path,
-        checkpoint,
-        partial_of=_items_partial,
-        schema=_PARTIAL_SCHEMA,
-        dedup_keys=_DEDUP_KEYS,
-        cluster_cols=_CLUSTER_COLS,
-        compact_max_segments=compact_max_segments,
-    )
+ITEMSETS = twin(
+    "itemsets",
+    partial=_items_partial,
+    schema="user_id LONG, d DATE, t STRING",
+    keys=["user_id", "d", "t"],
+    fold=[],
+    additive=False,
+    source="events",
+    readouts=[Readout(itemset_readout, "event_type_itemsets")],
+    cluster=["d", "t"],
+)

@@ -37,15 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from open_pulsar_spark.operators.profiling import KANON_QUASI
-from open_pulsar_spark.streaming.segments import (
-    read_segments,
-    start_partial_stream,
-    update_partial_store,
-)
-
-_PARTIAL_SCHEMA = "c_nationkey INT, c_mktsegment STRING, sz LONG, epoch LONG"
-_DEDUP_KEYS = ["epoch", *KANON_QUASI]
-_CLUSTER_COLS = list(KANON_QUASI)
+from open_pulsar_spark.streaming.twins import Readout, total, twin
 
 
 def _kanon_partial(customers: DataFrame) -> DataFrame:
@@ -55,68 +47,25 @@ def _kanon_partial(customers: DataFrame) -> DataFrame:
     )
 
 
-def update_kanon(
-    spark: SparkSession,
-    customers: DataFrame,
-    store_path: str,
-    epoch_id: int | None,
-) -> None:
-    """Fold one batch of customer rows into the class-size ledger.
-    ADDITIVE store: the epoch is mandatory (no -1 sentinel) — replaying
-    a committed epoch is a no-op by overwrite, but an epoch-less
-    duplicate would double-add."""
-    if epoch_id is None:
-        raise ValueError(
-            "kanon_stream is additive: epoch-less backfills would "
-            "double-count on redelivery; pass a unique epoch id"
-        )
-    update_partial_store(customers, store_path, epoch_id, _kanon_partial)
-
-
-def read_class_sizes(spark: SparkSession, store_path: str) -> DataFrame:
-    """The current folded (quasi..., sz) equivalence-class frame.
-    Dedup on (epoch, quasi...) FIRST — see module docstring — then
-    tuple-sum."""
-    raw = read_segments(spark, store_path, _PARTIAL_SCHEMA)
-    if raw is None:
-        return spark.createDataFrame(
-            [], "c_nationkey INT, c_mktsegment STRING, sz LONG"
-        )
-    return (
-        raw.dropDuplicates(["epoch", *KANON_QUASI])
-        .groupBy(*KANON_QUASI)
-        .agg(F.sum("sz").cast("bigint").alias("sz"))
-    )
-
-
 def kanon_readout(spark: SparkSession, store_path: str) -> DataFrame:
     """The k-grid release-risk audit from the stream-maintained class
     ledger — the SAME profiling.kanonymity_report as the batch query,
     bit-matched over the union of all delivered rows."""
     from open_pulsar_spark.operators.profiling import kanonymity_report
 
-    return kanonymity_report(spark, read_class_sizes(spark, store_path))
+    return kanonymity_report(spark, KANON.read(spark, store_path))
 
 
-def start_kanon_stream(
-    spark: SparkSession,
-    customers_stream: DataFrame,
-    store_path: str,
-    checkpoint: str,
-    compact_max_segments: int | None = 64,
-):
-    """customer stream → continuously-maintained class-size ledger, on
-    the shared partial-stream scaffold."""
-    return start_partial_stream(
-        customers_stream,
-        store_path,
-        checkpoint,
-        partial_of=_kanon_partial,
-        schema=_PARTIAL_SCHEMA,
-        dedup_keys=_DEDUP_KEYS,
-        cluster_cols=_CLUSTER_COLS,
-        compact_max_segments=compact_max_segments,
-    )
+KANON = twin(
+    "kanon",
+    partial=_kanon_partial,
+    schema="c_nationkey INT, c_mktsegment STRING, sz LONG",
+    keys=KANON_QUASI,
+    fold=[total("sz")],
+    additive=True,
+    source="customer",
+    readouts=[Readout(kanon_readout, "customer_kanonymity_audit")],
+)
 
 
 # --------------------------------------------------------------------------
@@ -127,12 +76,6 @@ def start_kanon_stream(
 # together they are the full release gate (a new ingest can push a
 # class below l without changing any class below k).
 # --------------------------------------------------------------------------
-_LDIV_SCHEMA = (
-    "c_nationkey INT, c_mktsegment STRING, band LONG, cnt LONG, epoch LONG"
-)
-_LDIV_KEYS = ["epoch", *KANON_QUASI, "band"]
-
-
 def _ldiv_partial(customers: DataFrame) -> DataFrame:
     """customer rows → per-batch (quasi..., band, cnt) sensitive-cell
     counts — the SAME banding expression as the batch query (imported
@@ -153,64 +96,22 @@ def _ldiv_partial(customers: DataFrame) -> DataFrame:
     ).agg(F.count("*").cast("bigint").alias("cnt"))
 
 
-def update_ldiv(
-    spark: SparkSession,
-    customers: DataFrame,
-    store_path: str,
-    epoch_id: int | None,
-) -> None:
-    """Fold one batch of customer rows into the sensitive-cell ledger.
-    ADDITIVE store: the epoch is mandatory (same contract as
-    update_kanon — an epoch-less backfill would double-add)."""
-    if epoch_id is None:
-        raise ValueError(
-            "ldiv_stream is additive: epoch-less backfills would "
-            "double-count on redelivery; pass a unique epoch id"
-        )
-    update_partial_store(customers, store_path, epoch_id, _ldiv_partial)
-
-
-def read_sensitive_cells(spark: SparkSession, store_path: str) -> DataFrame:
-    """The current folded (quasi..., band, cnt) sensitive-cell frame.
-    Dedup on (epoch, quasi..., band) FIRST — the mid-compaction
-    double-read guard — then cell-sum."""
-    raw = read_segments(spark, store_path, _LDIV_SCHEMA)
-    if raw is None:
-        return spark.createDataFrame(
-            [], "c_nationkey INT, c_mktsegment STRING, band LONG, cnt LONG"
-        )
-    return (
-        raw.dropDuplicates(_LDIV_KEYS)
-        .groupBy(*KANON_QUASI, "band")
-        .agg(F.sum("cnt").cast("bigint").alias("cnt"))
-    )
-
-
 def ldiv_readout(spark: SparkSession, store_path: str) -> DataFrame:
     """The l-grid homogeneity-risk audit from the stream-maintained
     sensitive-cell ledger — the SAME profiling.ldiversity_report as the
     batch query, bit-matched over the union of all delivered rows."""
     from open_pulsar_spark.operators.profiling import ldiversity_report
 
-    return ldiversity_report(spark, read_sensitive_cells(spark, store_path))
+    return ldiversity_report(spark, LDIV.read(spark, store_path))
 
 
-def start_ldiv_stream(
-    spark: SparkSession,
-    customers_stream: DataFrame,
-    store_path: str,
-    checkpoint: str,
-    compact_max_segments: int | None = 64,
-):
-    """customer stream → continuously-maintained sensitive-cell ledger,
-    on the shared partial-stream scaffold."""
-    return start_partial_stream(
-        customers_stream,
-        store_path,
-        checkpoint,
-        partial_of=_ldiv_partial,
-        schema=_LDIV_SCHEMA,
-        dedup_keys=_LDIV_KEYS,
-        cluster_cols=[*KANON_QUASI, "band"],
-        compact_max_segments=compact_max_segments,
-    )
+LDIV = twin(
+    "ldiv",
+    partial=_ldiv_partial,
+    schema="c_nationkey INT, c_mktsegment STRING, band LONG, cnt LONG",
+    keys=[*KANON_QUASI, "band"],
+    fold=[total("cnt")],
+    additive=True,
+    source="customer",
+    readouts=[Readout(ldiv_readout, "customer_ldiversity_audit")],
+)

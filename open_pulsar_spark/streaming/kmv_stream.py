@@ -45,15 +45,7 @@ from open_pulsar_spark.operators.sketch import (
     _kmv_merge,
     _kmv_partial,
 )
-from open_pulsar_spark.streaming.segments import (
-    read_segments,
-    start_partial_stream,
-    update_partial_store,
-)
-
-_PARTIAL_SCHEMA = "source STRING, u DOUBLE, epoch LONG"
-_DEDUP_KEYS = ["epoch", "source", "u"]
-_CLUSTER_COLS = ["source"]
+from open_pulsar_spark.streaming.twins import Readout, twin
 
 
 def _kmv_stream_partial(docs: DataFrame) -> DataFrame:
@@ -64,60 +56,33 @@ def _kmv_stream_partial(docs: DataFrame) -> DataFrame:
     return _kmv_partial(tokens)
 
 
-def update_kmv(
-    spark: SparkSession,
-    docs: DataFrame,
-    store_path: str,
-    epoch_id: int | None,
-) -> None:
-    """Fold one batch of (doc_id, source, text) rows into the sketch
-    store: tokens → bottom-k partial rows → one epoch segment.
-    Idempotent per epoch (the shared update_partial_store contract);
-    epoch-less calls write a unique batch segment, safe because the
-    fold is duplicate-tolerant (module docstring)."""
-    update_partial_store(docs, store_path, epoch_id, _kmv_stream_partial)
-
-
-def read_kmv(spark: SparkSession, store_path: str) -> DataFrame:
-    """The current merged sketches (source, mins) — the bottom-k of
-    the distinct union of every segment's rows, bit-identical to the
-    batch sketch over the same input rows."""
-    raw = read_segments(spark, store_path, _PARTIAL_SCHEMA)
-    if raw is None:
-        return spark.createDataFrame([], "source STRING, mins ARRAY<DOUBLE>")
-    return _kmv_merge(raw.select("source", "u"))
-
-
 def kmv_estimates(spark: SparkSession, store_path: str) -> DataFrame:
     """(source, n_est): the distinct-count estimates from the stream-
     maintained store — the same estimator expression as
     source_kmv_distinct, so the numbers agree bit-for-bit with a batch
     run over the union of all delivered rows."""
     return (
-        read_kmv(spark, store_path)
+        KMV.read(spark, store_path)
         .select("source", _kmv_estimate_col(F.col("mins")).alias("n_est"))
         .orderBy("source")
     )
 
 
-def start_kmv_stream(
-    spark: SparkSession,
-    docs_stream: DataFrame,
-    store_path: str,
-    checkpoint: str,
-    compact_max_segments: int | None = 64,
-):
-    """docs(doc_id, source, text) stream → continuously-maintained KMV
-    store, on the shared partial-stream scaffold. File-level
-    auto-compaction bounds the segment count; the duplicate-tolerant
-    fold makes the mid-compaction window a non-event."""
-    return start_partial_stream(
-        docs_stream,
-        store_path,
-        checkpoint,
-        partial_of=_kmv_stream_partial,
-        schema=_PARTIAL_SCHEMA,
-        dedup_keys=_DEDUP_KEYS,
-        cluster_cols=_CLUSTER_COLS,
-        compact_max_segments=compact_max_segments,
-    )
+# the fold is the batch sketch's merge: (source, mins), the bottom-k of
+# the distinct union of every segment's rows
+KMV = twin(
+    "kmv",
+    partial=_kmv_stream_partial,
+    schema="source STRING, u DOUBLE",
+    keys=["source"],
+    fold=_kmv_merge,
+    additive=False,
+    source="documents",
+    readouts=[
+        Readout(
+            kmv_estimates,
+            "source_kmv_distinct",
+            lambda df: df.select("source", "n_est").orderBy("source"),
+        )
+    ],
+)

@@ -35,15 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from open_pulsar_spark.streaming.segments import (
-    read_segments,
-    start_partial_stream,
-    update_partial_store,
-)
-
-_PARTIAL_SCHEMA = "source STRING, v LONG, c LONG, epoch LONG"
-_DEDUP_KEYS = ["epoch", "source", "v"]
-_CLUSTER_COLS = ["source", "v"]
+from open_pulsar_spark.streaming.twins import Readout, total, twin
 
 
 def _ks_partial(docs: DataFrame) -> DataFrame:
@@ -54,37 +46,6 @@ def _ks_partial(docs: DataFrame) -> DataFrame:
     ).agg(F.count("*").cast("bigint").alias("c"))
 
 
-def update_ks(
-    spark: SparkSession,
-    docs: DataFrame,
-    store_path: str,
-    epoch_id: int | None,
-) -> None:
-    """Fold one batch of documents into the length-count ledger.
-    ADDITIVE store: the epoch is mandatory — replaying a committed
-    epoch is a no-op by overwrite, but an epoch-less duplicate would
-    double-add."""
-    if epoch_id is None:
-        raise ValueError(
-            "ks_stream is additive: epoch-less backfills would "
-            "double-count on redelivery; pass a unique epoch id"
-        )
-    update_partial_store(docs, store_path, epoch_id, _ks_partial)
-
-
-def read_counts(spark: SparkSession, store_path: str) -> DataFrame:
-    """The current folded (source, v, c) length-count grid. Dedup on
-    (epoch, source, v) FIRST — see module docstring — then cell-sum."""
-    raw = read_segments(spark, store_path, _PARTIAL_SCHEMA)
-    if raw is None:
-        return spark.createDataFrame([], "source STRING, v LONG, c LONG")
-    return (
-        raw.dropDuplicates(["epoch", "source", "v"])
-        .groupBy("source", "v")
-        .agg(F.sum("c").cast("bigint").alias("c"))
-    )
-
-
 def ks_readout(spark: SparkSession, store_path: str) -> DataFrame:
     """The live pairwise-KS drift matrix from the stream-maintained
     ledger — the SAME ks_matrix_from_counts close as the batch
@@ -93,26 +54,17 @@ def ks_readout(spark: SparkSession, store_path: str) -> DataFrame:
     from open_pulsar_spark.operators.profiling import ks_matrix_from_counts
 
     return ks_matrix_from_counts(
-        spark, read_counts(spark, store_path), "ks_stream_cnt"
+        spark, KS.read(spark, store_path), "ks_stream_cnt"
     )
 
 
-def start_ks_stream(
-    spark: SparkSession,
-    docs_stream: DataFrame,
-    store_path: str,
-    checkpoint: str,
-    compact_max_segments: int | None = 64,
-):
-    """document stream → continuously-maintained length-count ledger,
-    on the shared partial-stream scaffold."""
-    return start_partial_stream(
-        docs_stream,
-        store_path,
-        checkpoint,
-        partial_of=_ks_partial,
-        schema=_PARTIAL_SCHEMA,
-        dedup_keys=_DEDUP_KEYS,
-        cluster_cols=_CLUSTER_COLS,
-        compact_max_segments=compact_max_segments,
-    )
+KS = twin(
+    "ks",
+    partial=_ks_partial,
+    schema="source STRING, v LONG, c LONG",
+    keys=["source", "v"],
+    fold=[total("c")],
+    additive=True,
+    source="documents",
+    readouts=[Readout(ks_readout, "source_length_ks_matrix")],
+)

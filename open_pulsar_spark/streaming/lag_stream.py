@@ -37,19 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from open_pulsar_spark.streaming.segments import (
-    read_segments,
-    start_partial_stream,
-    update_partial_store,
-)
-
-_PARTIAL_SCHEMA = (
-    "user_id LONG, first_view LONG, first_purchase LONG, epoch LONG"
-)
-# min-merge is duplicate-tolerant; full-row dedup is merely an
-# optimization before the fold (the quantile_stream pattern)
-_DEDUP_KEYS = ["epoch", "user_id", "first_view", "first_purchase"]
-_CLUSTER_COLS = ["user_id"]
+from open_pulsar_spark.streaming.twins import Readout, twin
 
 
 def _lag_partial(events: DataFrame) -> DataFrame:
@@ -64,31 +52,6 @@ def _lag_partial(events: DataFrame) -> DataFrame:
     )
 
 
-def update_lag(
-    spark: SparkSession,
-    events: DataFrame,
-    store_path: str,
-    epoch_id: int | None,
-) -> None:
-    """Fold one batch of events into the firsts ledger. Min-merge is
-    idempotent, so epoch-less backfills are SAFE here (unlike the
-    additive fano/risk stores) — epochs only dedup disk segments."""
-    update_partial_store(events, store_path, epoch_id, _lag_partial)
-
-
-def read_firsts(spark: SparkSession, store_path: str) -> DataFrame:
-    """The current min-merged per-user firsts ledger."""
-    raw = read_segments(spark, store_path, _PARTIAL_SCHEMA)
-    if raw is None:
-        return spark.createDataFrame(
-            [], "user_id LONG, first_view LONG, first_purchase LONG"
-        )
-    return raw.groupBy("user_id").agg(
-        F.min("first_view").alias("first_view"),
-        F.min("first_purchase").alias("first_purchase"),
-    )
-
-
 def lag_readout(spark: SparkSession, store_path: str) -> DataFrame:
     """The live time-to-convert readout from the stream-maintained
     ledger — the SAME lag_quantiles_from_firsts close as the batch
@@ -96,25 +59,19 @@ def lag_readout(spark: SparkSession, store_path: str) -> DataFrame:
     delivered events."""
     from open_pulsar_spark.operators.analytics import lag_quantiles_from_firsts
 
-    return lag_quantiles_from_firsts(spark, read_firsts(spark, store_path))
+    return lag_quantiles_from_firsts(spark, LAG.read(spark, store_path))
 
 
-def start_lag_stream(
-    spark: SparkSession,
-    events_stream: DataFrame,
-    store_path: str,
-    checkpoint: str,
-    compact_max_segments: int | None = 64,
-):
-    """events stream → continuously-maintained firsts ledger, on the
-    shared partial-stream scaffold."""
-    return start_partial_stream(
-        events_stream,
-        store_path,
-        checkpoint,
-        partial_of=_lag_partial,
-        schema=_PARTIAL_SCHEMA,
-        dedup_keys=_DEDUP_KEYS,
-        cluster_cols=_CLUSTER_COLS,
-        compact_max_segments=compact_max_segments,
-    )
+LAG = twin(
+    "lag",
+    partial=_lag_partial,
+    schema="user_id LONG, first_view LONG, first_purchase LONG",
+    keys=["user_id"],
+    fold=[
+        "min(first_view) AS first_view",
+        "min(first_purchase) AS first_purchase",
+    ],
+    additive=False,
+    source="events",
+    readouts=[Readout(lag_readout, "conversion_lag_quantiles")],
+)

@@ -5,14 +5,14 @@ readout live (the batch segment_revenue_mann_kendall, kept current).
 Per-(segment, week) cent sums are ADDITIVE, so this store runs the
 fano/risk contract: epoch segments are REQUIRED (an epoch-less
 additive write has no safe sentinel — a replayed backfill would
-double-add); reads dedup (epoch, segment, wk) BEFORE summing so the
+double-add); reads dedup (epoch, segment, week) BEFORE summing so the
 mid-compaction double-read window cannot double-count:
 
   micro-batch of segment-attributed order lines
-    → (segment, epoch-week, cents) per-batch sums (map-side combine)
+    → (segment, week, cents) per-batch sums (map-side combine)
     → one epoch segment
 
-  read: dedup (epoch, segment, wk) → sum per (segment, week) → the
+  read: dedup (epoch, segment, week) → sum per (segment, week) → the
     SAME mann_kendall_from_weekly close as the batch query (pair-sign
     S statistic, exact-integer tie-corrected 5% significance), so the
     live trend call bit-matches a batch scan over the union of all
@@ -33,63 +33,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from open_pulsar_spark.streaming.segments import (
-    read_segments,
-    start_partial_stream,
-    update_partial_store,
-)
-
-_PARTIAL_SCHEMA = "segment STRING, wk LONG, cents LONG, epoch LONG"
-_DEDUP_KEYS = ["epoch", "segment", "wk"]
-_CLUSTER_COLS = ["segment", "wk"]
+from open_pulsar_spark.operators.analytics import attributed_order_cents
+from open_pulsar_spark.streaming.twins import Readout, total, twin
 
 
 def _mk_partial(lines: DataFrame) -> DataFrame:
     """Segment-attributed order lines (segment, week, cents — the
     attributed_order_cents producer's row grain) → per-batch weekly
-    cent sums, the week stored as epoch seconds."""
-    return lines.groupBy(
-        "segment",
-        F.unix_seconds(F.col("week")).cast("bigint").alias("wk"),
-    ).agg(F.sum("cents").cast("bigint").alias("cents"))
-
-
-def update_mk(
-    spark: SparkSession,
-    lines: DataFrame,
-    store_path: str,
-    epoch_id: int | None,
-) -> None:
-    """Fold one batch of attributed order lines into the weekly
-    ledger. ADDITIVE store: the epoch is mandatory — replaying a
-    committed epoch is a no-op by overwrite, but an epoch-less
-    duplicate would double-add."""
-    if epoch_id is None:
-        raise ValueError(
-            "mk_stream is additive: epoch-less backfills would "
-            "double-count on redelivery; pass a unique epoch id"
-        )
-    update_partial_store(lines, store_path, epoch_id, _mk_partial)
-
-
-def read_weekly(spark: SparkSession, store_path: str) -> DataFrame:
-    """The current folded (segment, week, cents) weekly ledger. Dedup
-    on (epoch, segment, wk) FIRST — see module docstring — then
-    week-sum."""
-    raw = read_segments(spark, store_path, _PARTIAL_SCHEMA)
-    if raw is None:
-        return spark.createDataFrame(
-            [], "segment STRING, week TIMESTAMP, cents LONG"
-        )
-    return (
-        raw.dropDuplicates(["epoch", "segment", "wk"])
-        .groupBy("segment", "wk")
-        .agg(F.sum("cents").cast("bigint").alias("cents"))
-        .select(
-            "segment",
-            F.timestamp_seconds(F.col("wk")).alias("week"),
-            "cents",
-        )
+    cent sums."""
+    return lines.groupBy("segment", "week").agg(
+        F.sum("cents").cast("bigint").alias("cents")
     )
 
 
@@ -101,26 +54,17 @@ def mk_readout(spark: SparkSession, store_path: str) -> DataFrame:
     from open_pulsar_spark.operators.analytics import mann_kendall_from_weekly
 
     return mann_kendall_from_weekly(
-        spark, read_weekly(spark, store_path), "mk_stream_weekly"
+        spark, MK.read(spark, store_path), "mk_stream_weekly"
     )
 
 
-def start_mk_stream(
-    spark: SparkSession,
-    lines_stream: DataFrame,
-    store_path: str,
-    checkpoint: str,
-    compact_max_segments: int | None = 64,
-):
-    """attributed order-line stream → continuously-maintained weekly
-    revenue ledger, on the shared partial-stream scaffold."""
-    return start_partial_stream(
-        lines_stream,
-        store_path,
-        checkpoint,
-        partial_of=_mk_partial,
-        schema=_PARTIAL_SCHEMA,
-        dedup_keys=_DEDUP_KEYS,
-        cluster_cols=_CLUSTER_COLS,
-        compact_max_segments=compact_max_segments,
-    )
+MK = twin(
+    "mk",
+    partial=_mk_partial,
+    schema="segment STRING, week TIMESTAMP, cents LONG",
+    keys=["segment", "week"],
+    fold=[total("cents")],
+    additive=True,
+    source=attributed_order_cents,
+    readouts=[Readout(mk_readout, "segment_revenue_mann_kendall")],
+)

@@ -33,15 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from open_pulsar_spark.streaming.segments import (
-    read_segments,
-    start_partial_stream,
-    update_partial_store,
-)
-
-_PARTIAL_SCHEMA = "d LONG, n LONG, e LONG, epoch LONG"
-_DEDUP_KEYS = ["epoch", "d"]
-_CLUSTER_COLS = ["d"]
+from open_pulsar_spark.streaming.twins import Readout, total, twin
 
 
 def _pchart_partial(events: DataFrame) -> DataFrame:
@@ -51,43 +43,10 @@ def _pchart_partial(events: DataFrame) -> DataFrame:
         .cast("bigint")
         .alias("d")
     ).agg(
-        F.count("*").cast("bigint").alias("n"),
+        F.count("*").cast("bigint").alias("n_events"),
         F.sum(F.when(F.col("event_type") == "error", 1).otherwise(0))
         .cast("bigint")
-        .alias("e"),
-    )
-
-
-def update_pchart(
-    spark: SparkSession,
-    events: DataFrame,
-    store_path: str,
-    epoch_id: int | None,
-) -> None:
-    """Fold one batch of events into the day ledger. ADDITIVE store:
-    the epoch is mandatory — replaying a committed epoch is a no-op by
-    overwrite, but an epoch-less duplicate would double-add."""
-    if epoch_id is None:
-        raise ValueError(
-            "pchart_stream is additive: epoch-less backfills would "
-            "double-count on redelivery; pass a unique epoch id"
-        )
-    update_partial_store(events, store_path, epoch_id, _pchart_partial)
-
-
-def read_daily(spark: SparkSession, store_path: str) -> DataFrame:
-    """The current folded (d, n_events, n_errors) day ledger. Dedup on
-    (epoch, d) FIRST — see module docstring — then day-sum."""
-    raw = read_segments(spark, store_path, _PARTIAL_SCHEMA)
-    if raw is None:
-        return spark.createDataFrame([], "d LONG, n_events LONG, n_errors LONG")
-    return (
-        raw.dropDuplicates(["epoch", "d"])
-        .groupBy("d")
-        .agg(
-            F.sum("n").cast("bigint").alias("n_events"),
-            F.sum("e").cast("bigint").alias("n_errors"),
-        )
+        .alias("n_errors"),
     )
 
 
@@ -97,7 +56,7 @@ def pchart_readout(spark: SparkSession, store_path: str) -> DataFrame:
     bit-matched over the union of all delivered events."""
     from open_pulsar_spark.operators.analytics import pchart_from_daily
 
-    daily = read_daily(spark, store_path).select(
+    daily = PCHART.read(spark, store_path).select(
         F.timestamp_seconds(F.col("d") * 86400).alias("day"),
         "n_events",
         "n_errors",
@@ -105,22 +64,13 @@ def pchart_readout(spark: SparkSession, store_path: str) -> DataFrame:
     return pchart_from_daily(spark, daily)
 
 
-def start_pchart_stream(
-    spark: SparkSession,
-    events_stream: DataFrame,
-    store_path: str,
-    checkpoint: str,
-    compact_max_segments: int | None = 64,
-):
-    """events stream → continuously-maintained p-chart ledger, on the
-    shared partial-stream scaffold."""
-    return start_partial_stream(
-        events_stream,
-        store_path,
-        checkpoint,
-        partial_of=_pchart_partial,
-        schema=_PARTIAL_SCHEMA,
-        dedup_keys=_DEDUP_KEYS,
-        cluster_cols=_CLUSTER_COLS,
-        compact_max_segments=compact_max_segments,
-    )
+PCHART = twin(
+    "pchart",
+    partial=_pchart_partial,
+    schema="d LONG, n_events LONG, n_errors LONG",
+    keys=["d"],
+    fold=[total("n_events"), total("n_errors")],
+    additive=True,
+    source="events",
+    readouts=[Readout(pchart_readout, "error_rate_pchart")],
+)

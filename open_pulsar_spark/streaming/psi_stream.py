@@ -29,15 +29,7 @@ from open_pulsar_spark.operators.profiling import (
     psi_from_cells,
     value_log_bin,
 )
-from open_pulsar_spark.streaming.segments import (
-    read_segments,
-    start_partial_stream,
-    update_partial_store,
-)
-
-_PARTIAL_SCHEMA = "bin BIGINT, cnt LONG, epoch LONG"
-_DEDUP_KEYS = ["epoch", "bin"]
-_CLUSTER_COLS = ["bin"]
+from open_pulsar_spark.streaming.twins import total, twin
 
 
 def _bin_counts(events: DataFrame) -> DataFrame:
@@ -63,34 +55,6 @@ def read_baseline(spark: SparkSession, baseline_path: str) -> DataFrame:
     return spark.read.schema("bin BIGINT, cnt LONG").parquet(baseline_path)
 
 
-def update_psi(
-    spark: SparkSession,
-    events: DataFrame,
-    store_path: str,
-    epoch_id: int | None,
-) -> None:
-    """Fold one batch of events into the live bin ledger. Additive
-    contract: epoch is REQUIRED."""
-    if epoch_id is None:
-        raise ValueError(
-            "psi_stream partials are additive: epoch-less backfills "
-            "would double-add on rerun; supply an epoch id"
-        )
-    update_partial_store(events, store_path, epoch_id, _bin_counts)
-
-
-def read_live_bins(spark: SparkSession, store_path: str) -> DataFrame:
-    """The folded live (bin, cnt): dedup (epoch, bin), then sum."""
-    raw = read_segments(spark, store_path, _PARTIAL_SCHEMA)
-    if raw is None:
-        return spark.createDataFrame([], "bin BIGINT, cnt LONG")
-    return (
-        raw.dropDuplicates(["epoch", "bin"])
-        .groupBy("bin")
-        .agg(F.sum("cnt").cast("bigint").alias("cnt"))
-    )
-
-
 def psi_readout(
     spark: SparkSession, baseline_path: str, store_path: str
 ) -> DataFrame:
@@ -101,7 +65,7 @@ def psi_readout(
     base = read_baseline(spark, baseline_path).select(
         "bin", F.col("cnt").alias("n_base")
     )
-    live = read_live_bins(spark, store_path).select(
+    live = PSI.read(spark, store_path).select(
         "bin", F.col("cnt").alias("n_cur")
     )
     cell = base.join(live, "bin", "full").select(
@@ -112,22 +76,14 @@ def psi_readout(
     return psi_from_cells(spark, cell)
 
 
-def start_psi_stream(
-    spark: SparkSession,
-    events_stream: DataFrame,
-    store_path: str,
-    checkpoint: str,
-    compact_max_segments: int | None = 64,
-):
-    """events stream → continuously-maintained live bin ledger, on the
-    shared partial-stream scaffold."""
-    return start_partial_stream(
-        events_stream,
-        store_path,
-        checkpoint,
-        partial_of=_bin_counts,
-        schema=_PARTIAL_SCHEMA,
-        dedup_keys=_DEDUP_KEYS,
-        cluster_cols=_CLUSTER_COLS,
-        compact_max_segments=compact_max_segments,
-    )
+# the live (bin, cnt) ledger; psi_readout needs a baseline path too, so
+# it is not a registered readout (tools/verify_twins.py runs it apart)
+PSI = twin(
+    "psi",
+    partial=_bin_counts,
+    schema="bin BIGINT, cnt LONG",
+    keys=["bin"],
+    fold=[total("cnt")],
+    additive=True,
+    source="events",
+)

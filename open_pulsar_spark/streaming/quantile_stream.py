@@ -31,53 +31,19 @@ into the streaming layer.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from open_pulsar_spark.operators.sketch import (
     SAMPLE_K,
     quantile_est_from_sample,
     quantile_sample,
 )
-from open_pulsar_spark.streaming.segments import (
-    read_segments,
-    start_partial_stream,
-    update_partial_store,
-)
-
-_PARTIAL_SCHEMA = "value DOUBLE, event_id LONG, hk STRING, epoch LONG"
-# rows are self-identifying (hk is a function of event_id, value rides
-# along) — full-row dedup keys, like the itemsets store
-_DEDUP_KEYS = ["epoch", "value", "event_id", "hk"]
-_CLUSTER_COLS = ["hk"]
+from open_pulsar_spark.streaming.twins import Readout, twin
 
 
-def _quantile_partial(events: DataFrame) -> DataFrame:
-    """events → the batch's bottom-{SAMPLE_K} sample rows (shared
-    helper, so stream and batch cannot sample differently)."""
-    return quantile_sample(events)
-
-
-def update_quantile(
-    spark: SparkSession,
-    events: DataFrame,
-    store_path: str,
-    epoch_id: int | None,
-) -> None:
-    """Fold one batch of events into the sample store. Idempotent per
-    epoch via the shared overwrite contract and duplicate-tolerant in
-    value (module docstring), so epoch-less backfills are safe."""
-    update_partial_store(events, store_path, epoch_id, _quantile_partial)
-
-
-def read_sample(spark: SparkSession, store_path: str) -> DataFrame:
-    """The current merged bottom-{SAMPLE_K} sample: distinct union of
-    every segment's rows, then the take — exactly the batch sample of
-    the union of all delivered rows."""
-    raw = read_segments(spark, store_path, _PARTIAL_SCHEMA)
-    if raw is None:
-        return spark.createDataFrame(
-            [], "value DOUBLE, event_id LONG, hk STRING"
-        )
+def _merged_sample(raw: DataFrame) -> DataFrame:
+    """The bottom-{SAMPLE_K} sample of the distinct union of every
+    segment's rows — exactly the batch sample of the union of all
+    delivered rows."""
     return (
         raw.select("value", "event_id", "hk")
         .dropDuplicates(["event_id"])
@@ -89,25 +55,25 @@ def read_sample(spark: SparkSession, store_path: str) -> DataFrame:
 def quantile_readout(spark: SparkSession, store_path: str) -> DataFrame:
     """(p, est) from the stream-maintained sample — the same
     nearest-rank picks as the batch query's estimate half."""
-    return quantile_est_from_sample(read_sample(spark, store_path)).orderBy("p")
+    return quantile_est_from_sample(QUANTILE.read(spark, store_path)).orderBy("p")
 
 
-def start_quantile_stream(
-    spark: SparkSession,
-    events_stream: DataFrame,
-    store_path: str,
-    checkpoint: str,
-    compact_max_segments: int | None = 64,
-):
-    """events stream → continuously-maintained sample store, on the
-    shared partial-stream scaffold."""
-    return start_partial_stream(
-        events_stream,
-        store_path,
-        checkpoint,
-        partial_of=_quantile_partial,
-        schema=_PARTIAL_SCHEMA,
-        dedup_keys=_DEDUP_KEYS,
-        cluster_cols=_CLUSTER_COLS,
-        compact_max_segments=compact_max_segments,
-    )
+# events → the batch's bottom-{SAMPLE_K} sample rows (the shared
+# quantile_sample helper, so stream and batch cannot sample differently)
+QUANTILE = twin(
+    "quantile",
+    partial=quantile_sample,
+    schema="value DOUBLE, event_id LONG, hk STRING",
+    keys=["event_id"],
+    fold=_merged_sample,
+    additive=False,
+    source="events",
+    readouts=[
+        Readout(
+            quantile_readout,
+            "value_quantile_sketch",
+            lambda df: df.select("p", "est").orderBy("p"),
+        )
+    ],
+    cluster=["hk"],
+)

@@ -10,18 +10,10 @@ action='compact' and restarts the count at that message's own tokens
 (the reference seeds the fresh session with the summary + current
 task — its token cost restarts the meter the same way).
 
-Implementation note: the current-generation API for this is
-`transformWithStateInPandas` (typed named state, per-state TTL,
-timers; requires the RocksDB state store provider — now the session
-default). Its Python worker imports google.protobuf, which this
-container does not ship, so `token_quota` keeps the
-`applyInPandasWithState` implementation — same state semantics, one
-tuple of state per key, processing-time timeout standing in for state
-TTL. The TWS port is DONE below (`TokenQuotaProcessor` /
-`token_quota_tws`, one ValueState[long] with ttlDurationMs) and
-`token_quota_auto` selects it whenever the runtime actually has the
-protobuf dependency (`has_tws()`), so deployments on a full Spark 4
-install run the supported API with zero code change.
+Implementation note: `token_quota` runs on `applyInPandasWithState`
+(one tuple of state per key, a processing-time timeout standing in for
+state TTL); its docstring gives the upgrade path to
+`transformWithStateInPandas`.
 
 State per key is one LONG: at 100 TB of traffic the state store holds
 |active chats| values, and idle chats are evicted by the timeout.
@@ -101,6 +93,15 @@ def token_quota(messages: DataFrame, ttl_ms: int | None = None) -> DataFrame:
     ProcessingTimeTimeout query busy-loops no-data batches and
     processAllAvailable() never returns (see sessions.py's deployment
     note — same engine behavior).
+
+    Upgrade path: Spark 4's supported API for this ledger is
+    `transformWithStateInPandas` — a StatefulProcessor holding one
+    named ValueState[long] ("used LONG") per chat, with the idle
+    eviction moved to that state's own `ttlDurationMs` instead of the
+    timeout here, and the same metering loop in `handleInputRows`. Its
+    Python worker imports google.protobuf (the state-server wire
+    format), so port it once the runtime ships protobuf; the output
+    contract (OUTPUT_SCHEMA) does not change.
     """
     timeout = (
         GroupStateTimeout.ProcessingTimeTimeout
@@ -115,85 +116,3 @@ def token_quota(messages: DataFrame, ttl_ms: int | None = None) -> DataFrame:
         timeoutConf=timeout,
     )
 
-
-def has_tws() -> bool:
-    """True when transformWithStateInPandas can actually execute: its
-    Python worker needs google.protobuf (the state-server wire format),
-    which not every install ships."""
-    try:
-        import pyspark.sql.streaming.proto.StateMessage_pb2  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def _make_tws_processor(ttl_ms: int | None):
-    """TokenQuotaProcessor, built lazily so importing this module never
-    touches the TWS API surface on protobuf-less installs."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class TokenQuotaProcessor(StatefulProcessor):
-        """transformWithStateInPandas form of the quota ledger: one
-        named ValueState[long] per chat; idle-chat eviction is the
-        state's OWN TTL (ttlDurationMs) instead of the hand-rolled
-        processing-time timeout the applyInPandasWithState path needs.
-        Metering logic is byte-identical to _make_quota_fn."""
-
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._used = handle.getValueState(
-                "used", "used LONG", ttlDurationMs=ttl_ms
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            (chat_id,) = key
-            used = self._used.get()[0] if self._used.exists() else 0
-            chunks = list(rows)
-            batch = (
-                pd.concat(chunks, ignore_index=True)
-                if chunks
-                else pd.DataFrame(columns=["update_id", "tokens"])
-            )
-            out: list[tuple] = []
-            for r in batch.sort_values("update_id").itertuples():
-                used += int(r.tokens)
-                pct = used * 100.0 / CONTEXT_WINDOW
-                if pct >= COMPACT_PCT:
-                    out.append(
-                        (chat_id, int(r.update_id), int(r.tokens), used, pct, "compact")
-                    )
-                    used = int(r.tokens)
-                else:
-                    out.append(
-                        (chat_id, int(r.update_id), int(r.tokens), used, pct, "ok")
-                    )
-            self._used.update((used,))
-            yield pd.DataFrame(out, columns=_OUT_COLS)
-
-        def close(self) -> None:
-            pass
-
-    return TokenQuotaProcessor()
-
-
-def token_quota_tws(messages: DataFrame, ttl_ms: int | None = None) -> DataFrame:
-    """token_quota on the supported Spark-4 stateful API. Requires
-    has_tws(); same output contract as token_quota."""
-    return messages.groupBy("chat_id").transformWithStateInPandas(
-        _make_tws_processor(ttl_ms),
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="append",
-        timeMode="ProcessingTime" if ttl_ms is not None else "None",
-    )
-
-
-def token_quota_auto(messages: DataFrame, ttl_ms: int | None = None) -> DataFrame:
-    """The deployment entry point: the supported TWS implementation
-    when the runtime can execute it, else the applyInPandasWithState
-    fallback. Both carry identical metering semantics."""
-    if has_tws():
-        return token_quota_tws(messages, ttl_ms)
-    return token_quota(messages, ttl_ms)

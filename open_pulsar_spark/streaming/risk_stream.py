@@ -35,15 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from open_pulsar_spark.streaming.segments import (
-    read_segments,
-    start_partial_stream,
-    update_partial_store,
-)
-
-_PARTIAL_SCHEMA = "cents LONG, w LONG, epoch LONG"
-_DEDUP_KEYS = ["epoch", "cents"]
-_CLUSTER_COLS = ["cents"]
+from open_pulsar_spark.streaming.twins import Readout, total, twin
 
 
 def _risk_partial(events: DataFrame) -> DataFrame:
@@ -59,36 +51,6 @@ def _risk_partial(events: DataFrame) -> DataFrame:
     )
 
 
-def update_risk(
-    spark: SparkSession,
-    events: DataFrame,
-    store_path: str,
-    epoch_id: int | None,
-) -> None:
-    """Fold one batch of events into the cents ledger. ADDITIVE store:
-    the epoch is mandatory — replaying a committed epoch is a no-op by
-    overwrite, but an epoch-less duplicate would double-add."""
-    if epoch_id is None:
-        raise ValueError(
-            "risk_stream is additive: epoch-less backfills would "
-            "double-count on redelivery; pass a unique epoch id"
-        )
-    update_partial_store(events, store_path, epoch_id, _risk_partial)
-
-
-def read_hist(spark: SparkSession, store_path: str) -> DataFrame:
-    """The current folded (cents, w) histogram. Dedup on (epoch, cents)
-    FIRST — see module docstring — then bucket-sum."""
-    raw = read_segments(spark, store_path, _PARTIAL_SCHEMA)
-    if raw is None:
-        return spark.createDataFrame([], "cents LONG, w LONG")
-    return (
-        raw.dropDuplicates(["epoch", "cents"])
-        .groupBy("cents")
-        .agg(F.sum("w").cast("bigint").alias("w"))
-    )
-
-
 def risk_readout(spark: SparkSession, store_path: str) -> DataFrame:
     """The live VaR95/CVaR95 readout from the stream-maintained ledger
     — the SAME tail_risk_from_cents_hist close as the batch
@@ -96,25 +58,16 @@ def risk_readout(spark: SparkSession, store_path: str) -> DataFrame:
     delivered events."""
     from open_pulsar_spark.operators.analytics import tail_risk_from_cents_hist
 
-    return tail_risk_from_cents_hist(spark, read_hist(spark, store_path))
+    return tail_risk_from_cents_hist(spark, RISK.read(spark, store_path))
 
 
-def start_risk_stream(
-    spark: SparkSession,
-    events_stream: DataFrame,
-    store_path: str,
-    checkpoint: str,
-    compact_max_segments: int | None = 64,
-):
-    """events stream → continuously-maintained purchase-cents ledger,
-    on the shared partial-stream scaffold."""
-    return start_partial_stream(
-        events_stream,
-        store_path,
-        checkpoint,
-        partial_of=_risk_partial,
-        schema=_PARTIAL_SCHEMA,
-        dedup_keys=_DEDUP_KEYS,
-        cluster_cols=_CLUSTER_COLS,
-        compact_max_segments=compact_max_segments,
-    )
+RISK = twin(
+    "risk",
+    partial=_risk_partial,
+    schema="cents LONG, w LONG",
+    keys=["cents"],
+    fold=[total("w")],
+    additive=True,
+    source="events",
+    readouts=[Readout(risk_readout, "purchase_value_tail_risk")],
+)

@@ -39,17 +39,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from open_pulsar_spark.streaming.segments import (
-    read_segments,
-    start_partial_stream,
-    update_partial_store,
-)
+from open_pulsar_spark.streaming.twins import Readout, twin
 
 SCD2_CUSTKEY_BOUND = 50  # the batch query's dimension bound
-
-_PARTIAL_SCHEMA = "o_custkey LONG, o_orderkey LONG, o_orderdate TIMESTAMP, epoch LONG"
-_DEDUP_KEYS = ["epoch", "o_custkey", "o_orderkey", "o_orderdate"]
-_CLUSTER_COLS = ["o_custkey"]
 
 
 def _scd2_partial(orders: DataFrame) -> DataFrame:
@@ -62,54 +54,23 @@ def _scd2_partial(orders: DataFrame) -> DataFrame:
     )
 
 
-def update_scd2(
-    spark: SparkSession,
-    orders: DataFrame,
-    store_path: str,
-    epoch_id: int | None,
-) -> None:
-    """Fold one batch of change rows into the log. Idempotent per
-    epoch via the shared overwrite contract, duplicate-tolerant in
-    value (reads dedup), so epoch-less backfills are safe."""
-    update_partial_store(orders, store_path, epoch_id, _scd2_partial)
-
-
-def read_changes(spark: SparkSession, store_path: str) -> DataFrame:
-    """The current folded change log (o_custkey, o_orderkey,
-    o_orderdate), distinct across segments."""
-    raw = read_segments(spark, store_path, _PARTIAL_SCHEMA)
-    if raw is None:
-        return spark.createDataFrame(
-            [], "o_custkey LONG, o_orderkey LONG, o_orderdate TIMESTAMP"
-        )
-    return raw.select("o_custkey", "o_orderkey", "o_orderdate").distinct()
-
-
 def scd2_readout(spark: SparkSession, store_path: str) -> DataFrame:
     """The current SCD2 history — the batch query's interval assembly
     (scd2_intervals) over the folded change log; bit-matches
     order_history_scd2 over the union of all delivered rows."""
     from open_pulsar_spark.operators.analytics import scd2_intervals
 
-    return scd2_intervals(read_changes(spark, store_path))
+    return scd2_intervals(SCD2.read(spark, store_path))
 
 
-def start_scd2_stream(
-    spark: SparkSession,
-    orders_stream: DataFrame,
-    store_path: str,
-    checkpoint: str,
-    compact_max_segments: int | None = 64,
-):
-    """order-change stream → continuously-maintained change log, on
-    the shared partial-stream scaffold."""
-    return start_partial_stream(
-        orders_stream,
-        store_path,
-        checkpoint,
-        partial_of=_scd2_partial,
-        schema=_PARTIAL_SCHEMA,
-        dedup_keys=_DEDUP_KEYS,
-        cluster_cols=_CLUSTER_COLS,
-        compact_max_segments=compact_max_segments,
-    )
+SCD2 = twin(
+    "scd2",
+    partial=_scd2_partial,
+    schema="o_custkey LONG, o_orderkey LONG, o_orderdate TIMESTAMP",
+    keys=["o_custkey", "o_orderkey", "o_orderdate"],
+    fold=[],
+    additive=False,
+    source="orders",
+    readouts=[Readout(scd2_readout, "order_history_scd2")],
+    cluster=["o_custkey"],
+)

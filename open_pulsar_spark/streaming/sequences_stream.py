@@ -33,34 +33,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from open_pulsar_spark.streaming.segments import (
-    read_segments,
-    start_partial_stream,
-    update_partial_store,
-)
-
-_PARTIAL_SCHEMA = (
-    "user_id LONG, event_type STRING, "
-    "f_ts TIMESTAMP, f_id LONG, l_ts TIMESTAMP, l_id LONG, epoch LONG"
-)
-# extrema are values, not identities: two backfill segments can hold
-# DIFFERENT extrema for the same key, and both must survive compaction
-# for the min/max re-fold to see them (the hll-register rule)
-_DEDUP_KEYS = ["epoch", "user_id", "event_type", "f_ts", "f_id", "l_ts", "l_id"]
-_CLUSTER_COLS = ["event_type"]
+from open_pulsar_spark.streaming.twins import Readout, twin
 
 
-def _seq_partial(events: DataFrame) -> DataFrame:
-    """events → per-batch (user, type) occurrence extrema under the
-    total (ts, event_id) order — the exact quantities the batch
-    query's first/last windows compute."""
+def _extrema(rows: DataFrame, first: F.Column, last: F.Column) -> DataFrame:
+    """Per-(user, type) min `first` / max `last` (ts, event_id)
+    structs, stored flat."""
     return (
-        events.select("user_id", "event_type", "ts", "event_id")
-        .groupBy("user_id", "event_type")
-        .agg(
-            F.min(F.struct("ts", "event_id")).alias("f"),
-            F.max(F.struct("ts", "event_id")).alias("l"),
-        )
+        rows.groupBy("user_id", "event_type")
+        .agg(F.min(first).alias("f"), F.max(last).alias("l"))
         .select(
             "user_id",
             "event_type",
@@ -72,40 +53,20 @@ def _seq_partial(events: DataFrame) -> DataFrame:
     )
 
 
-def update_sequences(
-    spark: SparkSession,
-    events: DataFrame,
-    store_path: str,
-    epoch_id: int | None,
-) -> None:
-    """Fold one batch into the extremum store. Idempotent per epoch
-    via the shared overwrite contract, and idempotent in VALUE
-    regardless (min/max merge) — epoch-less backfills cannot move an
-    extremum wrongly."""
-    update_partial_store(events, store_path, epoch_id, _seq_partial)
+def _seq_partial(events: DataFrame) -> DataFrame:
+    """events → per-batch (user, type) occurrence extrema under the
+    total (ts, event_id) order — the exact quantities the batch
+    query's first/last windows compute."""
+    occ = F.struct("ts", "event_id")
+    return _extrema(events, occ, occ)
 
 
-def read_extrema(spark: SparkSession, store_path: str) -> DataFrame:
-    """The current merged per-(user, type) extrema."""
-    raw = read_segments(spark, store_path, _PARTIAL_SCHEMA)
-    if raw is None:
-        return spark.createDataFrame(
-            [], _PARTIAL_SCHEMA.replace(", epoch LONG", "")
-        )
-    return (
-        raw.groupBy("user_id", "event_type")
-        .agg(
-            F.min(F.struct(F.col("f_ts").alias("ts"), F.col("f_id").alias("event_id"))).alias("f"),
-            F.max(F.struct(F.col("l_ts").alias("ts"), F.col("l_id").alias("event_id"))).alias("l"),
-        )
-        .select(
-            "user_id",
-            "event_type",
-            F.col("f.ts").alias("f_ts"),
-            F.col("f.event_id").alias("f_id"),
-            F.col("l.ts").alias("l_ts"),
-            F.col("l.event_id").alias("l_id"),
-        )
+def _refold(raw: DataFrame) -> DataFrame:
+    """min/max re-fold of the stored extrema across segments."""
+    return _extrema(
+        raw,
+        F.struct(F.col("f_ts").alias("ts"), F.col("f_id").alias("event_id")),
+        F.struct(F.col("l_ts").alias("ts"), F.col("l_id").alias("event_id")),
     )
 
 
@@ -114,7 +75,7 @@ def sequence_readout(spark: SparkSession, store_path: str) -> DataFrame:
     the batch query's first-before-last join over the folded extrema,
     so the numbers agree bit-for-bit with event_type_sequences over
     the union of all delivered rows."""
-    occ = read_extrema(spark, store_path)
+    occ = SEQUENCES.read(spark, store_path)
     nu = occ.select("user_id").distinct().count()
     fst = occ.select(
         "user_id",
@@ -144,22 +105,20 @@ def sequence_readout(spark: SparkSession, store_path: str) -> DataFrame:
     ).orderBy(F.desc("support"), "seq")
 
 
-def start_sequences_stream(
-    spark: SparkSession,
-    events_stream: DataFrame,
-    store_path: str,
-    checkpoint: str,
-    compact_max_segments: int | None = 64,
-):
-    """events stream → continuously-maintained extremum store, on the
-    shared partial-stream scaffold."""
-    return start_partial_stream(
-        events_stream,
-        store_path,
-        checkpoint,
-        partial_of=_seq_partial,
-        schema=_PARTIAL_SCHEMA,
-        dedup_keys=_DEDUP_KEYS,
-        cluster_cols=_CLUSTER_COLS,
-        compact_max_segments=compact_max_segments,
-    )
+# extrema are values, not identities: compaction keeps every distinct
+# row, so two backfill segments' different extrema for one key both
+# survive for the re-fold (the hll-register rule)
+SEQUENCES = twin(
+    "sequences",
+    partial=_seq_partial,
+    schema=(
+        "user_id LONG, event_type STRING, "
+        "f_ts TIMESTAMP, f_id LONG, l_ts TIMESTAMP, l_id LONG"
+    ),
+    keys=["user_id", "event_type"],
+    fold=_refold,
+    additive=False,
+    source="events",
+    readouts=[Readout(sequence_readout, "event_type_sequences")],
+    cluster=["event_type"],
+)

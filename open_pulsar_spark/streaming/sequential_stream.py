@@ -29,17 +29,7 @@ from open_pulsar_spark.operators.analytics import (
     sequential_daily_counts,
     sequential_from_daily,
 )
-from open_pulsar_spark.streaming.segments import (
-    read_segments,
-    start_partial_stream,
-    update_partial_store,
-)
-
-_PARTIAL_SCHEMA = (
-    "day DATE, d_na LONG, d_nb LONG, d_ca LONG, d_cb LONG, epoch LONG"
-)
-_DEDUP_KEYS = ["epoch", "day"]
-_CLUSTER_COLS = ["day"]
+from open_pulsar_spark.streaming.twins import Readout, total, twin
 
 
 def _seq_stream_partial(events: DataFrame) -> DataFrame:
@@ -58,65 +48,21 @@ def _seq_stream_partial(events: DataFrame) -> DataFrame:
     return sequential_daily_counts(tagged)
 
 
-def update_experiment(
-    spark: SparkSession,
-    events: DataFrame,
-    store_path: str,
-    epoch_id: int | None,
-) -> None:
-    """Fold one batch of events into the experiment ledger. Additive
-    contract: epoch is REQUIRED."""
-    if epoch_id is None:
-        raise ValueError(
-            "sequential_stream partials are additive: epoch-less "
-            "backfills would double-add on rerun; supply an epoch id"
-        )
-    update_partial_store(events, store_path, epoch_id, _seq_stream_partial)
-
-
-def read_daily_counts(spark: SparkSession, store_path: str) -> DataFrame:
-    """The folded daily variant counts: dedup (epoch, day), then sum."""
-    raw = read_segments(spark, store_path, _PARTIAL_SCHEMA)
-    if raw is None:
-        return spark.createDataFrame(
-            [], "day DATE, d_na LONG, d_nb LONG, d_ca LONG, d_cb LONG"
-        )
-    return (
-        raw.dropDuplicates(["epoch", "day"])
-        .groupBy("day")
-        .agg(
-            F.sum("d_na").cast("bigint").alias("d_na"),
-            F.sum("d_nb").cast("bigint").alias("d_nb"),
-            F.sum("d_ca").cast("bigint").alias("d_ca"),
-            F.sum("d_cb").cast("bigint").alias("d_cb"),
-        )
-    )
-
-
 def monitor_readout(spark: SparkSession, store_path: str) -> DataFrame:
     """The anytime-valid monitor table from the stream-maintained
     ledger — the same sequential_from_daily as the batch query, so
     the peeking-safe boundary and significance flags agree bit-for-bit
     with a batch run over the union of all delivered rows."""
-    return sequential_from_daily(spark, read_daily_counts(spark, store_path))
+    return sequential_from_daily(spark, SEQUENTIAL.read(spark, store_path))
 
 
-def start_experiment_stream(
-    spark: SparkSession,
-    events_stream: DataFrame,
-    store_path: str,
-    checkpoint: str,
-    compact_max_segments: int | None = 64,
-):
-    """events stream → continuously-maintained experiment ledger, on
-    the shared partial-stream scaffold."""
-    return start_partial_stream(
-        events_stream,
-        store_path,
-        checkpoint,
-        partial_of=_seq_stream_partial,
-        schema=_PARTIAL_SCHEMA,
-        dedup_keys=_DEDUP_KEYS,
-        cluster_cols=_CLUSTER_COLS,
-        compact_max_segments=compact_max_segments,
-    )
+SEQUENTIAL = twin(
+    "sequential",
+    partial=_seq_stream_partial,
+    schema="day DATE, d_na LONG, d_nb LONG, d_ca LONG, d_cb LONG",
+    keys=["day"],
+    fold=[total(c) for c in ("d_na", "d_nb", "d_ca", "d_cb")],
+    additive=True,
+    source="events",
+    readouts=[Readout(monitor_readout, "ab_test_sequential")],
+)

@@ -92,19 +92,6 @@ def idempotent_epoch_sink(path: str):
     return write
 
 
-def write_audit_stream(state: DataFrame, path: str, checkpoint: str):
-    """Streaming form: date-partitioned append sink with checkpoint."""
-    return (
-        audit_lines(state)
-        .writeStream.outputMode("append")
-        .partitionBy("log_date")
-        .option("checkpointLocation", checkpoint)
-        .format("parquet")
-        .option("path", path)
-        .start()
-    )
-
-
 def write_training_shards(docs: DataFrame, path: str, budget: int | None = None) -> None:
     """Materialize a document set as token-budget training shards:
     parquet partitioned by (lang, shard_id), one directory per shard,

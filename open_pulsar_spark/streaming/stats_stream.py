@@ -35,15 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from open_pulsar_spark.streaming.segments import (
-    read_segments,
-    start_partial_stream,
-    update_partial_store,
-)
-
-_PARTIAL_SCHEMA = "user_id LONG, n LONG, epoch LONG"
-_DEDUP_KEYS = ["epoch", "user_id"]
-_CLUSTER_COLS = ["user_id"]
+from open_pulsar_spark.streaming.twins import Readout, total, twin
 
 
 def _stats_partial(events: DataFrame) -> DataFrame:
@@ -53,65 +45,13 @@ def _stats_partial(events: DataFrame) -> DataFrame:
     )
 
 
-def update_stats(
-    spark: SparkSession,
-    events: DataFrame,
-    store_path: str,
-    epoch_id: int | None,
-) -> None:
-    """Fold one batch of events into the count ledger. ADDITIVE store:
-    the epoch is mandatory (no -1 sentinel) — replaying a committed
-    epoch is a no-op by overwrite, but an epoch-less duplicate would
-    double-add."""
-    if epoch_id is None:
-        raise ValueError(
-            "stats_stream is additive: epoch-less backfills would "
-            "double-count on redelivery; pass a unique epoch id"
-        )
-    update_partial_store(events, store_path, epoch_id, _stats_partial)
-
-
-def read_counts(spark: SparkSession, store_path: str) -> DataFrame:
-    """The current folded (user_id, n) statistics. Dedup on
-    (epoch, user_id) FIRST — see module docstring — then key-sum."""
-    raw = read_segments(spark, store_path, _PARTIAL_SCHEMA)
-    if raw is None:
-        return spark.createDataFrame([], "user_id LONG, n LONG")
-    return (
-        raw.dropDuplicates(["epoch", "user_id"])
-        .groupBy("user_id")
-        .agg(F.sum("n").cast("bigint").alias("n"))
-    )
-
-
 def stats_readout(spark: SparkSession, store_path: str) -> DataFrame:
     """The graded join-size estimator table from the stream-maintained
     ledger — the SAME join_size_report as the batch query, bit-matched
     over the union of all delivered rows."""
     from open_pulsar_spark.operators.profiling import join_size_report
 
-    return join_size_report(spark, read_counts(spark, store_path))
-
-
-def start_stats_stream(
-    spark: SparkSession,
-    events_stream: DataFrame,
-    store_path: str,
-    checkpoint: str,
-    compact_max_segments: int | None = 64,
-):
-    """events stream → continuously-maintained count ledger, on the
-    shared partial-stream scaffold."""
-    return start_partial_stream(
-        events_stream,
-        store_path,
-        checkpoint,
-        partial_of=_stats_partial,
-        schema=_PARTIAL_SCHEMA,
-        dedup_keys=_DEDUP_KEYS,
-        cluster_cols=_CLUSTER_COLS,
-        compact_max_segments=compact_max_segments,
-    )
+    return join_size_report(spark, STATS.read(spark, store_path))
 
 
 def partition_plan_readout(spark: SparkSession, store_path: str) -> DataFrame:
@@ -126,7 +66,22 @@ def partition_plan_readout(spark: SparkSession, store_path: str) -> DataFrame:
 
     return partition_plan_from_counts(
         spark,
-        read_counts(spark, store_path).select(
+        STATS.read(spark, store_path).select(
             "user_id", F.col("n").alias("cnt")
         ),
     )
+
+
+STATS = twin(
+    "stats",
+    partial=_stats_partial,
+    schema="user_id LONG, n LONG",
+    keys=["user_id"],
+    fold=[total("n")],
+    additive=True,
+    source="events",
+    readouts=[
+        Readout(stats_readout, "join_size_estimate"),
+        Readout(partition_plan_readout, "events_partition_plan"),
+    ],
+)

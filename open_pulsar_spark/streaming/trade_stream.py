@@ -37,63 +37,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from open_pulsar_spark.streaming.segments import (
-    read_segments,
-    start_partial_stream,
-    update_partial_store,
-)
-
-_PARTIAL_SCHEMA = (
-    "cust_nation STRING, supp_nation STRING, n LONG, cents LONG,"
-    " epoch LONG"
-)
-_DEDUP_KEYS = ["epoch", "cust_nation", "supp_nation"]
-_CLUSTER_COLS = ["cust_nation", "supp_nation"]
+from open_pulsar_spark.operators.analytics import attributed_trade_lines
+from open_pulsar_spark.streaming.twins import Readout, total, twin
 
 
 def _trade_partial(lines: DataFrame) -> DataFrame:
-    """attributed lines → per-batch (pair, n, cents) sums."""
+    """attributed lines → per-batch (pair, n_lines, revenue_cents)
+    sums."""
     return lines.groupBy("cust_nation", "supp_nation").agg(
-        F.count("*").cast("bigint").alias("n"),
-        F.sum("cents").cast("bigint").alias("cents"),
-    )
-
-
-def update_trade(
-    spark: SparkSession,
-    lines: DataFrame,
-    store_path: str,
-    epoch_id: int | None,
-) -> None:
-    """Fold one batch of attributed lines into the flow ledger.
-    ADDITIVE store: the epoch is mandatory — replaying a committed
-    epoch is a no-op by overwrite, but an epoch-less duplicate would
-    double-add."""
-    if epoch_id is None:
-        raise ValueError(
-            "trade_stream is additive: epoch-less backfills would "
-            "double-count on redelivery; pass a unique epoch id"
-        )
-    update_partial_store(lines, store_path, epoch_id, _trade_partial)
-
-
-def read_flows(spark: SparkSession, store_path: str) -> DataFrame:
-    """The current folded (pair, n_lines, revenue_cents) ledger. Dedup
-    on (epoch, pair) FIRST — see module docstring — then pair-sum."""
-    raw = read_segments(spark, store_path, _PARTIAL_SCHEMA)
-    if raw is None:
-        return spark.createDataFrame(
-            [],
-            "cust_nation STRING, supp_nation STRING, n_lines LONG,"
-            " revenue_cents LONG",
-        )
-    return (
-        raw.dropDuplicates(["epoch", "cust_nation", "supp_nation"])
-        .groupBy("cust_nation", "supp_nation")
-        .agg(
-            F.sum("n").cast("bigint").alias("n_lines"),
-            F.sum("cents").cast("bigint").alias("revenue_cents"),
-        )
+        F.count("*").cast("bigint").alias("n_lines"),
+        F.sum("cents").cast("bigint").alias("revenue_cents"),
     )
 
 
@@ -106,25 +59,19 @@ def trade_readout(spark: SparkSession, store_path: str) -> DataFrame:
         trade_matrix_from_flows,
     )
 
-    return trade_matrix_from_flows(spark, read_flows(spark, store_path))
+    return trade_matrix_from_flows(spark, TRADE.read(spark, store_path))
 
 
-def start_trade_stream(
-    spark: SparkSession,
-    lines_stream: DataFrame,
-    store_path: str,
-    checkpoint: str,
-    compact_max_segments: int | None = 64,
-):
-    """attributed-line stream → continuously-maintained flow ledger,
-    on the shared partial-stream scaffold."""
-    return start_partial_stream(
-        lines_stream,
-        store_path,
-        checkpoint,
-        partial_of=_trade_partial,
-        schema=_PARTIAL_SCHEMA,
-        dedup_keys=_DEDUP_KEYS,
-        cluster_cols=_CLUSTER_COLS,
-        compact_max_segments=compact_max_segments,
-    )
+TRADE = twin(
+    "trade",
+    partial=_trade_partial,
+    schema=(
+        "cust_nation STRING, supp_nation STRING, n_lines LONG,"
+        " revenue_cents LONG"
+    ),
+    keys=["cust_nation", "supp_nation"],
+    fold=[total("n_lines"), total("revenue_cents")],
+    additive=True,
+    source=attributed_trade_lines,
+    readouts=[Readout(trade_readout, "nation_trade_matrix")],
+)

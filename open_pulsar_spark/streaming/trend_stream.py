@@ -7,14 +7,14 @@ pattern).
 Per-(segment, month) cent sums are ADDITIVE, so this store runs the
 fano/risk/mk contract: epoch segments are REQUIRED (an epoch-less
 additive write has no safe sentinel — a replayed backfill would
-double-add); reads dedup (epoch, segment, mo) BEFORE summing so the
+double-add); reads dedup (epoch, segment, month) BEFORE summing so the
 mid-compaction double-read window cannot double-count:
 
   micro-batch of segment-attributed order lines
-    → (segment, epoch-month, cents) per-batch sums (map-side combine)
+    → (segment, month, cents) per-batch sums (map-side combine)
     → one epoch segment
 
-  read: dedup (epoch, segment, mo) → sum per (segment, month) → the
+  read: dedup (epoch, segment, month) → sum per (segment, month) → the
     SAME xy_from_monthly reindexing and the SAME ols_trend_from_xy /
     theilsen_from_xy closes as the batch queries, so both live slope
     readouts bit-match batch scans over the union of all delivered
@@ -39,63 +39,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from open_pulsar_spark.streaming.segments import (
-    read_segments,
-    start_partial_stream,
-    update_partial_store,
-)
-
-_PARTIAL_SCHEMA = "segment STRING, mo LONG, cents LONG, epoch LONG"
-_DEDUP_KEYS = ["epoch", "segment", "mo"]
-_CLUSTER_COLS = ["segment", "mo"]
+from open_pulsar_spark.operators.analytics import attributed_order_month_cents
+from open_pulsar_spark.streaming.twins import Readout, total, twin
 
 
 def _trend_partial(lines: DataFrame) -> DataFrame:
     """Segment-attributed order lines (segment, month, cents — the
     attributed_order_month_cents producer's row grain) → per-batch
-    monthly cent sums, the month stored as epoch seconds."""
-    return lines.groupBy(
-        "segment",
-        F.unix_seconds(F.col("month")).cast("bigint").alias("mo"),
-    ).agg(F.sum("cents").cast("bigint").alias("cents"))
-
-
-def update_trend(
-    spark: SparkSession,
-    lines: DataFrame,
-    store_path: str,
-    epoch_id: int | None,
-) -> None:
-    """Fold one batch of attributed order lines into the monthly
-    ledger. ADDITIVE store: the epoch is mandatory — replaying a
-    committed epoch is a no-op by overwrite, but an epoch-less
-    duplicate would double-add."""
-    if epoch_id is None:
-        raise ValueError(
-            "trend_stream is additive: epoch-less backfills would "
-            "double-count on redelivery; pass a unique epoch id"
-        )
-    update_partial_store(lines, store_path, epoch_id, _trend_partial)
-
-
-def read_monthly(spark: SparkSession, store_path: str) -> DataFrame:
-    """The current folded (segment, month, cents) monthly ledger.
-    Dedup on (epoch, segment, mo) FIRST — see module docstring — then
-    month-sum."""
-    raw = read_segments(spark, store_path, _PARTIAL_SCHEMA)
-    if raw is None:
-        return spark.createDataFrame(
-            [], "segment STRING, month TIMESTAMP, cents LONG"
-        )
-    return (
-        raw.dropDuplicates(["epoch", "segment", "mo"])
-        .groupBy("segment", "mo")
-        .agg(F.sum("cents").cast("bigint").alias("cents"))
-        .select(
-            "segment",
-            F.timestamp_seconds(F.col("mo")).alias("month"),
-            "cents",
-        )
+    monthly cent sums."""
+    return lines.groupBy("segment", "month").agg(
+        F.sum("cents").cast("bigint").alias("cents")
     )
 
 
@@ -103,7 +56,7 @@ def _ledger_xy(spark: SparkSession, store_path: str) -> DataFrame:
     from open_pulsar_spark.operators.analytics import xy_from_monthly
 
     return xy_from_monthly(
-        spark, read_monthly(spark, store_path), "trend_stream_monthly"
+        spark, TREND.read(spark, store_path), "trend_stream_monthly"
     )
 
 
@@ -129,22 +82,16 @@ def theilsen_readout(spark: SparkSession, store_path: str) -> DataFrame:
     )
 
 
-def start_trend_stream(
-    spark: SparkSession,
-    lines_stream: DataFrame,
-    store_path: str,
-    checkpoint: str,
-    compact_max_segments: int | None = 64,
-):
-    """attributed order-line stream → continuously-maintained monthly
-    revenue ledger, on the shared partial-stream scaffold."""
-    return start_partial_stream(
-        lines_stream,
-        store_path,
-        checkpoint,
-        partial_of=_trend_partial,
-        schema=_PARTIAL_SCHEMA,
-        dedup_keys=_DEDUP_KEYS,
-        cluster_cols=_CLUSTER_COLS,
-        compact_max_segments=compact_max_segments,
-    )
+TREND = twin(
+    "trend",
+    partial=_trend_partial,
+    schema="segment STRING, month TIMESTAMP, cents LONG",
+    keys=["segment", "month"],
+    fold=[total("cents")],
+    additive=True,
+    source=attributed_order_month_cents,
+    readouts=[
+        Readout(trend_readout, "segment_revenue_trend"),
+        Readout(theilsen_readout, "segment_revenue_theilsen"),
+    ],
+)

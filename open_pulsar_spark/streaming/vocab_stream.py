@@ -25,57 +25,12 @@ token volume (types, not tokens).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from open_pulsar_spark.operators.text import (
     vocab_counts,
     zipf_fit_from_vocab,
 )
-from open_pulsar_spark.streaming.segments import (
-    read_segments,
-    start_partial_stream,
-    update_partial_store,
-)
-
-_PARTIAL_SCHEMA = "t STRING, freq LONG, epoch LONG"
-_DEDUP_KEYS = ["epoch", "t"]
-_CLUSTER_COLS = ["t"]
-
-
-def _vocab_stream_partial(docs: DataFrame) -> DataFrame:
-    """docs → per-batch (t, freq) partial counts (the SAME reduction
-    as the batch query, so the fold bit-matches it)."""
-    return vocab_counts(docs)
-
-
-def update_vocab(
-    spark: SparkSession,
-    docs: DataFrame,
-    store_path: str,
-    epoch_id: int | None,
-) -> None:
-    """Fold one batch of documents into the vocabulary store. Additive
-    contract: epoch is REQUIRED (replays overwrite-skip; there is no
-    duplicate-tolerant fold to hide behind)."""
-    if epoch_id is None:
-        raise ValueError(
-            "vocab_stream partials are additive: epoch-less backfills "
-            "would double-add on rerun; supply an epoch id"
-        )
-    update_partial_store(docs, store_path, epoch_id, _vocab_stream_partial)
-
-
-def read_vocab(spark: SparkSession, store_path: str) -> DataFrame:
-    """The folded (t, freq) vocabulary: dedup (epoch, t) — replay and
-    mid-compaction safety — then sum partials per token."""
-    raw = read_segments(spark, store_path, _PARTIAL_SCHEMA)
-    if raw is None:
-        return spark.createDataFrame([], "t STRING, freq LONG")
-    return (
-        raw.dropDuplicates(["epoch", "t"])
-        .groupBy("t")
-        .agg(F.sum("freq").cast("bigint").alias("freq"))
-    )
+from open_pulsar_spark.streaming.twins import Readout, total, twin
 
 
 def zipf_readout(spark: SparkSession, store_path: str) -> DataFrame:
@@ -83,25 +38,18 @@ def zipf_readout(spark: SparkSession, store_path: str) -> DataFrame:
     same zipf_fit_from_vocab as the batch query, so the readout
     (integer nano-log moments, identical ranking) agrees bit-for-bit
     with a batch run over the union of all delivered documents."""
-    return zipf_fit_from_vocab(spark, read_vocab(spark, store_path))
+    return zipf_fit_from_vocab(spark, VOCAB.read(spark, store_path))
 
 
-def start_vocab_stream(
-    spark: SparkSession,
-    docs_stream: DataFrame,
-    store_path: str,
-    checkpoint: str,
-    compact_max_segments: int | None = 64,
-):
-    """documents stream → continuously-maintained vocabulary store, on
-    the shared partial-stream scaffold."""
-    return start_partial_stream(
-        docs_stream,
-        store_path,
-        checkpoint,
-        partial_of=_vocab_stream_partial,
-        schema=_PARTIAL_SCHEMA,
-        dedup_keys=_DEDUP_KEYS,
-        cluster_cols=_CLUSTER_COLS,
-        compact_max_segments=compact_max_segments,
-    )
+# docs → per-batch (t, freq) counts: the SAME vocab_counts reduction
+# as the batch query, so the fold bit-matches it
+VOCAB = twin(
+    "vocab",
+    partial=vocab_counts,
+    schema="t STRING, freq LONG",
+    keys=["t"],
+    fold=[total("freq")],
+    additive=True,
+    source="documents",
+    readouts=[Readout(zipf_readout, "corpus_zipf_fit")],
+)

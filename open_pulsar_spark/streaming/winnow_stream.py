@@ -26,15 +26,7 @@ from open_pulsar_spark.operators.dedup import (
     WINNOW_MIN_SHARED,
     _winnow_fps_of,
 )
-from open_pulsar_spark.streaming.segments import (
-    read_segments,
-    start_partial_stream,
-    update_partial_store,
-)
-
-_PARTIAL_SCHEMA = "doc_id LONG, h LONG, epoch LONG"
-_DEDUP_KEYS = ["doc_id", "h"]
-_CLUSTER_COLS = ["h"]
+from open_pulsar_spark.streaming.twins import Readout, twin
 
 
 def _winnow_stream_partial(docs: DataFrame) -> DataFrame:
@@ -43,39 +35,13 @@ def _winnow_stream_partial(docs: DataFrame) -> DataFrame:
     return _winnow_fps_of(docs).select("doc_id", "h").distinct()
 
 
-def update_winnow_index(
-    spark: SparkSession,
-    docs: DataFrame,
-    store_path: str,
-    epoch_id: int | None,
-) -> None:
-    """Fold one batch of documents into the fingerprint index.
-    Idempotent fold: an epoch id still keys the segment (replays
-    overwrite-skip and stay cheap), but a duplicate row is harmless —
-    the read path's (doc_id, h) dedup absorbs it."""
-    if epoch_id is None:
-        raise ValueError(
-            "winnow_stream segments are epoch-keyed: supply an epoch id "
-            "so replays overwrite-skip instead of rewriting history"
-        )
-    update_partial_store(docs, store_path, epoch_id, _winnow_stream_partial)
-
-
-def read_winnow_index(spark: SparkSession, store_path: str) -> DataFrame:
-    """The live (doc_id, h) fingerprint index, deduped."""
-    raw = read_segments(spark, store_path, _PARTIAL_SCHEMA)
-    if raw is None:
-        return spark.createDataFrame([], "doc_id LONG, h LONG")
-    return raw.select("doc_id", "h").dropDuplicates(["doc_id", "h"])
-
-
 def overlap_pairs_readout(spark: SparkSession, store_path: str) -> DataFrame:
     """Document pairs sharing ≥ WINNOW_MIN_SHARED fingerprints across
     the WHOLE indexed history — the same join and threshold as the
     batch winnowing_overlap_pairs, so the stream-maintained index and
     a batch scan over the union of all delivered docs produce the
     identical pair table (tested)."""
-    fps = read_winnow_index(spark, store_path)
+    fps = WINNOW.read(spark, store_path)
     a = fps.select(F.col("doc_id").alias("a_id"), "h")
     b = fps.select(F.col("doc_id").alias("b_id"), "h")
     return (
@@ -93,11 +59,11 @@ def batch_overlaps_vs_history(
 ) -> DataFrame:
     """Which docs of an UNINDEXED batch share ≥ WINNOW_MIN_SHARED
     fingerprints with any indexed document — the at-ingest quote/
-    boilerplate screen (run before update_winnow_index to decide
-    admission, or after for lineage tagging). One fingerprint pass
-    over the batch + one hash equi-join against the index."""
+    boilerplate screen (run before WINNOW.update to decide admission,
+    or after for lineage tagging). One fingerprint pass over the batch
+    + one hash equi-join against the index."""
     batch_fps = _winnow_stream_partial(docs)
-    idx = read_winnow_index(spark, store_path)
+    idx = WINNOW.read(spark, store_path)
     return (
         batch_fps.join(idx.select(F.col("doc_id").alias("hist_id"), "h"), "h")
         .where(F.col("doc_id") != F.col("hist_id"))
@@ -108,22 +74,14 @@ def batch_overlaps_vs_history(
     )
 
 
-def start_winnow_stream(
-    spark: SparkSession,
-    docs_stream: DataFrame,
-    store_path: str,
-    checkpoint: str,
-    compact_max_segments: int | None = 64,
-):
-    """documents stream → continuously-maintained fingerprint index,
-    on the shared partial-stream scaffold."""
-    return start_partial_stream(
-        docs_stream,
-        store_path,
-        checkpoint,
-        partial_of=_winnow_stream_partial,
-        schema=_PARTIAL_SCHEMA,
-        dedup_keys=_DEDUP_KEYS,
-        cluster_cols=_CLUSTER_COLS,
-        compact_max_segments=compact_max_segments,
-    )
+WINNOW = twin(
+    "winnow",
+    partial=_winnow_stream_partial,
+    schema="doc_id LONG, h LONG",
+    keys=["doc_id", "h"],
+    fold=[],
+    additive=False,
+    source="documents",
+    readouts=[Readout(overlap_pairs_readout, "winnowing_overlap_pairs")],
+    cluster=["h"],
+)

@@ -29,17 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from open_pulsar_spark.operators.analytics import _z_col
-from open_pulsar_spark.streaming.segments import (
-    read_segments,
-    start_partial_stream,
-    update_partial_store,
-)
-
-_PARTIAL_SCHEMA = (
-    "zbucket LONG, n_events LONG, z_min LONG, z_max LONG, epoch LONG"
-)
-_DEDUP_KEYS = ["epoch", "zbucket"]
-_CLUSTER_COLS = ["zbucket"]
+from open_pulsar_spark.streaming.twins import Readout, total, twin
 
 
 def _zonemap_partial(events: DataFrame) -> DataFrame:
@@ -56,58 +46,29 @@ def _zonemap_partial(events: DataFrame) -> DataFrame:
     )
 
 
-def update_zonemap(
-    spark: SparkSession,
-    events: DataFrame,
-    store_path: str,
-    epoch_id: int | None,
-) -> None:
-    """Fold one batch of events into the zone-map store. The additive
-    half (n_events) sets the contract: epoch is REQUIRED."""
-    if epoch_id is None:
-        raise ValueError(
-            "zonemap_stream partials carry an additive count: epoch-less "
-            "backfills would double-add on rerun; supply an epoch id"
+def zonemap_readout(spark: SparkSession, store_path: str) -> DataFrame:
+    """The folded zone maps (zbucket, n_events, z_min, z_max) in bucket
+    order — events_zorder_layout's bucket frame without n_users."""
+    return ZONEMAP.read(spark, store_path).orderBy("zbucket")
+
+
+# n_events is additive, so the whole row takes the additive contract
+# (module docstring); the envelopes fold by min/max
+ZONEMAP = twin(
+    "zonemap",
+    partial=_zonemap_partial,
+    schema="zbucket LONG, n_events LONG, z_min LONG, z_max LONG",
+    keys=["zbucket"],
+    fold=[total("n_events"), "min(z_min) AS z_min", "max(z_max) AS z_max"],
+    additive=True,
+    source="events",
+    readouts=[
+        Readout(
+            zonemap_readout,
+            "events_zorder_layout",
+            lambda df: df.select(
+                "zbucket", "n_events", "z_min", "z_max"
+            ).orderBy("zbucket"),
         )
-    update_partial_store(events, store_path, epoch_id, _zonemap_partial)
-
-
-def read_zonemap(spark: SparkSession, store_path: str) -> DataFrame:
-    """The folded zone maps (zbucket, n_events, z_min, z_max): dedup
-    (epoch, zbucket) — replay and mid-compaction safety for the
-    additive count — then sum counts and min/max the envelopes."""
-    raw = read_segments(spark, store_path, _PARTIAL_SCHEMA)
-    if raw is None:
-        return spark.createDataFrame(
-            [], "zbucket LONG, n_events LONG, z_min LONG, z_max LONG"
-        )
-    return (
-        raw.dropDuplicates(["epoch", "zbucket"])
-        .groupBy("zbucket")
-        .agg(
-            F.sum("n_events").cast("long").alias("n_events"),
-            F.min("z_min").cast("long").alias("z_min"),
-            F.max("z_max").cast("long").alias("z_max"),
-        )
-    )
-
-
-def start_zonemap_stream(
-    spark: SparkSession,
-    events_stream: DataFrame,
-    store_path: str,
-    checkpoint: str,
-    compact_max_segments: int | None = 64,
-):
-    """events stream → continuously-maintained zone-map store, on the
-    shared partial-stream scaffold."""
-    return start_partial_stream(
-        events_stream,
-        store_path,
-        checkpoint,
-        partial_of=_zonemap_partial,
-        schema=_PARTIAL_SCHEMA,
-        dedup_keys=_DEDUP_KEYS,
-        cluster_cols=_CLUSTER_COLS,
-        compact_max_segments=compact_max_segments,
-    )
+    ],
+)

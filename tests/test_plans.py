@@ -165,7 +165,7 @@ _NESTED_LOOP_ALLOWED = {
 }
 
 
-def test_no_query_compiles_to_unbounded_nested_loop(spark):
+def test_no_query_compiles_to_unbounded_nested_loop(registry_sweep):
     """Engine-wide guardrails, one pass over every registered query:
 
     1. Scale: the physical plan is free of CartesianProduct, and free
@@ -179,31 +179,15 @@ def test_no_query_compiles_to_unbounded_nested_loop(spark):
        Internal arithmetic may use decimal(38,0) freely; outputs stick
        to BIGINT/DOUBLE/STRING/DATE/TIMESTAMP (>2^63-capable exact
        counters leave as digit STRINGs on both engines)."""
-    import contextlib
-    import io
-
-    from pyspark.sql.types import DecimalType
-
-    from open_pulsar_spark import registry
-
     offenders = {}
-    decimal_outputs = {}
-    for name, qfn in sorted(registry.all_queries().items()):
-        df = qfn(spark, SF_SMALL)
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
-        plan = buf.getvalue()
-        if "CartesianProduct" in plan:
+    for name, nodes in registry_sweep["nested_loops"].items():
+        if "CartesianProduct" in nodes:
             offenders[name] = "CartesianProduct"
-        elif "BroadcastNestedLoopJoin" in plan and name not in _NESTED_LOOP_ALLOWED:
+        elif "BroadcastNestedLoopJoin" in nodes and name not in _NESTED_LOOP_ALLOWED:
             offenders[name] = "BroadcastNestedLoopJoin"
-        dec_cols = [
-            f.name for f in df.schema.fields
-            if isinstance(f.dataType, DecimalType)
-        ]
-        if dec_cols:
-            decimal_outputs[name] = dec_cols
+    decimal_outputs = {
+        name: cols for name, cols in registry_sweep["decimals"].items() if cols
+    }
     assert not offenders, offenders
     assert not decimal_outputs, (
         "DECIMAL-typed output columns are a driver-hash hazard "
@@ -404,10 +388,16 @@ def registry_sweep(spark):
     """Build EVERY registered query once (running any eager driver-side
     jobs), recording (a) the profile of every frame passed to
     F.broadcast — including hints inside eager jobs that never reach
-    the returned plan — and (b) every global-window profile of the
-    returned DataFrame's optimized plan.  Both plan gates read this one
+    the returned plan — (b) every global-window profile of the
+    returned DataFrame's optimized plan, (c) whether its formatted
+    physical plan holds CartesianProduct / BroadcastNestedLoopJoin nodes,
+    and (d) its DECIMAL output columns.  Every plan gate reads this one
     sweep instead of re-building 300+ queries each."""
+    import contextlib
+    import io
+
     import pyspark.sql.functions as SF
+    from pyspark.sql.types import DecimalType
 
     from open_pulsar_spark.plan_hints import frame_profile, global_window_profiles
 
@@ -420,6 +410,8 @@ def registry_sweep(spark):
 
     broadcasts: dict[str, list] = {}
     windows: dict[str, list] = {}
+    nested_loops: dict[str, set[str]] = {}
+    decimals: dict[str, list[str]] = {}
     SF.broadcast = recording_broadcast
     try:
         for name, fn in sorted(registry.all_queries().items()):
@@ -427,9 +419,27 @@ def registry_sweep(spark):
             df = fn(spark, SF_SMALL)  # build (and run any eager jobs)
             broadcasts[name] = list(recorded)
             windows[name] = global_window_profiles(df)
+            buf = io.StringIO()
+            with contextlib.redirect_stdout(buf):
+                df.explain("formatted")
+            plan = buf.getvalue()
+            nested_loops[name] = {
+                node
+                for node in ("CartesianProduct", "BroadcastNestedLoopJoin")
+                if node in plan
+            }
+            decimals[name] = [
+                f.name for f in df.schema.fields
+                if isinstance(f.dataType, DecimalType)
+            ]
     finally:
         SF.broadcast = real_broadcast
-    return {"broadcasts": broadcasts, "windows": windows}
+    return {
+        "broadcasts": broadcasts,
+        "windows": windows,
+        "nested_loops": nested_loops,
+        "decimals": decimals,
+    }
 
 
 def test_no_forced_broadcast_of_sf_linear_tables(registry_sweep):
@@ -664,112 +674,36 @@ def test_plan_hints_parsers_on_synthetic_trees():
 
 def test_round11_twin_readouts_pass_window_gate(spark, tmp_path):
     """The registry sweep gates never see streaming READOUTS (twins
-    aren't registered queries), so profile the round-11/12 readouts
-    directly: after folding one epoch, no readout may contain a global
-    window over an SF-linear or UNRESOLVED scan path — ledger scans
-    deliberately resolve to the ?filescan sentinel (fail-closed), so a
-    single-partition window over a ledger would flunk here exactly
-    like one over a fact table. (risk/lag close on the prefix
-    scaffold's pid-partitioned windows; ks's ECDF window partitions by
-    source; mk has no window at all; anova's close runs on a ≤7-row
-    collected frame.)"""
-    from pyspark.sql import functions as F
-
-    from open_pulsar_spark.operators.analytics import attributed_order_cents
+    aren't registered queries), so profile every registered twin
+    readout directly: after folding its source in one epoch, no
+    readout may contain a global window over an SF-linear or
+    UNRESOLVED scan path — ledger scans deliberately resolve to the
+    ?filescan sentinel (fail-closed), so a single-partition window
+    over a ledger would flunk here exactly like one over a fact table.
+    (risk/lag close on the prefix scaffold's pid-partitioned windows;
+    ks's ECDF window partitions by source; mk has no window at all;
+    anova's close runs on a ≤7-row collected frame.)"""
     from open_pulsar_spark.plan_hints import global_window_profiles
-    from open_pulsar_spark.streaming.ks_stream import ks_readout, update_ks
-    from open_pulsar_spark.streaming.lag_stream import lag_readout, update_lag
-    from open_pulsar_spark.streaming.mk_stream import mk_readout, update_mk
-    from open_pulsar_spark.streaming.risk_stream import (
-        risk_readout,
-        update_risk,
-    )
-    from open_pulsar_spark.tables import load_table
+    from open_pulsar_spark.streaming.twins import all_twins
     from tests.conftest import SF_SMALL
 
-    ev = load_table(spark, SF_SMALL, "events")
-    docs = load_table(spark, SF_SMALL, "documents")
-    update_risk(spark, ev, f"{tmp_path}/r", 0)
-    update_lag(spark, ev, f"{tmp_path}/l", 0)
-    update_mk(spark, attributed_order_cents(spark, SF_SMALL), f"{tmp_path}/m", 0)
-    update_ks(spark, docs, f"{tmp_path}/k", 0)
-
-    from open_pulsar_spark.operators.analytics import (
-        attributed_order_month_cents,
+    failures = []
+    for name, twin in sorted(all_twins().items()):
+        if not twin.readouts:
+            continue
+        store = f"{tmp_path}/{name}"
+        twin.update(spark, twin.source_frame(spark, SF_SMALL), store, 0)
+        for ro in twin.readouts:
+            bad = [
+                p
+                for p in global_window_profiles(ro.fn(spark, store))
+                if p.sf_linear_tables and not p.has_bounding_op
+            ]
+            if bad:
+                failures.append(f"{name}.{ro.name}: {bad}")
+    assert not failures, (
+        "readouts with an unbounded global window:\n" + "\n".join(failures)
     )
-    from open_pulsar_spark.streaming.trend_stream import (
-        theilsen_readout,
-        trend_readout,
-        update_trend,
-    )
-
-    update_trend(
-        spark, attributed_order_month_cents(spark, SF_SMALL), f"{tmp_path}/t", 0
-    )
-    from open_pulsar_spark.streaming.anova_stream import (
-        anova_readout,
-        update_anova,
-    )
-
-    update_anova(spark, load_table(spark, SF_SMALL, "orders"), f"{tmp_path}/a", 0)
-    readouts = {
-        "risk": risk_readout(spark, f"{tmp_path}/r"),
-        "lag": lag_readout(spark, f"{tmp_path}/l"),
-        "mk": mk_readout(spark, f"{tmp_path}/m"),
-        "ks": ks_readout(spark, f"{tmp_path}/k"),
-        "trend_ols": trend_readout(spark, f"{tmp_path}/t"),
-        "trend_theilsen": theilsen_readout(spark, f"{tmp_path}/t"),
-        "anova": anova_readout(spark, f"{tmp_path}/a"),
-    }
-    for name, df in readouts.items():
-        bad = [
-            p
-            for p in global_window_profiles(df)
-            if p.sf_linear_tables and not p.has_bounding_op
-        ]
-        assert not bad, f"{name} readout has an unbounded global window: {bad}"
-
-
-def test_verify_twins_specs_resolve():
-    """tools/verify_twins.py is a per-round gate like verify_oracle;
-    its spec table hard-codes update/readout function names and batch
-    anchor query names. Pin them against the live modules and
-    registry so a rename breaks pytest loudly instead of breaking the
-    gate at round start."""
-    import importlib
-    import importlib.util
-    import pathlib
-
-    from open_pulsar_spark.registry import all_queries
-
-    tool_path = (
-        pathlib.Path(__file__).resolve().parents[1] / "tools" / "verify_twins.py"
-    )
-    spec = importlib.util.spec_from_file_location("verify_twins", tool_path)
-    vt = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(vt)
-
-    qs = all_queries()
-    seen_anchors = set()
-    for twin, (mod_name, upd_name, frame_fn, readouts) in vt.SPECS.items():
-        mod = importlib.import_module(
-            f"open_pulsar_spark.streaming.{mod_name}"
-        )
-        assert callable(getattr(mod, upd_name)), f"{twin}: {upd_name}"
-        assert callable(frame_fn), twin
-        for ro_name, anchor, _ in readouts:
-            assert callable(getattr(mod, ro_name)), f"{twin}: {ro_name}"
-            assert anchor in qs, f"{twin}: anchor {anchor} not registered"
-            seen_anchors.add(anchor)
-    # the special runners' anchors too
-    for anchor in (
-        "events_value_psi",
-        "dq_violation_counts",
-        "term_posting_index",
-        "doc_ngram_novelty",
-    ):
-        assert anchor in qs, anchor
-    assert len(vt.SPECS) == 26 and len(seen_anchors) == 34
 
 
 def test_no_explode_of_stored_array_columns():

@@ -381,7 +381,7 @@ def test_retry_stream_fresh_checkpoint_not_blocked_by_stale_markers(spark, workd
 
 
 def test_token_quota_compacts_at_threshold(spark, workdir):
-    """transformWithStateInPandas quota ledger: per-chat running token
+    """applyInPandasWithState quota ledger: per-chat running token
     total persists across micro-batches; crossing 80% of the 200k
     window emits 'compact' and restarts the meter at that message's
     own tokens (reference compaction semantics)."""
@@ -617,45 +617,6 @@ def test_streaming_hourly_rollup_maintains_table_and_daily_refresh(spark, workdi
 
     day = refresh_daily(spark, hourly, daily).collect()
     assert len(day) == 1 and (day[0].n, day[0].sv) == (5, 76.0)
-
-
-def test_token_quota_auto_selects_runnable_api(spark, workdir):
-    """token_quota_auto runs the supported transformWithStateInPandas
-    path when the runtime has its protobuf dependency, else the
-    applyInPandasWithState fallback — same ledger either way."""
-    from open_pulsar_spark.streaming.quota import has_tws, token_quota_auto
-
-    src, ckpt = f"{workdir}/auto_src", f"{workdir}/auto_ckpt"
-    spark.createDataFrame(
-        [(1, 1, 100_000), (1, 2, 90_000), (2, 3, 10)],
-        "chat_id LONG, update_id LONG, tokens LONG",
-    ).coalesce(1).write.parquet(src)
-    ledger = token_quota_auto(
-        spark.readStream.schema("chat_id LONG, update_id LONG, tokens LONG").parquet(src)
-    )
-    q = (
-        ledger.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("quota_auto_out")
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    rows = {r.update_id: r for r in spark.sql("select * from quota_auto_out").collect()}
-    assert rows[2].action == "compact" and rows[2].used_tokens == 190_000
-    assert rows[3].action == "ok"
-    # in this container has_tws() is False (no protobuf) — the assert
-    # documents which path the run above actually took. Probe for
-    # google.protobuf specifically: other google-namespace packages
-    # (google-auth etc.) don't make TWS runnable.
-    import importlib.util
-
-    try:
-        has_protobuf = importlib.util.find_spec("google.protobuf") is not None
-    except ModuleNotFoundError:
-        has_protobuf = False
-    assert has_tws() == has_protobuf
 
 
 def test_token_quota_ttl_resets_idle_meter(spark, workdir):
@@ -1367,7 +1328,7 @@ def test_drift_backfill_slices_fold_and_replay(spark, workdir):
 
 
 def test_kmv_and_drift_streams_run_as_real_streaming_queries(spark, workdir):
-    """start_kmv_stream / start_drift_stream wire the partial
+    """KMV.start / start_drift_stream wire the partial
     maintenance as actual Structured Streaming queries (file source,
     maxFilesPerTrigger=1 → multiple epochs): after processAllAvailable
     the stores fold to the same numbers the batch steps produce, and
@@ -1379,11 +1340,7 @@ def test_kmv_and_drift_streams_run_as_real_streaming_queries(spark, workdir):
         fold_centroids,
         start_drift_stream,
     )
-    from open_pulsar_spark.streaming.kmv_stream import (
-        kmv_estimates,
-        start_kmv_stream,
-        update_kmv,
-    )
+    from open_pulsar_spark.streaming.kmv_stream import KMV, kmv_estimates
     from open_pulsar_spark.tables import load_table
     from tests.conftest import SF_SMALL
 
@@ -1398,7 +1355,7 @@ def test_kmv_and_drift_streams_run_as_real_streaming_queries(spark, workdir):
     docs.where(F.col("doc_id") < 250).coalesce(1).write.mode("append").parquet(dsrc)
     docs.where(F.col("doc_id") >= 250).coalesce(1).write.mode("append").parquet(dsrc)
     kstore = f"{workdir}/kmv_live"
-    q = start_kmv_stream(
+    q = KMV.start(
         spark,
         spark.readStream.schema("doc_id LONG, source STRING, text STRING")
         .option("maxFilesPerTrigger", 1)
@@ -1410,7 +1367,7 @@ def test_kmv_and_drift_streams_run_as_real_streaming_queries(spark, workdir):
     q.processAllAvailable()
     q.stop()
     ref_store = f"{workdir}/kmv_ref"
-    update_kmv(spark, docs, ref_store, 0)
+    KMV.update(spark, docs, ref_store, 0)
     assert [tuple(r) for r in kmv_estimates(spark, kstore).collect()] == [
         tuple(r) for r in kmv_estimates(spark, ref_store).collect()
     ]
@@ -1450,15 +1407,15 @@ def test_kmv_stream_folds_to_batch_estimate(spark, workdir):
     from pyspark.sql import functions as F
 
     from open_pulsar_spark.registry import all_queries
-    from open_pulsar_spark.streaming.kmv_stream import kmv_estimates, update_kmv
+    from open_pulsar_spark.streaming.kmv_stream import KMV, kmv_estimates
     from open_pulsar_spark.tables import load_table
     from tests.conftest import SF_SMALL
 
     docs = load_table(spark, SF_SMALL, "documents")
     store = f"{workdir}/kmv_store"
-    update_kmv(spark, docs.where(F.col("doc_id") % 3 == 0), store, 0)
-    update_kmv(spark, docs.where(F.col("doc_id") % 3 == 1), store, 1)
-    update_kmv(spark, docs.where(F.col("doc_id") % 3 == 2), store, 2)
+    KMV.update(spark, docs.where(F.col("doc_id") % 3 == 0), store, 0)
+    KMV.update(spark, docs.where(F.col("doc_id") % 3 == 1), store, 1)
+    KMV.update(spark, docs.where(F.col("doc_id") % 3 == 2), store, 2)
 
     want = [
         (r.source, r.n_est)
@@ -1471,10 +1428,10 @@ def test_kmv_stream_folds_to_batch_estimate(spark, workdir):
     assert got == want
 
     # replay of a committed epoch: no-op
-    update_kmv(spark, docs.where(F.col("doc_id") % 3 == 0), store, 0)
+    KMV.update(spark, docs.where(F.col("doc_id") % 3 == 0), store, 0)
     # duplicated epoch-less backfill: value-idempotent (redundant rows,
     # same fold)
-    update_kmv(spark, docs.where(F.col("doc_id") % 3 == 1), store, None)
+    KMV.update(spark, docs.where(F.col("doc_id") % 3 == 1), store, None)
     assert [tuple(r) for r in kmv_estimates(spark, store).collect()] == want
 
 
@@ -1490,19 +1447,15 @@ def test_dq_stream_folds_to_batch_counts(spark, workdir):
     from pyspark.sql import functions as F
 
     from open_pulsar_spark.registry import all_queries
-    from open_pulsar_spark.streaming.dq_stream import (
-        DQ_STREAM_RULES,
-        read_dq,
-        update_dq,
-    )
+    from open_pulsar_spark.streaming.dq_stream import DQ, DQ_STREAM_RULES, read_dq
     from open_pulsar_spark.tables import load_table
     from tests.conftest import SF_SMALL
 
     docs = load_table(spark, SF_SMALL, "documents")
     store = f"{workdir}/dq_store"
-    update_dq(spark, docs.where(F.col("doc_id") % 3 == 0), store, 0)
-    update_dq(spark, docs.where(F.col("doc_id") % 3 == 1), store, 1)
-    update_dq(spark, docs.where(F.col("doc_id") % 3 == 2), store, 2)
+    DQ.update(spark, docs.where(F.col("doc_id") % 3 == 0), store, 0)
+    DQ.update(spark, docs.where(F.col("doc_id") % 3 == 1), store, 1)
+    DQ.update(spark, docs.where(F.col("doc_id") % 3 == 2), store, 2)
 
     n_docs = docs.count()
     want = sorted(
@@ -1517,12 +1470,12 @@ def test_dq_stream_folds_to_batch_counts(spark, workdir):
     assert got == want
 
     # replay of a committed epoch: no-op (never double-adds)
-    update_dq(spark, docs.where(F.col("doc_id") % 3 == 0), store, 0)
+    DQ.update(spark, docs.where(F.col("doc_id") % 3 == 0), store, 0)
     assert [tuple(r) for r in read_dq(spark, store).collect()] == want
 
     # epoch-less writes are refused outright
     with pytest.raises(ValueError):
-        update_dq(spark, docs, store, None)
+        DQ.update(spark, docs, store, None)
 
     # shared rules agree with the batch suite's documents rows
     batch = {
@@ -1537,18 +1490,14 @@ def test_dq_stream_folds_to_batch_counts(spark, workdir):
 
 
 def test_dq_stream_runs_as_real_streaming_query(spark, workdir):
-    """start_dq_stream wires the ledger as an actual Structured
+    """DQ.start wires the ledger as an actual Structured
     Streaming query (file source, maxFilesPerTrigger=1 → multiple
     epochs): after processAllAvailable the fold equals the one-shot
     batch ledger, and forced auto-compaction (max_segments=1) leaves
     it unchanged (reads dedup on (epoch, rule) first)."""
     from pyspark.sql import functions as F
 
-    from open_pulsar_spark.streaming.dq_stream import (
-        read_dq,
-        start_dq_stream,
-        update_dq,
-    )
+    from open_pulsar_spark.streaming.dq_stream import DQ, read_dq
     from open_pulsar_spark.tables import load_table
     from tests.conftest import SF_SMALL
 
@@ -1559,7 +1508,7 @@ def test_dq_stream_runs_as_real_streaming_query(spark, workdir):
     docs.where(F.col("doc_id") < 250).coalesce(1).write.mode("append").parquet(src)
     docs.where(F.col("doc_id") >= 250).coalesce(1).write.mode("append").parquet(src)
     store = f"{workdir}/dq_live"
-    q = start_dq_stream(
+    q = DQ.start(
         spark,
         spark.readStream.schema(
             "doc_id LONG, source STRING, text STRING, n_chars LONG"
@@ -1573,7 +1522,7 @@ def test_dq_stream_runs_as_real_streaming_query(spark, workdir):
     q.processAllAvailable()
     q.stop()
     ref = f"{workdir}/dq_ref"
-    update_dq(spark, docs, ref, 0)
+    DQ.update(spark, docs, ref, 0)
     got = [tuple(r) for r in read_dq(spark, store).collect()]
     want = [tuple(r) for r in read_dq(spark, ref).collect()]
     assert got == want
@@ -1783,41 +1732,35 @@ def test_chunk_stream_folds_to_batch_stats(spark, workdir):
     from pyspark.sql import functions as F
 
     from open_pulsar_spark.operators.multimodal import multimodal_chunk_dedup
-    from open_pulsar_spark.streaming.chunk_stream import (
-        chunk_dedup_stats,
-        update_chunks,
-    )
+    from open_pulsar_spark.streaming.chunk_stream import CHUNK, chunk_dedup_stats
     from open_pulsar_spark.tables import load_table
     from tests.conftest import SF_SMALL
 
     docs = load_table(spark, SF_SMALL, "documents")
     store = f"{workdir}/chunk_store"
     for i in range(3):
-        update_chunks(spark, docs.where(F.col("doc_id") % 3 == i), store, i)
+        CHUNK.update(spark, docs.where(F.col("doc_id") % 3 == i), store, i)
 
     want = [tuple(r) for r in multimodal_chunk_dedup(spark, SF_SMALL).collect()]
     got = [tuple(r) for r in chunk_dedup_stats(spark, store).collect()]
     assert got == want
 
     # replayed epoch: overwrite, never double-add
-    update_chunks(spark, docs.where(F.col("doc_id") % 3 == 0), store, 0)
+    CHUNK.update(spark, docs.where(F.col("doc_id") % 3 == 0), store, 0)
     assert [tuple(r) for r in chunk_dedup_stats(spark, store).collect()] == want
 
     with pytest.raises(ValueError):
-        update_chunks(spark, docs, store, None)
+        CHUNK.update(spark, docs, store, None)
 
 
 def test_chunk_stream_runs_as_real_streaming_query(spark, workdir):
-    """start_chunk_stream wired to a real file-source stream: the
+    """CHUNK.start wired to a real file-source stream: the
     store after the stream drains equals the batch query over the
     same rows."""
     from pyspark.sql import functions as F
 
     from open_pulsar_spark.operators.multimodal import chunk_stats, chunk_counts
-    from open_pulsar_spark.streaming.chunk_stream import (
-        chunk_dedup_stats,
-        start_chunk_stream,
-    )
+    from open_pulsar_spark.streaming.chunk_stream import CHUNK, chunk_dedup_stats
     from open_pulsar_spark.tables import load_table
     from tests.conftest import SF_SMALL
 
@@ -1830,7 +1773,7 @@ def test_chunk_stream_runs_as_real_streaming_query(spark, workdir):
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    q = start_chunk_stream(
+    q = CHUNK.start(
         spark, stream, f"{workdir}/chunk_store2", f"{workdir}/chunk_ckpt"
     )
     try:
@@ -1860,14 +1803,14 @@ def test_hll_stream_folds_to_batch_estimate(spark, workdir):
     from pyspark.sql import functions as F
 
     from open_pulsar_spark.registry import all_queries
-    from open_pulsar_spark.streaming.hll_stream import hll_estimates, update_hll
+    from open_pulsar_spark.streaming.hll_stream import HLL, hll_estimates
     from open_pulsar_spark.tables import load_table
     from tests.conftest import SF_SMALL
 
     ev = load_table(spark, SF_SMALL, "events")
     store = f"{workdir}/hll_store"
     for k in range(3):
-        update_hll(spark, ev.where(F.col("event_id") % 3 == k), store, k)
+        HLL.update(spark, ev.where(F.col("event_id") % 3 == k), store, k)
 
     want = [
         (r.event_type, r.hll_keys)
@@ -1880,8 +1823,8 @@ def test_hll_stream_folds_to_batch_estimate(spark, workdir):
     assert got == want
 
     # replayed epoch: no-op; duplicated epoch-less backfill: idempotent
-    update_hll(spark, ev.where(F.col("event_id") % 3 == 0), store, 0)
-    update_hll(spark, ev.where(F.col("event_id") % 3 == 1), store, None)
+    HLL.update(spark, ev.where(F.col("event_id") % 3 == 0), store, 0)
+    HLL.update(spark, ev.where(F.col("event_id") % 3 == 1), store, None)
     assert [tuple(r) for r in hll_estimates(spark, store).collect()] == want
 
 
@@ -1896,17 +1839,14 @@ def test_cusum_stream_folds_to_batch_series(spark, workdir):
     from pyspark.sql import functions as F
 
     from open_pulsar_spark.registry import all_queries
-    from open_pulsar_spark.streaming.cusum_stream import (
-        cusum_readout,
-        update_cusum,
-    )
+    from open_pulsar_spark.streaming.cusum_stream import CUSUM, cusum_readout
     from open_pulsar_spark.tables import load_table
     from tests.conftest import SF_SMALL
 
     orders = load_table(spark, SF_SMALL, "orders")
     store = f"{workdir}/cusum_store"
     for k in range(3):
-        update_cusum(spark, orders.where(F.col("o_orderkey") % 3 == k), store, k)
+        CUSUM.update(spark, orders.where(F.col("o_orderkey") % 3 == k), store, k)
 
     want = [
         tuple(r)
@@ -1916,15 +1856,15 @@ def test_cusum_stream_folds_to_batch_series(spark, workdir):
     got = [tuple(r) for r in cusum_readout(spark, store).collect()]
     assert got == want
 
-    update_cusum(spark, orders.where(F.col("o_orderkey") % 3 == 0), store, 0)
+    CUSUM.update(spark, orders.where(F.col("o_orderkey") % 3 == 0), store, 0)
     assert [tuple(r) for r in cusum_readout(spark, store).collect()] == want
 
     with pytest.raises(ValueError):
-        update_cusum(spark, orders, store, None)
+        CUSUM.update(spark, orders, store, None)
 
 
 def test_hll_stream_runs_as_real_streaming_query(spark, workdir):
-    """start_hll_stream wires the register maintenance as an actual
+    """HLL.start wires the register maintenance as an actual
     Structured Streaming query (file source, maxFilesPerTrigger=1 →
     multiple epochs): after processAllAvailable the store folds to the
     same registers the one-shot batch step produces, and forced
@@ -1932,11 +1872,7 @@ def test_hll_stream_runs_as_real_streaming_query(spark, workdir):
     idempotent fold makes the compaction window trivially safe."""
     from pyspark.sql import functions as F
 
-    from open_pulsar_spark.streaming.hll_stream import (
-        read_hll,
-        start_hll_stream,
-        update_hll,
-    )
+    from open_pulsar_spark.streaming.hll_stream import HLL
     from open_pulsar_spark.tables import load_table
     from tests.conftest import SF_SMALL
 
@@ -1947,7 +1883,7 @@ def test_hll_stream_runs_as_real_streaming_query(spark, workdir):
     ev.where(F.col("event_id") % 2 == 0).coalesce(1).write.mode("append").parquet(src)
     ev.where(F.col("event_id") % 2 == 1).coalesce(1).write.mode("append").parquet(src)
     store = f"{workdir}/hll_live"
-    q = start_hll_stream(
+    q = HLL.start(
         spark,
         spark.readStream.schema(
             "event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING"
@@ -1961,9 +1897,9 @@ def test_hll_stream_runs_as_real_streaming_query(spark, workdir):
     q.processAllAvailable()
     q.stop()
     ref = f"{workdir}/hll_ref"
-    update_hll(spark, ev, ref, 0)
-    got = sorted(tuple(r) for r in read_hll(spark, store).collect())
-    want = sorted(tuple(r) for r in read_hll(spark, ref).collect())
+    HLL.update(spark, ev, ref, 0)
+    got = sorted(tuple(r) for r in HLL.read(spark, store).collect())
+    want = sorted(tuple(r) for r in HLL.read(spark, ref).collect())
     assert got == want
 
 
@@ -1978,19 +1914,16 @@ def test_zonemap_stream_folds_to_batch_maps(spark, workdir):
     from pyspark.sql import functions as F
 
     from open_pulsar_spark.registry import all_queries
-    from open_pulsar_spark.streaming.zonemap_stream import (
-        read_zonemap,
-        update_zonemap,
-    )
+    from open_pulsar_spark.streaming.zonemap_stream import ZONEMAP
     from open_pulsar_spark.tables import load_table
     from tests.conftest import SF_SMALL
 
     ev = load_table(spark, SF_SMALL, "events")
     store = f"{workdir}/zonemap_store"
     for k in range(3):
-        update_zonemap(spark, ev.where(F.col("event_id") % 3 == k), store, k)
+        ZONEMAP.update(spark, ev.where(F.col("event_id") % 3 == k), store, k)
 
-    got = sorted(tuple(r) for r in read_zonemap(spark, store).collect())
+    got = sorted(tuple(r) for r in ZONEMAP.read(spark, store).collect())
 
     batch = (
         all_queries()["events_zorder_layout"](spark, SF_SMALL)
@@ -1999,11 +1932,11 @@ def test_zonemap_stream_folds_to_batch_maps(spark, workdir):
     want = sorted(tuple(r) for r in batch.collect())
     assert got == want
 
-    update_zonemap(spark, ev.where(F.col("event_id") % 3 == 0), store, 0)
-    assert sorted(tuple(r) for r in read_zonemap(spark, store).collect()) == want
+    ZONEMAP.update(spark, ev.where(F.col("event_id") % 3 == 0), store, 0)
+    assert sorted(tuple(r) for r in ZONEMAP.read(spark, store).collect()) == want
 
     with pytest.raises(ValueError):
-        update_zonemap(spark, ev, store, None)
+        ZONEMAP.update(spark, ev, store, None)
 
 
 def test_hll_stream_compaction_keeps_backfill_maxima(spark, workdir):
@@ -2015,9 +1948,8 @@ def test_hll_stream_compaction_keeps_backfill_maxima(spark, workdir):
     check the fold is byte-identical to the pre-compaction fold."""
     from pyspark.sql import functions as F
 
-    from open_pulsar_spark.streaming import hll_stream
     from open_pulsar_spark.streaming.segments import compact_segments
-    from open_pulsar_spark.streaming.hll_stream import read_hll, update_hll
+    from open_pulsar_spark.streaming.hll_stream import HLL
     from open_pulsar_spark.tables import load_table
     from tests.conftest import SF_SMALL
 
@@ -2025,23 +1957,23 @@ def test_hll_stream_compaction_keeps_backfill_maxima(spark, workdir):
     store = f"{workdir}/hll_backfill_store"
     # two epoch-less backfills over DIFFERENT slices: same (epoch=-1,
     # type, j) keys, different r values across segments
-    update_hll(spark, ev.where(F.col("event_id") % 2 == 0), store, None)
-    update_hll(spark, ev.where(F.col("event_id") % 2 == 1), store, None)
+    HLL.update(spark, ev.where(F.col("event_id") % 2 == 0), store, None)
+    HLL.update(spark, ev.where(F.col("event_id") % 2 == 1), store, None)
 
-    before = sorted(tuple(r) for r in read_hll(spark, store).collect())
+    before = sorted(tuple(r) for r in HLL.read(spark, store).collect())
     compact_segments(
         spark,
         store,
-        hll_stream._PARTIAL_SCHEMA,
-        hll_stream._DEDUP_KEYS,
-        hll_stream._CLUSTER_COLS,
+        HLL.store_schema,
+        HLL.dedup_keys,
+        list(HLL.cluster),
     )
-    after = sorted(tuple(r) for r in read_hll(spark, store).collect())
+    after = sorted(tuple(r) for r in HLL.read(spark, store).collect())
     assert after == before
 
 
 def test_cusum_stream_runs_as_real_streaming_query(spark, workdir):
-    """start_cusum_stream wires the day-partial maintenance as an
+    """CUSUM.start wires the day-partial maintenance as an
     actual Structured Streaming query (file source, one file per
     trigger → multiple epochs): after processAllAvailable the readout
     equals the batch query over the same orders, and forced
@@ -2049,10 +1981,7 @@ def test_cusum_stream_runs_as_real_streaming_query(spark, workdir):
     before summing)."""
     from pyspark.sql import functions as F
 
-    from open_pulsar_spark.streaming.cusum_stream import (
-        cusum_readout,
-        start_cusum_stream,
-    )
+    from open_pulsar_spark.streaming.cusum_stream import CUSUM, cusum_readout
     from open_pulsar_spark.registry import all_queries
     from open_pulsar_spark.tables import load_table
     from tests.conftest import SF_SMALL
@@ -2068,7 +1997,7 @@ def test_cusum_stream_runs_as_real_streaming_query(spark, workdir):
         "append"
     ).parquet(src)
     store = f"{workdir}/cusum_live"
-    q = start_cusum_stream(
+    q = CUSUM.start(
         spark,
         spark.readStream.schema(
             "o_orderkey LONG, o_orderdate TIMESTAMP, o_totalprice DOUBLE"
@@ -2091,16 +2020,13 @@ def test_cusum_stream_runs_as_real_streaming_query(spark, workdir):
 
 
 def test_zonemap_stream_runs_as_real_streaming_query(spark, workdir):
-    """start_zonemap_stream as an actual streaming query: the folded
+    """ZONEMAP.start as an actual streaming query: the folded
     store after processAllAvailable (with forced compaction) equals
     events_zorder_layout's bucket frame on the shared columns."""
     from pyspark.sql import functions as F
 
     from open_pulsar_spark.registry import all_queries
-    from open_pulsar_spark.streaming.zonemap_stream import (
-        read_zonemap,
-        start_zonemap_stream,
-    )
+    from open_pulsar_spark.streaming.zonemap_stream import ZONEMAP
     from open_pulsar_spark.tables import load_table
     from tests.conftest import SF_SMALL
 
@@ -2115,7 +2041,7 @@ def test_zonemap_stream_runs_as_real_streaming_query(spark, workdir):
         "append"
     ).parquet(src)
     store = f"{workdir}/zonemap_live"
-    q = start_zonemap_stream(
+    q = ZONEMAP.start(
         spark,
         spark.readStream.schema(
             "event_id LONG, ts TIMESTAMP, user_id LONG"
@@ -2128,7 +2054,7 @@ def test_zonemap_stream_runs_as_real_streaming_query(spark, workdir):
     )
     q.processAllAvailable()
     q.stop()
-    got = sorted(tuple(r) for r in read_zonemap(spark, store).collect())
+    got = sorted(tuple(r) for r in ZONEMAP.read(spark, store).collect())
     want = sorted(
         tuple(r)
         for r in all_queries()["events_zorder_layout"](spark, SF_SMALL)
@@ -2149,8 +2075,8 @@ def test_itemsets_stream_folds_to_batch_supports(spark, workdir):
 
     from open_pulsar_spark.registry import all_queries
     from open_pulsar_spark.streaming.itemsets_stream import (
+        ITEMSETS,
         itemset_readout,
-        update_itemsets,
     )
     from open_pulsar_spark.tables import load_table
     from tests.conftest import SF_SMALL
@@ -2159,7 +2085,7 @@ def test_itemsets_stream_folds_to_batch_supports(spark, workdir):
     store = f"{workdir}/itemsets_store"
     # split by event_id so most (user, day) baskets span epochs
     for k in range(3):
-        update_itemsets(spark, ev.where(F.col("event_id") % 3 == k), store, k)
+        ITEMSETS.update(spark, ev.where(F.col("event_id") % 3 == k), store, k)
 
     want = [
         tuple(r)
@@ -2170,13 +2096,13 @@ def test_itemsets_stream_folds_to_batch_supports(spark, workdir):
     # the level-2 rows specifically must be present and matched
     assert any(k == 2 for (_, k, _, _) in got)
 
-    update_itemsets(spark, ev.where(F.col("event_id") % 3 == 0), store, 0)
-    update_itemsets(spark, ev.where(F.col("event_id") % 3 == 1), store, None)
+    ITEMSETS.update(spark, ev.where(F.col("event_id") % 3 == 0), store, 0)
+    ITEMSETS.update(spark, ev.where(F.col("event_id") % 3 == 1), store, None)
     assert [tuple(r) for r in itemset_readout(spark, store).collect()] == want
 
 
 def test_itemsets_stream_runs_as_real_streaming_query(spark, workdir):
-    """start_itemsets_stream wires the item-store maintenance as an
+    """ITEMSETS.start wires the item-store maintenance as an
     actual Structured Streaming query (file source, maxFilesPerTrigger
     =1 → multiple epochs): after processAllAvailable the folded store
     equals the one-shot batch fold, and forced auto-compaction
@@ -2184,11 +2110,7 @@ def test_itemsets_stream_runs_as_real_streaming_query(spark, workdir):
     the whole row, so compaction is purely physical)."""
     from pyspark.sql import functions as F
 
-    from open_pulsar_spark.streaming.itemsets_stream import (
-        read_items,
-        start_itemsets_stream,
-        update_itemsets,
-    )
+    from open_pulsar_spark.streaming.itemsets_stream import ITEMSETS
     from open_pulsar_spark.tables import load_table
     from tests.conftest import SF_SMALL
 
@@ -2199,7 +2121,7 @@ def test_itemsets_stream_runs_as_real_streaming_query(spark, workdir):
     ev.where(F.col("event_id") % 2 == 0).coalesce(1).write.mode("append").parquet(src)
     ev.where(F.col("event_id") % 2 == 1).coalesce(1).write.mode("append").parquet(src)
     store = f"{workdir}/itemsets_live"
-    q = start_itemsets_stream(
+    q = ITEMSETS.start(
         spark,
         spark.readStream.schema(
             "event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING"
@@ -2213,9 +2135,9 @@ def test_itemsets_stream_runs_as_real_streaming_query(spark, workdir):
     q.processAllAvailable()
     q.stop()
     ref = f"{workdir}/itemsets_ref"
-    update_itemsets(spark, ev, ref, 0)
-    got = sorted(tuple(r) for r in read_items(spark, store).collect())
-    want = sorted(tuple(r) for r in read_items(spark, ref).collect())
+    ITEMSETS.update(spark, ev, ref, 0)
+    got = sorted(tuple(r) for r in ITEMSETS.read(spark, store).collect())
+    want = sorted(tuple(r) for r in ITEMSETS.read(spark, ref).collect())
     assert got == want
 
 
@@ -2230,8 +2152,8 @@ def test_sequences_stream_folds_to_batch_supports(spark, workdir):
 
     from open_pulsar_spark.registry import all_queries
     from open_pulsar_spark.streaming.sequences_stream import (
+        SEQUENCES,
         sequence_readout,
-        update_sequences,
     )
     from open_pulsar_spark.tables import load_table
     from tests.conftest import SF_SMALL
@@ -2239,7 +2161,7 @@ def test_sequences_stream_folds_to_batch_supports(spark, workdir):
     ev = load_table(spark, SF_SMALL, "events")
     store = f"{workdir}/seq_store"
     for k in range(3):
-        update_sequences(spark, ev.where(F.col("event_id") % 3 == k), store, k)
+        SEQUENCES.update(spark, ev.where(F.col("event_id") % 3 == k), store, k)
 
     want = [
         tuple(r)
@@ -2248,24 +2170,20 @@ def test_sequences_stream_folds_to_batch_supports(spark, workdir):
     got = [tuple(r) for r in sequence_readout(spark, store).collect()]
     assert got == want
 
-    update_sequences(spark, ev.where(F.col("event_id") % 3 == 0), store, 0)
-    update_sequences(spark, ev.where(F.col("event_id") % 3 == 1), store, None)
+    SEQUENCES.update(spark, ev.where(F.col("event_id") % 3 == 0), store, 0)
+    SEQUENCES.update(spark, ev.where(F.col("event_id") % 3 == 1), store, None)
     assert [tuple(r) for r in sequence_readout(spark, store).collect()] == want
 
 
 def test_sequences_stream_runs_as_real_streaming_query(spark, workdir):
-    """start_sequences_stream as an actual Structured Streaming query
+    """SEQUENCES.start as an actual Structured Streaming query
     (file source, maxFilesPerTrigger=1): the folded extrema equal the
     one-shot batch fold, and forced auto-compaction (max_segments=1)
     leaves them unchanged — min/max re-fold makes the compaction
     window trivially safe."""
     from pyspark.sql import functions as F
 
-    from open_pulsar_spark.streaming.sequences_stream import (
-        read_extrema,
-        start_sequences_stream,
-        update_sequences,
-    )
+    from open_pulsar_spark.streaming.sequences_stream import SEQUENCES
     from open_pulsar_spark.tables import load_table
     from tests.conftest import SF_SMALL
 
@@ -2276,7 +2194,7 @@ def test_sequences_stream_runs_as_real_streaming_query(spark, workdir):
     ev.where(F.col("event_id") % 2 == 0).coalesce(1).write.mode("append").parquet(src)
     ev.where(F.col("event_id") % 2 == 1).coalesce(1).write.mode("append").parquet(src)
     store = f"{workdir}/seq_live"
-    q = start_sequences_stream(
+    q = SEQUENCES.start(
         spark,
         spark.readStream.schema(
             "event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING"
@@ -2290,9 +2208,9 @@ def test_sequences_stream_runs_as_real_streaming_query(spark, workdir):
     q.processAllAvailable()
     q.stop()
     ref = f"{workdir}/seq_ref"
-    update_sequences(spark, ev, ref, 0)
-    got = sorted(tuple(r) for r in read_extrema(spark, store).collect())
-    want = sorted(tuple(r) for r in read_extrema(spark, ref).collect())
+    SEQUENCES.update(spark, ev, ref, 0)
+    got = sorted(tuple(r) for r in SEQUENCES.read(spark, store).collect())
+    want = sorted(tuple(r) for r in SEQUENCES.read(spark, ref).collect())
     assert got == want
 
 
@@ -2305,8 +2223,8 @@ def test_quantile_stream_folds_to_batch_estimates(spark, workdir):
 
     from open_pulsar_spark.registry import all_queries
     from open_pulsar_spark.streaming.quantile_stream import (
+        QUANTILE,
         quantile_readout,
-        update_quantile,
     )
     from open_pulsar_spark.tables import load_table
     from tests.conftest import SF_SMALL
@@ -2314,7 +2232,7 @@ def test_quantile_stream_folds_to_batch_estimates(spark, workdir):
     ev = load_table(spark, SF_SMALL, "events")
     store = f"{workdir}/q_store"
     for k in range(3):
-        update_quantile(spark, ev.where(F.col("event_id") % 3 == k), store, k)
+        QUANTILE.update(spark, ev.where(F.col("event_id") % 3 == k), store, k)
 
     want = [
         (r.p, r.est)
@@ -2326,22 +2244,18 @@ def test_quantile_stream_folds_to_batch_estimates(spark, workdir):
     got = [tuple(r) for r in quantile_readout(spark, store).collect()]
     assert got == want
 
-    update_quantile(spark, ev.where(F.col("event_id") % 3 == 0), store, 0)
-    update_quantile(spark, ev.where(F.col("event_id") % 3 == 1), store, None)
+    QUANTILE.update(spark, ev.where(F.col("event_id") % 3 == 0), store, 0)
+    QUANTILE.update(spark, ev.where(F.col("event_id") % 3 == 1), store, None)
     assert [tuple(r) for r in quantile_readout(spark, store).collect()] == want
 
 
 def test_quantile_stream_runs_as_real_streaming_query(spark, workdir):
-    """start_quantile_stream as an actual Structured Streaming query:
+    """QUANTILE.start as an actual Structured Streaming query:
     after processAllAvailable the folded sample equals the one-shot
     batch fold, and forced auto-compaction leaves it unchanged."""
     from pyspark.sql import functions as F
 
-    from open_pulsar_spark.streaming.quantile_stream import (
-        read_sample,
-        start_quantile_stream,
-        update_quantile,
-    )
+    from open_pulsar_spark.streaming.quantile_stream import QUANTILE
     from open_pulsar_spark.tables import load_table
     from tests.conftest import SF_SMALL
 
@@ -2352,7 +2266,7 @@ def test_quantile_stream_runs_as_real_streaming_query(spark, workdir):
     ev.where(F.col("event_id") % 2 == 0).coalesce(1).write.mode("append").parquet(src)
     ev.where(F.col("event_id") % 2 == 1).coalesce(1).write.mode("append").parquet(src)
     store = f"{workdir}/q_live"
-    q = start_quantile_stream(
+    q = QUANTILE.start(
         spark,
         spark.readStream.schema(
             "event_id LONG, ts TIMESTAMP, user_id LONG,"
@@ -2367,9 +2281,9 @@ def test_quantile_stream_runs_as_real_streaming_query(spark, workdir):
     q.processAllAvailable()
     q.stop()
     ref = f"{workdir}/q_ref"
-    update_quantile(spark, ev, ref, 0)
-    got = sorted(tuple(r) for r in read_sample(spark, store).collect())
-    want = sorted(tuple(r) for r in read_sample(spark, ref).collect())
+    QUANTILE.update(spark, ev, ref, 0)
+    got = sorted(tuple(r) for r in QUANTILE.read(spark, store).collect())
+    want = sorted(tuple(r) for r in QUANTILE.read(spark, ref).collect())
     assert got == want
 
 
@@ -2381,28 +2295,24 @@ def test_bloom_stream_folds_to_batch_filter(spark, workdir):
     from pyspark.sql import functions as F
 
     from open_pulsar_spark.operators.sketch import bloom_rows, source_shingles
-    from open_pulsar_spark.streaming.bloom_stream import (
-        bloom_membership,
-        read_bloom,
-        update_bloom,
-    )
+    from open_pulsar_spark.streaming.bloom_stream import BLOOM, bloom_membership
     from open_pulsar_spark.tables import load_table
     from tests.conftest import SF_SMALL
 
     docs = load_table(spark, SF_SMALL, "documents")
     store = f"{workdir}/bloom_store"
     for k in range(3):
-        update_bloom(spark, docs.where(F.col("doc_id") % 3 == k), store, k)
+        BLOOM.update(spark, docs.where(F.col("doc_id") % 3 == k), store, k)
 
     want = sorted(
         tuple(r) for r in bloom_rows(source_shingles(docs)).collect()
     )
-    got = sorted(tuple(r) for r in read_bloom(spark, store).collect())
+    got = sorted(tuple(r) for r in BLOOM.read(spark, store).collect())
     assert got == want
 
-    update_bloom(spark, docs.where(F.col("doc_id") % 3 == 0), store, 0)
-    update_bloom(spark, docs.where(F.col("doc_id") % 3 == 1), store, None)
-    assert sorted(tuple(r) for r in read_bloom(spark, store).collect()) == want
+    BLOOM.update(spark, docs.where(F.col("doc_id") % 3 == 0), store, 0)
+    BLOOM.update(spark, docs.where(F.col("doc_id") % 3 == 1), store, None)
+    assert sorted(tuple(r) for r in BLOOM.read(spark, store).collect()) == want
 
     # membership: a real shingle of some source is may_contain=true for
     # that source; a nonsense item is false for every source (no false
@@ -2419,16 +2329,12 @@ def test_bloom_stream_folds_to_batch_filter(spark, workdir):
 
 
 def test_bloom_stream_runs_as_real_streaming_query(spark, workdir):
-    """start_bloom_stream as an actual Structured Streaming query:
+    """BLOOM.start as an actual Structured Streaming query:
     after processAllAvailable the folded filters equal the one-shot
     batch fold, and forced auto-compaction leaves them unchanged."""
     from pyspark.sql import functions as F
 
-    from open_pulsar_spark.streaming.bloom_stream import (
-        read_bloom,
-        start_bloom_stream,
-        update_bloom,
-    )
+    from open_pulsar_spark.streaming.bloom_stream import BLOOM
     from open_pulsar_spark.tables import load_table
     from tests.conftest import SF_SMALL
 
@@ -2439,7 +2345,7 @@ def test_bloom_stream_runs_as_real_streaming_query(spark, workdir):
     docs.where(F.col("doc_id") % 2 == 0).coalesce(1).write.mode("append").parquet(src)
     docs.where(F.col("doc_id") % 2 == 1).coalesce(1).write.mode("append").parquet(src)
     store = f"{workdir}/bloom_live"
-    q = start_bloom_stream(
+    q = BLOOM.start(
         spark,
         spark.readStream.schema("doc_id LONG, source STRING, text STRING")
         .option("maxFilesPerTrigger", 1)
@@ -2451,9 +2357,9 @@ def test_bloom_stream_runs_as_real_streaming_query(spark, workdir):
     q.processAllAvailable()
     q.stop()
     ref = f"{workdir}/bloom_ref"
-    update_bloom(spark, docs, ref, 0)
-    got = sorted(tuple(r) for r in read_bloom(spark, store).collect())
-    want = sorted(tuple(r) for r in read_bloom(spark, ref).collect())
+    BLOOM.update(spark, docs, ref, 0)
+    got = sorted(tuple(r) for r in BLOOM.read(spark, store).collect())
+    want = sorted(tuple(r) for r in BLOOM.read(spark, ref).collect())
     assert got == want
 
 
@@ -2466,10 +2372,7 @@ def test_scd2_stream_folds_to_batch_history(spark, workdir):
     from pyspark.sql import functions as F
 
     from open_pulsar_spark.registry import all_queries
-    from open_pulsar_spark.streaming.scd2_stream import (
-        scd2_readout,
-        update_scd2,
-    )
+    from open_pulsar_spark.streaming.scd2_stream import SCD2, scd2_readout
     from open_pulsar_spark.tables import load_table
     from tests.conftest import SF_SMALL
 
@@ -2478,7 +2381,7 @@ def test_scd2_stream_folds_to_batch_history(spark, workdir):
     # split by orderkey so one customer's versions span epochs: the
     # interval between two versions only closes once BOTH have arrived
     for k in range(3):
-        update_scd2(spark, orders.where(F.col("o_orderkey") % 3 == k), store, k)
+        SCD2.update(spark, orders.where(F.col("o_orderkey") % 3 == k), store, k)
 
     want = [
         tuple(r)
@@ -2489,23 +2392,19 @@ def test_scd2_stream_folds_to_batch_history(spark, workdir):
     # the cross-epoch property actually bit: some closed window exists
     assert any(r[3] is not None for r in got)
 
-    update_scd2(spark, orders.where(F.col("o_orderkey") % 3 == 0), store, 0)
-    update_scd2(spark, orders.where(F.col("o_orderkey") % 3 == 1), store, None)
+    SCD2.update(spark, orders.where(F.col("o_orderkey") % 3 == 0), store, 0)
+    SCD2.update(spark, orders.where(F.col("o_orderkey") % 3 == 1), store, None)
     assert [tuple(r) for r in scd2_readout(spark, store).collect()] == want
 
 
 def test_scd2_stream_runs_as_real_streaming_query(spark, workdir):
-    """start_scd2_stream as an actual Structured Streaming query: the
+    """SCD2.start as an actual Structured Streaming query: the
     folded change log equals the one-shot batch fold, and forced
     auto-compaction leaves it unchanged (full-row dedup keys make
     compaction purely physical)."""
     from pyspark.sql import functions as F
 
-    from open_pulsar_spark.streaming.scd2_stream import (
-        read_changes,
-        start_scd2_stream,
-        update_scd2,
-    )
+    from open_pulsar_spark.streaming.scd2_stream import SCD2
     from open_pulsar_spark.tables import load_table
     from tests.conftest import SF_SMALL
 
@@ -2520,7 +2419,7 @@ def test_scd2_stream_runs_as_real_streaming_query(spark, workdir):
         "append"
     ).parquet(src)
     store = f"{workdir}/scd2_live"
-    q = start_scd2_stream(
+    q = SCD2.start(
         spark,
         spark.readStream.schema(
             "o_orderkey LONG, o_custkey LONG, o_orderdate TIMESTAMP"
@@ -2534,9 +2433,9 @@ def test_scd2_stream_runs_as_real_streaming_query(spark, workdir):
     q.processAllAvailable()
     q.stop()
     ref = f"{workdir}/scd2_ref"
-    update_scd2(spark, orders, ref, 0)
-    got = sorted(tuple(r) for r in read_changes(spark, store).collect())
-    want = sorted(tuple(r) for r in read_changes(spark, ref).collect())
+    SCD2.update(spark, orders, ref, 0)
+    got = sorted(tuple(r) for r in SCD2.read(spark, store).collect())
+    want = sorted(tuple(r) for r in SCD2.read(spark, ref).collect())
     assert got == want
 
 
@@ -2550,17 +2449,14 @@ def test_stats_stream_folds_to_batch_estimates(spark, workdir):
     from pyspark.sql import functions as F
 
     from open_pulsar_spark.registry import all_queries
-    from open_pulsar_spark.streaming.stats_stream import (
-        stats_readout,
-        update_stats,
-    )
+    from open_pulsar_spark.streaming.stats_stream import STATS, stats_readout
     from open_pulsar_spark.tables import load_table
     from tests.conftest import SF_SMALL
 
     ev = load_table(spark, SF_SMALL, "events")
     store = f"{workdir}/stats_store"
     for k in range(3):
-        update_stats(spark, ev.where(F.col("event_id") % 3 == k), store, k)
+        STATS.update(spark, ev.where(F.col("event_id") % 3 == k), store, k)
 
     want = [
         tuple(r)
@@ -2569,25 +2465,21 @@ def test_stats_stream_folds_to_batch_estimates(spark, workdir):
     got = [tuple(r) for r in stats_readout(spark, store).collect()]
     assert got == want
 
-    update_stats(spark, ev.where(F.col("event_id") % 3 == 0), store, 0)
+    STATS.update(spark, ev.where(F.col("event_id") % 3 == 0), store, 0)
     assert [tuple(r) for r in stats_readout(spark, store).collect()] == want
 
     with pytest.raises(ValueError):
-        update_stats(spark, ev, store, None)
+        STATS.update(spark, ev, store, None)
 
 
 def test_stats_stream_runs_as_real_streaming_query(spark, workdir):
-    """start_stats_stream as an actual Structured Streaming query: the
+    """STATS.start as an actual Structured Streaming query: the
     folded ledger equals the one-shot batch fold, and forced
     auto-compaction leaves it unchanged (epoch-tagged rows keep the
     dedup-before-sum read double-count-safe through the window)."""
     from pyspark.sql import functions as F
 
-    from open_pulsar_spark.streaming.stats_stream import (
-        read_counts,
-        start_stats_stream,
-        update_stats,
-    )
+    from open_pulsar_spark.streaming.stats_stream import STATS
     from open_pulsar_spark.tables import load_table
     from tests.conftest import SF_SMALL
 
@@ -2596,7 +2488,7 @@ def test_stats_stream_runs_as_real_streaming_query(spark, workdir):
     ev.where(F.col("event_id") % 2 == 0).coalesce(1).write.mode("append").parquet(src)
     ev.where(F.col("event_id") % 2 == 1).coalesce(1).write.mode("append").parquet(src)
     store = f"{workdir}/stats_live"
-    q = start_stats_stream(
+    q = STATS.start(
         spark,
         spark.readStream.schema("event_id LONG, user_id LONG")
         .option("maxFilesPerTrigger", 1)
@@ -2608,9 +2500,9 @@ def test_stats_stream_runs_as_real_streaming_query(spark, workdir):
     q.processAllAvailable()
     q.stop()
     ref = f"{workdir}/stats_ref"
-    update_stats(spark, ev, ref, 0)
-    got = sorted(tuple(r) for r in read_counts(spark, store).collect())
-    want = sorted(tuple(r) for r in read_counts(spark, ref).collect())
+    STATS.update(spark, ev, ref, 0)
+    got = sorted(tuple(r) for r in STATS.read(spark, store).collect())
+    want = sorted(tuple(r) for r in STATS.read(spark, ref).collect())
     assert got == want
 
 
@@ -2622,17 +2514,14 @@ def test_cusum_ledger_also_serves_acf_readout(spark, workdir):
     from pyspark.sql import functions as F
 
     from open_pulsar_spark.registry import all_queries
-    from open_pulsar_spark.streaming.cusum_stream import (
-        acf_readout,
-        update_cusum,
-    )
+    from open_pulsar_spark.streaming.cusum_stream import CUSUM, acf_readout
     from open_pulsar_spark.tables import load_table
     from tests.conftest import SF_SMALL
 
     orders = load_table(spark, SF_SMALL, "orders")
     store = f"{workdir}/ledger_store"
     for k in range(3):
-        update_cusum(spark, orders.where(F.col("o_orderkey") % 3 == k), store, k)
+        CUSUM.update(spark, orders.where(F.col("o_orderkey") % 3 == k), store, k)
 
     want = [
         tuple(r) for r in all_queries()["revenue_acf"](spark, SF_SMALL).collect()
@@ -2649,17 +2538,14 @@ def test_cusum_ledger_also_serves_ewma_readout(spark, workdir):
     from pyspark.sql import functions as F
 
     from open_pulsar_spark.registry import all_queries
-    from open_pulsar_spark.streaming.cusum_stream import (
-        ewma_readout,
-        update_cusum,
-    )
+    from open_pulsar_spark.streaming.cusum_stream import CUSUM, ewma_readout
     from open_pulsar_spark.tables import load_table
     from tests.conftest import SF_SMALL
 
     orders = load_table(spark, SF_SMALL, "orders")
     store = f"{workdir}/ledger_store_ewma"
     for k in range(3):
-        update_cusum(spark, orders.where(F.col("o_orderkey") % 3 == k), store, k)
+        CUSUM.update(spark, orders.where(F.col("o_orderkey") % 3 == k), store, k)
 
     want = [
         tuple(r) for r in all_queries()["revenue_ewma"](spark, SF_SMALL).collect()
@@ -2679,17 +2565,14 @@ def test_benford_stream_folds_to_batch_report(spark, workdir):
     from pyspark.sql import functions as F
 
     from open_pulsar_spark.registry import all_queries
-    from open_pulsar_spark.streaming.benford_stream import (
-        benford_readout,
-        update_benford,
-    )
+    from open_pulsar_spark.streaming.benford_stream import BENFORD, benford_readout
     from open_pulsar_spark.tables import load_table
     from tests.conftest import SF_SMALL
 
     orders = load_table(spark, SF_SMALL, "orders")
     store = f"{workdir}/benford_store"
     for k in range(3):
-        update_benford(
+        BENFORD.update(
             spark, orders.where(F.col("o_orderkey") % 3 == k), store, k
         )
 
@@ -2700,15 +2583,15 @@ def test_benford_stream_folds_to_batch_report(spark, workdir):
     got = [tuple(r) for r in benford_readout(spark, store).collect()]
     assert got == want
 
-    update_benford(spark, orders.where(F.col("o_orderkey") % 3 == 0), store, 0)
+    BENFORD.update(spark, orders.where(F.col("o_orderkey") % 3 == 0), store, 0)
     assert [tuple(r) for r in benford_readout(spark, store).collect()] == want
 
     with pytest.raises(ValueError):
-        update_benford(spark, orders, store, None)
+        BENFORD.update(spark, orders, store, None)
 
 
 def test_benford_stream_runs_as_real_streaming_query(spark, workdir):
-    """start_benford_stream as an actual Structured Streaming query:
+    """BENFORD.start as an actual Structured Streaming query:
     the folded digit ledger equals the one-shot batch report over the
     same delivered rows."""
     from pyspark.sql import functions as F
@@ -2717,10 +2600,7 @@ def test_benford_stream_runs_as_real_streaming_query(spark, workdir):
         benford_digit_counts,
         benford_report,
     )
-    from open_pulsar_spark.streaming.benford_stream import (
-        benford_readout,
-        start_benford_stream,
-    )
+    from open_pulsar_spark.streaming.benford_stream import BENFORD, benford_readout
     from open_pulsar_spark.tables import load_table
     from tests.conftest import SF_SMALL
 
@@ -2735,7 +2615,7 @@ def test_benford_stream_runs_as_real_streaming_query(spark, workdir):
         "append"
     ).parquet(src)
     store = f"{workdir}/benford_live"
-    q = start_benford_stream(
+    q = BENFORD.start(
         spark,
         spark.readStream.schema("o_orderkey LONG, o_totalprice DOUBLE")
         .option("maxFilesPerTrigger", 1)
@@ -2876,17 +2756,14 @@ def test_vocab_stream_folds_to_batch_zipf_fit(spark, workdir):
     from pyspark.sql import functions as F
 
     from open_pulsar_spark.registry import all_queries
-    from open_pulsar_spark.streaming.vocab_stream import (
-        update_vocab,
-        zipf_readout,
-    )
+    from open_pulsar_spark.streaming.vocab_stream import VOCAB, zipf_readout
     from open_pulsar_spark.tables import load_table
     from tests.conftest import SF_SMALL
 
     docs = load_table(spark, SF_SMALL, "documents")
     store = f"{workdir}/vocab_store"
     for k in range(3):
-        update_vocab(spark, docs.where(F.col("doc_id") % 3 == k), store, k)
+        VOCAB.update(spark, docs.where(F.col("doc_id") % 3 == k), store, k)
 
     want = [
         tuple(r)
@@ -2895,24 +2772,21 @@ def test_vocab_stream_folds_to_batch_zipf_fit(spark, workdir):
     got = [tuple(r) for r in zipf_readout(spark, store).collect()]
     assert got == want
 
-    update_vocab(spark, docs.where(F.col("doc_id") % 3 == 0), store, 0)
+    VOCAB.update(spark, docs.where(F.col("doc_id") % 3 == 0), store, 0)
     assert [tuple(r) for r in zipf_readout(spark, store).collect()] == want
 
     with pytest.raises(ValueError):
-        update_vocab(spark, docs, store, None)
+        VOCAB.update(spark, docs, store, None)
 
 
 def test_vocab_stream_runs_as_real_streaming_query(spark, workdir):
-    """start_vocab_stream as an actual Structured Streaming query: the
+    """VOCAB.start as an actual Structured Streaming query: the
     folded vocabulary equals the one-shot batch count over the same
     delivered rows."""
     from pyspark.sql import functions as F
 
     from open_pulsar_spark.operators.text import vocab_counts
-    from open_pulsar_spark.streaming.vocab_stream import (
-        read_vocab,
-        start_vocab_stream,
-    )
+    from open_pulsar_spark.streaming.vocab_stream import VOCAB
     from open_pulsar_spark.tables import load_table
     from tests.conftest import SF_SMALL
 
@@ -2925,7 +2799,7 @@ def test_vocab_stream_runs_as_real_streaming_query(spark, workdir):
         "append"
     ).parquet(src)
     store = f"{workdir}/vocab_live"
-    q = start_vocab_stream(
+    q = VOCAB.start(
         spark,
         spark.readStream.schema("doc_id LONG, text STRING")
         .option("maxFilesPerTrigger", 1)
@@ -2938,7 +2812,7 @@ def test_vocab_stream_runs_as_real_streaming_query(spark, workdir):
     want = sorted(
         tuple(r) for r in vocab_counts(docs).collect()
     )
-    got = sorted(tuple(r) for r in read_vocab(spark, store).collect())
+    got = sorted(tuple(r) for r in VOCAB.read(spark, store).collect())
     assert got == want
 
 
@@ -2952,9 +2826,9 @@ def test_winnow_stream_folds_to_batch_overlap_pairs(spark, workdir):
 
     from open_pulsar_spark.registry import all_queries
     from open_pulsar_spark.streaming.winnow_stream import (
+        WINNOW,
         batch_overlaps_vs_history,
         overlap_pairs_readout,
-        update_winnow_index,
     )
     from open_pulsar_spark.tables import load_table
     from tests.conftest import SF_SMALL
@@ -2962,7 +2836,7 @@ def test_winnow_stream_folds_to_batch_overlap_pairs(spark, workdir):
     docs = load_table(spark, SF_SMALL, "documents").select("doc_id", "text")
     store = f"{workdir}/winnow_store"
     for k in range(3):
-        update_winnow_index(
+        WINNOW.update(
             spark, docs.where(F.col("doc_id") % 3 == k), store, k
         )
 
@@ -2975,7 +2849,7 @@ def test_winnow_stream_folds_to_batch_overlap_pairs(spark, workdir):
     got = [tuple(r) for r in overlap_pairs_readout(spark, store).collect()]
     assert got == want and len(want) > 0
 
-    update_winnow_index(spark, docs.where(F.col("doc_id") % 3 == 0), store, 0)
+    WINNOW.update(spark, docs.where(F.col("doc_id") % 3 == 0), store, 0)
     assert [
         tuple(r) for r in overlap_pairs_readout(spark, store).collect()
     ] == want
@@ -3000,9 +2874,9 @@ def test_psi_stream_matches_batch_closing_bit_for_bit(spark, workdir):
 
     from open_pulsar_spark.registry import all_queries
     from open_pulsar_spark.streaming.psi_stream import (
+        PSI,
         freeze_baseline,
         psi_readout,
-        update_psi,
     )
     from open_pulsar_spark.tables import load_table
     from tests.conftest import SF_SMALL
@@ -3021,7 +2895,7 @@ def test_psi_stream_matches_batch_closing_bit_for_bit(spark, workdir):
 
     cur = cur.withColumn("rnd", F.col("value") * 1000)
     for k in range(3):
-        update_psi(
+        PSI.update(
             spark,
             cur.where(F.expr(f"cast(rnd as bigint) % 3 = {k}")),
             store,
@@ -3034,7 +2908,7 @@ def test_psi_stream_matches_batch_closing_bit_for_bit(spark, workdir):
     got = [tuple(r) for r in psi_readout(spark, baseline, store).collect()]
     assert got == want and len(want) > 0
 
-    update_psi(spark, cur.where(F.expr("cast(rnd as bigint) % 3 = 0")), store, 0)
+    PSI.update(spark, cur.where(F.expr("cast(rnd as bigint) % 3 = 0")), store, 0)
     assert [
         tuple(r) for r in psi_readout(spark, baseline, store).collect()
     ] == want
@@ -3049,8 +2923,8 @@ def test_stats_ledger_also_serves_partition_plan(spark, workdir):
 
     from open_pulsar_spark.registry import all_queries
     from open_pulsar_spark.streaming.stats_stream import (
+        STATS,
         partition_plan_readout,
-        update_stats,
     )
     from open_pulsar_spark.tables import load_table
     from tests.conftest import SF_SMALL
@@ -3058,7 +2932,7 @@ def test_stats_ledger_also_serves_partition_plan(spark, workdir):
     ev = load_table(spark, SF_SMALL, "events")
     store = f"{workdir}/stats_store_plan"
     for k in range(3):
-        update_stats(spark, ev.where(F.col("event_id") % 3 == k), store, k)
+        STATS.update(spark, ev.where(F.col("event_id") % 3 == k), store, k)
 
     want = [
         tuple(r)
@@ -3080,8 +2954,8 @@ def test_sequential_stream_folds_to_batch_monitor(spark, workdir):
 
     from open_pulsar_spark.registry import all_queries
     from open_pulsar_spark.streaming.sequential_stream import (
+        SEQUENTIAL,
         monitor_readout,
-        update_experiment,
     )
     from open_pulsar_spark.tables import load_table
     from tests.conftest import SF_SMALL
@@ -3089,7 +2963,7 @@ def test_sequential_stream_folds_to_batch_monitor(spark, workdir):
     ev = load_table(spark, SF_SMALL, "events")
     store = f"{workdir}/exp_store"
     for k in range(3):
-        update_experiment(
+        SEQUENTIAL.update(
             spark, ev.where(F.col("event_id") % 3 == k), store, k
         )
 
@@ -3100,11 +2974,11 @@ def test_sequential_stream_folds_to_batch_monitor(spark, workdir):
     got = [tuple(r) for r in monitor_readout(spark, store).collect()]
     assert got == want and len(want) > 0
 
-    update_experiment(spark, ev.where(F.col("event_id") % 3 == 0), store, 0)
+    SEQUENTIAL.update(spark, ev.where(F.col("event_id") % 3 == 0), store, 0)
     assert [tuple(r) for r in monitor_readout(spark, store).collect()] == want
 
     with pytest.raises(ValueError):
-        update_experiment(spark, ev, store, None)
+        SEQUENTIAL.update(spark, ev, store, None)
 
 
 def test_kanon_stream_folds_to_batch_audit(spark, workdir):
@@ -3118,17 +2992,14 @@ def test_kanon_stream_folds_to_batch_audit(spark, workdir):
     from pyspark.sql import functions as F
 
     from open_pulsar_spark.registry import all_queries
-    from open_pulsar_spark.streaming.kanon_stream import (
-        kanon_readout,
-        update_kanon,
-    )
+    from open_pulsar_spark.streaming.kanon_stream import KANON, kanon_readout
     from open_pulsar_spark.tables import load_table
     from tests.conftest import SF_SMALL
 
     cust = load_table(spark, SF_SMALL, "customer")
     store = f"{workdir}/kanon_store"
     for k in range(3):
-        update_kanon(spark, cust.where(F.col("c_custkey") % 3 == k), store, k)
+        KANON.update(spark, cust.where(F.col("c_custkey") % 3 == k), store, k)
 
     want = [
         tuple(r)
@@ -3139,11 +3010,11 @@ def test_kanon_stream_folds_to_batch_audit(spark, workdir):
     got = [tuple(r) for r in kanon_readout(spark, store).collect()]
     assert got == want
 
-    update_kanon(spark, cust.where(F.col("c_custkey") % 3 == 0), store, 0)
+    KANON.update(spark, cust.where(F.col("c_custkey") % 3 == 0), store, 0)
     assert [tuple(r) for r in kanon_readout(spark, store).collect()] == want
 
     with pytest.raises(ValueError):
-        update_kanon(spark, cust, store, None)
+        KANON.update(spark, cust, store, None)
 
 
 def test_ldiv_stream_folds_to_batch_audit(spark, workdir):
@@ -3156,17 +3027,14 @@ def test_ldiv_stream_folds_to_batch_audit(spark, workdir):
     from pyspark.sql import functions as F
 
     from open_pulsar_spark.registry import all_queries
-    from open_pulsar_spark.streaming.kanon_stream import (
-        ldiv_readout,
-        update_ldiv,
-    )
+    from open_pulsar_spark.streaming.kanon_stream import LDIV, ldiv_readout
     from open_pulsar_spark.tables import load_table
     from tests.conftest import SF_SMALL
 
     cust = load_table(spark, SF_SMALL, "customer")
     store = f"{workdir}/ldiv_store"
     for k in range(3):
-        update_ldiv(spark, cust.where(F.col("c_custkey") % 3 == k), store, k)
+        LDIV.update(spark, cust.where(F.col("c_custkey") % 3 == k), store, k)
 
     want = [
         tuple(r)
@@ -3177,25 +3045,21 @@ def test_ldiv_stream_folds_to_batch_audit(spark, workdir):
     got = [tuple(r) for r in ldiv_readout(spark, store).collect()]
     assert got == want and len(want) > 0
 
-    update_ldiv(spark, cust.where(F.col("c_custkey") % 3 == 0), store, 0)
+    LDIV.update(spark, cust.where(F.col("c_custkey") % 3 == 0), store, 0)
     assert [tuple(r) for r in ldiv_readout(spark, store).collect()] == want
 
     with pytest.raises(ValueError):
-        update_ldiv(spark, cust, store, None)
+        LDIV.update(spark, cust, store, None)
 
 
 def test_kanon_stream_runs_as_real_streaming_query(spark, workdir):
-    """start_kanon_stream as an actual Structured Streaming query: the
+    """KANON.start as an actual Structured Streaming query: the
     folded class-size ledger equals the one-shot batch fold, and forced
     auto-compaction leaves it unchanged (epoch-tagged rows keep the
     dedup-before-sum read double-count-safe through the window)."""
     from pyspark.sql import functions as F
 
-    from open_pulsar_spark.streaming.kanon_stream import (
-        read_class_sizes,
-        start_kanon_stream,
-        update_kanon,
-    )
+    from open_pulsar_spark.streaming.kanon_stream import KANON
     from open_pulsar_spark.tables import load_table
     from tests.conftest import SF_SMALL
 
@@ -3210,7 +3074,7 @@ def test_kanon_stream_runs_as_real_streaming_query(spark, workdir):
         "append"
     ).parquet(src)
     store = f"{workdir}/kanon_live"
-    q = start_kanon_stream(
+    q = KANON.start(
         spark,
         spark.readStream.schema(
             "c_custkey LONG, c_nationkey INT, c_mktsegment STRING"
@@ -3224,9 +3088,9 @@ def test_kanon_stream_runs_as_real_streaming_query(spark, workdir):
     q.processAllAvailable()
     q.stop()
     ref = f"{workdir}/kanon_ref"
-    update_kanon(spark, cust, ref, 0)
-    got = sorted(tuple(r) for r in read_class_sizes(spark, store).collect())
-    want = sorted(tuple(r) for r in read_class_sizes(spark, ref).collect())
+    KANON.update(spark, cust, ref, 0)
+    got = sorted(tuple(r) for r in KANON.read(spark, store).collect())
+    want = sorted(tuple(r) for r in KANON.read(spark, ref).collect())
     assert got == want
 
 
@@ -3239,17 +3103,14 @@ def test_cusum_ledger_also_serves_bootstrap_readout(spark, workdir):
     from pyspark.sql import functions as F
 
     from open_pulsar_spark.registry import all_queries
-    from open_pulsar_spark.streaming.cusum_stream import (
-        bootstrap_readout,
-        update_cusum,
-    )
+    from open_pulsar_spark.streaming.cusum_stream import CUSUM, bootstrap_readout
     from open_pulsar_spark.tables import load_table
     from tests.conftest import SF_SMALL
 
     orders = load_table(spark, SF_SMALL, "orders")
     store = f"{workdir}/boot_ledger"
     for k in range(3):
-        update_cusum(
+        CUSUM.update(
             spark, orders.where(F.col("o_orderkey") % 3 == k), store, k
         )
 
@@ -3276,17 +3137,14 @@ def test_cusum_ledger_also_serves_conformal_readout(spark, workdir):
         conformal_from_daily,
         daily_revenue_cents,
     )
-    from open_pulsar_spark.streaming.cusum_stream import (
-        conformal_readout,
-        update_cusum,
-    )
+    from open_pulsar_spark.streaming.cusum_stream import CUSUM, conformal_readout
     from open_pulsar_spark.tables import load_table
     from tests.conftest import SF_SMALL
 
     orders = load_table(spark, SF_SMALL, "orders")
     store = f"{workdir}/conf_ledger"
     for k in range(3):
-        update_cusum(
+        CUSUM.update(
             spark, orders.where(F.col("o_orderkey") % 3 == k), store, k
         )
 
@@ -3314,17 +3172,14 @@ def test_cusum_ledger_also_serves_holt_readout(spark, workdir):
     from pyspark.sql import functions as F
 
     from open_pulsar_spark.registry import all_queries
-    from open_pulsar_spark.streaming.cusum_stream import (
-        holt_readout,
-        update_cusum,
-    )
+    from open_pulsar_spark.streaming.cusum_stream import CUSUM, holt_readout
     from open_pulsar_spark.tables import load_table
     from tests.conftest import SF_SMALL
 
     orders = load_table(spark, SF_SMALL, "orders")
     store = f"{workdir}/holt_ledger"
     for k in range(3):
-        update_cusum(
+        CUSUM.update(
             spark, orders.where(F.col("o_orderkey") % 3 == k), store, k
         )
 
@@ -3348,17 +3203,14 @@ def test_bm25_stream_folds_to_batch_ranking(spark, workdir):
     from pyspark.sql import functions as F
 
     from open_pulsar_spark.registry import all_queries
-    from open_pulsar_spark.streaming.bm25_stream import (
-        bm25_readout,
-        update_bm25,
-    )
+    from open_pulsar_spark.streaming.bm25_stream import BM25, bm25_readout
     from open_pulsar_spark.tables import load_table
     from tests.conftest import SF_SMALL
 
     docs = load_table(spark, SF_SMALL, "documents").select("doc_id", "text")
     store = f"{workdir}/bm25_store"
     for k in range(3):
-        update_bm25(spark, docs.where(F.col("doc_id") % 3 == k), store, k)
+        BM25.update(spark, docs.where(F.col("doc_id") % 3 == k), store, k)
 
     want = [
         tuple(r) for r in all_queries()["bm25_topk"](spark, SF_SMALL).collect()
@@ -3366,11 +3218,11 @@ def test_bm25_stream_folds_to_batch_ranking(spark, workdir):
     got = [tuple(r) for r in bm25_readout(spark, store).collect()]
     assert got == want
 
-    update_bm25(spark, docs.where(F.col("doc_id") % 3 == 0), store, 0)
+    BM25.update(spark, docs.where(F.col("doc_id") % 3 == 0), store, 0)
     assert [tuple(r) for r in bm25_readout(spark, store).collect()] == want
 
     with pytest.raises(ValueError):
-        update_bm25(spark, docs, store, None)
+        BM25.update(spark, docs, store, None)
 
 
 def test_lww_store_resolves_by_epoch_and_tolerates_replay(spark, workdir):
@@ -3489,17 +3341,14 @@ def test_active_stream_folds_to_batch_dashboard(spark, workdir):
     from pyspark.sql import functions as F
 
     from open_pulsar_spark.registry import all_queries
-    from open_pulsar_spark.streaming.active_stream import (
-        dau_readout,
-        update_active,
-    )
+    from open_pulsar_spark.streaming.active_stream import ACTIVE, dau_readout
     from open_pulsar_spark.tables import load_table
     from tests.conftest import SF_SMALL
 
     ev = load_table(spark, SF_SMALL, "events")
     store = f"{workdir}/active_store"
     for k in range(3):
-        update_active(spark, ev.where(F.col("event_id") % 3 == k), store, k)
+        ACTIVE.update(spark, ev.where(F.col("event_id") % 3 == k), store, k)
 
     want = [
         tuple(r)
@@ -3509,8 +3358,8 @@ def test_active_stream_folds_to_batch_dashboard(spark, workdir):
     assert got == want
 
     # replay + an epoch-less duplicate backfill: both no-ops here
-    update_active(spark, ev.where(F.col("event_id") % 3 == 0), store, 0)
-    update_active(spark, ev.where(F.col("event_id") % 5 == 0), store, None)
+    ACTIVE.update(spark, ev.where(F.col("event_id") % 3 == 0), store, 0)
+    ACTIVE.update(spark, ev.where(F.col("event_id") % 5 == 0), store, None)
     assert [tuple(r) for r in dau_readout(spark, store).collect()] == want
 
 
@@ -3604,17 +3453,14 @@ def test_active_stream_growth_readout_matches_batch(spark, workdir):
     from pyspark.sql import functions as F
 
     from open_pulsar_spark.registry import all_queries
-    from open_pulsar_spark.streaming.active_stream import (
-        growth_readout,
-        update_active,
-    )
+    from open_pulsar_spark.streaming.active_stream import ACTIVE, growth_readout
     from open_pulsar_spark.tables import load_table
     from tests.conftest import SF_SMALL
 
     ev = load_table(spark, SF_SMALL, "events")
     store = f"{workdir}/growth_store"
     for k in range(3):
-        update_active(spark, ev.where(F.col("event_id") % 3 == k), store, k)
+        ACTIVE.update(spark, ev.where(F.col("event_id") % 3 == k), store, k)
 
     want = [
         tuple(r)
@@ -3625,8 +3471,8 @@ def test_active_stream_growth_readout_matches_batch(spark, workdir):
     got = [tuple(r) for r in growth_readout(spark, store).collect()]
     assert got == want
 
-    update_active(spark, ev.where(F.col("event_id") % 3 == 1), store, 1)
-    update_active(spark, ev.where(F.col("event_id") % 7 == 0), store, None)
+    ACTIVE.update(spark, ev.where(F.col("event_id") % 3 == 1), store, 1)
+    ACTIVE.update(spark, ev.where(F.col("event_id") % 7 == 0), store, None)
     assert [
         tuple(r) for r in growth_readout(spark, store).collect()
     ] == want
@@ -3643,17 +3489,14 @@ def test_pchart_stream_folds_to_batch_chart(spark, workdir):
     from pyspark.sql import functions as F
 
     from open_pulsar_spark.registry import all_queries
-    from open_pulsar_spark.streaming.pchart_stream import (
-        pchart_readout,
-        update_pchart,
-    )
+    from open_pulsar_spark.streaming.pchart_stream import PCHART, pchart_readout
     from open_pulsar_spark.tables import load_table
     from tests.conftest import SF_SMALL
 
     ev = load_table(spark, SF_SMALL, "events")
     store = f"{workdir}/pchart_store"
     for k in range(3):
-        update_pchart(spark, ev.where(F.col("event_id") % 3 == k), store, k)
+        PCHART.update(spark, ev.where(F.col("event_id") % 3 == k), store, k)
 
     want = [
         tuple(r)
@@ -3662,11 +3505,11 @@ def test_pchart_stream_folds_to_batch_chart(spark, workdir):
     got = [tuple(r) for r in pchart_readout(spark, store).collect()]
     assert got == want
 
-    update_pchart(spark, ev.where(F.col("event_id") % 3 == 2), store, 2)
+    PCHART.update(spark, ev.where(F.col("event_id") % 3 == 2), store, 2)
     assert [tuple(r) for r in pchart_readout(spark, store).collect()] == want
 
     with pytest.raises(ValueError, match="additive"):
-        update_pchart(spark, ev, store, None)
+        PCHART.update(spark, ev, store, None)
 
 
 def test_backlog_stream_folds_to_batch_curve(spark, workdir):
@@ -3682,16 +3525,13 @@ def test_backlog_stream_folds_to_batch_curve(spark, workdir):
 
     from open_pulsar_spark.operators.analytics import order_spans
     from open_pulsar_spark.registry import all_queries
-    from open_pulsar_spark.streaming.backlog_stream import (
-        backlog_readout,
-        update_backlog,
-    )
+    from open_pulsar_spark.streaming.backlog_stream import BACKLOG, backlog_readout
     from tests.conftest import SF_SMALL
 
     spans = order_spans(spark, SF_SMALL)
     store = f"{workdir}/backlog_store"
     for k in range(3):
-        update_backlog(
+        BACKLOG.update(
             spark, spans.where(F.col("o_orderkey") % 3 == k), store, k
         )
 
@@ -3705,13 +3545,13 @@ def test_backlog_stream_folds_to_batch_curve(spark, workdir):
     got = [tuple(r) for r in backlog_readout(spark, store).collect()]
     assert got == want
 
-    update_backlog(
+    BACKLOG.update(
         spark, spans.where(F.col("o_orderkey") % 3 == 2), store, 2
     )
     assert [tuple(r) for r in backlog_readout(spark, store).collect()] == want
 
     with pytest.raises(ValueError, match="additive"):
-        update_backlog(spark, spans, store, None)
+        BACKLOG.update(spark, spans, store, None)
 
 
 def test_fano_stream_folds_to_batch_dispersion(spark, workdir):
@@ -3725,17 +3565,14 @@ def test_fano_stream_folds_to_batch_dispersion(spark, workdir):
     from pyspark.sql import functions as F
 
     from open_pulsar_spark.registry import all_queries
-    from open_pulsar_spark.streaming.fano_stream import (
-        fano_readout,
-        update_fano,
-    )
+    from open_pulsar_spark.streaming.fano_stream import FANO, fano_readout
     from open_pulsar_spark.tables import load_table
     from tests.conftest import SF_SMALL
 
     ev = load_table(spark, SF_SMALL, "events")
     store = f"{workdir}/fano_store"
     for k in range(3):
-        update_fano(spark, ev.where(F.col("event_id") % 3 == k), store, k)
+        FANO.update(spark, ev.where(F.col("event_id") % 3 == k), store, k)
 
     want = [
         tuple(r)
@@ -3747,7 +3584,7 @@ def test_fano_stream_folds_to_batch_dispersion(spark, workdir):
     got = [tuple(r) for r in fano_readout(spark, store).collect()]
     assert got == want
 
-    update_fano(spark, ev.where(F.col("event_id") % 3 == 2), store, 2)
+    FANO.update(spark, ev.where(F.col("event_id") % 3 == 2), store, 2)
     assert [tuple(r) for r in fano_readout(spark, store).collect()] == want
 
     # SECOND readout off the SAME ledger (one ledger, two readouts):
@@ -3764,7 +3601,7 @@ def test_fano_stream_folds_to_batch_dispersion(spark, workdir):
     assert [tuple(r) for r in mix_readout(spark, store).collect()] == want_mix
 
     with pytest.raises(ValueError, match="additive"):
-        update_fano(spark, ev, store, None)
+        FANO.update(spark, ev, store, None)
 
 
 def test_trade_stream_folds_to_batch_matrix(spark, workdir):
@@ -3780,16 +3617,13 @@ def test_trade_stream_folds_to_batch_matrix(spark, workdir):
 
     from open_pulsar_spark.operators.analytics import attributed_trade_lines
     from open_pulsar_spark.registry import all_queries
-    from open_pulsar_spark.streaming.trade_stream import (
-        trade_readout,
-        update_trade,
-    )
+    from open_pulsar_spark.streaming.trade_stream import TRADE, trade_readout
     from tests.conftest import SF_SMALL
 
     lines = attributed_trade_lines(spark, SF_SMALL)
     store = f"{workdir}/trade_store"
     for k in range(3):
-        update_trade(
+        TRADE.update(
             spark, lines.where(F.col("l_orderkey") % 3 == k), store, k
         )
 
@@ -3803,13 +3637,13 @@ def test_trade_stream_folds_to_batch_matrix(spark, workdir):
     got = [tuple(r) for r in trade_readout(spark, store).collect()]
     assert got == want
 
-    update_trade(
+    TRADE.update(
         spark, lines.where(F.col("l_orderkey") % 3 == 2), store, 2
     )
     assert [tuple(r) for r in trade_readout(spark, store).collect()] == want
 
     with pytest.raises(ValueError, match="additive"):
-        update_trade(spark, lines, store, None)
+        TRADE.update(spark, lines, store, None)
 
 
 def test_risk_stream_folds_to_batch_tail_risk(spark, workdir):
@@ -3825,10 +3659,7 @@ def test_risk_stream_folds_to_batch_tail_risk(spark, workdir):
     from pyspark.sql import functions as F
 
     from open_pulsar_spark.registry import all_queries
-    from open_pulsar_spark.streaming.risk_stream import (
-        risk_readout,
-        update_risk,
-    )
+    from open_pulsar_spark.streaming.risk_stream import RISK, risk_readout
     from open_pulsar_spark.tables import load_table
     from tests.conftest import SF_SMALL
 
@@ -3840,7 +3671,7 @@ def test_risk_stream_folds_to_batch_tail_risk(spark, workdir):
 
     ev = load_table(spark, SF_SMALL, "events")
     for k in range(3):
-        update_risk(spark, ev.where(F.col("event_id") % 3 == k), store, k)
+        RISK.update(spark, ev.where(F.col("event_id") % 3 == k), store, k)
 
     want = [
         tuple(r)
@@ -3853,11 +3684,11 @@ def test_risk_stream_folds_to_batch_tail_risk(spark, workdir):
     assert got == want
 
     # replaying a committed epoch is a no-op (segment overwrite)
-    update_risk(spark, ev.where(F.col("event_id") % 3 == 2), store, 2)
+    RISK.update(spark, ev.where(F.col("event_id") % 3 == 2), store, 2)
     assert [tuple(r) for r in risk_readout(spark, store).collect()] == want
 
     with pytest.raises(ValueError, match="additive"):
-        update_risk(spark, ev, store, None)
+        RISK.update(spark, ev, store, None)
 
 
 def test_lag_stream_folds_to_batch_quantiles(spark, workdir):
@@ -3872,10 +3703,7 @@ def test_lag_stream_folds_to_batch_quantiles(spark, workdir):
     from pyspark.sql import functions as F
 
     from open_pulsar_spark.registry import all_queries
-    from open_pulsar_spark.streaming.lag_stream import (
-        lag_readout,
-        update_lag,
-    )
+    from open_pulsar_spark.streaming.lag_stream import LAG, lag_readout
     from open_pulsar_spark.tables import load_table
     from tests.conftest import SF_SMALL
 
@@ -3891,7 +3719,7 @@ def test_lag_stream_folds_to_batch_quantiles(spark, workdir):
     # split by EVENT TYPE as well as id so a user's view and purchase
     # land in different epochs — the min-merge must reunite them
     for k in range(3):
-        update_lag(spark, ev.where(F.col("event_id") % 3 == k), store, k)
+        LAG.update(spark, ev.where(F.col("event_id") % 3 == k), store, k)
 
     want = [
         tuple(r)
@@ -3904,12 +3732,12 @@ def test_lag_stream_folds_to_batch_quantiles(spark, workdir):
     assert got == want
 
     # epoch replay: no-op by segment overwrite
-    update_lag(spark, ev.where(F.col("event_id") % 3 == 1), store, 1)
+    LAG.update(spark, ev.where(F.col("event_id") % 3 == 1), store, 1)
     assert [tuple(r) for r in lag_readout(spark, store).collect()] == want
 
     # epoch-LESS backfill of already-delivered rows: still a no-op —
     # min-merge is idempotent (additive stores must refuse this)
-    update_lag(spark, ev.where(F.col("event_id") % 3 == 0), store, None)
+    LAG.update(spark, ev.where(F.col("event_id") % 3 == 0), store, None)
     assert [tuple(r) for r in lag_readout(spark, store).collect()] == want
 
 
@@ -3927,7 +3755,7 @@ def test_mk_stream_folds_to_batch_trend(spark, workdir):
 
     from open_pulsar_spark.operators.analytics import attributed_order_cents
     from open_pulsar_spark.registry import all_queries
-    from open_pulsar_spark.streaming.mk_stream import mk_readout, update_mk
+    from open_pulsar_spark.streaming.mk_stream import MK, mk_readout
     from tests.conftest import SF_SMALL
 
     lines = attributed_order_cents(spark, SF_SMALL)
@@ -3935,7 +3763,7 @@ def test_mk_stream_folds_to_batch_trend(spark, workdir):
     # split on the cent value so single weeks accumulate ACROSS epochs
     # — the additive fold must reassemble each week's exact total
     for k in range(3):
-        update_mk(spark, lines.where(F.col("cents") % 3 == k), store, k)
+        MK.update(spark, lines.where(F.col("cents") % 3 == k), store, k)
 
     want = [
         tuple(r)
@@ -3947,11 +3775,11 @@ def test_mk_stream_folds_to_batch_trend(spark, workdir):
     got = [tuple(r) for r in mk_readout(spark, store).collect()]
     assert got == want
 
-    update_mk(spark, lines.where(F.col("cents") % 3 == 1), store, 1)
+    MK.update(spark, lines.where(F.col("cents") % 3 == 1), store, 1)
     assert [tuple(r) for r in mk_readout(spark, store).collect()] == want
 
     with pytest.raises(ValueError, match="additive"):
-        update_mk(spark, lines, store, None)
+        MK.update(spark, lines, store, None)
 
 
 def test_ks_stream_folds_to_batch_matrix(spark, workdir):
@@ -3966,14 +3794,14 @@ def test_ks_stream_folds_to_batch_matrix(spark, workdir):
     from pyspark.sql import functions as F
 
     from open_pulsar_spark.registry import all_queries
-    from open_pulsar_spark.streaming.ks_stream import ks_readout, update_ks
+    from open_pulsar_spark.streaming.ks_stream import KS, ks_readout
     from open_pulsar_spark.tables import load_table
     from tests.conftest import SF_SMALL
 
     docs = load_table(spark, SF_SMALL, "documents")
     store = f"{workdir}/ks_store"
     for k in range(3):
-        update_ks(spark, docs.where(F.col("doc_id") % 3 == k), store, k)
+        KS.update(spark, docs.where(F.col("doc_id") % 3 == k), store, k)
 
     want = [
         tuple(r)
@@ -3985,15 +3813,15 @@ def test_ks_stream_folds_to_batch_matrix(spark, workdir):
     got = [tuple(r) for r in ks_readout(spark, store).collect()]
     assert got == want
 
-    update_ks(spark, docs.where(F.col("doc_id") % 3 == 0), store, 0)
+    KS.update(spark, docs.where(F.col("doc_id") % 3 == 0), store, 0)
     assert [tuple(r) for r in ks_readout(spark, store).collect()] == want
 
     with pytest.raises(ValueError, match="additive"):
-        update_ks(spark, docs, store, None)
+        KS.update(spark, docs, store, None)
 
 
 def test_risk_stream_runs_as_real_streaming_query(spark, workdir):
-    """start_risk_stream wires the cents-ledger maintenance as an
+    """RISK.start wires the cents-ledger maintenance as an
     actual Structured Streaming query (file source,
     maxFilesPerTrigger=1 → multiple epochs): after
     processAllAvailable the store's readout bit-matches the one-shot
@@ -4001,11 +3829,7 @@ def test_risk_stream_runs_as_real_streaming_query(spark, workdir):
     unchanged."""
     from pyspark.sql import functions as F
 
-    from open_pulsar_spark.streaming.risk_stream import (
-        risk_readout,
-        start_risk_stream,
-        update_risk,
-    )
+    from open_pulsar_spark.streaming.risk_stream import RISK, risk_readout
     from open_pulsar_spark.tables import load_table
     from tests.conftest import SF_SMALL
 
@@ -4020,7 +3844,7 @@ def test_risk_stream_runs_as_real_streaming_query(spark, workdir):
         "append"
     ).parquet(src)
     store = f"{workdir}/risk_live"
-    q = start_risk_stream(
+    q = RISK.start(
         spark,
         spark.readStream.schema("event_id LONG, event_type STRING, value DOUBLE")
         .option("maxFilesPerTrigger", 1)
@@ -4032,24 +3856,20 @@ def test_risk_stream_runs_as_real_streaming_query(spark, workdir):
     q.processAllAvailable()
     q.stop()
     ref = f"{workdir}/risk_ref"
-    update_risk(spark, ev, ref, 0)
+    RISK.update(spark, ev, ref, 0)
     got = [tuple(r) for r in risk_readout(spark, store).collect()]
     want = [tuple(r) for r in risk_readout(spark, ref).collect()]
     assert got == want and want[0][0] > 0
 
 
 def test_lag_stream_runs_as_real_streaming_query(spark, workdir):
-    """start_lag_stream as an actual Structured Streaming query: the
+    """LAG.start as an actual Structured Streaming query: the
     min-merged firsts ledger folds across real micro-batches (and
     through forced compaction) to the same readout as the one-shot
     batch fold."""
     from pyspark.sql import functions as F
 
-    from open_pulsar_spark.streaming.lag_stream import (
-        lag_readout,
-        start_lag_stream,
-        update_lag,
-    )
+    from open_pulsar_spark.streaming.lag_stream import LAG, lag_readout
     from open_pulsar_spark.tables import load_table
     from tests.conftest import SF_SMALL
 
@@ -4064,7 +3884,7 @@ def test_lag_stream_runs_as_real_streaming_query(spark, workdir):
         "append"
     ).parquet(src)
     store = f"{workdir}/lag_live"
-    q = start_lag_stream(
+    q = LAG.start(
         spark,
         spark.readStream.schema(
             "event_id LONG, user_id LONG, ts TIMESTAMP, event_type STRING"
@@ -4078,7 +3898,7 @@ def test_lag_stream_runs_as_real_streaming_query(spark, workdir):
     q.processAllAvailable()
     q.stop()
     ref = f"{workdir}/lag_ref"
-    update_lag(spark, ev, ref, 0)
+    LAG.update(spark, ev, ref, 0)
     got = [tuple(r) for r in lag_readout(spark, store).collect()]
     want = [tuple(r) for r in lag_readout(spark, ref).collect()]
     assert got == want and want[0][2] > 0
@@ -4113,9 +3933,9 @@ def test_trend_stream_folds_to_both_batch_slopes(spark, workdir):
     )
     from open_pulsar_spark.registry import all_queries
     from open_pulsar_spark.streaming.trend_stream import (
+        TREND,
         theilsen_readout,
         trend_readout,
-        update_trend,
     )
     from tests.conftest import SF_SMALL
 
@@ -4123,7 +3943,7 @@ def test_trend_stream_folds_to_both_batch_slopes(spark, workdir):
     store = f"{workdir}/trend_store"
     # split on cents so every month accumulates ACROSS epochs
     for k in range(3):
-        update_trend(spark, lines.where(F.col("cents") % 3 == k), store, k)
+        TREND.update(spark, lines.where(F.col("cents") % 3 == k), store, k)
 
     qs = all_queries()
     want_ols = [
@@ -4141,15 +3961,15 @@ def test_trend_stream_folds_to_both_batch_slopes(spark, workdir):
         tuple(r) for r in theilsen_readout(spark, store).collect()
     ] == want_ts
 
-    update_trend(spark, lines.where(F.col("cents") % 3 == 1), store, 1)
+    TREND.update(spark, lines.where(F.col("cents") % 3 == 1), store, 1)
     assert [tuple(r) for r in trend_readout(spark, store).collect()] == want_ols
 
     with pytest.raises(ValueError, match="additive"):
-        update_trend(spark, lines, store, None)
+        TREND.update(spark, lines, store, None)
 
 
 def test_mk_stream_runs_as_real_streaming_query(spark, workdir):
-    """start_mk_stream as an actual Structured Streaming query (file
+    """MK.start as an actual Structured Streaming query (file
     source, maxFilesPerTrigger=1 → multiple epochs): after
     processAllAvailable the stream-maintained weekly ledger's
     Mann-Kendall readout bit-matches the one-shot batch fold, and
@@ -4158,11 +3978,7 @@ def test_mk_stream_runs_as_real_streaming_query(spark, workdir):
     from pyspark.sql import functions as F
 
     from open_pulsar_spark.operators.analytics import attributed_order_cents
-    from open_pulsar_spark.streaming.mk_stream import (
-        mk_readout,
-        start_mk_stream,
-        update_mk,
-    )
+    from open_pulsar_spark.streaming.mk_stream import MK, mk_readout
     from tests.conftest import SF_SMALL
 
     lines = attributed_order_cents(spark, SF_SMALL)
@@ -4174,7 +3990,7 @@ def test_mk_stream_runs_as_real_streaming_query(spark, workdir):
         "append"
     ).parquet(src)
     store = f"{workdir}/mk_live"
-    q = start_mk_stream(
+    q = MK.start(
         spark,
         spark.readStream.schema("segment STRING, week TIMESTAMP, cents LONG")
         .option("maxFilesPerTrigger", 1)
@@ -4186,24 +4002,20 @@ def test_mk_stream_runs_as_real_streaming_query(spark, workdir):
     q.processAllAvailable()
     q.stop()
     ref = f"{workdir}/mk_ref"
-    update_mk(spark, lines, ref, 0)
+    MK.update(spark, lines, ref, 0)
     got = [tuple(r) for r in mk_readout(spark, store).collect()]
     want = [tuple(r) for r in mk_readout(spark, ref).collect()]
     assert got == want and want
 
 
 def test_ks_stream_runs_as_real_streaming_query(spark, workdir):
-    """start_ks_stream as an actual Structured Streaming query: the
+    """KS.start as an actual Structured Streaming query: the
     additive (source, length) count ledger folds across real
     micro-batches (and through forced compaction) to the same
     pairwise-KS matrix as the one-shot batch fold."""
     from pyspark.sql import functions as F
 
-    from open_pulsar_spark.streaming.ks_stream import (
-        ks_readout,
-        start_ks_stream,
-        update_ks,
-    )
+    from open_pulsar_spark.streaming.ks_stream import KS, ks_readout
     from open_pulsar_spark.tables import load_table
     from tests.conftest import SF_SMALL
 
@@ -4218,7 +4030,7 @@ def test_ks_stream_runs_as_real_streaming_query(spark, workdir):
         "append"
     ).parquet(src)
     store = f"{workdir}/ks_live"
-    q = start_ks_stream(
+    q = KS.start(
         spark,
         spark.readStream.schema("doc_id LONG, source STRING, n_chars LONG")
         .option("maxFilesPerTrigger", 1)
@@ -4230,14 +4042,14 @@ def test_ks_stream_runs_as_real_streaming_query(spark, workdir):
     q.processAllAvailable()
     q.stop()
     ref = f"{workdir}/ks_ref"
-    update_ks(spark, docs, ref, 0)
+    KS.update(spark, docs, ref, 0)
     got = [tuple(r) for r in ks_readout(spark, store).collect()]
     want = [tuple(r) for r in ks_readout(spark, ref).collect()]
     assert got == want and want
 
 
 def test_trend_stream_runs_as_real_streaming_query(spark, workdir):
-    """start_trend_stream as an actual Structured Streaming query: the
+    """TREND.start as an actual Structured Streaming query: the
     ONE monthly ledger maintained across real micro-batches (and
     through forced compaction) serves BOTH the OLS and Theil-Sen
     readouts bit-identically to the one-shot batch fold."""
@@ -4247,10 +4059,9 @@ def test_trend_stream_runs_as_real_streaming_query(spark, workdir):
         attributed_order_month_cents,
     )
     from open_pulsar_spark.streaming.trend_stream import (
-        start_trend_stream,
+        TREND,
         theilsen_readout,
         trend_readout,
-        update_trend,
     )
     from tests.conftest import SF_SMALL
 
@@ -4263,7 +4074,7 @@ def test_trend_stream_runs_as_real_streaming_query(spark, workdir):
         "append"
     ).parquet(src)
     store = f"{workdir}/trend_live"
-    q = start_trend_stream(
+    q = TREND.start(
         spark,
         spark.readStream.schema("segment STRING, month TIMESTAMP, cents LONG")
         .option("maxFilesPerTrigger", 1)
@@ -4275,7 +4086,7 @@ def test_trend_stream_runs_as_real_streaming_query(spark, workdir):
     q.processAllAvailable()
     q.stop()
     ref = f"{workdir}/trend_ref"
-    update_trend(spark, lines, ref, 0)
+    TREND.update(spark, lines, ref, 0)
     for readout in (trend_readout, theilsen_readout):
         got = [tuple(r) for r in readout(spark, store).collect()]
         want = [tuple(r) for r in readout(spark, ref).collect()]
@@ -4295,17 +4106,14 @@ def test_anova_stream_folds_to_batch_table(spark, workdir):
     from pyspark.sql import functions as F
 
     from open_pulsar_spark.registry import all_queries
-    from open_pulsar_spark.streaming.anova_stream import (
-        anova_readout,
-        update_anova,
-    )
+    from open_pulsar_spark.streaming.anova_stream import ANOVA, anova_readout
     from open_pulsar_spark.tables import load_table
     from tests.conftest import SF_SMALL
 
     orders = load_table(spark, SF_SMALL, "orders")
     store = f"{workdir}/anova_store"
     for k in range(3):
-        update_anova(spark, orders.where(F.col("o_orderkey") % 3 == k), store, k)
+        ANOVA.update(spark, orders.where(F.col("o_orderkey") % 3 == k), store, k)
 
     want = [
         tuple(r)
@@ -4315,28 +4123,24 @@ def test_anova_stream_folds_to_batch_table(spark, workdir):
     got = [tuple(r) for r in anova_readout(spark, store).collect()]
     assert got == want
 
-    update_anova(spark, orders.where(F.col("o_orderkey") % 3 == 1), store, 1)
+    ANOVA.update(spark, orders.where(F.col("o_orderkey") % 3 == 1), store, 1)
     assert [tuple(r) for r in anova_readout(spark, store).collect()] == want
 
     with pytest.raises(ValueError, match="additive"):
-        update_anova(spark, orders, store, None)
+        ANOVA.update(spark, orders, store, None)
 
     assert anova_readout(spark, f"{workdir}/anova_empty").collect() == []
 
 
 def test_anova_stream_runs_as_real_streaming_query(spark, workdir):
-    """start_anova_stream as an actual Structured Streaming query
+    """ANOVA.start as an actual Structured Streaming query
     (file source, maxFilesPerTrigger=1 → multiple epochs): after
     processAllAvailable the stream-maintained daily ledger's ANOVA
     readout bit-matches the one-shot batch fold, and forced
     auto-compaction (max_segments=1) leaves it unchanged."""
     from pyspark.sql import functions as F
 
-    from open_pulsar_spark.streaming.anova_stream import (
-        anova_readout,
-        start_anova_stream,
-        update_anova,
-    )
+    from open_pulsar_spark.streaming.anova_stream import ANOVA, anova_readout
     from open_pulsar_spark.tables import load_table
     from tests.conftest import SF_SMALL
 
@@ -4351,7 +4155,7 @@ def test_anova_stream_runs_as_real_streaming_query(spark, workdir):
         "append"
     ).parquet(src)
     store = f"{workdir}/anova_live"
-    q = start_anova_stream(
+    q = ANOVA.start(
         spark,
         spark.readStream.schema(
             "o_orderkey LONG, o_orderdate TIMESTAMP, o_totalprice DOUBLE"
@@ -4365,201 +4169,44 @@ def test_anova_stream_runs_as_real_streaming_query(spark, workdir):
     q.processAllAvailable()
     q.stop()
     ref = f"{workdir}/anova_ref"
-    update_anova(spark, orders, ref, 0)
+    ANOVA.update(spark, orders, ref, 0)
     got = [tuple(r) for r in anova_readout(spark, store).collect()]
     want = [tuple(r) for r in anova_readout(spark, ref).collect()]
     assert got == want and want
 
 
-# -- round-12 harness sweep: EVERY partial-stream twin runs as a real
-#    Structured Streaming query ------------------------------------------
+# -- registry sweep: EVERY registered twin runs as a real Structured
+#    Streaming query, and the twin registry stays exact ----------------
 
 
-def _spans_frame(spark):
-    from open_pulsar_spark.operators.analytics import order_spans
-    from tests.conftest import SF_SMALL
+def _all_twins():
+    from open_pulsar_spark.streaming.twins import all_twins
 
-    return order_spans(spark, SF_SMALL)
-
-
-def _events_frame(spark):
-    from open_pulsar_spark.tables import load_table
-    from tests.conftest import SF_SMALL
-
-    return load_table(spark, SF_SMALL, "events")
+    return all_twins()
 
 
-def _docs_frame(spark):
-    from open_pulsar_spark.tables import load_table
-    from tests.conftest import SF_SMALL
-
-    return load_table(spark, SF_SMALL, "documents")
-
-
-def _trade_frame(spark):
-    from open_pulsar_spark.operators.analytics import attributed_trade_lines
-    from tests.conftest import SF_SMALL
-
-    return attributed_trade_lines(spark, SF_SMALL)
-
-
-def _twin_spec(name, spark, workdir):
-    """(input frame, start fn, update fn, [readout fns]) for each
-    partial-stream twin that predates the per-twin execution tests —
-    the readout fns close over any extra setup (psi's frozen
-    baseline)."""
-    if name == "backlog":
-        from open_pulsar_spark.streaming.backlog_stream import (
-            backlog_readout,
-            start_backlog_stream,
-            update_backlog,
-        )
-
-        return _spans_frame(spark), start_backlog_stream, update_backlog, [
-            backlog_readout
-        ]
-    if name == "fano":
-        from open_pulsar_spark.streaming.fano_stream import (
-            fano_readout,
-            mix_readout,
-            start_fano_stream,
-            update_fano,
-        )
-
-        return _events_frame(spark), start_fano_stream, update_fano, [
-            fano_readout,
-            mix_readout,
-        ]
-    if name == "pchart":
-        from open_pulsar_spark.streaming.pchart_stream import (
-            pchart_readout,
-            start_pchart_stream,
-            update_pchart,
-        )
-
-        return _events_frame(spark), start_pchart_stream, update_pchart, [
-            pchart_readout
-        ]
-    if name == "psi":
-        from pyspark.sql import functions as F
-
-        from open_pulsar_spark.streaming.psi_stream import (
-            freeze_baseline,
-            psi_readout,
-            start_psi_stream,
-            update_psi,
-        )
-
-        ev = _events_frame(spark).select("ts", "value")
-        piv = ev.agg(
-            F.expr("(unix_micros(min(ts)) + unix_micros(max(ts))) div 2")
-        ).first()[0]
-        baseline = f"{workdir}/psi_sweep_baseline"
-        freeze_baseline(spark, ev.where(F.expr(f"unix_micros(ts) < {piv}")), baseline)
-
-        def _readout(spark, store):
-            return psi_readout(spark, baseline, store)
-
-        cur = ev.where(F.expr(f"unix_micros(ts) >= {piv}"))
-        return cur, start_psi_stream, update_psi, [_readout]
-    if name == "trade":
-        from open_pulsar_spark.streaming.trade_stream import (
-            start_trade_stream,
-            trade_readout,
-            update_trade,
-        )
-
-        return _trade_frame(spark), start_trade_stream, update_trade, [
-            trade_readout
-        ]
-    if name == "active":
-        from open_pulsar_spark.streaming.active_stream import (
-            dau_readout,
-            growth_readout,
-            start_active_stream,
-            update_active,
-        )
-
-        return _events_frame(spark), start_active_stream, update_active, [
-            dau_readout,
-            growth_readout,
-        ]
-    if name == "bm25":
-        from open_pulsar_spark.streaming.bm25_stream import (
-            bm25_readout,
-            start_bm25_stream,
-            update_bm25,
-        )
-
-        return _docs_frame(spark), start_bm25_stream, update_bm25, [
-            bm25_readout
-        ]
-    if name == "kmv":
-        from open_pulsar_spark.streaming.kmv_stream import (
-            kmv_estimates,
-            start_kmv_stream,
-            update_kmv,
-        )
-
-        return _docs_frame(spark), start_kmv_stream, update_kmv, [
-            kmv_estimates
-        ]
-    if name == "sequential":
-        from open_pulsar_spark.streaming.sequential_stream import (
-            monitor_readout,
-            start_experiment_stream,
-            update_experiment,
-        )
-
-        return _events_frame(spark), start_experiment_stream, update_experiment, [
-            monitor_readout
-        ]
-    if name == "winnow":
-        from open_pulsar_spark.streaming.winnow_stream import (
-            overlap_pairs_readout,
-            start_winnow_stream,
-            update_winnow_index,
-        )
-
-        return _docs_frame(spark), start_winnow_stream, update_winnow_index, [
-            overlap_pairs_readout
-        ]
-    raise AssertionError(name)
-
-
-@pytest.mark.parametrize(
-    "name",
-    [
-        "backlog",
-        "fano",
-        "pchart",
-        "psi",
-        "trade",
-        "active",
-        "bm25",
-        "kmv",
-        "sequential",
-        "winnow",
-    ],
-)
+@pytest.mark.parametrize("name", sorted(_all_twins()))
 def test_partial_stream_twins_run_as_real_streaming_queries(
     spark, workdir, name
 ):
-    """Round-12 tier closure: every twin on the partial-stream
-    scaffold runs as an ACTUAL Structured Streaming query (file
-    source, 2 input files, maxFilesPerTrigger=1 → ≥2 real epochs
-    through foreachBatch, with auto-compaction forced at
-    max_segments=1), and every readout off the live store bit-matches
-    the same readout off a one-shot batch fold of the identical rows.
-    The fold-parity tests pin stream==batch-query; this pins
-    stream-executed==driver-folded through the real trigger/commit/
-    compaction path, the tier the round-11 verdict asked to close for
-    mk/ks/trend and that the older twins also lacked."""
-    frame, start, update, readouts = _twin_spec(name, spark, workdir)
+    """Every registered twin (streaming.twins.TWINS) runs as an ACTUAL
+    Structured Streaming query (file source, 2 input files,
+    maxFilesPerTrigger=1 → ≥2 real epochs through foreachBatch, with
+    auto-compaction forced at max_segments=1): its folded store
+    bit-matches a one-shot batch fold of the identical rows
+    (stream-executed == driver-folded through the real trigger/commit/
+    compaction path), every anchored readout off the live store
+    bit-matches its batch anchor query over the same source (the
+    fold-parity contract tools/verify_twins.py checks at larger
+    scale), and every other readout matches the batch fold's."""
+    from tests.conftest import SF_SMALL
+
+    twin = _all_twins()[name]
+    frame = twin.source_frame(spark, SF_SMALL)
     src = f"{workdir}/{name}_sweep_src"
     frame.repartition(2).write.parquet(src)
     store = f"{workdir}/{name}_sweep_live"
-    q = start(
+    q = twin.start(
         spark,
         spark.readStream.schema(frame.schema)
         .option("maxFilesPerTrigger", 1)
@@ -4571,12 +4218,72 @@ def test_partial_stream_twins_run_as_real_streaming_queries(
     q.processAllAvailable()
     q.stop()
     ref = f"{workdir}/{name}_sweep_ref"
-    update(spark, frame, ref, 0)
-    for readout in readouts:
-        got = [tuple(r) for r in readout(spark, store).collect()]
-        want = [tuple(r) for r in readout(spark, ref).collect()]
-        assert got == want, f"{name}:{readout.__name__} live != batch fold"
-        assert want, f"{name}:{readout.__name__} empty readout"
+    twin.update(spark, frame, ref, 0)
+    got = sorted(tuple(r) for r in twin.read(spark, store).collect())
+    want = sorted(tuple(r) for r in twin.read(spark, ref).collect())
+    assert got == want and want, f"{name}: live store != batch fold"
+    for ro in twin.readouts:
+        got = [tuple(r) for r in ro.fn(spark, store).collect()]
+        if ro.anchor:
+            want = [tuple(r) for r in ro.anchor_rows(spark, SF_SMALL).collect()]
+        else:
+            want = [tuple(r) for r in ro.fn(spark, ref).collect()]
+        assert got == want, f"{name}:{ro.name} live != {ro.anchor or 'batch fold'}"
+        assert want, f"{name}:{ro.name} empty readout"
+
+
+def test_twin_registry_owns_the_partial_store_protocol():
+    """AST lint: a module that calls segments.update_partial_store or
+    start_partial_stream itself writes the replay contract by hand —
+    it must declare a twin(...) instead, or be listed in
+    twins.HAND_WRITTEN with its reason. A listed module that no longer
+    calls them is a stale entry and fails too."""
+    import ast
+    import pathlib
+
+    from open_pulsar_spark.streaming.twins import HAND_WRITTEN
+
+    root = pathlib.Path(__file__).resolve().parents[1] / "open_pulsar_spark"
+    protocol = {"update_partial_store", "start_partial_stream"}
+    callers = set()
+    for py in sorted(root.rglob("*.py")):
+        if py.parent.name == "streaming" and py.stem in ("segments", "twins"):
+            continue  # the protocol itself and its one generator
+        for node in ast.walk(ast.parse(py.read_text())):
+            if isinstance(node, ast.Call):
+                fn = node.func
+                name = fn.attr if isinstance(fn, ast.Attribute) else getattr(fn, "id", None)
+                if name in protocol:
+                    callers.add(py.stem)
+    listed = {mod for mod, why in HAND_WRITTEN if why}
+    assert len(listed) == len(HAND_WRITTEN), "every entry needs a reason"
+    assert callers <= listed, (
+        f"{sorted(callers - listed)} run the partial-store protocol by "
+        "hand: declare a twin(...) or list the module in HAND_WRITTEN"
+    )
+    assert listed <= callers, f"stale HAND_WRITTEN entries: {sorted(listed - callers)}"
+
+
+def test_twin_readout_anchors_are_registered_queries():
+    """Every registered readout names an anchor that is a registry
+    query, or sits in twins.NO_ANCHOR with a reason — and NO_ANCHOR
+    lists exactly the anchorless readouts (no stale entries)."""
+    from open_pulsar_spark.registry import all_queries
+    from open_pulsar_spark.streaming.twins import NO_ANCHOR
+
+    qs = all_queries()
+    anchorless = set()
+    for name, twin in _all_twins().items():
+        for ro in twin.readouts:
+            if ro.anchor is None:
+                anchorless.add(f"{name}.{ro.name}")
+            else:
+                assert ro.anchor in qs, f"{name}.{ro.name}: {ro.anchor} not registered"
+    assert anchorless == set(NO_ANCHOR), (
+        f"unlisted: {sorted(anchorless - set(NO_ANCHOR))}, "
+        f"stale: {sorted(set(NO_ANCHOR) - anchorless)}"
+    )
+    assert all(NO_ANCHOR.values()), "every NO_ANCHOR entry needs a reason"
 
 
 def test_partial_stream_checkpoint_restart_is_exactly_once(spark, workdir):
@@ -4593,11 +4300,7 @@ def test_partial_stream_checkpoint_restart_is_exactly_once(spark, workdir):
     and the single-incarnation execution sweep don't reach."""
     from pyspark.sql import functions as F
 
-    from open_pulsar_spark.streaming.anova_stream import (
-        anova_readout,
-        start_anova_stream,
-        update_anova,
-    )
+    from open_pulsar_spark.streaming.anova_stream import ANOVA, anova_readout
     from open_pulsar_spark.tables import load_table
     from tests.conftest import SF_SMALL
 
@@ -4611,7 +4314,7 @@ def test_partial_stream_checkpoint_restart_is_exactly_once(spark, workdir):
     ckpt = f"{workdir}/restart_ck"
 
     def run_incarnation():
-        q = start_anova_stream(
+        q = ANOVA.start(
             spark,
             spark.readStream.schema(
                 "o_orderkey LONG, o_orderdate TIMESTAMP, o_totalprice DOUBLE"
@@ -4626,7 +4329,7 @@ def test_partial_stream_checkpoint_restart_is_exactly_once(spark, workdir):
         q.stop()
 
     def fold_of(df, ref):
-        update_anova(spark, df, ref, 0)
+        ANOVA.update(spark, df, ref, 0)
         return [tuple(r) for r in anova_readout(spark, ref).collect()]
 
     half_a.coalesce(1).write.mode("append").parquet(src)

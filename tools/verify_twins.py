@@ -1,11 +1,11 @@
-"""Twins replica — bit-match every clean streaming-twin readout
+"""Twins replica — bit-match every anchored streaming-twin readout
 against its batch anchor query at an arbitrary scale point.
 
 The registry replica (tools/verify_oracle.py) is the hard gate for
 the 325 batch queries, but streaming READOUTS are not registered
 queries: their parity proof otherwise lives only in pytest at
 sf0.001. This tool re-runs the fold-parity contract — deliver the
-twin's input frame in three epochs (deterministic xxhash64 row
+twin's source frame in three epochs (deterministic xxhash64 row
 split, so every ledger grain accumulates ACROSS epochs), read out,
 and compare row-for-row against the batch anchor query on the same
 sf_dir — at whatever scale the caller picks:
@@ -14,16 +14,15 @@ sf_dir — at whatever scale the caller picks:
     python tools/verify_twins.py /root/testdata/sf0.1
     python tools/verify_twins.py /root/testdata/sf0.01 mk anova
 
-Covered: the 35 full-row readouts across 26 twins (monitoring
-ledgers, privacy audits, sketch estimates with their documented
-column projections), plus the special-contract twins — psi (frozen
-mid-split baseline), dq (direct-count parity on every stream rule +
-shared-rule match with dq_violation_counts), posting (anchor rows
-verbatim-contained in the maintained index), and novelty (ascending
-doc_id tercile epochs — the contract is order-dependent). Out of
-scope, pytest-covered: zonemap (bucket-frame compare), bloom (filter
-bitsets), chunk (no registered anchor), lww (time-travel over
-hand-built CDC epochs).
+The twin list is streaming.twins.all_twins(): every readout declared
+with an anchor query is checked, and every readout without one is
+printed as NOANCHOR with its reason (twins.NO_ANCHOR). Four contracts
+run apart: psi (frozen mid-split baseline), dq (direct-count parity on
+every stream rule + shared-rule match with dq_violation_counts),
+posting (anchor rows verbatim-contained in the maintained index), and
+novelty (ascending doc_id tercile epochs — the contract is
+order-dependent). Out of scope, pytest-covered: bloom (filter bitsets)
+and lww (time-travel over hand-built CDC epochs).
 """
 
 from __future__ import annotations
@@ -38,22 +37,23 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 
-def _events(spark, sf):
-    from open_pulsar_spark.tables import load_table
-
-    return load_table(spark, sf, "events")
+def _rows(df):
+    return sorted(map(repr, (tuple(r) for r in df.collect())))
 
 
-def _orders(spark, sf):
-    from open_pulsar_spark.tables import load_table
-
-    return load_table(spark, sf, "orders")
+N_EPOCHS = 3
 
 
-def _customer(spark, sf):
-    from open_pulsar_spark.tables import load_table
-
-    return load_table(spark, sf, "customer")
+def _fold(spark, update, frame, store):
+    """Deliver the frame through `update` in N_EPOCHS deterministic
+    xxhash64 row splits, so every ledger grain (day, week, term, QI
+    class, ...) accumulates ACROSS epochs — the property the fold must
+    get right."""
+    tagged = frame.withColumn(
+        "_ep", F.abs(F.xxhash64(*frame.columns)) % N_EPOCHS
+    )
+    for k in range(N_EPOCHS):
+        update(spark, tagged.where(F.col("_ep") == k).drop("_ep"), store, k)
 
 
 def _documents(spark, sf):
@@ -62,165 +62,18 @@ def _documents(spark, sf):
     return load_table(spark, sf, "documents")
 
 
-def _order_spans(spark, sf):
-    from open_pulsar_spark.operators.analytics import order_spans
-
-    return order_spans(spark, sf)
-
-
-def _trade_lines(spark, sf):
-    from open_pulsar_spark.operators.analytics import attributed_trade_lines
-
-    return attributed_trade_lines(spark, sf)
-
-
-def _weekly_lines(spark, sf):
-    from open_pulsar_spark.operators.analytics import attributed_order_cents
-
-    return attributed_order_cents(spark, sf)
-
-
-def _monthly_lines(spark, sf):
-    from open_pulsar_spark.operators.analytics import (
-        attributed_order_month_cents,
-    )
-
-    return attributed_order_month_cents(spark, sf)
-
-
-def _quantile_anchor(df):
-    return df.select("p", "est").orderBy("p")
-
-
-def _kmv_anchor(df):
-    return df.select("source", "n_est").orderBy("source")
-
-
-def _hll_anchor(df):
-    return df.select("event_type", "hll_keys").orderBy("event_type")
-
-
-# twin -> (module, update fn, frame fn, [(readout fn, anchor query,
-# anchor transform | None)])
-SPECS = {
-    "cusum": ("cusum_stream", "update_cusum", _orders, [
-        ("cusum_readout", "revenue_cusum_changepoint", None),
-        ("acf_readout", "revenue_acf", None),
-        ("ewma_readout", "revenue_ewma", None),
-        ("bootstrap_readout", "revenue_bootstrap_ci", None),
-        ("holt_readout", "revenue_holt_forecast", None),
-    ]),
-    "benford": ("benford_stream", "update_benford", _orders, [
-        ("benford_readout", "orders_benford_test", None),
-    ]),
-    "anova": ("anova_stream", "update_anova", _orders, [
-        ("anova_readout", "revenue_dow_anova", None),
-    ]),
-    "scd2": ("scd2_stream", "update_scd2", _orders, [
-        ("scd2_readout", "order_history_scd2", None),
-    ]),
-    "hll": ("hll_stream", "update_hll", _events, [
-        ("hll_estimates", "events_hll_distinct", _hll_anchor),
-    ]),
-    "itemsets": ("itemsets_stream", "update_itemsets", _events, [
-        ("itemset_readout", "event_type_itemsets", None),
-    ]),
-    "sequences": ("sequences_stream", "update_sequences", _events, [
-        ("sequence_readout", "event_type_sequences", None),
-    ]),
-    "quantile": ("quantile_stream", "update_quantile", _events, [
-        ("quantile_readout", "value_quantile_sketch", _quantile_anchor),
-    ]),
-    "stats": ("stats_stream", "update_stats", _events, [
-        ("stats_readout", "join_size_estimate", None),
-        ("partition_plan_readout", "events_partition_plan", None),
-    ]),
-    "sequential": ("sequential_stream", "update_experiment", _events, [
-        ("monitor_readout", "ab_test_sequential", None),
-    ]),
-    "active": ("active_stream", "update_active", _events, [
-        ("dau_readout", "events_dau_wau_mau", None),
-        ("growth_readout", "user_growth_accounting", None),
-    ]),
-    "pchart": ("pchart_stream", "update_pchart", _events, [
-        ("pchart_readout", "error_rate_pchart", None),
-    ]),
-    "fano": ("fano_stream", "update_fano", _events, [
-        ("fano_readout", "events_hourly_fano", None),
-        ("mix_readout", "weekday_weekend_mix", None),
-    ]),
-    "risk": ("risk_stream", "update_risk", _events, [
-        ("risk_readout", "purchase_value_tail_risk", None),
-    ]),
-    "lag": ("lag_stream", "update_lag", _events, [
-        ("lag_readout", "conversion_lag_quantiles", None),
-    ]),
-    "kanon": ("kanon_stream", "update_kanon", _customer, [
-        ("kanon_readout", "customer_kanonymity_audit", None),
-    ]),
-    "ldiv": ("kanon_stream", "update_ldiv", _customer, [
-        ("ldiv_readout", "customer_ldiversity_audit", None),
-    ]),
-    "kmv": ("kmv_stream", "update_kmv", _documents, [
-        ("kmv_estimates", "source_kmv_distinct", _kmv_anchor),
-    ]),
-    "vocab": ("vocab_stream", "update_vocab", _documents, [
-        ("zipf_readout", "corpus_zipf_fit", None),
-    ]),
-    "winnow": ("winnow_stream", "update_winnow_index", _documents, [
-        ("overlap_pairs_readout", "winnowing_overlap_pairs", None),
-    ]),
-    "bm25": ("bm25_stream", "update_bm25", _documents, [
-        ("bm25_readout", "bm25_topk", None),
-    ]),
-    "ks": ("ks_stream", "update_ks", _documents, [
-        ("ks_readout", "source_length_ks_matrix", None),
-    ]),
-    "backlog": ("backlog_stream", "update_backlog", _order_spans, [
-        ("backlog_readout", "orders_backlog_depth", None),
-    ]),
-    "trade": ("trade_stream", "update_trade", _trade_lines, [
-        ("trade_readout", "nation_trade_matrix", None),
-    ]),
-    "mk": ("mk_stream", "update_mk", _weekly_lines, [
-        ("mk_readout", "segment_revenue_mann_kendall", None),
-    ]),
-    "trend": ("trend_stream", "update_trend", _monthly_lines, [
-        ("trend_readout", "segment_revenue_trend", None),
-        ("theilsen_readout", "segment_revenue_theilsen", None),
-    ]),
-}
-
-N_EPOCHS = 3
-
-
-def _rows(df):
-    return sorted(map(repr, (tuple(r) for r in df.collect())))
-
-
-def _fold(spark, update, frame, store):
-    """Deliver the frame in N_EPOCHS deterministic xxhash64 row
-    splits, so every ledger grain (day, week, term, QI class, ...)
-    accumulates ACROSS epochs — the property the fold must get right."""
-    tagged = frame.withColumn(
-        "_ep", F.abs(F.xxhash64(*frame.columns)) % N_EPOCHS
-    )
-    for k in range(N_EPOCHS):
-        update(spark, tagged.where(F.col("_ep") == k).drop("_ep"), store, k)
-
-
 def run_psi(spark, sf_dir, workdir):
     """psi is the one non-uniform spec: the batch events_value_psi
     self-baselines on the mid-timestamp split, so the twin freezes
     the first half and folds the second."""
     from open_pulsar_spark.registry import all_queries
     from open_pulsar_spark.streaming.psi_stream import (
+        PSI,
         freeze_baseline,
         psi_readout,
-        update_psi,
     )
 
-    ev = _events(spark, sf_dir).select("ts", "value")
+    ev = PSI.source_frame(spark, sf_dir).select("ts", "value")
     piv = ev.agg(
         F.expr("(unix_micros(min(ts)) + unix_micros(max(ts))) div 2")
     ).first()[0]
@@ -228,7 +81,7 @@ def run_psi(spark, sf_dir, workdir):
     store = f"{workdir}/psi_store"
     freeze_baseline(spark, ev.where(F.expr(f"unix_micros(ts) < {piv}")), baseline)
     _fold(
-        spark, update_psi, ev.where(F.expr(f"unix_micros(ts) >= {piv}")), store
+        spark, PSI.update, ev.where(F.expr(f"unix_micros(ts) >= {piv}")), store
     )
     got = _rows(psi_readout(spark, baseline, store))
     want = _rows(all_queries()["events_value_psi"](spark, sf_dir))
@@ -242,14 +95,14 @@ def run_dq(spark, sf_dir, workdir):
     dq_violation_counts' documents rows."""
     from open_pulsar_spark.registry import all_queries
     from open_pulsar_spark.streaming.dq_stream import (
+        DQ,
         DQ_STREAM_RULES,
         read_dq,
-        update_dq,
     )
 
     docs = _documents(spark, sf_dir)
     store = f"{workdir}/dq_store"
-    _fold(spark, update_dq, docs, store)
+    _fold(spark, DQ.update, docs, store)
     got = {t[0]: (t[1], t[2]) for t in map(tuple, read_dq(spark, store).collect())}
     n_docs = docs.count()
     want = {
@@ -339,11 +192,9 @@ def main() -> None:
     sf_dir = args[0] if args and "/" in args[0] else "/root/testdata/sf0.01"
     only = set(a for a in args if "/" not in a)
 
-    import importlib
-
     from pyspark.sql import SparkSession
 
-    from open_pulsar_spark.registry import all_queries
+    from open_pulsar_spark.streaming.twins import NO_ANCHOR, all_twins
 
     spark = (
         SparkSession.builder.appName("verify-twins")
@@ -353,34 +204,34 @@ def main() -> None:
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
-    qs = all_queries()
     failures = 0
     workdir = tempfile.mkdtemp(prefix="verify_twins_")
 
-    for twin, (mod_name, upd_name, frame_fn, readouts) in sorted(SPECS.items()):
-        if only and twin not in only:
+    for name, twin in sorted(all_twins().items()):
+        if only and name not in only:
+            continue
+        anchored = [ro for ro in twin.readouts if ro.anchor]
+        for ro in twin.readouts:
+            if not ro.anchor:
+                print(f"NOANCHOR {name}.{ro.name}: {NO_ANCHOR[f'{name}.{ro.name}']}")
+        if not anchored:
             continue
         t0 = time.time()
         try:
-            mod = importlib.import_module(
-                f"open_pulsar_spark.streaming.{mod_name}"
-            )
-            update = getattr(mod, upd_name)
-            store = f"{workdir}/{twin}"
-            _fold(spark, update, frame_fn(spark, sf_dir), store)
-            for ro_name, anchor, transform in readouts:
-                got = _rows(getattr(mod, ro_name)(spark, store))
-                adf = qs[anchor](spark, sf_dir)
-                want = _rows(transform(adf) if transform else adf)
+            store = f"{workdir}/{name}"
+            _fold(spark, twin.update, twin.source_frame(spark, sf_dir), store)
+            for ro in anchored:
+                got = _rows(ro.fn(spark, store))
+                want = _rows(ro.anchor_rows(spark, sf_dir))
                 ok = got == want and bool(want)
                 failures += 0 if ok else 1
                 print(
-                    f"{'PASS' if ok else 'FAIL'} {twin}.{ro_name} vs {anchor}"
+                    f"{'PASS' if ok else 'FAIL'} {name}.{ro.name} vs {ro.anchor}"
                     f" rows={len(want)} sec={time.time() - t0:.2f}"
                 )
         except Exception as e:  # noqa: BLE001
             failures += 1
-            print(f"FAIL {twin} ERROR {str(e)[:300]}")
+            print(f"FAIL {name} ERROR {str(e)[:300]}")
 
     for twin, (runner, label) in sorted(_SPECIAL.items()):
         if only and twin not in only:
